@@ -47,6 +47,7 @@ from eodal_spark.operators import text as TX
 from eodal_spark.operators import tiling as TIL
 from eodal_spark.operators import timeseries as TS
 from eodal_spark.operators import zonal as Z
+from eodal_spark.plans.introspect import spread_to_parallelism
 from eodal_spark.sources import pages as P
 from eodal_spark.sources import sensors as SN
 from eodal_spark.sources import warc as WARC
@@ -736,29 +737,17 @@ def _q_segment_mode(spark, sf_dir):
 
 
 def _docs_spread(spark, sf_dir):
-    """documents scan spread to the session's parallelism: the compact
-    parquet (50k docs ≈ 15 MB at sf1.0) is ONE input split, so every
-    compute-dense per-doc expression chain (regexp batteries, n-gram
-    windows, md5 fingerprints, Arrow UDFs) otherwise runs on a single
-    core.  Deterministic hash repartition on doc_id (~0.2 s exchange of
-    the 15 MB) vs a 32× parallelism unlock; inputs that already have ≥
-    defaultParallelism partitions pass through untouched, so a real
-    100 TB corpus never pays the exchange.  Row set unchanged (gates
+    """documents scan spread on doc_id (`spread_to_parallelism`) so
+    every compute-dense per-doc expression chain (regexp batteries,
+    n-gram windows, md5 fingerprints, Arrow UDFs) runs on every core,
+    behind a lazy localCheckpoint lineage barrier when the spread ran:
+    these queries filter on their computed columns (the helper's
+    filter-pushdown hazard).  Materialization is one 15 MB in-memory
+    write on first action of each invocation.  Row set unchanged (gates
     compare sorted)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    target = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() >= target:
-        return docs
-    # lazy localCheckpoint = lineage barrier: Catalyst pushes
-    # deterministic filters below a bare repartition, so a query that
-    # filters on its computed columns would inline the whole expression
-    # battery into the filter and evaluate it on the ONE pre-spread
-    # split (measured 6 s vs 1 s for docs_quality_filter).  The barrier
-    # pins evaluation above the spread; materialization is one 15 MB
-    # in-memory write on first action of each invocation.
-    return docs.repartition(target, F.col("doc_id")).localCheckpoint(
-        eager=False
-    )
+    spread = spread_to_parallelism(docs, "doc_id")
+    return docs if spread is docs else spread.localCheckpoint(eager=False)
 
 
 def _q_docs_exact_dedup(spark, sf_dir):
@@ -1683,9 +1672,9 @@ def _q_product_uri_battery(spark, sf_dir):
     # groupBy + join-back: the join plan computed the whole SAFE-name
     # synthesis + regex chain TWICE (once per join side) and paid a
     # second exchange; the window shuffles only the four source ints
-    # and evaluates the synthesis once per row (same sorted-distinct
-    # merge semantics as sensors.merge_product_uris — collect_set over
-    # the key partition).  Measured 13.2 s → ~4 s at 6M rows.
+    # and evaluates the synthesis once per row (the reference's
+    # data-take merge canonicalized to sorted-distinct — collect_set
+    # over the key partition).  Measured 13.2 s → ~4 s at 6M rows.
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("l_orderkey")
@@ -2089,8 +2078,8 @@ def _q_emb_quantize_int8(spark, sf_dir):
     spreads the single-split embeddings scan first so the interpreted
     higher-order quantization chain runs on every core, not one
     (measured 5.4 s → sub-second at 22k vectors)."""
-    emb = SIM._spread_corpus(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = spread_to_parallelism(
+        spark.read.parquet(f"{sf_dir}/embeddings.parquet"), "vec_id"
     )
     q = SIM.quantize_int8(emb)
     return q.select(

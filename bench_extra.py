@@ -97,9 +97,9 @@ def bench_suite(spark, names=None) -> None:
 
 
 def bench_headline_stages(spark) -> None:
-    """noop-isolated stages of the headline pipeline (guide §1.4)."""
-    from eodal_spark.operators import spatial_join as SJ
-    from eodal_spark.operators import tiling as TIL
+    """noop-isolated prefixes of the headline pipeline: the scan, the
+    text extraction, then each `headline_stages` stage."""
+    from eodal_spark.mapper import headline_stages
     from eodal_spark.sources import pages as P
 
     path = "/tmp/eodal_spark_bench/pages_40000000"
@@ -111,20 +111,12 @@ def bench_headline_stages(spark) -> None:
     timed("scan", lambda: noop(pages.select("html")))
     spark.sparkContext.setJobDescription("headline: +extract")
     timed("extract", lambda: noop(pages.select(P.extract_text(F.col("html")).alias("t"))))
-    spark.sparkContext.setJobDescription("headline: +geocode")
-    geo = P.geocode(pages, E.RES)
-    timed("geocode", lambda: noop(geo.select("url", "warc_ts", "cell_id")))
-    spark.sparkContext.setJobDescription("headline: +join")
-    joined = SJ.spatial_join(
-        geo, E._polys_spark(spark), E.JOIN_RES, rule="centroid",
-        page_cols=("url", "warc_ts", "cell_id"), page_res=E.RES,
-    )
-    timed("join", lambda: noop(joined))
-    spark.sparkContext.setJobDescription("headline: full")
-    def full():
-        tiled = TIL.assign_tiles(joined, E.RES, E.TILE_RES)
-        return noop(TIL.mosaic_dedup(tiled, keys=("cell_id", "ts_bucket")))
-    timed("full", full)
+    df = pages
+    polys = E._polys_spark(spark)
+    for name, fn, _ in headline_stages(polys, E.RES, E.JOIN_RES, E.TILE_RES):
+        df = fn(df)
+        spark.sparkContext.setJobDescription(f"headline: +{name}")
+        timed(name, lambda df=df: noop(df))
     spark.sparkContext.setJobDescription(None)
 
 

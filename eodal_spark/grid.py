@@ -91,10 +91,6 @@ def cell_encode(lon, lat, res: int) -> Column:
     return pack_cell(cell_x(lon, res), cell_y(lat, res), res)
 
 
-def cell_res_of(cell) -> Column:
-    return F.shiftrightunsigned(_col(cell), _RES_SHIFT).cast("int")
-
-
 def cell_x_of(cell) -> Column:
     return F.shiftrightunsigned(_col(cell), _X_SHIFT).bitwiseAND(F.lit(_XY_MASK))
 

@@ -22,6 +22,7 @@ because every row lives on the one global grid.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -37,6 +38,41 @@ from eodal_spark.sources import pages as P
 # footprint-count cutoff between the OR-of-bbox literal predicate and
 # the broadcast left-semi range join (see load_scenes)
 _MAX_OR_FOOTPRINTS = 64
+
+
+def headline_stages(
+    polys: DataFrame, res: int, join_res: int, tile_res: int
+) -> list[tuple[str, Callable[[DataFrame], DataFrame], tuple[str, ...]]]:
+    """The headline batch job — pages → geocode → centroid spatial join
+    to ``polys`` → tile assignment → first-wins mosaic dedup — as ordered
+    ``(name, fn(prev) -> DataFrame, sort_by)`` stages.  Folding the
+    ``fn``s over a pages frame builds the whole job; ``sort_by`` is the
+    clustering a persisted snapshot of the stage wants (cell_id locality
+    for min/max pruning, tile_cell for per-tile reads).
+
+    Mosaic dedup runs at the page cell resolution (fine cells ≡ pixels
+    in the reference's first-wins merge) — that is both the correct
+    semantics and what keeps the dedup key space wide enough that city
+    hotspots don't collapse into a few giant partitions."""
+    return [
+        ("geocoded", lambda pages: P.geocode(pages, res), ("cell_id",)),
+        (
+            "joined",
+            lambda geo: SJ.spatial_join(
+                geo, polys, join_res, rule="centroid",
+                page_cols=("url", "warc_ts", "cell_id"), page_res=res,
+            ),
+            (),
+        ),
+        (
+            "mosaic",
+            lambda joined: TIL.mosaic_dedup(
+                TIL.assign_tiles(joined, res, tile_res),
+                keys=("cell_id", "ts_bucket"),
+            ),
+            ("tile_cell",),
+        ),
+    ]
 
 
 @dataclass

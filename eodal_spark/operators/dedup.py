@@ -16,12 +16,15 @@ Scale notes (10^12 docs):
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
+
+from eodal_spark.plans.introspect import spread_to_parallelism
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -106,25 +109,6 @@ def _minhash_params(num_perm: int, seed: int = 42):
     return a, b
 
 
-def _spread_for_udf(df: DataFrame, key_col: str) -> DataFrame:
-    """Repartition a small-file input up to the session's default
-    parallelism before an expensive per-row pandas UDF.
-
-    A compact parquet table (50k docs ≈ 15 MB) scans as 1-2 input
-    splits, so a signature UDF downstream of it runs on 1-2 cores no
-    matter how many the cluster has — measured 2/32 cores busy on the
-    sf1.0 documents table (guide §2: partitioning must come from the
-    work, not the file layout).  Hash-repartitioning on the id is
-    deterministic (safe under task retry, unlike round-robin) and a
-    no-op decision at scale: inputs with >= defaultParallelism
-    partitions are returned unchanged, so a 100 TB corpus never pays
-    an extra shuffle."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    return df.repartition(target, F.col(key_col))
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -139,7 +123,7 @@ def minhash_signatures(
     numpy sliding-window polynomial hash (zero per-byte Python) and the
     permutation mins are one (num_perm × shingles) matrix op.
     Map-side only — no shuffle (beyond the small-input spread,
-    :func:`_spread_for_udf`)."""
+    :func:`spread_to_parallelism`)."""
     a, b = _minhash_params(num_perm, seed)
     a_u = a[:, None].astype(np.uint64)
     b_u = b[:, None].astype(np.uint64)
@@ -170,7 +154,7 @@ def minhash_signatures(
             out.append(mins.astype(np.int64))
         return pd.Series(out)
 
-    df = _spread_for_udf(df, id_col)
+    df = spread_to_parallelism(df, id_col)
     return df.select(F.col(id_col).alias("id"), sig(F.col(text_col)).alias("sig"))
 
 
@@ -513,7 +497,7 @@ def _sigs_banded_bm(
             bms_out.append(bm.tobytes())
         return pd.DataFrame({"sig": sigs_out, "bm": bms_out})
 
-    docs = _spread_for_udf(docs, "id")
+    docs = spread_to_parallelism(docs, "id")
     sigs = docs.select(
         F.col("id"), sig_bm(F.col("t")).alias("_sb")
     ).select("id", F.col("_sb.sig").alias("sig"), F.col("_sb.bm").alias("bm"))
@@ -565,9 +549,13 @@ def _bucket_pairs_verified(
     the worker (measured 8.5M estimate survivors → 80 verified on the
     sf1.0 bench corpus), so the pair repartition, the two text joins
     and the 5 GB/query Arrow text transfer vanish (guide §2.4 "remove
-    shuffles outright", §8 "decide with small rows").  Output-identical
-    to the est → attach → verify chain: the bitmap encodes exactly the
-    hash-set membership the verifier probed."""
+    shuffles outright", §8 "decide with small rows").  The output is a
+    SUPERSET of the est → attach → verify chain's, bounded by the
+    exact-Jaccard threshold: the bitmap encodes exactly the hash-set
+    membership that verifier probed, but the estimate prefilter here
+    runs on 7-bit signature codes, whose collisions admit extra
+    candidates — every one exact-verified, so each extra pair is a true
+    near-duplicate."""
     min_matches = -(-est_min // 1000)
     acc_t = np.uint8 if num_perm <= 255 else np.uint16
     schema = T.StructType(
@@ -757,57 +745,6 @@ def _cached_hset(t: str, w: int) -> np.ndarray:
     return hs
 
 
-def _pair_jaccard_udf(w: int):
-    """Arrow-batched exact shingle-Jaccard for candidate *pairs* — only
-    over LSH candidates (a vanishing fraction of all pairs), never the
-    full corpus.  Each distinct text is shingle-hashed ONCE per worker
-    (`_cached_hset`); pairs are then grouped by their left text and
-    verified with ONE ``searchsorted`` + ``add.reduceat`` per group
-    (probe all the group's right-hand sets into the shared left set in
-    a single vectorized call) — no per-pair numpy calls, no per-pair
-    Python set arithmetic."""
-
-    @F.pandas_udf(
-        T.StructType(
-            [
-                T.StructField("inter", T.LongType()),
-                T.StructField("uni", T.LongType()),
-            ]
-        )
-    )
-    def jac(ta: pd.Series, tb: pd.Series) -> pd.DataFrame:
-        texts = pd.concat([ta, tb], ignore_index=True).fillna("")
-        codes, uniq = pd.factorize(texts)
-        hsets = [_cached_hset(t, w) for t in uniq]
-        sizes = np.fromiter((h.size for h in hsets), np.int64, len(hsets))
-        m = len(ta)
-        ia, ib = codes[:m], codes[m:]
-        inters = np.empty(m, dtype=np.int64)
-        order = np.argsort(ia, kind="stable")
-        oa, ob = ia[order], ib[order]
-        pos = 0
-        while pos < m:
-            end = pos
-            a = oa[pos]
-            while end < m and oa[end] == a:
-                end += 1
-            ha = hsets[a]
-            grp = ob[pos:end]
-            seg = [hsets[c] for c in grp]
-            lens = np.fromiter((s.size for s in seg), np.int64, len(seg))
-            probe = np.concatenate(seg) if len(seg) > 1 else seg[0]
-            idx = np.searchsorted(ha, probe)
-            idx[idx == ha.size] = 0  # any in-range slot; equality decides
-            eq = (ha[idx] == probe).astype(np.int64)
-            starts = np.concatenate(([0], np.cumsum(lens[:-1])))
-            inters[order[pos:end]] = np.add.reduceat(eq, starts)
-            pos = end
-        unis = sizes[ia] + sizes[ib] - inters
-        return pd.DataFrame({"inter": inters, "uni": unis})
-
-    return jac
-
-
 # Shared-universe bitmap verify (see _verify_pairs_stage): boilerplate
 # corpora draw their shingles from a tiny shared universe (measured
 # ~2,000 distinct shingle hashes across 50k bench docs), so each doc
@@ -850,7 +787,7 @@ def _shingle_universe(docs: DataFrame, w: int) -> np.ndarray | None:
             yield pd.DataFrame({"h": u[: _BITMAP_UNIVERSE_CAP + 1]})
 
     rows = (
-        _spread_for_udf(docs.select("id", "t"), "id")
+        spread_to_parallelism(docs.select("id", "t"), "id")
         .select("t")
         .mapInPandas(local_unique, schema)
         .distinct()
@@ -864,11 +801,14 @@ def _shingle_universe(docs: DataFrame, w: int) -> np.ndarray | None:
 
 
 def _cached_bitmap(
-    t: str, w: int, universe: np.ndarray, utoken: int
+    t: str, w: int, universe: np.ndarray, udigest: bytes
 ) -> np.ndarray | None:
     """(text → universe bitmap), worker-memoized; None if the text has
-    a shingle outside the universe (caller falls back to hash sets)."""
-    key = (t, w, utoken)
+    a shingle outside the universe (caller falls back to hash sets).
+    ``udigest`` is the universe's content digest: a bitmap's bit
+    positions are only meaningful against the exact universe it was
+    built from."""
+    key = (t, w, udigest)
     bm = _BITMAP_CACHE.get(key)
     if bm is None:
         hs = _cached_hset(t, w)
@@ -913,6 +853,11 @@ def _verify_pairs_stage(
             T.StructField("uni", T.LongType()),
         ]
     )
+    # once per universe, at plan time: the bitmap cache key
+    udigest = (
+        None if universe is None
+        else hashlib.blake2b(universe.tobytes(), digest_size=16).digest()
+    )
 
     def gen(it):
         frames = list(it)
@@ -939,8 +884,7 @@ def _verify_pairs_stage(
         m = len(ia)
         ca, cb = codes[:m], codes[m:]
         if universe is not None:
-            utoken = int(universe[0] ^ universe[-1] ^ np.uint64(universe.size))
-            bitmaps = [_cached_bitmap(t, w, universe, utoken) for t in uniq]
+            bitmaps = [_cached_bitmap(t, w, universe, udigest) for t in uniq]
             if all(b is not None for b in bitmaps):
                 mat = np.vstack(bitmaps)
                 lut = _POPCOUNT16
@@ -1249,7 +1193,7 @@ def simhash_signatures(
             out[i] = np.int64(word & np.uint64(0x7FFFFFFFFFFFFFFF))
         return pd.Series(out)
 
-    df = _spread_for_udf(df, id_col)
+    df = spread_to_parallelism(df, id_col)
     return df.select(F.col(id_col).alias("id"), sig(F.col(text_col)).alias("simhash"))
 
 

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from eodal_spark import grid
+from eodal_spark.plans.introspect import cell_id_is_stored, plan_size_bytes
 
 
 # see knn(): below this driver-side size estimate (~ a few hundred
@@ -54,33 +55,6 @@ def _sqdist() -> F.Column:
     adlon = F.abs(F.col("lon_centi") - F.col("q_lon_centi"))
     dlon = F.least(adlon, F.lit(36000) - adlon)
     return (dlat * dlat + dlon * dlon).cast("long")
-
-
-def _cell_id_is_stored(df: DataFrame) -> bool:
-    """True iff ``cell_id`` is a physical column of a leaf relation
-    (parquet/Iceberg scan), not an expression computed above it.
-
-    Decides whether the ring rounds add their disk-range scan predicate:
-    on a stored column the OR-of-BETWEEN pushes to row-group stats and a
-    round reads a sliver; on a COMPUTED column (e.g. straight out of
-    `pages.geocode`) predicate pushdown would substitute the full
-    deriving expression into every comparison — measured 5-10× slower —
-    while the broadcast hash join already evaluates it exactly once per
-    row, so the prefilter is pure loss there.
-
-    Walks py4j queryExecution internals — correct on Spark 4.x but
-    brittle across upgrades, so any reflection failure degrades to
-    False (skip the prefilter: the join alone is still exact)."""
-    try:
-        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-        for i in range(leaves.length()):
-            out = leaves.apply(i).output()
-            for j in range(out.length()):
-                if out.apply(j).name() == "cell_id":
-                    return True
-        return False
-    except Exception:
-        return False
 
 
 # Per-round caches of the most recent knn() call, PER DRIVER THREAD
@@ -207,7 +181,7 @@ def knn(
     n_cells = 1 << res
 
     if scan_prune is None:
-        scan_prune = _cell_id_is_stored(pages_geo)
+        scan_prune = cell_id_is_stored(pages_geo)
     # unprunable scans pay a full corpus materialization per pass —
     # shorten the ladder so stragglers reach the (equally full-pass,
     # but final) brute fallback sooner
@@ -225,17 +199,12 @@ def knn(
     # large estimate keeps the ladder.  Output-identical: the ladder's
     # contract is row-for-row brute equality.
     if not scan_prune:
-        try:
-            q_bytes = int(
-                queries._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:
-            q_bytes = None
+        q_bytes = plan_size_bytes(queries)
         if q_bytes is not None and q_bytes <= _BRUTE_QUERIES_MAX_BYTES:
             return knn_brute(queries, pages_geo, k)
-        if q_bytes is None or q_bytes >= (1 << 60):
-            # no usable estimate (ExistingRDD reports the sentinel):
-            # one bounded probe — cheaper than the ladder's extra
+        if q_bytes is None:
+            # no usable estimate (ExistingRDD reports no stats): one
+            # bounded probe — cheaper than the ladder's extra
             # rounds whenever it answers "tiny"
             n_q = queries.limit(_BRUTE_QUERIES_MAX_ROWS + 1).count()
             if n_q <= _BRUTE_QUERIES_MAX_ROWS:

@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from eodal_spark.operators.text import _words, hash_bucket_milli
+from eodal_spark.plans.introspect import plan_size_bytes
 
 
 @dataclass(frozen=True)
@@ -117,14 +118,8 @@ def train_bigram_lm(
 
 def _maybe_broadcast(df: DataFrame, broadcast_model: bool | None) -> DataFrame:
     if broadcast_model is None:
-        size = None
-        try:
-            size = int(
-                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:
-            pass  # stats reflection drift → let AQE decide
-        # Long.MaxValue sentinel = "no stats", not "huge": leave to AQE
+        # no usable estimate (no stats, reflection drift): leave to AQE
+        size = plan_size_bytes(df)
         if size is not None and size <= 256 << 20:
             broadcast_model = True
     return F.broadcast(df) if broadcast_model else df

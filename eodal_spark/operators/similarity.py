@@ -22,24 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-
-def _dec(c: Column) -> Column:
-    return c.cast("decimal(12,9)")
-
-
-def l2_sqdist_decimal(a: Column, b: Column) -> Column:
-    """Exact decimal squared L2 distance between two float arrays.
-
-    Types are pinned so every step is exact (no 38-precision cap hits):
-    elements → decimal(12,9) (|x| < 1000), diff → decimal(13,9) (|x-y|
-    can reach 2000 — a (12,9) re-cast would overflow under ANSI), diff²
-    → decimal(27,18) exact, accumulator decimal(32,18)."""
-    diff = F.zip_with(a, b, lambda x, y: (_dec(x) - _dec(y)).cast("decimal(13,9)"))
-    return F.aggregate(
-        diff,
-        F.lit(0).cast("decimal(32,18)"),
-        lambda acc, d: (acc + (d * d)).cast("decimal(32,18)"),
-    )
+from eodal_spark.plans.introspect import spread_to_parallelism
 
 
 Q7 = 10_000_000.0  # quantization scale for the integer-exact metric
@@ -97,29 +80,14 @@ def _rank_topk(cand: DataFrame, k: int, order_col: str, asc: bool) -> DataFrame:
     )
 
 
-def _spread_corpus(corpus: DataFrame, key: str = "vec_id") -> DataFrame:
-    """Repartition a small-file corpus up to the session's default
-    parallelism before a compute-dense scan: a compact embeddings
-    parquet (20k × 64 doubles ≈ 10 MB) is ONE input split, so the
-    distance evaluation and the map-side WindowGroupLimit top-k run on
-    a single core no matter how many exist (guide §2: parallelism must
-    come from the work, not the file layout).  Hash-partitioning on the
-    id is deterministic under retries, and a corpus that already has ≥
-    defaultParallelism partitions is returned unchanged — a billion-row
-    corpus never pays the extra exchange."""
-    target = corpus.sparkSession.sparkContext.defaultParallelism
-    if corpus.rdd.getNumPartitions() >= target:
-        return corpus
-    return corpus.repartition(target, F.col(key))
-
-
 def brute_force_topk_l2(
     queries: DataFrame, corpus: DataFrame, k: int
 ) -> DataFrame:
     """queries: (query_id, qvec); corpus: (vec_id, embedding).
     Returns (query_id, vec_id, sqdist, rank) — integer-exact quantized
     ranking, tie-broken by vec_id. Corpus scans once; queries broadcast."""
-    cand = _spread_corpus(corpus).crossJoin(F.broadcast(queries)).withColumn(
+    spread = spread_to_parallelism(corpus, "vec_id")
+    cand = spread.crossJoin(F.broadcast(queries)).withColumn(
         "sqdist", l2_sqdist_q7(F.col("embedding"), F.col("qvec"))
     )
     return _rank_topk(cand, k, "sqdist", asc=True).select(
@@ -130,7 +98,8 @@ def brute_force_topk_l2(
 def brute_force_topk_cosine(
     queries: DataFrame, corpus: DataFrame, k: int
 ) -> DataFrame:
-    cand = _spread_corpus(corpus).crossJoin(F.broadcast(queries)).withColumn(
+    spread = spread_to_parallelism(corpus, "vec_id")
+    cand = spread.crossJoin(F.broadcast(queries)).withColumn(
         "sim", cosine_sim(F.col("embedding"), F.col("qvec"))
     )
     return _rank_topk(cand, k, "sim", asc=False).select(
@@ -177,7 +146,7 @@ def ann_topk_srp(
     branch (n_tables corpus scans and Python stages; guide §2.4).
     Candidate set is identical: a (query, vec) pair collides in the
     stacked join iff it collides in some table's join."""
-    spread = _spread_corpus(corpus)
+    spread = spread_to_parallelism(corpus, "vec_id")
     ctables = [
         srp_bucket_udf(dim, n_planes, seed=1000 + t)(F.col("embedding")).alias(f"_b{t}")
         for t in range(n_tables)

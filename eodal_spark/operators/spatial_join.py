@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from eodal_spark import geometry
+from eodal_spark.plans.introspect import plan_size_bytes
 
 # layers above this poly count fall back to the shuffle join: at a
 # typical few hundred cover cells / ring vertices per polygon the
@@ -100,21 +101,13 @@ def spatial_join(
         # only an inconclusive estimate pays the bounded limit+count
         # probe (no row transfer), capped so the exploded cover stays
         # well under executor broadcast budgets.
-        size = None
-        try:
-            size = int(
-                polys._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:
-            pass  # stats reflection drift → fall through to the probe
         # ~1M typical polygons ≈ 200-300 MB raw; an estimate safely
-        # under that broadcasts, 100× over it cannot.  Relations with NO
-        # stats (ExistingRDD/createDataFrame) report the
-        # defaultSizeInBytes sentinel (Long.MaxValue) — that is
-        # "unknown", not "huge": fall through to the probe
+        # under that broadcasts, 100× over it cannot.  No usable
+        # estimate (no stats, reflection drift) → the probe
+        size = plan_size_bytes(polys)
         if size is not None and size <= 256 << 20:
             broadcast_layer = True
-        elif size is not None and (32 << 30) <= size < (1 << 60):
+        elif size is not None and (32 << 30) <= size:
             broadcast_layer = False
         else:
             n = polys.select("poly_id").limit(

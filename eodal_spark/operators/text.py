@@ -24,11 +24,6 @@ LANG_MARKERS: dict[str, list[str]] = {
 }
 
 
-def _count_word(text: Column, word: str) -> Column:
-    """Occurrences of a whole word (case-insensitive) — native regexp."""
-    return F.regexp_count(F.lower(text), F.lit(rf"\b{word}\b"))
-
-
 def _count_words(text: Column, words: list[str]) -> Column:
     """Total occurrences of a set of whole words in ONE regexp pass.
 
@@ -146,85 +141,7 @@ def _words(text: Column) -> Column:
     return F.filter(F.split(text, r"\s+", -1), lambda w: F.length(w) > 0)
 
 
-def dup_line_frac_milli(text: Column) -> Column:
-    """Fraction (per-mille) of lines that are duplicates of another
-    line — the first Gopher/MassiveText repetition signal (Rae et al.
-    2021, table A1; public method).  Pure integer arithmetic; native
-    higher-order functions, no UDF."""
-    lines = _lines(text)
-    n = F.size(lines)
-    return F.when(n <= 0, F.lit(0).cast("long")).otherwise(
-        _idiv((n - F.size(F.array_distinct(lines))) * 1000, n)
-    )
-
-
-def dup_line_char_frac_milli(text: Column) -> Column:
-    """Per-mille of CHARACTERS sitting in lines that occur more than
-    once.  The inner occurrence count is a nested filter — O(lines²)
-    per document, fine because lines-per-doc is bounded and tiny next
-    to the scan; still whole-stage codegen."""
-    lines = _lines(text)
-    dup_chars = F.aggregate(
-        F.filter(
-            lines,
-            lambda x: F.size(F.filter(lines, lambda y: y == x)) > 1,
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + F.length(x),
-    )
-    return _idiv(dup_chars * 1000, F.greatest(F.length(text), F.lit(1)))
-
-
-def top2gram_char_frac_milli(text: Column) -> Column:
-    """Per-mille of characters covered by the most repeated word
-    2-gram: max over distinct 2-grams of count·len(gram), over
-    length(text) — the Gopher top-n-gram family's n=2 member, made
-    argmax-free (count·len avoids cross-engine tie-break divergence)."""
-    words = _words(text)
-    n = F.size(words)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - 1, F.lit(1))),
-        lambda i: F.concat_ws(" ", F.element_at(words, i), F.element_at(words, i + 1)),
-    )
-    mass = F.array_max(
-        F.transform(
-            F.array_distinct(grams),
-            lambda g: F.size(F.filter(grams, lambda x: x == g)) * F.length(g),
-        )
-    )
-    return F.when(n < 2, F.lit(0).cast("long")).otherwise(
-        _idiv(mass.cast("long") * 1000, F.greatest(F.length(text), F.lit(1)))
-    )
-
-
-def bullet_ellipsis_frac_milli(text: Column) -> Column:
-    """Per-mille of lines that start with a bullet ('-' or '*') or end
-    with an ellipsis ('...') — the Gopher list/truncation heuristics."""
-    lines = _lines(text)
-    n = F.size(lines)
-    hits = F.size(
-        F.filter(
-            lines,
-            lambda x: x.startswith("-")
-            | x.startswith("*")
-            | x.endswith("..."),
-        )
-    )
-    return F.when(n <= 0, F.lit(0).cast("long")).otherwise(
-        _idiv(hits * 1000, n)
-    )
-
-
-def repetition_flags(text: Column) -> Column:
-    """Gopher-style keep/drop verdict from the repetition signals
-    (public thresholds: dup-line ≥ 30%, dup-line-chars ≥ 20%,
-    top-2-gram chars ≥ 20%, bullet/ellipsis lines ≥ 90% → drop)."""
-    return (
-        (dup_line_frac_milli(text) < 300)
-        & (dup_line_char_frac_milli(text) < 200)
-        & (top2gram_char_frac_milli(text) < 200)
-        & (bullet_ellipsis_frac_milli(text) < 900)
-    )
+_REPETITION_STAGING = ("_rl", "_rw", "_rg", "_rgs")
 
 
 def repetition_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -242,7 +159,14 @@ def repetition_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
     read, and the top-2-gram count runs over the SORTED gram array
     (run boundaries via adjacent inequality — counts per distinct gram
     are identical to the per-gram filter's).  Same integer outputs,
-    same NULL propagation."""
+    same NULL propagation.  An input column named like a staging column
+    is rejected (ValueError), not silently dropped."""
+    clash = [c for c in df.columns if c.lower() in _REPETITION_STAGING]
+    if clash:
+        raise ValueError(
+            f"repetition_signals stages through {_REPETITION_STAGING}; "
+            f"rename the input column(s) {clash}"
+        )
     t = F.col(text_col)
     staged = (
         df.select("*", _lines(t).alias("_rl"), _words(t).alias("_rw"))
@@ -327,7 +251,7 @@ def repetition_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
             & (F.col("top2gram_milli") < 200)
             & (F.col("bullet_ellipsis_milli") < 900)
         ).alias("repetition_ok"),
-    ).drop("_rl", "_rw", "_rg", "_rgs")
+    ).drop(*_REPETITION_STAGING)
 
 
 def scrub_boilerplate_lines(

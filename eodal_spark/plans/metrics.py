@@ -1,50 +1,21 @@
 """Per-partition lineage + row-count metrics (north-rule requirement).
 
 The reference logs through Python logging only
-(`eodal/config/settings.py:98-130`).  The engine emits, for any stage:
-
-* an Arrow-batched pass-through that counts rows per partition via a
-  Spark accumulator (zero extra jobs, works mid-pipeline), and
-* a metrics DataFrame (stage, partition_id, rows) that a driver loop
-  appends to a metrics table — queryable lineage, the relational
-  analogue of a metrics Iceberg table.
-
-Both are partition-parallel; nothing collects the data itself.
+(`eodal/config/settings.py:98-130`).  The engine emits, for any stage,
+a metrics DataFrame (stage, partition_id, rows) that the pipeline
+appends to a metrics table — queryable lineage, the relational analogue
+of a metrics Iceberg table.  The count is a real aggregation (map-side
+partials), so it is exact under task retries; nothing collects the data
+itself.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def count_rows_accumulator(df: DataFrame, sc=None):
-    """Attach a row-counting accumulator to a DataFrame.
-
-    Returns (df_passthrough, accumulator).  The accumulator fills when
-    the plan executes — read it *after* an action.  mapInPandas
-    pass-through keeps Arrow batching (no per-row Python).
-
-    CAVEAT (inherent to transformation-side accumulators): Spark
-    guarantees exactly-once updates only inside actions, so task
-    retries/speculation and re-running actions on the same plan inflate
-    the count — treat it as a live progress signal, not lineage truth.
-    Exact per-stage counts come from `append_stage_metrics` (a real
-    aggregation)."""
-    sc = sc or df.sparkSession.sparkContext
-    acc = sc.accumulator(0)
-
-    def tap(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            acc.add(len(pdf))
-            yield pdf
-
-    return df.mapInPandas(tap, df.schema), acc
 
 
 def partition_metrics(df: DataFrame, stage: str) -> DataFrame:
@@ -79,10 +50,3 @@ def append_stage_metrics(df: DataFrame, stage: str, metrics_dir: str) -> dict:
     return record
 
 
-def explain_str(df: DataFrame) -> str:
-    """The formatted physical plan as a string (for plan assertions)."""
-    return df._jdf.queryExecution().explainString(
-        df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )

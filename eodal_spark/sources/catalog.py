@@ -166,10 +166,6 @@ def _partition_cols(spec: list) -> list:
     return out
 
 
-def _spec_source_col(entry) -> str:
-    return entry[-1]
-
-
 def _parse_partition(relname: str) -> dict[str, str]:
     """Hive ``k=v`` components of a file's dir-relative path."""
     from urllib.parse import unquote

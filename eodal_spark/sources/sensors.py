@@ -269,15 +269,3 @@ def s2_tile(safe: Column | str) -> Column:
     return F.get(F.split(safe, "_"), 5)
 
 
-def merge_product_uris(uri: Column | str) -> Column:
-    """Aggregate: the mapper's ``&&`` merge of differing product URIs
-    when scenes are mosaicked across data-take boundaries
-    (`eodal/mapper/mapper.py:626-628`).
-
-    The reference folds in scene order appending ``&& <uri>`` for each
-    differing value; relationally that order is nondeterministic under
-    parallel scan, so this canonicalizes to sorted-distinct joined by
-    ``&&`` — same information, engine-independent bytes.  Use inside
-    ``groupBy(...).agg(...)``."""
-    uri = F.col(uri) if isinstance(uri, str) else uri
-    return F.array_join(F.array_sort(F.collect_set(uri)), "&&")

@@ -19,25 +19,6 @@ from pyspark.sql import functions as F
 from eodal_spark.sources import pages as P
 
 
-def streaming_pages(spark, rows_per_second: int = 1000) -> DataFrame:
-    """A rate-source stream shaped exactly like the pages table —
-    the streaming twin of `sources.pages.synth_pages` (same column
-    derivations keyed on the rate-source ``value``)."""
-    e = P._exprs("spark", "value")
-    rate = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-    )
-    return rate.select(
-        F.expr(e["url"]).alias("url"),
-        F.timestamp_seconds(F.expr(e["ts_sec"])).alias("warc_ts"),
-        F.expr(e["html"]).cast("binary").alias("html"),
-        F.expr(e["text"]).alias("text"),
-        F.expr(e["lang"]).alias("lang"),
-    )
-
-
 def _gated_geo(pages_stream: DataFrame, res: int) -> DataFrame:
     """The SAME gated geocode as the batch path (`P.geocode`), shared by
     every streaming operator: unparseable pages get the non-joining

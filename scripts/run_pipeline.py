@@ -22,18 +22,20 @@ from __future__ import annotations
 import json
 import os
 import sys
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
-
 import __spark_entry__ as E
-from eodal_spark.operators import spatial_join as SJ
-from eodal_spark.operators import tiling as TIL
+from eodal_spark.mapper import headline_stages
 from eodal_spark.plans import metrics as M
 from eodal_spark.session import get_spark
 from eodal_spark.sources import pages as P
 from eodal_spark.sources.catalog import ResumablePipeline, SnapshotCatalog
+
+_GEOCODED_COLS = (
+    "url", "warc_ts", "lang", "cell_id", "lat_centi", "lon_centi", "lat", "lon",
+)
 
 
 def run(spark, warehouse: str, n_pages: int) -> dict:
@@ -49,34 +51,18 @@ def run(spark, warehouse: str, n_pages: int) -> dict:
             lineage.append(M.append_stage_metrics(df, name, metrics_dir))
         return df
 
-    pages = stage("pages", lambda: P.synth_pages(spark, n_pages))
-    geocoded = stage(
-        "geocoded",
-        lambda: P.geocode(pages, E.RES).select(
-            "url", "warc_ts", "lang", "cell_id", "lat_centi", "lon_centi",
-            "lat", "lon",
-        ),
-        sort_by=("cell_id",),
-    )
-    joined = stage(
-        "joined",
-        lambda: SJ.spatial_join(
-            geocoded, E._polys_spark(spark), E.JOIN_RES, rule="centroid",
-            page_cols=("url", "warc_ts", "cell_id"), page_res=E.RES,
-        ),
-    )
-    mosaic = stage(
-        "mosaic",
-        lambda: TIL.mosaic_dedup(
-            TIL.assign_tiles(joined, E.RES, E.TILE_RES),
-            keys=("cell_id", "ts_bucket"),
-        ),
-        sort_by=("tile_cell",),
-    )
+    df = stage("pages", lambda: P.synth_pages(spark, n_pages))
+    polys = E._polys_spark(spark)
+    for name, fn, sort_by in headline_stages(polys, E.RES, E.JOIN_RES, E.TILE_RES):
+        if name == "geocoded":
+            # the snapshot keeps the keys and coordinates, not the
+            # html/text payload
+            fn = lambda pages, geocode=fn: geocode(pages).select(*_GEOCODED_COLS)
+        df = stage(name, partial(fn, df), sort_by)
     return {
         "executed": pipe.executed,
         "skipped": pipe.skipped,
-        "mosaic_rows": mosaic.count(),
+        "mosaic_rows": df.count(),
         "lineage": lineage,
     }
 

@@ -429,3 +429,39 @@ def test_bucket_pairs_est_matches_historical_plan(spark):
     got = {(r["id_a"], r["id_b"]) for r in fused.collect()}
     want = {(r["id_a"], r["id_b"]) for r in historical.collect()}
     assert got == want and len(want) > 100
+
+
+class _CapturePartitionFn:
+    """Stands in for the candidate-pairs DataFrame: hands back the
+    partition function so the verify stage runs without Spark."""
+
+    def mapInPandas(self, fn, schema):
+        return fn
+
+
+def test_bitmap_cache_keyed_by_whole_universe():
+    """Two shingle universes with the same ends and size must not share
+    cached bitmaps: the same bit index names a different hash in each."""
+    import numpy as np
+    import pandas as pd
+
+    w = 5
+    ta, tb, tc = "the quick brown fox", "the quick brown cat", "the quick red fox"
+    hs = np.unique(np.concatenate([D._shingle_hash_set(t, w) for t in (ta, tb, tc)]))
+    lo, hi = hs[0] + np.uint64(1), hs[-1] - np.uint64(1)
+    assert lo not in hs and hi not in hs
+    u1, u2 = np.sort(np.append(hs, lo)), np.sort(np.append(hs, hi))
+    assert (u1[0], u1[-1], u1.size) == (u2[0], u2[-1], u2.size)
+
+    def verify(universe, pairs):
+        gen = D._verify_pairs_stage(_CapturePartitionFn(), w, 0, universe)
+        pdf = pd.DataFrame(pairs, columns=["id_a", "id_b", "ta", "tb"])
+        return pd.concat(list(gen(iter([pdf]))))
+
+    D._BITMAP_CACHE.clear()
+    verify(u1, [(1, 2, ta, tb)])  # caches ta's bitmap against u1
+    out = verify(u2, [(1, 3, ta, tc)])  # ta must be re-encoded for u2
+    ha, hc = D._shingle_hash_set(ta, w), D._shingle_hash_set(tc, w)
+    inter = np.intersect1d(ha, hc).size
+    assert out["inter"].tolist() == [inter]
+    assert out["uni"].tolist() == [ha.size + hc.size - inter]

@@ -14,13 +14,6 @@ from eodal_spark.plans import metrics as M
 from eodal_spark.sources.catalog import ResumablePipeline, SnapshotCatalog
 
 
-def test_accumulator_counts_rows(spark):
-    df = spark.range(1234).select(F.col("id"))
-    tapped, acc = M.count_rows_accumulator(df)
-    assert tapped.count() == 1234
-    assert acc.value == 1234
-
-
 def test_partition_metrics(spark):
     df = spark.range(1000).repartition(7)
     m = M.partition_metrics(df, "stage_x").collect()

@@ -4,12 +4,15 @@ avoid shuffling, is the dedup aggregation partial, is codegen live."""
 
 from __future__ import annotations
 
+import re
+from functools import reduce
+
 import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as E
+from eodal_spark.mapper import headline_stages
 from eodal_spark.operators import spatial_join as SJ
-from eodal_spark.operators import tiling as TIL
 from eodal_spark.sources import pages as P
 
 
@@ -24,6 +27,11 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _headline(spark, pages):
+    stages = headline_stages(E._polys_spark(spark), E.RES, E.JOIN_RES, E.TILE_RES)
+    return reduce(lambda df, stage: stage[1](df), stages, pages)
+
+
 def test_column_pruning_reaches_scan(spark, pages_parquet):
     df = spark.read.parquet(pages_parquet).select("lang")
     plan = _plan(df)
@@ -36,17 +44,21 @@ def test_filter_pushdown_reaches_scan(spark, pages_parquet):
     assert "PushedFilters: [IsNotNull(lang), EqualTo(lang,en)" in plan
 
 
+def test_frozen_bench_headline_matches_library_stages(spark, pages_parquet):
+    """bench.py keeps its own copy of the headline job; it must stay the
+    same query as `headline_stages` (expression ids aside)."""
+    import bench
+
+    def optimized(df) -> str:
+        return re.sub(r"#\d+", "", df._jdf.queryExecution().optimizedPlan().toString())
+
+    frozen = bench.headline_pipeline(spark, pages_parquet)
+    library = _headline(spark, spark.read.parquet(pages_parquet))
+    assert optimized(frozen) == optimized(library)
+
+
 def test_headline_has_single_data_shuffle(spark, pages_parquet):
-    pages = spark.read.parquet(pages_parquet)
-    geo = P.geocode(pages, E.RES)
-    joined = SJ.spatial_join(
-        geo, E._polys_spark(spark), E.JOIN_RES, rule="centroid",
-        page_cols=("url", "warc_ts", "cell_id"), page_res=E.RES,
-    )
-    deduped = TIL.mosaic_dedup(
-        TIL.assign_tiles(joined, E.RES, E.TILE_RES),
-        keys=("cell_id", "ts_bucket"),
-    )
+    deduped = _headline(spark, spark.read.parquet(pages_parquet))
     # collect() executes THIS Dataset's queryExecution so AQE reports
     # the final plan (count() would wrap a new plan); drop the echoed
     # "Initial Plan" section before counting nodes

@@ -164,6 +164,15 @@ def test_repetition_signals_match_python_reference(spark):
         )
 
 
+@pytest.mark.parametrize("col", ["_rl", "_rw", "_rg", "_RGS"])
+def test_repetition_signals_rejects_staging_column_names(spark, col):
+    """A caller's column named like a staging column would be dropped
+    from the output; the operator refuses it instead."""
+    df = spark.createDataFrame([(1, "a b", 7)], f"doc_id long, text string, {col} int")
+    with pytest.raises(ValueError, match=col):
+        TX.repetition_signals(df)
+
+
 def test_scrub_boilerplate_lines(spark):
     """Corpus-level line dedup: a >=10-char line appearing in >=2
     distinct docs vanishes everywhere (order preserved); short lines
