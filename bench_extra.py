@@ -53,12 +53,13 @@ def bench_minhash(spark) -> None:
     timed("banded", lambda: noop(banded))
     est_min = max(0, 500 - 150) * 64
     spark.sparkContext.setJobDescription("minhash: bucket pairs + est")
-    cand = D._bucket_pairs_est(banded, 64, est_min, dedup=False)
+    cand = D._bucket_pairs_est(banded, 64, est_min)
     timed("bucket_pairs_est", lambda: noop(cand))
     spark.sparkContext.setJobDescription("minhash: core (no collapse)")
+    universe = D._shingle_universe(docs, 5)
     timed(
         "pairs_core",
-        lambda: noop(D._minhash_pairs_core(docs, 64, 16, 500, 5, None)),
+        lambda: noop(D._minhash_pairs_core(docs, 64, 16, 500, 5, universe)),
     )
     spark.sparkContext.setJobDescription("minhash: full (collapse)")
     timed(

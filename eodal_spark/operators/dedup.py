@@ -16,10 +16,9 @@ Scale notes (10^12 docs):
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
 import pandas as pd
+from numpy.lib.stride_tricks import sliding_window_view
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -109,6 +108,48 @@ def _minhash_params(num_perm: int, seed: int = 42):
     return a, b
 
 
+def _minhash_sig_fn(num_perm: int, w: int, seed: int = 42):
+    """text → int64[num_perm] MinHash signature over the UTF-8 byte
+    ``w``-shingles (texts shorter than ``w`` are NUL-padded).  The
+    shingle hashing is a numpy sliding-window polynomial hash (zero
+    per-byte Python) and the permutation mins are one
+    (num_perm × shingles) matrix op."""
+    a, b = _minhash_params(num_perm, seed)
+    a_u = a[:, None].astype(np.uint64)
+    b_u = b[:, None].astype(np.uint64)
+    # polynomial rolling-hash weights (mod 2^64 wraparound)
+    weights = np.empty(w, dtype=np.uint64)
+    weights[0] = 1
+    with np.errstate(over="ignore"):  # uint64 wraparound is the hash's modulus
+        for i in range(1, w):
+            weights[i] = weights[i - 1] * _POLY_BASE
+
+    def sig_of(t: str | None) -> np.ndarray:
+        raw = (t or "").encode("utf-8")
+        if len(raw) < w:
+            raw = raw + b"\x00" * (w - len(raw))
+        wins = sliding_window_view(np.frombuffer(raw, dtype=np.uint8), w)
+        hv = np.unique(
+            (wins.astype(np.uint64) * weights[None, :]).sum(axis=1, dtype=np.uint64)
+        ) & np.uint64(0x7FFFFFFFFFFFFFFF)
+        mins = ((a_u * hv[None, :] + b_u) % np.uint64(_MERSENNE)).min(axis=1)
+        return mins.astype(np.int64)
+
+    return sig_of
+
+
+def _band_hashes(bands: int, rows_per_band: int) -> Column:
+    """(band, bh) generator over the ``sig`` column: one row per band
+    with the hash of that band's ``rows_per_band`` signature values —
+    the LSH bucket key."""
+    return F.posexplode(
+        F.transform(
+            F.sequence(F.lit(0), F.lit(bands - 1)),
+            lambda i: F.hash(F.slice("sig", i * rows_per_band + 1, rows_per_band)),
+        )
+    ).alias("band", "bh")
+
+
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -117,42 +158,15 @@ def minhash_signatures(
     w: int = 5,
     seed: int = 42,
 ) -> DataFrame:
-    """(id, sig: array<long>) — MinHash over character shingles.
-
-    Arrow-batched pandas UDF; per document the shingle hashing is a
-    numpy sliding-window polynomial hash (zero per-byte Python) and the
-    permutation mins are one (num_perm × shingles) matrix op.
-    Map-side only — no shuffle (beyond the small-input spread,
+    """(id, sig: array<long>) — MinHash over character shingles
+    (:func:`_minhash_sig_fn`), Arrow-batched.  Map-side only — no
+    shuffle (beyond the small-input spread,
     :func:`spread_to_parallelism`)."""
-    a, b = _minhash_params(num_perm, seed)
-    a_u = a[:, None].astype(np.uint64)
-    b_u = b[:, None].astype(np.uint64)
-    # polynomial rolling-hash weights (mod 2^64 wraparound)
-    base = np.uint64(1099511628211)
-    weights = np.empty(w, dtype=np.uint64)
-    weights[0] = 1
-    with np.errstate(over="ignore"):  # uint64 wraparound is the hash's modulus
-        for i in range(1, w):
-            weights[i] = weights[i - 1] * base
+    sig_of = _minhash_sig_fn(num_perm, w, seed)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def sig(texts: pd.Series) -> pd.Series:
-        from numpy.lib.stride_tricks import sliding_window_view
-
-        out = []
-        for t in texts:
-            raw = (t or "").encode("utf-8")
-            if len(raw) < w:
-                raw = raw + b"\x00" * (w - len(raw))
-            wins = sliding_window_view(np.frombuffer(raw, dtype=np.uint8), w)
-            hv = np.unique(
-                (wins.astype(np.uint64) * weights[None, :]).sum(
-                    axis=1, dtype=np.uint64
-                )
-            ) & np.uint64(0x7FFFFFFFFFFFFFFF)
-            mins = ((a_u * hv[None, :] + b_u) % np.uint64(_MERSENNE)).min(axis=1)
-            out.append(mins.astype(np.int64))
-        return pd.Series(out)
+        return pd.Series([sig_of(t) for t in texts])
 
     df = spread_to_parallelism(df, id_col)
     return df.select(F.col(id_col).alias("id"), sig(F.col(text_col)).alias("sig"))
@@ -243,15 +257,7 @@ def minhash_lsh_candidates(
     pair it with the exact-text pre-collapse in :func:`minhash_dedup`,
     which removes the *guaranteed* hot buckets (identical docs collide
     in every band) without any recall loss."""
-    banded = sigs.select(
-        "id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda i: F.hash(F.slice("sig", i * rows_per_band + 1, rows_per_band)),
-            )
-        ).alias("band", "bh"),
-    )
+    banded = sigs.select("id", _band_hashes(bands, rows_per_band))
     if bucket_cap is not None:
         banded = _cap_buckets(banded, ["band", "bh"], bucket_cap)
     return (
@@ -267,25 +273,106 @@ def _banded_sigs(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
     """(id, sig, band, bh) — one row per (document, band) with the
     band's bucket hash; the full signature rides along for the fused
     estimate (see :func:`_bucket_pairs_est`)."""
-    return sigs.select(
-        "id",
-        "sig",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda i: F.hash(
-                    F.slice("sig", i * rows_per_band + 1, rows_per_band)
-                ),
-            )
-        ).alias("band", "bh"),
+    return sigs.select("id", "sig", _band_hashes(bands, rows_per_band))
+
+
+def _partition_frame(it) -> pd.DataFrame | None:
+    """A mapInPandas partition's Arrow batches as one frame; None when
+    the partition is empty."""
+    frames = list(it)
+    if not frames:
+        return None
+    df = pd.concat(frames, ignore_index=True)
+    return None if df.empty else df
+
+
+def _estimate_survivors(df: pd.DataFrame, num_perm: int, est_min: int):
+    """The per-bucket signature-estimate kernel of one partition of
+    (band, bh, sig) rows: yields chunks ``(ii, jj)`` of row-index pairs
+    into ``df`` that share a bucket and agree on at least
+    ``ceil(est_min / 1000)`` signature positions.
+
+    Rows are grouped into buckets by one sort on (band, bh).  Each
+    bucket is one numpy block, so raw bucket collisions are array scans
+    inside the worker and never leave it (guide §2.3 "decide before you
+    move"):
+      * buckets of ≤ 64 members are batched per size class — a
+        partition's hundreds of thousands of 2-10-member buckets cost a
+        handful of numpy calls — and their pairs compared gathered,
+        chunked so the (pairs × num_perm) temp is bounded;
+      * bigger buckets accumulate pairwise match counts as dense
+        outer products, row-chunked so memory is O(chunk × bucket).
+        Each signature column is first factorized WITHIN the bucket: a
+        column with one distinct value (the band that DEFINES the
+        bucket agrees on every member) contributes +1 to every pair and
+        is folded into the threshold; a column with all-distinct values
+        contributes 0 and is skipped; the rest compare as narrow
+        integer codes instead of int64 — the dense pass is
+        memory-bound, so code width is wall-clock (measured 15.3 s →
+        ~2 s single-core on the sf1.0 hot buckets).
+
+    A pair sharing several buckets is yielded once per shared bucket."""
+    # matches*1000 >= est_min  ⇔  matches >= ceil(est_min/1000)
+    min_matches = -(-est_min // 1000)
+    acc_t = np.uint8 if num_perm <= 255 else np.uint16
+    big_n = 64
+    key = df["band"].to_numpy(np.int64) * np.int64(1 << 33) + (
+        df["bh"].to_numpy(np.int64) + np.int64(1 << 32)
     )
+    order = np.argsort(key, kind="stable")
+    key = key[order]
+    sig_mat = np.vstack(df["sig"].to_numpy()[order])
+    bounds = np.nonzero(np.diff(key))[0] + 1
+    seg_starts = np.concatenate(([0], bounds))
+    sizes = np.diff(np.concatenate((seg_starts, [len(key)])))
+
+    small = (sizes >= 2) & (sizes <= big_n)
+    for n in np.unique(sizes[small]):
+        starts_n = seg_starts[small & (sizes == n)]
+        ti, tj = np.triu_indices(int(n), 1)
+        ii = (starts_n[:, None] + ti[None, :]).ravel()
+        jj = (starts_n[:, None] + tj[None, :]).ravel()
+        for cs in range(0, len(ii), 1 << 20):
+            ic = ii[cs : cs + (1 << 20)]
+            jc = jj[cs : cs + (1 << 20)]
+            keep = (sig_mat[ic] == sig_mat[jc]).sum(axis=1) >= min_matches
+            if keep.any():
+                yield order[ic[keep]], order[jc[keep]]
+    for s, n in zip(seg_starts[sizes > big_n], sizes[sizes > big_n]):
+        n = int(n)
+        bsig = sig_mat[s : s + n]
+        const_cols = 0
+        var_cols: list[np.ndarray] = []
+        for p in range(bsig.shape[1]):
+            u, inv = np.unique(bsig[:, p], return_inverse=True)
+            if len(u) == 1:
+                const_cols += 1
+            elif len(u) < n:
+                ct = np.uint8 if len(u) <= 255 else (
+                    np.uint16 if len(u) <= 65535 else np.int64
+                )
+                var_cols.append(inv.astype(ct))
+        thr = min_matches - const_cols
+        for cs in range(0, n, 2048):
+            ce = min(cs + 2048, n)
+            if thr <= 0:
+                # every collision pair passes the estimate
+                ii, jj = np.nonzero(np.ones((ce - cs, n), dtype=bool))
+            else:
+                acc = np.zeros((ce - cs, n), dtype=acc_t)
+                for col in var_cols:
+                    acc += col[cs:ce, None] == col[None, :]
+                ii, jj = np.nonzero(acc >= thr)
+            keep = jj > (ii + cs)  # strict upper triangle only
+            if keep.any():
+                yield order[s + cs + ii[keep]], order[s + jj[keep]]
 
 
-def _bucket_pairs_est(
-    banded: DataFrame, num_perm: int, est_min: int, dedup: bool = True
-) -> DataFrame:
-    """LSH buckets → distinct candidate pairs that ALSO pass the
-    signature-agreement estimate, in ONE stage.
+def _bucket_pairs_est(banded: DataFrame, num_perm: int, est_min: int) -> DataFrame:
+    """LSH buckets → (id_a, id_b) candidate pairs that ALSO pass the
+    signature-agreement estimate, in ONE stage
+    (:func:`_estimate_survivors` per partition).  A pair sharing several
+    bands is emitted once per shared band; the consumer de-duplicates.
 
     Replaces the candidate self-join + distinct + two signature
     re-joins + zip_with filter chain.  That plan shuffled every raw
@@ -294,26 +381,14 @@ def _bucket_pairs_est(
     and its hottest bucket (4.7k members ⇒ 11.2M pairs) was emitted
     and estimated by a single join task — the 199/200-straggler shape
     of guide §2.5, unsplittable because the skew is join-OUTPUT
-    explosion, which AQE's skew handling cannot touch.
-
-    Here each bucket is processed as one numpy block: pairwise
-    signature match-counts via ``num_perm`` vectorized
-    equality-outer-products (uint8 accumulate, row-chunked so memory
-    is O(chunk × bucket)), and only pairs with
-    ``matches * 1000 >= est_min`` are ever materialized — the 47M
-    collision pairs become array scans inside the workers and the
-    shuffle carries just the 16-byte survivors (guide §2.3 "shuffle
-    keys and metadata, decide before you move").  The estimate is a
+    explosion, which AQE's skew handling cannot touch.  Here the
+    shuffle carries just the 16-byte survivors, and the estimate is a
     pure function of the two signatures, so filtering before the
-    pair-level distinct is output-identical to filtering after.
-
-    The hot bucket's block is ~bucket²·num_perm byte-ops of
-    sequential numpy (about 1.4e9 for the sf1.0 hot bucket — well
-    under a second) instead of 11M codegen'd zip_with evaluations, so
-    the straggler disappears without salting."""
-    # matches*1000 >= est_min  ⇔  matches >= ceil(est_min/1000)
-    min_matches = -(-est_min // 1000)
-    acc_t = np.uint8 if num_perm <= 255 else np.uint16
+    pair-level de-duplication is output-identical to filtering after.
+    The hot bucket's block is ~bucket²·num_perm byte-ops of sequential
+    numpy (about 1.4e9 for the sf1.0 hot bucket — well under a second)
+    instead of 11M codegen'd zip_with evaluations, so the straggler
+    disappears without salting."""
     schema = T.StructType(
         [
             T.StructField("id_a", T.LongType()),
@@ -321,109 +396,25 @@ def _bucket_pairs_est(
         ]
     )
 
-    # buckets above this size use the outer-product path; smaller ones
-    # are batched per size class so a partition's hundreds of thousands
-    # of 2-10-member buckets cost a handful of numpy calls, not 64
-    # tiny allocations each
-    big_n = 64
-
     def gen(it):
-        frames = list(it)
-        if not frames:
+        df = _partition_frame(it)
+        if df is None:
             return
-        df = pd.concat(frames, ignore_index=True)
-        if df.empty:
-            return
-        # group the partition's rows into buckets: sort by (band, bh)
-        key = df["band"].to_numpy(np.int64) * np.int64(1 << 33) + (
-            df["bh"].to_numpy(np.int64) + np.int64(1 << 32)
-        )
-        order = np.argsort(key, kind="stable")
-        key = key[order]
-        ids = df["id"].to_numpy(np.int64)[order]
-        sig_mat = np.vstack(df["sig"].to_numpy()[order]).astype(np.int64)
-        bounds = np.nonzero(np.diff(key))[0] + 1
-        seg_starts = np.concatenate(([0], bounds))
-        sizes = np.diff(np.concatenate((seg_starts, [len(key)])))
+        ids = df["id"].to_numpy(np.int64)
         out_a: list[np.ndarray] = []
         out_b: list[np.ndarray] = []
-
-        def emit(ii: np.ndarray, jj: np.ndarray) -> None:
-            # pairwise signature agreement for explicit index pairs,
-            # chunked so the gathered (pairs × num_perm) temp is bounded
-            for cs in range(0, len(ii), 1 << 20):
-                ic = ii[cs : cs + (1 << 20)]
-                jc = jj[cs : cs + (1 << 20)]
-                mc = (sig_mat[ic] == sig_mat[jc]).sum(axis=1)
-                keep = mc >= min_matches
-                if keep.any():
-                    ia = ids[ic[keep]]
-                    ib = ids[jc[keep]]
-                    out_a.append(np.minimum(ia, ib))
-                    out_b.append(np.maximum(ia, ib))
-
-        # small buckets, one vectorized pass per distinct bucket size
-        small = (sizes >= 2) & (sizes <= big_n)
-        for n in np.unique(sizes[small]):
-            starts_n = seg_starts[small & (sizes == n)]
-            ti, tj = np.triu_indices(int(n), 1)
-            emit(
-                (starts_n[:, None] + ti[None, :]).ravel(),
-                (starts_n[:, None] + tj[None, :]).ravel(),
-            )
-        # big buckets: dense outer-product accumulation, row-chunked.
-        # Each signature column is first factorized WITHIN the bucket:
-        # a column with one distinct value (the band that DEFINES the
-        # bucket agrees on every member) contributes +1 to every pair
-        # and is folded into the threshold; a column with all-distinct
-        # values contributes 0 and is skipped; the rest compare as
-        # narrow integer codes instead of int64 — the dense pass is
-        # memory-bound, so code width is wall-clock (measured 15.3 s →
-        # ~2 s single-core on the sf1.0 hot buckets)
-        for s, n in zip(seg_starts[sizes > big_n], sizes[sizes > big_n]):
-            n = int(n)
-            bsig = sig_mat[s : s + n]
-            const_cols = 0
-            var_cols: list[np.ndarray] = []
-            for p in range(bsig.shape[1]):
-                u, inv = np.unique(bsig[:, p], return_inverse=True)
-                if len(u) == 1:
-                    const_cols += 1
-                elif len(u) < n:
-                    ct = np.uint8 if len(u) <= 255 else (
-                        np.uint16 if len(u) <= 65535 else np.int64
-                    )
-                    var_cols.append(inv.astype(ct))
-            thr = min_matches - const_cols
-            for cs in range(0, n, 2048):
-                ce = min(cs + 2048, n)
-                if thr <= 0:
-                    # every collision pair passes the estimate
-                    ii, jj = np.nonzero(np.ones((ce - cs, n), dtype=bool))
-                else:
-                    acc = np.zeros((ce - cs, n), dtype=acc_t)
-                    for col in var_cols:
-                        acc += col[cs:ce, None] == col[None, :]
-                    ii, jj = np.nonzero(acc >= thr)
-                keep = jj > (ii + cs)  # strict upper triangle only
-                if keep.any():
-                    ia = ids[s + ii[keep] + cs]
-                    ib = ids[s + jj[keep]]
-                    out_a.append(np.minimum(ia, ib))
-                    out_b.append(np.maximum(ia, ib))
+        for ii, jj in _estimate_survivors(df, num_perm, est_min):
+            ia, ib = ids[ii], ids[jj]
+            out_a.append(np.minimum(ia, ib))
+            out_b.append(np.maximum(ia, ib))
         if out_a:
             yield pd.DataFrame(
                 {"id_a": np.concatenate(out_a), "id_b": np.concatenate(out_b)}
             )
 
-    out = banded.repartition(F.col("band"), F.col("bh")).mapInPandas(
+    return banded.repartition(F.col("band"), F.col("bh")).mapInPandas(
         gen, schema
     )
-    # a pair sharing several bands is emitted once per collision;
-    # ``dedup=False`` lets a caller that already dedups downstream
-    # (e.g. the verifier's partition-local unique over id_a-partitioned
-    # pairs) skip this exchange
-    return out.distinct() if dedup else out
 
 
 def _sigs_banded_bm(
@@ -446,15 +437,7 @@ def _sigs_banded_bm(
     ``universe`` — impossible when the universe was computed from the
     same deterministic relation (loud failure beats silent wrong
     counts)."""
-    a, b = _minhash_params(num_perm, seed)
-    a_u = a[:, None].astype(np.uint64)
-    b_u = b[:, None].astype(np.uint64)
-    base = np.uint64(1099511628211)
-    weights = np.empty(w, dtype=np.uint64)
-    weights[0] = 1
-    with np.errstate(over="ignore"):
-        for i in range(1, w):
-            weights[i] = weights[i - 1] * base
+    sig_of = _minhash_sig_fn(num_perm, w, seed)
     words = (universe.size + 63) >> 6
 
     @F.pandas_udf(
@@ -466,22 +449,10 @@ def _sigs_banded_bm(
         )
     )
     def sig_bm(texts: pd.Series) -> pd.DataFrame:
-        from numpy.lib.stride_tricks import sliding_window_view
-
         sigs_out = []
         bms_out = []
         for t in texts:
-            raw = (t or "").encode("utf-8")
-            if len(raw) < w:
-                raw = raw + b"\x00" * (w - len(raw))
-            wins = sliding_window_view(np.frombuffer(raw, dtype=np.uint8), w)
-            hv = np.unique(
-                (wins.astype(np.uint64) * weights[None, :]).sum(
-                    axis=1, dtype=np.uint64
-                )
-            ) & np.uint64(0x7FFFFFFFFFFFFFFF)
-            mins = ((a_u * hv[None, :] + b_u) % np.uint64(_MERSENNE)).min(axis=1)
-            sigs_out.append(mins.astype(np.int64))
+            sigs_out.append(sig_of(t))
             hs = _cached_hset(t or "", w)
             idx = np.searchsorted(universe, hs)
             idx_c = np.minimum(idx, universe.size - 1)
@@ -501,7 +472,6 @@ def _sigs_banded_bm(
     sigs = docs.select(
         F.col("id"), sig_bm(F.col("t")).alias("_sb")
     ).select("id", F.col("_sb.sig").alias("sig"), F.col("_sb.bm").alias("bm"))
-    rows_per_band = num_perm // bands
     # the bucket hash uses the FULL signature values; the signature that
     # rides the shuffle for the estimate prefilter is truncated to
     # 7-bit codes (array<tinyint>, 64 B vs 512 B at 64 perms — measured
@@ -510,19 +480,11 @@ def _sigs_banded_bm(
     # pair, so code width is the stage's memory traffic).  Truncation
     # collisions (~1/128 per position) can only ADD estimate matches,
     # i.e. only let MORE pairs through to the exact popcount verify —
-    # the verified output is unchanged.
+    # so this regime's verified output is a SUPERSET of the wide
+    # (full-signature estimate) regime's, and every extra pair still
+    # passes the exact-Jaccard threshold.
     return sigs.select(
-        "id",
-        "sig",
-        "bm",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda i: F.hash(
-                    F.slice("sig", i * rows_per_band + 1, rows_per_band)
-                ),
-            )
-        ).alias("band", "bh"),
+        "id", "sig", "bm", _band_hashes(bands, num_perm // bands)
     ).select(
         "id",
         F.transform(
@@ -540,24 +502,21 @@ def _bucket_pairs_verified(
     """LSH buckets → EXACT-verified near-dup pairs (id_a, id_b, inter,
     uni), fused into the single bucket stage.
 
-    Extends :func:`_bucket_pairs_est`: the same in-worker bucket
-    grouping and signature-estimate prefilter, then — instead of
-    shipping ~10⁶-10⁷ estimate survivors to a separate text-attach +
-    verify stage — each surviving pair's exact |A∩B| is one
-    popcount(AND) over the docs' shingle bitmaps, right where the pair
-    is born.  Only TRUE near-dup pairs (×bands duplicates) ever leave
-    the worker (measured 8.5M estimate survivors → 80 verified on the
-    sf1.0 bench corpus), so the pair repartition, the two text joins
-    and the 5 GB/query Arrow text transfer vanish (guide §2.4 "remove
-    shuffles outright", §8 "decide with small rows").  The output is a
-    SUPERSET of the est → attach → verify chain's, bounded by the
-    exact-Jaccard threshold: the bitmap encodes exactly the hash-set
-    membership that verifier probed, but the estimate prefilter here
-    runs on 7-bit signature codes, whose collisions admit extra
-    candidates — every one exact-verified, so each extra pair is a true
-    near-duplicate."""
-    min_matches = -(-est_min // 1000)
-    acc_t = np.uint8 if num_perm <= 255 else np.uint16
+    The same in-worker bucket kernel as :func:`_bucket_pairs_est`
+    (:func:`_estimate_survivors`), then — instead of shipping
+    ~10⁶-10⁷ estimate survivors to a separate text-attach + verify
+    stage — each surviving pair's exact |A∩B| is one popcount(AND) over
+    the docs' shingle bitmaps, right where the pair is born.  Only TRUE
+    near-dup pairs (×bands duplicates) ever leave the worker (measured
+    8.5M estimate survivors → 80 verified on the sf1.0 bench corpus),
+    so the pair repartition, the two text joins and the 5 GB/query
+    Arrow text transfer vanish (guide §2.4 "remove shuffles outright",
+    §8 "decide with small rows").  The output is a SUPERSET of the
+    est → attach → verify chain's, bounded by the exact-Jaccard
+    threshold: the bitmap encodes exactly the hash-set membership that
+    verifier probes, but the estimate prefilter here runs on 7-bit
+    signature codes, whose collisions admit extra candidates — every
+    one exact-verified, so each extra pair is a true near-duplicate."""
     schema = T.StructType(
         [
             T.StructField("id_a", T.LongType()),
@@ -566,112 +525,34 @@ def _bucket_pairs_verified(
             T.StructField("uni", T.LongType()),
         ]
     )
-    big_n = 64
     lut = _POPCOUNT16
 
     def gen(it):
-        frames = list(it)
-        if not frames:
+        df = _partition_frame(it)
+        if df is None:
             return
-        df = pd.concat(frames, ignore_index=True)
-        if df.empty:
-            return
-        key = df["band"].to_numpy(np.int64) * np.int64(1 << 33) + (
-            df["bh"].to_numpy(np.int64) + np.int64(1 << 32)
-        )
-        order = np.argsort(key, kind="stable")
-        key = key[order]
-        ids = df["id"].to_numpy(np.int64)[order]
-        sig_mat = np.vstack(df["sig"].to_numpy()[order])  # int8 codes
+        ids = df["id"].to_numpy(np.int64)
         bm_mat = np.vstack(
-            [
-                np.frombuffer(buf, dtype=np.uint64)
-                for buf in df["bm"].to_numpy()[order]
-            ]
+            [np.frombuffer(buf, dtype=np.uint64) for buf in df["bm"].to_numpy()]
         )
         nsh = lut[bm_mat.view(np.uint16)].sum(axis=1, dtype=np.int64)
-        bounds = np.nonzero(np.diff(key))[0] + 1
-        seg_starts = np.concatenate(([0], bounds))
-        sizes = np.diff(np.concatenate((seg_starts, [len(key)])))
         out_a: list[np.ndarray] = []
         out_b: list[np.ndarray] = []
         out_i: list[np.ndarray] = []
         out_u: list[np.ndarray] = []
-
-        def emit(ii: np.ndarray, jj: np.ndarray) -> None:
-            # estimate prefilter, then exact popcount verify, chunked
-            for cs in range(0, len(ii), 1 << 20):
-                ic = ii[cs : cs + (1 << 20)]
-                jc = jj[cs : cs + (1 << 20)]
-                mc = (sig_mat[ic] == sig_mat[jc]).sum(axis=1)
-                est = mc >= min_matches
-                if not est.any():
-                    continue
-                ie, je = ic[est], jc[est]
-                inter = lut[(bm_mat[ie] & bm_mat[je]).view(np.uint16)].sum(
-                    axis=1, dtype=np.int64
-                )
-                uni = nsh[ie] + nsh[je] - inter
-                keep = inter * 1000 >= threshold_milli * uni
-                if keep.any():
-                    ia = ids[ie[keep]]
-                    ib = ids[je[keep]]
-                    out_a.append(np.minimum(ia, ib))
-                    out_b.append(np.maximum(ia, ib))
-                    out_i.append(inter[keep])
-                    out_u.append(uni[keep])
-
-        small = (sizes >= 2) & (sizes <= big_n)
-        for n in np.unique(sizes[small]):
-            starts_n = seg_starts[small & (sizes == n)]
-            ti, tj = np.triu_indices(int(n), 1)
-            emit(
-                (starts_n[:, None] + ti[None, :]).ravel(),
-                (starts_n[:, None] + tj[None, :]).ravel(),
+        for ie, je in _estimate_survivors(df, num_perm, est_min):
+            inter = lut[(bm_mat[ie] & bm_mat[je]).view(np.uint16)].sum(
+                axis=1, dtype=np.int64
             )
-        # big buckets: estimate via factorized-code accumulation as in
-        # _bucket_pairs_est, exact popcount only on the survivors
-        for s, n in zip(seg_starts[sizes > big_n], sizes[sizes > big_n]):
-            n = int(n)
-            bsig = sig_mat[s : s + n]
-            const_cols = 0
-            var_cols: list[np.ndarray] = []
-            for p in range(bsig.shape[1]):
-                u, inv = np.unique(bsig[:, p], return_inverse=True)
-                if len(u) == 1:
-                    const_cols += 1
-                elif len(u) < n:
-                    ct = np.uint8 if len(u) <= 255 else (
-                        np.uint16 if len(u) <= 65535 else np.int64
-                    )
-                    var_cols.append(inv.astype(ct))
-            thr = min_matches - const_cols
-            for cs in range(0, n, 2048):
-                ce = min(cs + 2048, n)
-                if thr <= 0:
-                    ii, jj = np.nonzero(np.ones((ce - cs, n), dtype=bool))
-                else:
-                    acc = np.zeros((ce - cs, n), dtype=acc_t)
-                    for col in var_cols:
-                        acc += col[cs:ce, None] == col[None, :]
-                    ii, jj = np.nonzero(acc >= thr)
-                keep = jj > (ii + cs)  # strict upper triangle only
-                if not keep.any():
-                    continue
-                ie = s + ii[keep] + cs
-                je = s + jj[keep]
-                inter = lut[(bm_mat[ie] & bm_mat[je]).view(np.uint16)].sum(
-                    axis=1, dtype=np.int64
-                )
-                uni = nsh[ie] + nsh[je] - inter
-                kx = inter * 1000 >= threshold_milli * uni
-                if kx.any():
-                    ia = ids[ie[kx]]
-                    ib = ids[je[kx]]
-                    out_a.append(np.minimum(ia, ib))
-                    out_b.append(np.maximum(ia, ib))
-                    out_i.append(inter[kx])
-                    out_u.append(uni[kx])
+            uni = nsh[ie] + nsh[je] - inter
+            keep = inter * 1000 >= threshold_milli * uni
+            if keep.any():
+                ia = ids[ie[keep]]
+                ib = ids[je[keep]]
+                out_a.append(np.minimum(ia, ib))
+                out_b.append(np.maximum(ia, ib))
+                out_i.append(inter[keep])
+                out_u.append(uni[keep])
         if out_a:
             yield pd.DataFrame(
                 {
@@ -722,46 +603,52 @@ def _shingle_hash_set(t: str, w: int) -> np.ndarray:
         return np.unique(_mix64(pw[ends - 1] * (s[ends] - s[starts])))
 
 
-# Worker-level shingle-hash-set memo for the pair verifier: the same
-# text recurs across MANY candidate pairs and Arrow batches (a doc with
-# k candidates appears k times), and re-hashing it per batch dominated
-# the verify stage.  Keyed by the text itself (content-addressed, so
-# reuse across queries/corpora is always correct); bounded and cleared
-# wholesale rather than LRU-tracked — the working set per task is one
-# corpus partition's texts, far below the cap (guide §4.5: heavyweight
-# init once per worker, amortized across batches via worker reuse).
+# Worker-level shingle-hash-set memo: the same text recurs across MANY
+# candidate pairs and Arrow batches (a doc with k candidates appears k
+# times in the verify stage), and re-hashing it per batch dominated that
+# stage.  Keyed by the text itself (content-addressed, so reuse across
+# queries/corpora is always correct); cleared wholesale rather than
+# LRU-tracked (guide §4.5: heavyweight init once per worker, amortized
+# across batches via worker reuse).  Bounded by the BYTES of the cached
+# hash sets, not by entry count: a set costs 8 B per distinct shingle
+# (≈ 8 B per character of text), so an entry cap lets a corpus of long
+# pages grow the memo without limit.  One Python worker runs per task
+# slot, so the budget is per core: 256 MiB still holds ~32k distinct
+# 1 kB pages and stays a small share of the usual 2-4 GiB per core of
+# executor sizing.  The text keys add at most half again on top (4 B
+# per character for non-Latin-1 text, 1 B for ASCII).
 _HSET_CACHE: dict[tuple[str, int], np.ndarray] = {}
-_HSET_CACHE_CAP = 200_000
+_HSET_CACHE_BUDGET = 256 << 20
+_hset_cache_bytes = 0
 
 
 def _cached_hset(t: str, w: int) -> np.ndarray:
+    global _hset_cache_bytes
     key = (t, w)
     hs = _HSET_CACHE.get(key)
     if hs is None:
-        if len(_HSET_CACHE) >= _HSET_CACHE_CAP:
-            _HSET_CACHE.clear()
         hs = _shingle_hash_set(t, w)
-        _HSET_CACHE[key] = hs
+        if _hset_cache_bytes + hs.nbytes > _HSET_CACHE_BUDGET:
+            _HSET_CACHE.clear()
+            _hset_cache_bytes = 0
+        if hs.nbytes <= _HSET_CACHE_BUDGET:
+            _HSET_CACHE[key] = hs
+            _hset_cache_bytes += hs.nbytes
     return hs
 
 
-# Shared-universe bitmap verify (see _verify_pairs_stage): boilerplate
-# corpora draw their shingles from a tiny shared universe (measured
-# ~2,000 distinct shingle hashes across 50k bench docs), so each doc
+# Shared-universe bitmaps (see _sigs_banded_bm): boilerplate corpora
+# draw their shingles from a tiny shared universe (measured ~2,000
+# distinct shingle hashes across 50k bench docs), so each doc
 # compresses to V/64 uint64 words and a pair's exact intersection is
 # popcount(A & B) — ~30 word-ops instead of gathering + binary-searching
 # ~325 hash probes per pair.  The universe is discovered ONCE per query
-# by a bounded aggregate (below); per-text bitmaps are then pure
-# functions of (text, universe) and live in the worker's
-# content-addressed cache, so a text is encoded once per worker, not
-# once per partition × repetition (guide §4.5).
+# by a bounded aggregate (below); above the cap the wide regime's
+# hash-set verifier (_verify_pairs_stage) runs instead.
 _BITMAP_UNIVERSE_CAP = 8192
 _POPCOUNT16 = np.unpackbits(
     np.arange(1 << 16, dtype=np.uint16).view(np.uint8)[:, None], axis=1
 ).sum(axis=1, dtype=np.uint8).reshape(-1, 2).sum(axis=1, dtype=np.uint8)
-
-_BITMAP_CACHE: dict[tuple, np.ndarray] = {}
-_BITMAP_CACHE_CAP = 200_000
 
 
 def _shingle_universe(docs: DataFrame, w: int) -> np.ndarray | None:
@@ -800,36 +687,8 @@ def _shingle_universe(docs: DataFrame, w: int) -> np.ndarray | None:
     return np.sort(signed.view(np.uint64))
 
 
-def _cached_bitmap(
-    t: str, w: int, universe: np.ndarray, udigest: bytes
-) -> np.ndarray | None:
-    """(text → universe bitmap), worker-memoized; None if the text has
-    a shingle outside the universe (caller falls back to hash sets).
-    ``udigest`` is the universe's content digest: a bitmap's bit
-    positions are only meaningful against the exact universe it was
-    built from."""
-    key = (t, w, udigest)
-    bm = _BITMAP_CACHE.get(key)
-    if bm is None:
-        hs = _cached_hset(t, w)
-        idx = np.searchsorted(universe, hs)
-        idx_c = np.minimum(idx, universe.size - 1)
-        if not (universe[idx_c] == hs).all():
-            return None
-        words = (universe.size + 63) >> 6
-        bm = np.zeros(words, dtype=np.uint64)
-        np.bitwise_or.at(bm, idx_c >> 6, np.uint64(1) << (idx_c & 63).astype(np.uint64))
-        if len(_BITMAP_CACHE) >= _BITMAP_CACHE_CAP:
-            _BITMAP_CACHE.clear()
-        _BITMAP_CACHE[key] = bm
-    return bm
-
-
 def _verify_pairs_stage(
-    paired: DataFrame,
-    w: int,
-    threshold_milli: int,
-    universe: np.ndarray | None = None,
+    paired: DataFrame, w: int, threshold_milli: int
 ) -> DataFrame:
     """Candidate (id_a, id_b, ta, tb) rows → verified near-dup pairs
     (id_a, id_b, inter, uni) with exact shingle-Jaccard ≥ threshold —
@@ -853,18 +712,10 @@ def _verify_pairs_stage(
             T.StructField("uni", T.LongType()),
         ]
     )
-    # once per universe, at plan time: the bitmap cache key
-    udigest = (
-        None if universe is None
-        else hashlib.blake2b(universe.tobytes(), digest_size=16).digest()
-    )
 
     def gen(it):
-        frames = list(it)
-        if not frames:
-            return
-        df = pd.concat(frames, ignore_index=True)
-        if df.empty:
+        df = _partition_frame(it)
+        if df is None:
             return
         ia_raw = df["id_a"].to_numpy(np.int64)
         ib_raw = df["id_b"].to_numpy(np.int64)
@@ -883,32 +734,6 @@ def _verify_pairs_stage(
         codes, uniq = pd.factorize(texts)
         m = len(ia)
         ca, cb = codes[:m], codes[m:]
-        if universe is not None:
-            bitmaps = [_cached_bitmap(t, w, universe, udigest) for t in uniq]
-            if all(b is not None for b in bitmaps):
-                mat = np.vstack(bitmaps)
-                lut = _POPCOUNT16
-                sizes = lut[mat.view(np.uint16)].sum(axis=1, dtype=np.int64)
-                inters = np.empty(m, dtype=np.int64)
-                chunk = max(1, (1 << 22) // max(mat.shape[1], 1))
-                for cs in range(0, m, chunk):
-                    ce = min(cs + chunk, m)
-                    andw = mat[ca[cs:ce]] & mat[cb[cs:ce]]
-                    inters[cs:ce] = lut[andw.view(np.uint16)].sum(
-                        axis=1, dtype=np.int64
-                    )
-                unis = sizes[ca] + sizes[cb] - inters
-                keep = inters * 1000 >= threshold_milli * unis
-                if keep.any():
-                    yield pd.DataFrame(
-                        {
-                            "id_a": ia[keep],
-                            "id_b": ib[keep],
-                            "inter": inters[keep],
-                            "uni": unis[keep],
-                        }
-                    )
-                return
         hsets = [_cached_hset(t, w) for t in uniq]
         sizes = np.fromiter((h.size for h in hsets), np.int64, len(hsets))
         # sort pairs by left code so each id_a group is a contiguous
@@ -973,9 +798,7 @@ def _minhash_pairs_core(
     bands: int,
     threshold_milli: int,
     w: int,
-    bucket_cap: int | None,
-    universe: np.ndarray | None = None,
-    universe_known: bool = False,
+    universe: np.ndarray | None,
 ) -> DataFrame:
     """signatures → fused LSH-bucket + estimate pair generation → exact
     per-pair Jaccard verify, over ``docs(id, t)``.  Candidates only —
@@ -984,39 +807,39 @@ def _minhash_pairs_core(
     The signature-level Jaccard estimate (count of agreeing signature
     positions, threshold ``threshold_milli - 150``: the margin keeps
     the estimate's false-negative probability < 1% at 64 perms) is
-    applied INSIDE the bucket stage (:func:`_bucket_pairs_est`), so raw
-    bucket collisions are never shuffled, deduplicated, or re-joined
-    against the signature table — only estimate survivors reach the
-    pair-level distinct and the exact verifier.  The estimate is a pure
-    pair function, so the output is identical to the historical
-    candidates → distinct → estimate-join plan (and still gated by the
-    all-pairs oracle)."""
+    applied INSIDE the bucket stage (:func:`_estimate_survivors`), so
+    raw bucket collisions are never shuffled, deduplicated, or
+    re-joined against the signature table — only estimate survivors
+    reach the exact verifier.
+
+    ``universe`` is the corpus's shingle-hash universe
+    (:func:`_shingle_universe`) and picks the regime:
+      * small universe (boilerplate corpora): each doc's exact shingle
+        set compresses to a V-bit bitmap that rides the bucket shuffle,
+        and pairs are estimate-filtered on 7-bit signature codes AND
+        exact-verified inside the bucket workers — only true near-dup
+        pairs ever leave the stage (guide §2.4/§8);
+      * None (universe above the cap): full-signature estimate in the
+        bucket stage, then text attach → hash-set verify.
+    Both regimes emit only pairs at or above the exact-Jaccard
+    threshold with exact (inter, uni); the bitmap regime's output is a
+    SUPERSET of the wide regime's, because 7-bit code collisions can
+    only add estimate matches."""
     est_min = max(0, threshold_milli - 150) * num_perm
-    # boilerplate-corpus fast path: when the corpus's distinct shingle
-    # universe is small (bounded discovery job — None above the cap),
-    # each doc's exact shingle set compresses to a V-bit bitmap that
-    # rides the bucket shuffle, and pairs are estimate-filtered AND
-    # exact-verified inside the bucket workers — only true near-dup
-    # pairs ever leave the stage (guide §2.4/§8).  Wide-universe
-    # corpora keep the est → text-attach → verify chain.
-    if not universe_known:
-        universe = _shingle_universe(docs, w)
-    if universe is not None and bucket_cap is None:
+    if universe is not None:
         banded_bm = _sigs_banded_bm(docs, universe, num_perm, w, bands)
         return _bucket_pairs_verified(
             banded_bm, num_perm, est_min, threshold_milli
         )
     sigs = minhash_signatures(docs, "t", "id", num_perm, w)
     banded = _banded_sigs(sigs, bands, num_perm // bands)
-    if bucket_cap is not None:
-        banded = _cap_buckets(banded, ["band", "bh"], bucket_cap)
     # one exchange between candidates and output: pairs co-partition on
     # id_a (both copies of a band-duplicated pair agree on both ids, so
     # any id_a partitioning co-locates them), texts attach by broadcast
     # join, and the verify stage dedups + verifies + filters in a
     # single partition-level pass — the pair-level distinct exchange
     # and the post-UDF filter both collapse into it (guide §2.4)
-    cand = _bucket_pairs_est(banded, num_perm, est_min, dedup=False)
+    cand = _bucket_pairs_est(banded, num_perm, est_min)
     cand = cand.repartition(F.col("id_a"))
     # (A broadcast-{id: text} variant that streamed only 16-byte id
     # pairs was measured SLOWER here: each task re-unpickles the
@@ -1028,7 +851,7 @@ def _minhash_pairs_core(
         cand.join(docs.select(F.col("id").alias("id_a"), F.col("t").alias("ta")), "id_a")
         .join(docs.select(F.col("id").alias("id_b"), F.col("t").alias("tb")), "id_b")
     )
-    return _verify_pairs_stage(paired, w, threshold_milli, universe)
+    return _verify_pairs_stage(paired, w, threshold_milli)
 
 
 def minhash_dedup(
@@ -1041,13 +864,22 @@ def minhash_dedup(
     w: int = 5,
     collapse_exact: bool = True,
     expand: str = "all",
-    bucket_cap: int | None = None,
 ) -> DataFrame:
     """Full pipeline: **exact-text pre-collapse** → signatures → LSH
     candidates → exact-Jaccard verify within candidates → fan results
     back out through the exact-duplicate groups.  Returns
     (id_a, id_b, inter, uni) verified near-dup pairs; survivors follow
     the min-id rule downstream.
+
+    Recall contract: every returned pair is exact (shingle Jaccard ≥
+    ``threshold_milli``/1000, exact inter/uni), but not every such pair
+    is returned.  A pair of Jaccard J becomes an LSH candidate with
+    probability 1 − (1 − J^r)^b, r = num_perm / bands: with the default
+    b = 16, r = 4 that is ≈ 0.64 at J = 0.5 (the threshold of the
+    ``docs_minhash_pairs`` / ``docs_dup_groups`` queries) and ≈ 0.9998
+    at J = 0.8.  Candidates must then agree on ≥ (threshold_milli − 150)
+    milli of their signature positions (the estimate prefilter) before
+    the exact verify.
 
     The pre-collapse (``collapse_exact``, on by default) is the
     hot-bucket defense the 10^12-doc case REQUIRES: n byte-identical
@@ -1071,24 +903,20 @@ def minhash_dedup(
         spanning pairs, and cross-group pairs only between
         representatives: O(n) output with identical connected
         components / dup_groups downstream — the form to use at scale.
-
-    ``bucket_cap`` additionally drops residual oversized LSH buckets
-    (near-identical template *families*); see :func:`_cap_buckets`.
     """
     if expand not in ("all", "star"):
         raise ValueError(f"unknown expand mode {expand!r}")
-    if not collapse_exact:
-        docs = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
-        return _minhash_pairs_core(
-            docs, num_perm, bands, threshold_milli, w, bucket_cap
-        )
     docs = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
     # the shingle universe of the RAW corpus equals the universe of its
     # distinct-text representatives (duplicate texts add no shingles) —
     # discover it BEFORE the collapse machinery so the bounded discovery
     # job scans the plain corpus instead of materializing the
     # sha2/groupBy/semi-join chain a first time
-    universe = _shingle_universe(docs, w) if bucket_cap is None else None
+    universe = _shingle_universe(docs, w)
+    if not collapse_exact:
+        return _minhash_pairs_core(
+            docs, num_perm, bands, threshold_milli, w, universe
+        )
     # hash the corpus ONCE: keyed is the tiny (id, 32-byte digest)
     # projection, persisted so reps and mapping both read it instead of
     # re-running sha2 over the full text column
@@ -1103,8 +931,7 @@ def minhash_dedup(
         reps.select(F.col("rep_id").alias("id")), "id", "semi"
     )
     rep_pairs = _minhash_pairs_core(
-        rep_docs, num_perm, bands, threshold_milli, w, bucket_cap,
-        universe=universe, universe_known=bucket_cap is None,
+        rep_docs, num_perm, bands, threshold_milli, w, universe
     )
     # exact groups with >1 member need |shingle set| for their
     # within-group pairs — computed once per such representative

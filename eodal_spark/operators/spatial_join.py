@@ -132,10 +132,8 @@ def spatial_join(
     # prune the big side BEFORE the join: only the join key, the refine
     # coordinates and the requested payload flow through (narrow rows ⇒
     # less codegen work and smaller exchanges at 100 TB)
-    need = {"_join_cell", *page_cols}
-    if rule == "exact":
-        need |= {"lon", "lat"}
-    pages_geo = pages_geo.select(*need)
+    refine = ["lon", "lat"] if rule == "exact" else []
+    pages_geo = pages_geo.select(*dict.fromkeys(["_join_cell", *refine, *page_cols]))
 
     # polygon attribute columns beyond poly_id attach via one extra
     # broadcast join on poly_id AFTER the spatial match (attributes

@@ -2,6 +2,10 @@
 plans/<tag>/<query>_<suffix>.txt  (guide §1: record the plan shape
 before and after each optimization).
 
+Session counters (expression ids ``#12``, ``plan_id=3``, ``RDD[7]``) are
+stripped before writing, so ``diff -r`` of two captures of the same
+plan is empty.
+
 Usage: python scripts/capture_plans.py <tag> <suffix> [query ...]
 """
 
@@ -9,6 +13,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -18,6 +23,19 @@ import __spark_entry__ as E
 from eodal_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+_COUNTERS = [
+    (re.compile(r"#\d+"), "#"),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"RDD\[\d+\]"), "RDD[]"),
+]
+
+
+def normalize(plan: str) -> str:
+    """``plan`` with the session's id counters blanked out."""
+    for pat, repl in _COUNTERS:
+        plan = pat.sub(repl, plan)
+    return plan
 
 
 def main() -> None:
@@ -34,7 +52,7 @@ def main() -> None:
         with redirect_stdout(buf):
             df.explain("formatted")
         with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
-            f.write(buf.getvalue())
+            f.write(normalize(buf.getvalue()))
         print("wrote", name)
     spark.stop()
 

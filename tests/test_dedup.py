@@ -380,29 +380,35 @@ def test_bucket_cap_drops_oversized_buckets(spark):
     assert uncapped.count() == 45 + 1
 
 
-def test_bucket_pairs_est_matches_historical_plan(spark):
-    """The fused bucket+estimate stage (r7 optimization) must emit
-    exactly the pairs of the historical plan: LSH candidate self-join →
-    distinct → signature re-join → zip_with agreement filter.  The
-    corpus plants a >64-member near-identical template family so the
-    dense (factorized outer-product) big-bucket path runs, not just the
-    size-class small-bucket path."""
+@pytest.fixture(scope="module")
+def template_docs(spark):
+    """(id, t): 90 one-word variations of one template — giant LSH
+    buckets, so the >64-member (factorized outer-product) bucket path
+    runs — plus 50 unrelated docs (small buckets / no collisions)."""
     import random
 
     rng = random.Random(11)
     words = [f"t{j}" for j in range(60)]
     rows = []
-    # 90 variations of one template -> giant LSH buckets (dense path)
     base = " ".join(rng.choice(words) for _ in range(60))
     toks = base.split()
     for i in range(90):
         v = list(toks)
         v[i % 60] = f"X{i}"
         rows.append((i, " ".join(v)))
-    # unrelated tail (small buckets / no collisions)
     for i in range(90, 140):
         rows.append((i, " ".join(rng.choice(words) for _ in range(60))))
-    docs = spark.createDataFrame(rows, ["id", "t"]).cache()
+    return spark.createDataFrame(rows, ["id", "t"]).cache()
+
+
+def test_bucket_pairs_est_matches_historical_plan(spark, template_docs):
+    """The fused bucket+estimate stage (r7 optimization) must emit
+    exactly the pairs of the historical plan: LSH candidate self-join →
+    distinct → signature re-join → zip_with agreement filter.  The
+    corpus plants a >64-member near-identical template family so the
+    dense (factorized outer-product) big-bucket path runs, not just the
+    size-class small-bucket path."""
+    docs = template_docs
 
     num_perm, bands, rpb, tm = 64, 16, 4, 500
     est_min = max(0, tm - 150) * num_perm
@@ -431,37 +437,58 @@ def test_bucket_pairs_est_matches_historical_plan(spark):
     assert got == want and len(want) > 100
 
 
-class _CapturePartitionFn:
-    """Stands in for the candidate-pairs DataFrame: hands back the
-    partition function so the verify stage runs without Spark."""
-
-    def mapInPandas(self, fn, schema):
-        return fn
-
-
-def test_bitmap_cache_keyed_by_whole_universe():
-    """Two shingle universes with the same ends and size must not share
-    cached bitmaps: the same bit index names a different hash in each."""
+def test_hset_cache_bounded_by_bytes(monkeypatch):
+    """The worker shingle-hash-set memo never holds more array bytes
+    than its budget, whatever the text lengths; a set bigger than the
+    whole budget is returned but not cached."""
     import numpy as np
-    import pandas as pd
 
-    w = 5
-    ta, tb, tc = "the quick brown fox", "the quick brown cat", "the quick red fox"
-    hs = np.unique(np.concatenate([D._shingle_hash_set(t, w) for t in (ta, tb, tc)]))
-    lo, hi = hs[0] + np.uint64(1), hs[-1] - np.uint64(1)
-    assert lo not in hs and hi not in hs
-    u1, u2 = np.sort(np.append(hs, lo)), np.sort(np.append(hs, hi))
-    assert (u1[0], u1[-1], u1.size) == (u2[0], u2[-1], u2.size)
+    budget = 6_000
+    monkeypatch.setattr(D, "_HSET_CACHE", {})
+    monkeypatch.setattr(D, "_hset_cache_bytes", 0)
+    monkeypatch.setattr(D, "_HSET_CACHE_BUDGET", budget)
+    rng = np.random.RandomState(3)
+    for n in [100, 300, 50, 700, 20, 2_000, 400, 10]:
+        t = "".join(rng.choice(list("abcdefghij"), size=n))
+        hs = D._cached_hset(t, 5)
+        assert hs.tolist() == D._shingle_hash_set(t, 5).tolist()
+        held = sum(v.nbytes for v in D._HSET_CACHE.values())
+        assert held == D._hset_cache_bytes <= budget
+        assert ((t, 5) in D._HSET_CACHE) == (hs.nbytes <= budget)
 
-    def verify(universe, pairs):
-        gen = D._verify_pairs_stage(_CapturePartitionFn(), w, 0, universe)
-        pdf = pd.DataFrame(pairs, columns=["id_a", "id_b", "ta", "tb"])
-        return pd.concat(list(gen(iter([pdf]))))
 
-    D._BITMAP_CACHE.clear()
-    verify(u1, [(1, 2, ta, tb)])  # caches ta's bitmap against u1
-    out = verify(u2, [(1, 3, ta, tc)])  # ta must be re-encoded for u2
-    ha, hc = D._shingle_hash_set(ta, w), D._shingle_hash_set(tc, w)
-    inter = np.intersect1d(ha, hc).size
-    assert out["inter"].tolist() == [inter]
-    assert out["uni"].tolist() == [ha.size + hc.size - inter]
+@pytest.mark.parametrize("corpus, threshold", [("planted", 700), ("template", 500)])
+def test_bitmap_and_wide_regimes_agree_with_exact_jaccard(
+    request, monkeypatch, corpus, threshold
+):
+    """Both MinHash regimes — the in-bucket bitmap verify (small
+    shingle universe) and the estimate → text-attach → hash-set verify
+    chain (universe above `_BITMAP_UNIVERSE_CAP`) — emit only true
+    pairs with exact (inter, uni), and the bitmap regime's 7-bit
+    estimate codes can only ADD pairs to the wide regime's output."""
+    if corpus == "planted":
+        df = request.getfixturevalue("planted")
+    else:
+        df = request.getfixturevalue("template_docs").selectExpr(
+            "id AS doc_id", "t AS text"
+        )
+    docs = df.selectExpr("doc_id AS id", "text AS t")
+    truth = {
+        (r.id_a, r.id_b): (r.inter, r.uni)
+        for r in D.jaccard_pairs(df, threshold_milli=threshold).collect()
+    }
+
+    def run():
+        return {
+            (r.id_a, r.id_b): (r.inter, r.uni)
+            for r in D.minhash_dedup(df, threshold_milli=threshold).collect()
+        }
+
+    assert D._shingle_universe(docs, 5) is not None
+    bitmap = run()
+    monkeypatch.setattr(D, "_BITMAP_UNIVERSE_CAP", 0)
+    assert D._shingle_universe(docs, 5) is None
+    wide = run()
+    for got in (bitmap, wide):
+        assert got and all(truth.get(k) == v for k, v in got.items())
+    assert set(wide) <= set(bitmap)
