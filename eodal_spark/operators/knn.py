@@ -11,10 +11,16 @@ north rule requires general kNN.  Algorithm:
 3. rank per query (``row_number`` ordered by distance, tie-broken by
    url — total order ⇒ deterministic under any parallelism);
 4. queries whose k-th distance is not provably inside the searched disk
-   (kth_dist > r·cell_height) escalate to radius 2r, 4r, … — each round
-   re-joins ONLY the unresolved queries; after ``max_rounds`` doublings
+   (kth_dist > r·cell_height) escalate to a larger radius — each round
+   re-joins ONLY the unresolved queries; after ``max_rounds`` rounds
    the remainder falls back to a brute-force broadcast scan (correct
    for any density, including empty regions).
+
+:func:`knn` runs this ladder on one of three paths, chosen from one
+bounded collect of the query set: tiny sets over a prunable (stored
+``cell_id``) scan keep the bookkeeping on the driver and return a
+local relation; tiny sets over an unprunable scan take the one brute
+pass; larger sets run the ladder relationally, bookkeeping included.
 
 Distance is **squared centi-degree distance** — pure integer/float
 arithmetic with no transcendentals, so rankings are bit-identical
@@ -23,19 +29,22 @@ across engines (the DuckDB oracle brute-forces the same metric).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import math
+from collections import Counter
+
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from eodal_spark import grid
-from eodal_spark.plans.introspect import cell_id_is_stored, plan_size_bytes
+from eodal_spark.plans.introspect import cell_id_is_stored
 
 
-# see knn(): below this driver-side size estimate (~ a few hundred
-# query points) an unprunable-scan kNN goes straight to the one-pass
-# brute plan instead of the ring ladder
-_BRUTE_QUERIES_MAX_BYTES = 16 * 1024
-_BRUTE_QUERIES_MAX_ROWS = 256
+# see knn(): query sets of at most this many rows are answered on the
+# driver-side paths; larger sets run the relational ladder
+_TINY_QUERY_ROWS = 256
 
 
 def _ranked(cand: DataFrame, k: int) -> DataFrame:
@@ -57,7 +66,69 @@ def _sqdist() -> F.Column:
     return (dlat * dlat + dlon * dlon).cast("long")
 
 
-# Per-round caches of the most recent knn() call, PER DRIVER THREAD
+def _brute_topk(pages_side: DataFrame, q_side: DataFrame, k: int) -> DataFrame:
+    """Top-k of every page against every (broadcast) query of
+    ``q_side`` (query_id, q_lat_centi, q_lon_centi, …) — the one
+    brute-force plan, exact for any density."""
+    cand = pages_side.crossJoin(
+        F.broadcast(q_side.select("query_id", "q_lat_centi", "q_lon_centi"))
+    )
+    return _ranked(cand.withColumn("sqdist", _sqdist()), k).select(
+        "query_id", "url", "sqdist", "rank"
+    )
+
+
+def _ring_topk(
+    round_pages: DataFrame, ring_src: DataFrame, res: int, k: int
+) -> DataFrame:
+    """One ring round: explode each query's Chebyshev disk of its own
+    ``radius`` (the broadcast side), equi-join the pages on cell_id (the
+    big side never shuffles) and rank per query — ≤ |queries|·k rows."""
+    ring = ring_src.select(
+        "query_id", "q_lat_centi", "q_lon_centi",
+        F.explode(
+            grid.cell_ring("q_cell", F.col("radius"), res)
+        ).alias("cell_id"),
+    )
+    cand = round_pages.join(F.broadcast(ring), "cell_id", "inner")
+    return _ranked(cand.withColumn("sqdist", _sqdist()), k).select(
+        "query_id", "url", "sqdist", "rank"
+    )
+
+
+def _local_frame(spark: SparkSession, rows: list, schema: StructType) -> DataFrame:
+    """Driver rows as a pandas→Arrow ``LocalRelation``: a job over it
+    reads the rows from the plan itself.  (``createDataFrame(list)``
+    gives an RDD scan instead, which runs a job — and a Python worker —
+    every time any plan above it is executed.)"""
+    pdf = pd.DataFrame.from_records(rows, columns=schema.fieldNames())
+    return spark.createDataFrame(pdf, schema)
+
+
+def _round_pages(
+    pages_side: DataFrame, probe: list | None, res: int, cap: int
+) -> DataFrame:
+    """``pages_side`` pre-filtered to the cell ranges of the
+    ``(q_cell, radius)`` disks in ``probe``; unfiltered (the join alone
+    is still exact) without a probe, above ``cap`` disks, or over the
+    range budget."""
+    if not probe or len(probe) > cap:
+        return pages_side
+    # max_ranges=64: a BETWEEN tree beyond that costs more in Catalyst
+    # analysis per round than the row groups it skips are worth
+    # (measured +0.9 s/round at radius 32); an over-budget disk just
+    # reads the sorted table — cheap, RLE-compressed, and still joined
+    # exactly
+    ranges = grid.cell_disk_ranges(
+        [p[0] for p in probe], [p[1] for p in probe], res, max_ranges=64
+    )
+    if not ranges:
+        return pages_side
+    return pages_side.filter(grid.ranges_predicate("cell_id", ranges))
+
+
+# Per-round caches of the most recent relational-ladder knn() call,
+# PER DRIVER THREAD
 # (keyed by thread ident: concurrent driver threads each track their
 # own calls, so one thread's knn() can never unpersist another LIVE
 # thread's caches).  The returned plan references them, so they cannot
@@ -119,7 +190,23 @@ def knn(
     geocoded pages with cell_id, lat_centi, lon_centi, url.
     Returns (query_id, url, sqdist, rank), rank 1..k.
 
-    Adaptive ring escalation, fully relational bookkeeping:
+    The call starts with ONE bounded collect of the query set (at most
+    max(256, ``prune_query_cap``)+1 rows).  It picks the path, and on
+    the larger-set path the same rows are round 0's disk-range probe:
+
+    * **tiny set (≤ 256 queries), prunable scan** — the ring ladder
+      below with its bookkeeping on the driver: each round is ONE
+      collect of the ranked candidates (≤ |live queries|·k rows), the
+      resolve test, next radius, ``max_ring_radius`` routing and round
+      budget are evaluated in Python with the relational rules, and the
+      leftovers take one collected brute pass.  Every query side is a
+      pandas→Arrow local relation, and so is the answer: the caller's
+      action on it runs no Spark job.
+    * **tiny set, unprunable scan** — the one brute pass (below), lazy,
+      against a local relation of the collected rows.
+    * **larger set** — the relational ladder, returned lazily.
+
+    Ring ladder rules (both bookkeeping forms):
 
     1. round 0 explodes the radius-``start_radius`` Chebyshev disk of
        every query (broadcast), equi-joins on cell_id (the big side
@@ -139,17 +226,18 @@ def knn(
        the observed kth, so that disk provably contains and bounds it);
        a query with < k candidates jumps ×4.  Radii are capped at the
        query's full-coverage radius.
-    3. unresolved queries live in a small DataFrame; rounds re-join
-       ONLY them via broadcast semi/anti joins — no ``isin`` literal
-       trees, so 10⁵-10⁶ query points don't blow up Catalyst analysis.
-       Each round runs exactly ONE driver action: a fused agg returning
-       the (unresolved, overflow) counts AND the next round's
-       disk-range probe (a collect_list sliced to ``prune_query_cap``+1
-       cells — above the cap the prefilter is skipped; the join alone
-       is still exact).  The final budget round keeps the counts but
-       skips the probe.  Per-round topk caches are registered and
-       released by the NEXT knn() call, or eagerly via
-       :func:`release_caches` once the result is materialized.
+    3. relationally, unresolved queries live in a small DataFrame;
+       rounds re-join ONLY them via broadcast semi/anti joins — no
+       ``isin`` literal trees, so 10⁵-10⁶ query points don't blow up
+       Catalyst analysis.  Each round runs exactly ONE driver action: a
+       fused agg returning the (unresolved, overflow) counts AND the
+       next round's disk-range probe (a collect_list sliced to
+       ``prune_query_cap``+1 cells — above the cap the prefilter is
+       skipped; the join alone is still exact).  The final budget round
+       keeps the counts but skips the probe.  Per-round topk caches are
+       registered and released at the start of the NEXT knn() call, or
+       eagerly via :func:`release_caches` once the result is
+       materialized.
     4. queries whose next radius would exceed ``max_ring_radius``, or
        that remain unresolved after ``max_rounds`` passes, fall back to
        ONE bounded brute-force broadcast scan — correct for any
@@ -166,6 +254,7 @@ def knn(
        such queries at once.  With pruning, rounds are sliver reads
        and the geometric ladder applies to zero-evidence queries too.
     """
+    release_caches()  # reclaim the previous knn() call's round caches
     q = queries.select(
         "query_id",
         F.col("lat_centi").alias("q_lat_centi"),
@@ -187,29 +276,6 @@ def knn(
     # but final) brute fallback sooner
     rounds_budget = max_rounds if scan_prune else min(max_rounds, 2)
 
-    # tiny query set over an UNPRUNABLE corpus: go straight to the
-    # brute pass.  Every ring round is already a full corpus
-    # materialization there, so the ladder can only add rounds × (scan
-    # + driver action) on top of what one brute pass costs; brute's
-    # per-row work is q distance evals and its rank shuffle is bounded
-    # map-side by WindowGroupLimit (top-k per task before the
-    # exchange), so the single pass is scale-sane for small q at any
-    # corpus size.  Decided from the driver-side size estimate alone
-    # (zero jobs — LocalRelation/range stats are exact); an unknown or
-    # large estimate keeps the ladder.  Output-identical: the ladder's
-    # contract is row-for-row brute equality.
-    if not scan_prune:
-        q_bytes = plan_size_bytes(queries)
-        if q_bytes is not None and q_bytes <= _BRUTE_QUERIES_MAX_BYTES:
-            return knn_brute(queries, pages_geo, k)
-        if q_bytes is None:
-            # no usable estimate (ExistingRDD reports no stats): one
-            # bounded probe — cheaper than the ladder's extra
-            # rounds whenever it answers "tiny"
-            n_q = queries.limit(_BRUTE_QUERIES_MAX_ROWS + 1).count()
-            if n_q <= _BRUTE_QUERIES_MAX_ROWS:
-                return knn_brute(queries, pages_geo, k)
-
     q_y = grid.cell_y_of(F.col("q_cell"))
     # radius at which the disk provably covers the whole grid
     coverage_r = F.greatest(q_y, F.lit(n_cells - 1) - q_y, F.lit(n_cells // 2))
@@ -220,50 +286,40 @@ def knn(
     )
     q_cols = ["query_id", "q_lat_centi", "q_lon_centi", "q_cell"]
 
-    release_caches()  # reclaim the previous knn() call's round caches
-
-    def _plan_ranges(probe: list) -> list | None:
-        if probe is None or len(probe) > prune_query_cap:
-            return None
-        # max_ranges=64: a BETWEEN tree beyond that costs more in
-        # Catalyst analysis per round than the row groups it skips are
-        # worth (measured +0.9 s/round at radius 32); an over-budget
-        # disk just reads the sorted table — cheap, RLE-compressed, and
-        # still joined exactly
-        return grid.cell_disk_ranges(
-            [p[0] for p in probe], [p[1] for p in probe], res, max_ranges=64
+    head_cap = max(_TINY_QUERY_ROWS, prune_query_cap if scan_prune else 0)
+    head = unres.limit(head_cap + 1).collect()
+    if len(head) <= _TINY_QUERY_ROWS:
+        spark = queries.sparkSession
+        if not scan_prune:
+            # every ring round over an unprunable corpus is already a
+            # full materialization, so the ladder can only add rounds ×
+            # (scan + driver action) on top of what one brute pass
+            # costs; brute's rank shuffle is bounded map-side by
+            # WindowGroupLimit (top-k per task before the exchange), so
+            # the single pass is scale-sane for small q at any corpus
+            # size.  Output-identical: the ladder's contract is
+            # row-for-row brute equality.
+            return _brute_topk(
+                pages_side, _local_frame(spark, head, unres.schema), k
+            )
+        return _knn_on_driver(
+            spark, head, unres, pages_side, res, k, rounds_budget,
+            max_ring_radius, prune_query_cap,
         )
 
-    # round 0's scan-range probe is the one setup action on the (small)
-    # queries input; every later round's probe rides the fused summary
+    # round 0's scan-range probe is the head collect; every later
+    # round's probe rides the fused summary
     probe: list | None = None
     if scan_prune:
-        rows = unres.select("q_cell", "radius").limit(
-            prune_query_cap + 1
-        ).collect()
-        probe = [(r["q_cell"], r["radius"]) for r in rows]
+        probe = [(r["q_cell"], r["radius"]) for r in head[: prune_query_cap + 1]]
 
     results: DataFrame | None = None
     brute_q: DataFrame | None = None
     have_overflow = False
     for i in range(rounds_budget):
         last = i == rounds_budget - 1
-        round_pages = pages_side
-        ranges = _plan_ranges(probe) if scan_prune else None
-        if ranges:
-            round_pages = pages_side.filter(
-                grid.ranges_predicate("cell_id", ranges)
-            )
-        ring = unres.select(
-            "query_id", "q_lat_centi", "q_lon_centi",
-            F.explode(
-                grid.cell_ring("q_cell", F.col("radius"), res)
-            ).alias("cell_id"),
-        )
-        cand = round_pages.join(F.broadcast(ring), "cell_id", "inner")
-        topk = _ranked(cand.withColumn("sqdist", _sqdist()), k).select(
-            "query_id", "url", "sqdist", "rank"
-        )
+        round_pages = _round_pages(pages_side, probe, res, prune_query_cap)
+        topk = _ring_topk(round_pages, unres, res, k)
         topk = topk.cache()  # tiny: ≤ |unresolved|·k rows, reused below
         _round_caches().append(topk)
         stats = topk.groupBy("query_id").agg(
@@ -361,21 +417,77 @@ def knn(
     elif have_overflow:
         rest = brute_q
     if rest is not None:
-        cand = pages_side.crossJoin(
-            F.broadcast(rest.select("query_id", "q_lat_centi", "q_lon_centi"))
-        )
-        brute = _ranked(cand.withColumn("sqdist", _sqdist()), k).select(
-            "query_id", "url", "sqdist", "rank"
-        )
+        brute = _brute_topk(pages_side, rest, k)
         results = brute if results is None else results.unionByName(brute)
-    if results is None:  # no queries at all
-        return _ranked(
-            pages_side.crossJoin(F.broadcast(q.limit(0))).withColumn(
-                "sqdist", _sqdist()
-            ),
-            k,
-        ).select("query_id", "url", "sqdist", "rank")
     return results.select("query_id", "url", "sqdist", "rank")
+
+
+def _knn_on_driver(
+    spark: SparkSession,
+    head: list,
+    unres: DataFrame,
+    pages_side: DataFrame,
+    res: int,
+    k: int,
+    rounds_budget: int,
+    max_ring_radius: int,
+    prune_query_cap: int,
+) -> DataFrame:
+    """:func:`knn`'s ring ladder for a tiny query set over a prunable
+    scan, bookkeeping on the driver.  ``head`` holds every row of the
+    lazy round-0 frame ``unres`` (query_id, q_lat_centi, q_lon_centi,
+    q_cell, radius, cov_r).  Each round is one collect of
+    ``_ring_topk``; the resolve, next-radius and routing rules are the
+    relational ladder's, evaluated in Python with the same IEEE double
+    operations, so they decide the same.  Returns a local relation:
+    actions on it run no job."""
+    cell_h_centi = 18000.0 / (1 << res)
+    live = [tuple(r) for r in head]
+    found: list = []
+    brute_q: list = []
+    out_schema = None
+    for _ in range(rounds_budget):
+        if not live:
+            break
+        round_pages = _round_pages(
+            pages_side, [(r[3], r[4]) for r in live], res, prune_query_cap
+        )
+        ring_src = _local_frame(spark, live, unres.schema)
+        topk = _ring_topk(round_pages, ring_src, res, k)
+        out_schema = topk.schema
+        rows = topk.collect()
+        n_found = Counter(r["query_id"] for r in rows)
+        kth: dict = {}
+        for r in rows:
+            kth[r["query_id"]] = max(kth.get(r["query_id"], 0), r["sqdist"])
+        resolved = set()
+        next_live = []
+        for row in live:
+            qid, _, _, _, radius, cov_r = row
+            n = n_found[qid]
+            bound = (radius * cell_h_centi) ** 2
+            if (n == k and kth[qid] < bound) or radius >= cov_r:
+                resolved.add(qid)
+                continue
+            if n == k:
+                next_r = math.floor(math.sqrt(kth[qid]) / cell_h_centi) + 2
+            else:
+                next_r = radius * 4
+            next_r = min(next_r, cov_r)
+            if next_r > max_ring_radius:
+                brute_q.append(row)
+            else:
+                next_live.append((*row[:4], next_r, cov_r))
+        found += [r for r in rows if r["query_id"] in resolved]
+        live = next_live
+    if live or brute_q:
+        rest = _local_frame(spark, live + brute_q, unres.schema)
+        brute = _brute_topk(pages_side, rest, k)
+        out_schema = brute.schema
+        found += brute.collect()
+    if out_schema is None:  # no queries, so no plan built to read it from
+        out_schema = _ring_topk(pages_side, unres, res, k).schema
+    return _local_frame(spark, found, out_schema)
 
 
 def knn_brute(queries: DataFrame, pages_geo: DataFrame, k: int) -> DataFrame:
@@ -386,12 +498,7 @@ def knn_brute(queries: DataFrame, pages_geo: DataFrame, k: int) -> DataFrame:
         F.col("lat_centi").alias("q_lat_centi"),
         F.col("lon_centi").alias("q_lon_centi"),
     )
-    cand = pages_geo.select("url", "lat_centi", "lon_centi").crossJoin(
-        F.broadcast(q)
-    )
-    return _ranked(cand.withColumn("sqdist", _sqdist()), k).select(
-        "query_id", "url", "sqdist", "rank"
-    )
+    return _brute_topk(pages_geo.select("url", "lat_centi", "lon_centi"), q, k)
 
 
 def knn_join(

@@ -300,24 +300,33 @@ def drain_to_catalog(
                     "checkpoint or a fresh table"
                 )
         meta = {"checkpoint": ckpt_id, "batch_id": batch_id}
-        if mode == "upsert":
-            if not catalog.snapshots(table):
-                # seed batch: plain sorted write, so the table carries
-                # sort_by and later upserts inherit the layout
+        # the commit reads the batch more than once (the range-bound
+        # sample of a sorted write, then the write itself); persisted,
+        # the source read and every Python stage upstream (WARC parse,
+        # geocode) run once per batch instead of once per read
+        bdf = bdf.persist()
+        try:
+            if mode == "upsert":
+                if not catalog.snapshots(table):
+                    # seed batch: plain sorted write, so the table
+                    # carries sort_by and later upserts inherit the
+                    # layout
+                    catalog.write(
+                        bdf, table, sort_by=sort_by, n_files=n_files,
+                        mode="overwrite", meta=meta,
+                    )
+                else:
+                    catalog.upsert(
+                        bdf.sparkSession, bdf, table, key_cols=key_cols,
+                        n_files=n_files, meta=meta,
+                    )
+            else:
                 catalog.write(
                     bdf, table, sort_by=sort_by, n_files=n_files,
-                    mode="overwrite", meta=meta,
+                    mode="append", meta=meta,
                 )
-            else:
-                catalog.upsert(
-                    bdf.sparkSession, bdf, table, key_cols=key_cols,
-                    n_files=n_files, meta=meta,
-                )
-        else:
-            catalog.write(
-                bdf, table, sort_by=sort_by, n_files=n_files,
-                mode="append", meta=meta,
-            )
+        finally:
+            bdf.unpersist()
 
     q = (
         stream_df.writeStream.option("checkpointLocation", checkpoint_dir)

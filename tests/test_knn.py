@@ -3,6 +3,8 @@ tie-break ⇒ unique answer). Generalizes `eodal/core/band.py:1431-1454`."""
 
 from __future__ import annotations
 
+import tempfile
+
 import pytest
 
 from eodal_spark.operators import knn as K
@@ -27,6 +29,30 @@ def queries(spark):
         (5, 12570, 31970),   # Tokyo
     ]
     return spark.createDataFrame(rows, ["query_id", "lat_centi", "lon_centi"])
+
+
+# (url, lon_centi, lat_centi): four pages 500 centi-deg east of the
+# query (9000, 18000) — empty at radius 2, resolved at radius 8 (res 8)
+SPARSE_PAGES = [(100 + i, 18000 + 500, 9000 + 7 * i) for i in range(4)]
+
+
+def _stored_pages(spark, tmp_path, rows, res, url_type="long"):
+    """(url, lon_centi, lat_centi) rows as a parquet table with a STORED
+    cell_id column (a prunable scan)."""
+    from pyspark.sql import functions as F
+
+    from eodal_spark import grid as GR
+
+    pages = spark.createDataFrame(
+        [(u if url_type == "long" else f"u{u:04d}", lon, lat) for u, lon, lat in rows],
+        f"url {url_type}, lon_centi long, lat_centi long",
+    ).withColumn(
+        "cell_id",
+        F.expr(GR.sql_cell_encode_centi("lon_centi", "lat_centi", res, "spark")),
+    )
+    path = tempfile.mkdtemp(dir=tmp_path) + "/pages"
+    pages.write.parquet(path)
+    return spark.read.parquet(path)
 
 
 def test_ring_knn_matches_brute_force(pages_geo, queries):
@@ -82,35 +108,28 @@ def test_knn_matches_duckdb_oracle(spark, queries):
     assert (got["sqdist"].to_numpy() == expect["sqdist"].to_numpy()).all()
 
 
-def test_knn_escalation_resolves_sparse_without_brute(spark, tmp_path):
+def test_knn_escalation_resolves_sparse_without_brute(spark, tmp_path, monkeypatch):
     """A query one ring-jump away from its neighbours must resolve in
     an ESCALATED ring pass — never via the brute-force fallback (the
-    plan must stay CartesianProduct-free), matching brute row-for-row.
+    brute helper raises if reached), matching brute row-for-row.
     The corpus is a STORED table: with a prunable scan, ring rounds are
     sliver reads and the geometric ladder applies even to queries whose
     first disk was empty (an unprunable scan sends those straight to
     brute — see knn's cost policy)."""
-    from eodal_spark import grid as GR
-    from pyspark.sql import functions as F
-
     # res 8: cell height 70.3, width 140.6 centi-deg.  Neighbours sit
     # 500 centi-deg east: outside the radius-2 disk (round 1 empty),
     # inside the radius-8 disk and within its provable bound
     # (562.5² > 500²+14²), so the ×4 escalation resolves it.
-    rows = [(100 + i, 18000 + 500, 9000 + 7 * i) for i in range(4)]
-    pages = spark.createDataFrame(rows, ["url", "lon_centi", "lat_centi"])
-    pages = pages.withColumn(
-        "cell_id",
-        F.expr(GR.sql_cell_encode_centi("lon_centi", "lat_centi", RES, "spark")),
-    )
-    path = str(tmp_path / "sparse_pages")
-    pages.write.parquet(path)
-    pages = spark.read.parquet(path)
+    pages = _stored_pages(spark, tmp_path, SPARSE_PAGES, RES)
     q = spark.createDataFrame([(1, 9000, 18000)], ["query_id", "lat_centi", "lon_centi"])
-    out = K.knn(q, pages, RES, k=3, start_radius=2, max_rounds=3)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
-    got = out.orderBy("rank").collect()
+
+    def no_brute(*args, **kwargs):
+        raise AssertionError("brute-force fallback reached")
+
+    with monkeypatch.context() as m:
+        m.setattr(K, "_brute_topk", no_brute)
+        got = K.knn(q, pages, RES, k=3, start_radius=2, max_rounds=3)
+        got = got.orderBy("rank").collect()
     brute = K.knn_brute(q, pages, k=3).orderBy("rank").collect()
     assert [(r["url"], r["sqdist"]) for r in got] == [
         (r["url"], r["sqdist"]) for r in brute
@@ -221,12 +240,12 @@ def test_cell_disk_ranges_membership_matches_ring(spark):
     assert GR.cell_disk_ranges(many, k, res, max_ranges=4) is None
 
 
-def test_knn_ring_pass_prunes_cell_sorted_scan(spark, tmp_path):
+def test_knn_ring_pass_prunes_cell_sorted_scan(spark, tmp_path, monkeypatch):
     """100 TB claim, measured: a ring pass over a cell-sorted parquet
     table carries the disk ranges INTO the scan (PushedFilters in the
-    knn plan), and that predicate materializes only the row groups
-    overlapping the query disks — numOutputRows << table rows — while
-    results still match brute force row-for-row."""
+    plan of knn's first ring round), and that predicate materializes
+    only the row groups overlapping the query disks — numOutputRows <<
+    table rows — while results still match brute force row-for-row."""
     from pyspark.sql import functions as F
 
     from eodal_spark import grid as GR
@@ -247,10 +266,17 @@ def test_knn_ring_pass_prunes_cell_sorted_scan(spark, tmp_path):
         [(1, 9000, 18000), (2, 7000, 27000)],
         ["query_id", "lat_centi", "lon_centi"],
     )
-    out = K.knn(q, table, RES, k=3)
-    rows = out.collect()
+    rounds = []
+    ring_topk = K._ring_topk
+
+    def recording(*args):
+        rounds.append(ring_topk(*args))
+        return rounds[-1]
+
+    monkeypatch.setattr(K, "_ring_topk", recording)
+    rows = K.knn(q, table, RES, k=3).collect()
     # the disk ranges reach the parquet scan inside the ring pass
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = rounds[0]._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [Or(" in plan and "cell_id" in plan
 
     # the same predicate knn builds (cell_disk_ranges at round-1 radius)
@@ -397,3 +423,89 @@ def test_knn_join_plan_has_no_broadcast_of_big_sides(pages_geo, spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "CartesianProduct" not in plan
+
+
+# (name, res, pages, queries, knn kwargs): each fixture drives a
+# different ladder branch on a prunable scan
+LADDER_CASES = [
+    # round 1 empty → ×4 escalation resolves
+    ("sparse_escalation", RES, SPARSE_PAGES, [(1, 9000, 18000)],
+     dict(k=3, start_radius=2, max_rounds=3)),
+    # polar query (y=0, res 3): the radius-4 disk spans every x but
+    # only y ≤ 4; the closer page 2 (y=5) lies outside it, so full
+    # coverage must wait for radius 7 (the y clamp), not 2r+1 ≥ 8
+    ("polar_y_clamp", 3, [(1, 17100, 10000), (2, 100, 11300)], [(1, 1000, 100)],
+     dict(k=1, start_radius=4, max_rounds=3)),
+    # wrapped metric: the nearest pages sit across ±180°
+    ("date_line", RES, [(100, 1, 9000), (101, 3, 9000), (102, 30000, 9000)],
+     [(1, 9000, 35999)], dict(k=2)),
+    # query 2 sits in an empty polar region: its ×4 radius passes
+    # max_ring_radius and it overflows to brute while query 1 resolves
+    ("empty_beyond_max_ring_radius", RES, SPARSE_PAGES,
+     [(1, 9000, 18000), (2, 500, 100)], dict(k=2, max_ring_radius=8)),
+]
+
+
+@pytest.mark.parametrize("url_type", ["long", "string"])
+@pytest.mark.parametrize(
+    "name,res,page_rows,q_rows,kw", LADDER_CASES, ids=[c[0] for c in LADDER_CASES]
+)
+def test_driver_and_relational_ladders_match_brute(
+    spark, tmp_path, monkeypatch, url_type, name, res, page_rows, q_rows, kw
+):
+    """The tiny-set driver ladder, the relational ladder (forced by a
+    zero tiny-set threshold) and knn_brute return the same rows and the
+    same schema."""
+    pages = _stored_pages(spark, tmp_path, page_rows, res, url_type)
+    q = spark.createDataFrame(q_rows, "query_id long, lat_centi long, lon_centi long")
+
+    def answer(df):
+        return df.schema, sorted(
+            (r.query_id, r.url, r.sqdist, r.rank) for r in df.collect()
+        )
+
+    driver = answer(K.knn(q, pages, res, **kw))
+    with monkeypatch.context() as m:
+        m.setattr(K, "_TINY_QUERY_ROWS", 0)
+        relational = answer(K.knn(q, pages, res, **kw))
+    brute = answer(K.knn_brute(q, pages, kw["k"]))
+    assert driver == relational == brute
+    assert len(brute[1]) == len(q_rows) * min(kw["k"], len(page_rows))
+
+
+def test_knn_tiny_set_jobs_and_local_answer(spark, tmp_path):
+    """One query over a stored cell-sorted parquet table: knn() runs at
+    most 4 Spark jobs (the query collect, then one ring round's
+    broadcast, shuffle and collect) and collecting its answer runs none
+    — the answer is a local relation, not a lazy plan over round
+    caches."""
+    geo = P.geocode(P.synth_pages(spark, 20_000), RES).select(
+        "url", "cell_id", "lat_centi", "lon_centi"
+    )
+    path = str(tmp_path / "cell_sorted")
+    geo.repartitionByRange(8, "cell_id").sortWithinPartitions(
+        "cell_id"
+    ).write.parquet(path)
+    table = spark.read.parquet(path)
+    q = spark.createDataFrame(
+        [(1, 13737, 18854)], "query_id long, lat_centi long, lon_centi long"
+    )
+    sc = spark.sparkContext
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    out, call_jobs = jobs_of("knn_tiny_call", lambda: K.knn(q, table, RES, k=5))
+    rows, action_jobs = jobs_of("knn_tiny_action", out.collect)
+    assert call_jobs <= 4, call_jobs
+    assert action_jobs == 0, action_jobs
+    brute = K.knn_brute(q, table, 5).collect()
+    assert len(rows) == 5
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, brute))

@@ -229,6 +229,38 @@ def test_stream_warc_to_catalog_append_snapshots(spark, tmp_path):
     assert cat.read(spark, "pages", snapshot_id=n_snaps).count() == 200
 
 
+def test_drain_to_catalog_parses_each_batch_once(spark, tmp_path):
+    """A cell-sorted drain runs the stream's Python stages once per
+    row: a counting stage between `stream_warc` and the drain logs one
+    line per row it sees, and the log matches the rows landed (the
+    sorted write's range-bound sample must not re-run the parse)."""
+    from eodal_spark.sources.catalog import SnapshotCatalog
+    from eodal_spark.streaming.ingest import drain_to_catalog
+
+    land = str(tmp_path / "landing")
+    seen = str(tmp_path / "seen.log")
+    cat = SnapshotCatalog(str(tmp_path / "cat"))
+    W.write_warc(P.synth_pages(spark, 150, partitions=2), land).collect()
+
+    def log_rows(batches):
+        for pdf in batches:
+            with open(seen, "a") as f:
+                f.write("row\n" * len(pdf))
+            yield pdf
+
+    src = P.geocode(W.stream_warc(spark, land), 8).select(
+        "url", "warc_ts", "cell_id", "lat_centi", "lon_centi"
+    )
+    drain_to_catalog(
+        src.mapInPandas(log_rows, src.schema), str(tmp_path / "ckpt"), cat,
+        "pages", sort_by=("cell_id",), n_files=2,
+    )
+    landed = cat.read(spark, "pages").count()
+    assert landed == 150
+    with open(seen) as f:
+        assert len(f.read().splitlines()) == landed
+
+
 def test_drain_to_catalog_foreign_checkpoint_raises(spark, tmp_path):
     import pytest
 
