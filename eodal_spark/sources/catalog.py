@@ -15,6 +15,20 @@ snapshots instead of ad-hoc files.
 Write layout: tables are written **sorted by cell_id** (≡ COG tiling,
 `eodal/core/raster.py:1759-1783`) so parquet min/max footer stats prune
 spatial predicates — the "layout decision" of SURVEY.md §4.
+
+Commit path: each step of a commit has one definition, and every
+mutation (`write`, `delete_keys`, `upsert`, `delete_range`,
+`delete_where`, binpack `compact`, `cherrypick_snapshot`) is a thin
+caller of it.  `_next_sid` allocates the snapshot id as max + 1 over
+main AND branch snapshots, so ids are globally monotonic and never
+reused across refs (equality-delete sequence numbers and reads by id
+depend on that).  `_write_data` writes a commit's parquet files and
+reads their footer stats; `_snap_record` builds the manifest record
+from the parent (delete state, blooms, partition specs, sort order)
+plus the commit's overrides; `_commit_snap` seals the file list into
+segments and CASes the manifest, and on `ConcurrentCommitError`
+removes the attempt's new dirs, bloom sidecars and segments.  Legacy
+snapshots without file entries are resolved by `_snap_files` alone.
 """
 
 from __future__ import annotations
@@ -40,13 +54,6 @@ def _file_stats(data_dir: str, cols: tuple[str, ...]) -> list[dict]:
     subsequent pruned scan).
     """
     import pyarrow.parquet as pq
-
-    def jsonable(v):
-        if isinstance(v, bytes):
-            return v.decode("utf-8", "replace")
-        if hasattr(v, "isoformat"):
-            return v.isoformat()
-        return v
 
     out = []
     names = []
@@ -74,8 +81,8 @@ def _file_stats(data_dir: str, cols: tuple[str, ...]) -> list[dict]:
                 mins.append(st.min)
                 maxs.append(st.max)
             stats[c] = {
-                "min": jsonable(min(mins)) if mins else None,
-                "max": jsonable(max(maxs)) if maxs else None,
+                "min": _stat_bound(min(mins)) if mins else None,
+                "max": _stat_bound(max(maxs)) if maxs else None,
             }
         out.append({"name": name, "rows": md.num_rows, "stats": stats})
     return out
@@ -91,6 +98,15 @@ _ISO_TS = re.compile(r"^\d{4}-\d{2}-\d{2}T")
 # segment-file entry cache (segments are immutable once committed)
 _SEG_CACHE: dict[str, list] = {}
 
+# z-order clustering: the derived sort column (dropped before the files
+# are written) and the per-axis resolution of the 2-D z-curve
+_ZORDER_KEY = "_zorder_key"
+_ZORDER_BITS = 16
+
+# a binpack group must hold at least this many undersized files —
+# rewriting one small file alone into one file gains nothing
+_BINPACK_MIN_FILES = 2
+
 
 def _iso_t(v: str) -> str:
     """'YYYY-MM-DD HH:MM:SS' → isoformat 'T' separator (stats form)."""
@@ -100,9 +116,10 @@ def _iso_t(v: str) -> str:
 
 
 def _stat_bound(v):
-    """User range bound → the manifest-stats value space (the SAME
-    coercion the manifest writer applies: bytes → str, datetime/date →
-    isoformat)."""
+    """A value in the manifest-stats value space: bytes → str,
+    datetime/date → isoformat.  The footer-stats writer and every user
+    range bound go through this one coercion, so they compare
+    consistently."""
     if isinstance(v, bytes):
         return v.decode("utf-8", "replace")
     if hasattr(v, "isoformat"):
@@ -264,42 +281,43 @@ def _write_bloom_sidecar(
     )
 
 
-_POS_CACHE: dict = {}
+_HASH_CACHE: dict[str, tuple[int, int]] = {}
+
+
+def _xxhash64_pair(spark: SparkSession, value: str) -> tuple[int, int]:
+    """Spark's ``xxhash64(value)`` and ``xxhash64(value, 1)`` of a
+    string, computed BY SPARK (constant-folded 1-row job) so the
+    driver-side probes are bit-identical to the build jobs' hashes,
+    with no reimplementation to drift.  Bloom probe positions and
+    bucket-partition values are derived from these two longs in
+    Python — exact, because Python's ``%`` equals Spark's ``pmod`` for
+    a positive modulus and the reduced values stay below 2^31.  Cached
+    per value: the job is a point lookup's only fixed driver cost, and
+    repeated lookups of hot keys skip it entirely."""
+    from pyspark.sql import functions as F
+
+    hit = _HASH_CACHE.get(value)
+    if hit is None:
+        lit = F.lit(value)
+        row = spark.range(1).select(
+            F.xxhash64(lit), F.xxhash64(lit, F.lit(1))
+        ).first()
+        hit = (int(row[0]), int(row[1]))
+        if len(_HASH_CACHE) > 65536:  # bound driver memory on adversarial use
+            _HASH_CACHE.clear()
+        _HASH_CACHE[value] = hit
+    return hit
 
 
 def _bloom_positions(
     spark: SparkSession, value: str, bits: int, k: int
 ) -> list[tuple[int, int]]:
-    """(word, bit) probe positions of ``value`` — computed BY SPARK
-    (constant-folded 1-row job) so the probe hash is bit-identical to
-    the build job's ``xxhash64``, with no reimplementation to drift.
-    Cached per (value, bits, k): the job is the probe's only fixed
-    driver cost, and repeated lookups of hot keys skip it entirely."""
-    from pyspark.sql import functions as F
-
-    ckey = (value, bits, k)
-    hit = _POS_CACHE.get(ckey)
-    if hit is not None:
-        return hit
-    lit = F.lit(value)
-    # MUST mirror _write_bloom_sidecar's combination exactly
-    r1 = F.pmod(F.xxhash64(lit), F.lit(bits))
-    r2 = F.pmod(F.xxhash64(lit, F.lit(1)), F.lit(bits))
-    row = (
-        spark.range(1)
-        .select(
-            *[
-                F.pmod(r1 + F.lit(i) * r2, F.lit(bits)).alias(f"p{i}")
-                for i in range(k)
-            ]
-        )
-        .first()
-    )
-    out = [(int(row[i]) >> 6, int(row[i]) & 63) for i in range(k)]
-    if len(_POS_CACHE) > 65536:  # bound driver memory on adversarial use
-        _POS_CACHE.clear()
-    _POS_CACHE[ckey] = out
-    return out
+    """(word, bit) probe positions of ``value`` — the same
+    ``pmod(r1 + i·r2, bits)`` combination _write_bloom_sidecar builds."""
+    h1, h2 = _xxhash64_pair(spark, value)
+    r1, r2 = h1 % bits, h2 % bits
+    pos = [(r1 + i * r2) % bits for i in range(k)]
+    return [(p >> 6, p & 63) for p in pos]
 
 
 class SnapshotCatalog:
@@ -394,6 +412,238 @@ class SnapshotCatalog:
         snaps = self.snapshots(table)
         return snaps[-1] if snaps else None
 
+    # -- the commit path: one definition of each step ------------------
+
+    @staticmethod
+    def _next_sid(man: dict) -> int:
+        """Snapshot id of the next commit: max + 1 over main AND branch
+        snapshots.  max+1, NOT len+1: expire_snapshots truncates the
+        front of the list, and len+1 would then collide with (and
+        clobber the v-dir of) a surviving snapshot.  Branch snapshots
+        share the id space, so ids stay globally monotonic — equality
+        delete sequence semantics survive a later publish/cherry-pick,
+        and a read or cherry-pick by id names one snapshot."""
+        snaps = man["snapshots"] + (man.get("branch_snapshots") or [])
+        return max((s["snapshot_id"] for s in snaps), default=0) + 1
+
+    def _new_dir(self, table: str, sid: int) -> str:
+        """A fresh dir per commit ATTEMPT: two racing writers both
+        compute sid N, but only the manifest CAS decides the winner — a
+        shared v{N} dir would let the loser clobber the winner's
+        committed data files before its own commit is rejected.
+        _dir_sid parses the leading digits, so sequence semantics are
+        unaffected; _commit_snap removes the loser's dir."""
+        import uuid
+
+        return os.path.join(
+            self._tdir(table), f"v{sid}-{uuid.uuid4().hex[:8]}"
+        )
+
+    @staticmethod
+    def _write_data(
+        df: DataFrame,
+        data_dir: str,
+        order,
+        n_files: int | None,
+        stat_cols: tuple[str, ...],
+        zorder: tuple = (),
+        pv=(),
+    ) -> list[dict]:
+        """Write ``df`` as one commit's parquet files under
+        ``data_dir`` and return their manifest entries (footer stats
+        on ``stat_cols``, hive partition values when ``pv`` is given).
+
+        ``order`` is the caller's range-partition + sort key (``n_files``
+        pins the file count, else AQE sizes it); it may name the
+        derived ``_ZORDER_KEY`` — the 2-D z-curve over the ``zorder``
+        pair, bucketed uniformly between bounds from ONE tiny agg over
+        ``df`` — and the hidden partition columns ``pv``
+        (``_partition_cols``), which partitionBy strips from the file
+        bytes: the logical schema never changes (≡ Iceberg hidden
+        partitioning; users query ts/host, never day/bucket).  The
+        z-order key is dropped after the sort, so clustering shows up
+        purely in the per-file min/max stats of BOTH zorder columns.
+        Without an order, ``n_files`` hash-partitions by the partition
+        columns (round-robin when there are none)."""
+        from pyspark.sql import functions as F
+
+        out = df
+        if zorder:
+            from eodal_spark import grid
+
+            za, zb = zorder
+            b = df.agg(F.min(za), F.max(za), F.min(zb), F.max(zb)).first()
+            out = out.withColumn(
+                _ZORDER_KEY,
+                grid.zorder_key_2d(
+                    F.col(za), F.col(zb),
+                    b[0] if b[0] is not None else 0.0,
+                    b[1] if b[1] is not None else 1.0,
+                    b[2] if b[2] is not None else 0.0,
+                    b[3] if b[3] is not None else 1.0,
+                    bits=_ZORDER_BITS,
+                ),
+            )
+        for name, col_ in pv:
+            out = out.withColumn(name, col_)
+        pv_names = [n for n, _ in pv]
+        if order:
+            parts = (n_files,) if n_files else ()
+            out = out.repartitionByRange(*parts, *order).sortWithinPartitions(
+                *order
+            )
+        elif n_files:
+            out = out.repartition(n_files, *pv_names)
+        if zorder:
+            out = out.drop(_ZORDER_KEY)
+        writer = out.write.mode("overwrite")
+        if pv_names:
+            writer = writer.partitionBy(*pv_names)
+        # Spark's default INT96 timestamps carry NO parquet min/max
+        # stats — a timestamp sort column would silently lose both
+        # manifest pruning and row-group skipping.  Catalog data files
+        # are written as TIMESTAMP_MICROS (the Iceberg spec type).
+        spark = df.sparkSession
+        ts_conf = "spark.sql.parquet.outputTimestampType"
+        prev_ts = spark.conf.get(ts_conf)
+        try:
+            spark.conf.set(ts_conf, "TIMESTAMP_MICROS")
+            writer.parquet(data_dir)
+        finally:
+            spark.conf.set(ts_conf, prev_ts)
+        dname = os.path.basename(data_dir)
+        files = [{**f, "dir": dname} for f in _file_stats(data_dir, stat_cols)]
+        if pv_names:
+            for f in files:
+                f["partition"] = _parse_partition(f["name"])
+        return files
+
+    @staticmethod
+    def _delete_entries(ddir: str, **fields) -> list[dict]:
+        """Manifest entries of the delete files just written under
+        ``ddir``, each with its on-disk size — the read-time broadcast
+        decision needs it: row count alone ignores key WIDTH (1M
+        long-URL keys can be hundreds of MB — too big to
+        force-broadcast)."""
+        return [
+            {
+                "dir": os.path.basename(ddir),
+                "name": f["name"],
+                "rows": f["rows"],
+                "bytes": os.path.getsize(os.path.join(ddir, f["name"])),
+                **fields,
+            }
+            for f in _file_stats(ddir, ())
+        ]
+
+    @staticmethod
+    def _snap_record(
+        parent: dict | None,
+        sid: int,
+        path: str,
+        mode: str,
+        row_count: int,
+        **fields,
+    ) -> dict:
+        """A new snapshot's manifest record.  It starts from
+        ``parent``: the parent's id, merge-on-read delete entries,
+        bloom and partition-spec maps and sort order carry over
+        (copied, so callers extend them in place); ``fields`` override
+        any key.  ``zorder`` is recorded only when passed (clustering
+        writes); ``segments`` is filled in by :meth:`_commit_snap`."""
+        p = parent or {}
+        snap = {
+            "snapshot_id": sid,
+            "parent_id": p.get("snapshot_id"),
+            "committed_at": time.time(),
+            "path": path,
+            "row_count": row_count,
+            "sort_by": list(p.get("sort_by") or ()),
+            "zorder": None,
+            "mode": mode,
+            "segments": None,
+            "delete_files": list(p.get("delete_files") or []),
+            "delete_ranges": list(p.get("delete_ranges") or []),
+            "pos_delete_files": list(p.get("pos_delete_files") or []),
+            "blooms": dict(p.get("blooms") or {}),
+            "partition_specs": dict(p.get("partition_specs") or {}),
+            "meta": {},
+        }
+        snap.update(fields)
+        if snap["zorder"] is None:
+            del snap["zorder"]
+        return snap
+
+    def _commit_snap(
+        self,
+        table: str,
+        man: dict,
+        snap: dict,
+        files: list[dict],
+        new_dirs=(),
+        branch: str | None = None,
+    ) -> dict:
+        """Commit ``snap`` with file list ``files``: seal the list into
+        manifest segments, append the record to main (or to
+        ``branch``, moving its head) and CAS the manifest.  A commit
+        that loses the CAS leaves nothing behind: the attempt's
+        ``new_dirs`` (with their bloom sidecars) and the segments it
+        sealed are removed — reused segments of older commits stay,
+        they are live via the winning history — and the
+        ``ConcurrentCommitError`` is re-raised."""
+        sid = snap["snapshot_id"]
+        snap["segments"] = self._seal_files(table, sid, files)
+        if branch is None:
+            man["snapshots"].append(snap)
+        else:
+            man.setdefault("branch_snapshots", []).append(snap)
+            man["branches"][branch]["head"] = sid
+        try:
+            self._commit_manifest(table, man)
+        except ConcurrentCommitError:
+            self._remove_dirs(new_dirs)
+            self._unlink_segments(
+                table,
+                [
+                    r["name"]
+                    for r in snap["segments"]
+                    if r["name"].startswith(f"seg-{sid:08d}-")
+                ],
+            )
+            raise
+        return snap
+
+    @staticmethod
+    def _remove_dirs(paths) -> None:
+        """rmtree each dir and its bloom sidecar."""
+        for p in paths:
+            shutil.rmtree(p, ignore_errors=True)
+            shutil.rmtree(_bloom_sidecar(p), ignore_errors=True)
+
+    def _unlink_segments(self, table: str, names) -> None:
+        segdir = self._seg_dir(self._tdir(table))
+        for name in names:
+            p = os.path.join(segdir, name)
+            _SEG_CACHE.pop(p, None)
+            try:
+                os.unlink(p)
+            except OSError:
+                pass
+
+    def _live_dirs(self, snaps: list[dict]) -> set[str]:
+        """Dirs ``snaps`` reference: their own v-dirs, the data dirs of
+        their files and the dirs of their delete files."""
+        out: set[str] = set()
+        for s in snaps:
+            out.add(os.path.basename(s["path"]))
+            out |= self._snap_dirs(s)
+            out |= {
+                d["dir"]
+                for d in (s.get("delete_files") or [])
+                + (s.get("pos_delete_files") or [])
+            }
+        return out
+
     def write(
         self,
         df: DataFrame,
@@ -406,7 +656,6 @@ class SnapshotCatalog:
         bloom_bits: int = 1 << 17,
         bloom_k: int = 7,
         zorder: tuple[str, str] | tuple = (),
-        zorder_bits: int = 16,
         partition_by: list | None = None,
         branch: str | None = None,
     ) -> dict:
@@ -477,189 +726,55 @@ class SnapshotCatalog:
                 )
         else:
             parent_snap = man["snapshots"][-1] if man["snapshots"] else None
-        # max+1, NOT len+1: expire_snapshots truncates the front of the
-        # list, and len+1 would then collide with (and clobber the
-        # v-dir of) a surviving snapshot.  Branch snapshots share the
-        # sid space — ids stay globally monotonic so equality-delete
-        # sequence semantics survive a later publish/cherry-pick.
-        sid = max(
-            (
-                s["snapshot_id"]
-                for s in man["snapshots"] + branch_snaps
-            ),
-            default=0,
-        ) + 1
-        # unique dir per COMMIT ATTEMPT: two racing writers both compute
-        # sid N, but only the manifest CAS decides the winner — a shared
-        # v{N} dir would let the loser clobber the winner's committed
-        # data files before its own commit is rejected.  _dir_sid parses
-        # the leading digits, so sequence semantics are unaffected; the
-        # loser's orphan dir is removed on ConcurrentCommitError.
-        import uuid
-
-        data_dir = os.path.join(
-            self._tdir(table), f"v{sid}-{uuid.uuid4().hex[:8]}"
-        )
-        if zorder:
-            from pyspark.sql import functions as F
-
-            from eodal_spark import grid
-
-            za, zb = zorder
-            # ONE tiny agg for the global bounds the uniform bucketing
-            # needs — same cost class as the footer-stats read
-            b = df.agg(
-                F.min(za), F.max(za), F.min(zb), F.max(zb)
-            ).first()
-            zk = grid.zorder_key_2d(
-                F.col(za), F.col(zb),
-                b[0] if b[0] is not None else 0.0,
-                b[1] if b[1] is not None else 1.0,
-                b[2] if b[2] is not None else 0.0,
-                b[3] if b[3] is not None else 1.0,
-                bits=zorder_bits,
-            )
-            parts = (n_files,) if n_files else ()
-            # the projection DROPS the key after the sort — files carry
-            # only the user schema; clustering shows up purely in the
-            # per-file min/max stats of BOTH zorder columns
-            out = (
-                df.withColumn("_zorder_key", zk)
-                .repartitionByRange(*parts, "_zorder_key")
-                .sortWithinPartitions("_zorder_key")
-                .drop("_zorder_key")
-            )
-        elif sort_by:
-            parts = (n_files,) if n_files else ()
-            out = df.repartitionByRange(*parts, *sort_by).sortWithinPartitions(
-                *sort_by
-            )
-        else:
-            out = df.repartition(n_files) if n_files else df
-        # Spark's default INT96 timestamps carry NO parquet min/max
-        # stats — a timestamp sort column would silently lose both
-        # manifest pruning and row-group skipping.  Catalog data files
-        # are written as TIMESTAMP_MICROS (the Iceberg spec type).
-        spark = df.sparkSession
-        ts_conf = "spark.sql.parquet.outputTimestampType"
-        prev_ts = spark.conf.get(ts_conf)
-        try:
-            spark.conf.set(ts_conf, "TIMESTAMP_MICROS")
-            if pv:
-                # hidden partitioning: derive the transform columns,
-                # hive-partition the physical layout by them, and let
-                # partitionBy strip them from the file bytes — the
-                # logical schema never changes (≡ Iceberg hidden
-                # partitioning; users query ts/host, never day/bucket)
-                withpv = out
-                for name, col_ in pv:
-                    withpv = withpv.withColumn(name, col_)
-                if n_files and not sort_by and not zorder:
-                    withpv = withpv.repartition(n_files, *[n for n, _ in pv])
-                withpv.write.mode("overwrite").partitionBy(
-                    *[n for n, _ in pv]
-                ).parquet(data_dir)
-            else:
-                out.write.mode("overwrite").parquet(data_dir)
-        finally:
-            spark.conf.set(ts_conf, prev_ts)
+        sid = self._next_sid(man)
+        data_dir = self._new_dir(table, sid)
         dname = os.path.basename(data_dir)
-        stat_cols = tuple(sort_by) if sort_by else tuple(zorder)
-        files = [
-            {**f, "dir": dname} for f in _file_stats(data_dir, stat_cols)
-        ]
-        if pv:
-            for f in files:
-                f["partition"] = _parse_partition(f["name"])
+        files = self._write_data(
+            df,
+            data_dir,
+            [_ZORDER_KEY] if zorder else sort_by,
+            n_files,
+            tuple(sort_by or zorder),
+            zorder,
+            pv,
+        )
         if bloom_cols:
             # ONE extra job over the NEW files only — O(new data), like
             # the footer stats; appends never re-bloom the parent's dirs
             _write_bloom_sidecar(
-                spark, data_dir, tuple(bloom_cols), bloom_bits, bloom_k
+                df.sparkSession, data_dir, tuple(bloom_cols), bloom_bits,
+                bloom_k,
             )
-        # row count from the same footer reads that produced the stats —
-        # no second Spark job per commit
-        n = sum(f["rows"] for f in files)
-        if mode == "append" and parent_snap is not None:
-            parent = parent_snap
-            parent_files = self._snap_files(parent)
-            if not parent_files:
-                # legacy pre-stats snapshot: reconstruct its file list
-                # from the data dir rather than silently dropping the
-                # parent's rows from the child snapshot
-                pdir = os.path.basename(parent["path"])
-                parent_files = [
-                    {**f, "dir": pdir}
-                    for f in _file_stats(
-                        parent["path"],
-                        tuple(parent.get("sort_by") or ()),
-                    )
-                ]
-                if not parent_files:
-                    raise ValueError(
-                        f"cannot append onto snapshot "
-                        f"{parent['snapshot_id']}: no data files found "
-                        f"under {parent['path']}"
-                    )
-            files = parent_files + files
-            n += parent["row_count"]
-        carry = (
-            parent_snap
-            if mode == "append" and parent_snap is not None
-            else {}
+        append = mode == "append" and parent_snap is not None
+        snap = self._snap_record(
+            parent_snap if append else None,
+            sid,
+            data_dir,
+            mode,
+            # row count from the same footer reads that produced the
+            # stats — no second Spark job per commit
+            sum(f["rows"] for f in files),
+            parent_id=(parent_snap or {}).get("snapshot_id"),
+            sort_by=list(sort_by),
+            zorder=list(zorder),
+            meta=meta or {},
         )
-        delete_files = list(carry.get("delete_files") or [])
-        delete_ranges = list(carry.get("delete_ranges") or [])
-        pos_delete_files = list(carry.get("pos_delete_files") or [])
-        blooms = dict(carry.get("blooms") or {})
+        if append:
+            files = self._snap_files(parent_snap) + files
+            snap["row_count"] += parent_snap["row_count"]
         if bloom_cols:
-            blooms[dname] = {
+            snap["blooms"][dname] = {
                 "cols": list(bloom_cols),
                 "bits": int(bloom_bits),
                 "k": int(bloom_k),
             }
-        pspecs = dict(carry.get("partition_specs") or {})
         if pv:
             # spec recorded PER DIR: partition EVOLUTION is just a later
             # write with a different spec — old dirs keep theirs, scan
             # consults each file's own dir spec (≡ Iceberg spec-id)
-            pspecs[dname] = [list(e) for e in partition_by]
-        segments = self._seal_files(table, sid, files)
-        snap = {
-            "snapshot_id": sid,
-            "parent_id": (
-                parent_snap["snapshot_id"]
-                if parent_snap is not None
-                else None
-            ),
-            "committed_at": time.time(),
-            "path": data_dir,
-            "row_count": n,
-            "sort_by": list(sort_by),
-            "zorder": list(zorder),
-            "mode": mode,
-            "segments": segments,
-            "delete_files": delete_files,
-            "delete_ranges": delete_ranges,
-            "pos_delete_files": pos_delete_files,
-            "blooms": blooms,
-            "partition_specs": pspecs,
-            "meta": meta or {},
-        }
+            snap["partition_specs"][dname] = [list(e) for e in partition_by]
         self._register_new_columns(man, df)
-        if branch is not None:
-            man.setdefault("branch_snapshots", []).append(snap)
-            man["branches"][branch]["head"] = sid
-        else:
-            man["snapshots"].append(snap)
-        try:
-            self._commit_manifest(table, man)  # atomic commit
-        except ConcurrentCommitError:
-            shutil.rmtree(data_dir, ignore_errors=True)  # orphan loser dir
-            shutil.rmtree(_bloom_sidecar(data_dir), ignore_errors=True)
-            self._drop_new_segments(table, segments, sid)
-            raise
-        return snap
+        return self._commit_snap(table, man, snap, files, [data_dir], branch)
 
     # -- segmented manifests (≡ Iceberg manifest-list + manifests) -------
     #
@@ -803,30 +918,18 @@ class SnapshotCatalog:
             refs.append(self._seg_ref(newname, clean))
         return refs
 
-    def _drop_new_segments(self, table: str, refs: list[dict], sid: int) -> None:
-        """Remove segments written by a commit attempt that lost the
-        manifest CAS (reused refs from older commits stay — they are
-        live via the winning history)."""
-        prefix = f"seg-{sid:08d}-"
-        for r in refs:
-            if r["name"].startswith(prefix):
-                p = os.path.join(self._seg_dir(self._tdir(table)), r["name"])
-                _SEG_CACHE.pop(p, None)
-                try:
-                    os.unlink(p)
-                except OSError:
-                    pass
-
     def _snap_dirs(self, snap: dict) -> set[str]:
         """Data dirs a snapshot's files live in — from the segment refs
-        when segmented (no segment load), else from the inline list."""
+        when segmented (no segment load), else from the inline list (a
+        legacy snapshot without one holds its own v-dir only)."""
         segs = snap.get("segments")
         if segs is not None:
             out: set[str] = set()
             for r in segs:
                 out |= set(r.get("dirs") or [])
             return out
-        return {f["dir"] for f in self._snap_files(snap)}
+        own = os.path.basename(snap["path"])
+        return {f.get("dir", own) for f in snap.get("files") or ()} or {own}
 
     def _live_segments(self, snaps: list[dict]) -> set[str]:
         return {
@@ -839,7 +942,11 @@ class SnapshotCatalog:
         segment so :meth:`_seal_files` can re-reference intact segments
         on the next commit); legacy snapshots read the inline list
         (entries written before the append feature lack 'dir' — they
-        belong to the snapshot's own v-dir)."""
+        belong to the snapshot's own v-dir).  A legacy PRE-STATS
+        snapshot (no segments, empty inline list) has its list
+        reconstructed from its data dir's footers — every reader and
+        every commit on top of it then sees the real files instead of
+        silently dropping the parent's rows."""
         segs = snap.get("segments")
         if segs is not None:
             tdir = os.path.dirname(snap["path"])
@@ -851,10 +958,18 @@ class SnapshotCatalog:
                 )
             return out
         d = os.path.basename(snap["path"])
-        return [
-            (f if "dir" in f else {**f, "dir": d})
-            for f in (snap.get("files") or [])
-        ]
+        if snap.get("files"):
+            return [
+                (f if "dir" in f else {**f, "dir": d}) for f in snap["files"]
+            ]
+        sort_by = tuple(snap.get("sort_by") or ())
+        files = [{**f, "dir": d} for f in _file_stats(snap["path"], sort_by)]
+        if not files:
+            raise ValueError(
+                f"pre-stats snapshot {snap['snapshot_id']}: no data files "
+                f"found under {snap['path']}"
+            )
+        return files
 
     def _file_paths(self, table: str, snap: dict) -> list[str]:
         return [
@@ -946,16 +1061,7 @@ class SnapshotCatalog:
                 f"no snapshots for table {table!r} — write data before "
                 "evolving its schema"
             )
-        snap = man["snapshots"][-1]
-        files = self._snap_files(snap)
-        paths = (
-            [
-                os.path.join(self._tdir(table), f["dir"], f["name"])
-                for f in files
-            ]
-            if files
-            else [snap["path"]]
-        )
+        paths = self._file_paths(table, man["snapshots"][-1])
         schema = self._read_files(spark, paths, merge=True).schema
         fields = [
             {"id": i + 1, "name": f.name, "type": f.dataType.simpleString()}
@@ -1011,6 +1117,24 @@ class SnapshotCatalog:
                 )
             out.append(now[fid])
         return out
+
+    @classmethod
+    def _stat_name(cls, st: dict | None, f: dict, col: str) -> str | None:
+        """Name under which file ``f`` records the CURRENT column
+        ``col`` (stats, bloom, partition spec): its write-time name,
+        mapped through field ids — pre-rename files keep stats under
+        the old name.  None = the file's write-time schema has NO
+        column with the current field id (``col`` was dropped and
+        re-added: the file's same-named stats describe the RETIRED
+        column) — callers must treat the file as having no stats,
+        never fall back to the raw name: pruning or fully deleting it
+        by values the current column does not contain would lose
+        rows."""
+        if not st or not st["log"]:
+            return col
+        cur_id = {x["name"]: x["id"] for x in st["fields"]}.get(col)
+        then = cls._fields_for_sid(st, cls._dir_sid(f["dir"]))
+        return {x["id"]: x["name"] for x in then}.get(cur_id)
 
     def rename_column(
         self, spark: SparkSession, table: str, old: str, new: str
@@ -1221,33 +1345,44 @@ class SnapshotCatalog:
         scan — same contract as Iceberg).
         """
         man = self._load_manifest(table)
-        if not man["snapshots"]:
-            raise FileNotFoundError(f"no snapshots for table {table}")
-        parent = man["snapshots"][-1]
+        parent = self._get_snap(table, None, man["snapshots"])
         parent_files = self._snap_files(parent)
-        if not parent_files:
-            # legacy pre-stats parent: reconstruct its file list (same
-            # as write(mode="append")) — an empty files list would make
-            # read() fall through to the delete-KEYS dir and return the
-            # keys as table data
-            pdir = os.path.basename(parent["path"])
-            parent_files = [
-                {**f, "dir": pdir}
-                for f in _file_stats(
-                    parent["path"], tuple(parent.get("sort_by") or ())
-                )
-            ]
-            if not parent_files:
-                raise ValueError(
-                    f"cannot delete from snapshot "
-                    f"{parent['snapshot_id']}: no data files found "
-                    f"under {parent['path']}"
-                )
         key_cols = list(keys.columns)
+        self._check_delete_key(
+            table, man, parent, parent_files, key_cols, "delete"
+        )
+        sid = self._next_sid(man)
+        ddir = self._new_dir(table, sid)
+        keys.select(*key_cols).distinct().repartition(n_files).write.mode(
+            "overwrite"
+        ).parquet(ddir)
+        snap = self._snap_record(
+            parent, sid, ddir, "delete", parent["row_count"]
+        )
+        snap["delete_files"] += self._delete_entries(
+            ddir, key_cols=key_cols, sid=sid
+        )
+        return self._commit_snap(table, man, snap, parent_files, [ddir])
+
+    def _check_delete_key(
+        self,
+        table: str,
+        man: dict,
+        parent: dict,
+        parent_files: list[dict],
+        key_cols: list[str],
+        op: str,
+    ) -> None:
+        """Validate an equality-delete key before anything is written:
+        it must equal the key of every delete already in force (mixed
+        keys are not supported), and every column must exist in the
+        table's data — a mistyped key column would commit fine and then
+        break every read until rollback.  Names are compared in CURRENT
+        terms: an old delete's recorded names may predate a rename, and
+        with evolution active the live names are the logical schema's
+        (a probe file may physically predate a rename)."""
         schema_state = man.get("schema")
         for d in parent.get("delete_files") or []:
-            # compare in CURRENT names — an old delete's recorded names
-            # may predate a rename of the same field
             if self._translate_cols(
                 schema_state, d["key_cols"], d.get("schema_sid", d["sid"])
             ) != key_cols:
@@ -1256,13 +1391,8 @@ class SnapshotCatalog:
                     f"{d['key_cols']} — mixed delete keys are not "
                     "supported; compact() first"
                 )
-        # a mistyped key column would commit fine and then break every
-        # read until rollback — validate against the data schema now
-        # (the CURRENT logical schema when evolution is active: a probe
-        # file may physically predate a rename)
         if schema_state:
             live = {f["name"] for f in schema_state["fields"]}
-            missing = [c for c in key_cols if c not in live]
         else:
             import pyarrow.parquet as pq
 
@@ -1272,62 +1402,12 @@ class SnapshotCatalog:
                 parent_files[0]["name"],
             )
             live = set(pq.read_schema(probe).names)
-            missing = [c for c in key_cols if c not in live]
+        missing = [c for c in key_cols if c not in live]
         if missing:
             raise ValueError(
-                f"delete key column(s) {missing} not in table "
+                f"{op} key column(s) {missing} not in table "
                 f"{table!r}'s data schema {sorted(live)}"
             )
-        import uuid
-
-        sid = max(s["snapshot_id"] for s in man["snapshots"]) + 1
-        ddir = os.path.join(
-            self._tdir(table), f"v{sid}-{uuid.uuid4().hex[:8]}"
-        )
-        keys.select(*key_cols).distinct().repartition(n_files).write.mode(
-            "overwrite"
-        ).parquet(ddir)
-        new_dels = [
-            {
-                "dir": os.path.basename(ddir),
-                "name": f["name"],
-                "rows": f["rows"],
-                # on-disk size feeds the read-time broadcast decision:
-                # row count alone ignores key WIDTH (1M long-URL keys
-                # can be hundreds of MB — too big to force-broadcast)
-                "bytes": os.path.getsize(os.path.join(ddir, f["name"])),
-                "key_cols": key_cols,
-                "sid": sid,
-            }
-            for f in _file_stats(ddir, tuple(key_cols))
-        ]
-        segments = self._seal_files(table, sid, parent_files)
-        snap = {
-            "snapshot_id": sid,
-            "parent_id": parent["snapshot_id"],
-            "committed_at": time.time(),
-            "path": ddir,
-            "row_count": parent["row_count"],
-            "sort_by": list(parent.get("sort_by") or ()),
-            "mode": "delete",
-            "segments": segments,
-            "delete_files": (
-                list(parent.get("delete_files") or []) + new_dels
-            ),
-            "delete_ranges": list(parent.get("delete_ranges") or []),
-            "pos_delete_files": list(parent.get("pos_delete_files") or []),
-            "blooms": dict(parent.get("blooms") or {}),
-            "partition_specs": dict(parent.get("partition_specs") or {}),
-            "meta": {},
-        }
-        man["snapshots"].append(snap)
-        try:
-            self._commit_manifest(table, man)
-        except ConcurrentCommitError:
-            shutil.rmtree(ddir, ignore_errors=True)
-            self._drop_new_segments(table, segments, sid)
-            raise
-        return snap
 
     def upsert(
         self,
@@ -1373,136 +1453,48 @@ class SnapshotCatalog:
             )
         parent = man["snapshots"][-1]
         parent_files = self._snap_files(parent)
-        if not parent_files:
-            pdir = os.path.basename(parent["path"])
-            parent_files = [
-                {**f, "dir": pdir}
-                for f in _file_stats(
-                    parent["path"], tuple(parent.get("sort_by") or ())
-                )
-            ]
-            if not parent_files:
-                raise ValueError(
-                    f"cannot upsert into snapshot "
-                    f"{parent['snapshot_id']}: no data files found "
-                    f"under {parent['path']}"
-                )
-        schema_state = man.get("schema")
-        for d in parent.get("delete_files") or []:
-            # compare in CURRENT names — an old delete's recorded names
-            # may predate a rename of the same field
-            if self._translate_cols(
-                schema_state, d["key_cols"], d.get("schema_sid", d["sid"])
-            ) != key_cols:
-                raise ValueError(
-                    f"table {table!r} already has equality deletes on "
-                    f"{d['key_cols']} — mixed delete keys are not "
-                    "supported; compact() first"
-                )
-        # a mistyped key column would commit fine and break every read
-        # until rollback — validate against the data schema now (same
-        # guard as delete_keys; CURRENT logical schema when evolution is
-        # active, since a probe file may physically predate a rename)
-        if schema_state:
-            live = {f["name"] for f in schema_state["fields"]}
-        else:
-            import pyarrow.parquet as pq
-
-            probe = os.path.join(
-                self._tdir(table),
-                parent_files[0]["dir"],
-                parent_files[0]["name"],
-            )
-            live = set(pq.read_schema(probe).names)
-        not_in_data = [c for c in key_cols if c not in live]
-        if not_in_data:
-            raise ValueError(
-                f"upsert key column(s) {not_in_data} not in table "
-                f"{table!r}'s data schema {sorted(live)}"
-            )
-        import uuid
-
-        sid = max(s["snapshot_id"] for s in man["snapshots"]) + 1
-        ts_conf = "spark.sql.parquet.outputTimestampType"
-        prev_ts = spark.conf.get(ts_conf)
-        data_dir = os.path.join(
-            self._tdir(table), f"v{sid}-{uuid.uuid4().hex[:8]}"
+        self._check_delete_key(
+            table, man, parent, parent_files, key_cols, "upsert"
         )
-        kdir = os.path.join(
-            self._tdir(table), f"v{sid}-{uuid.uuid4().hex[:8]}"
-        )
+        sid = self._next_sid(man)
+        data_dir = self._new_dir(table, sid)
+        kdir = self._new_dir(table, sid)
         sort_by = tuple(parent.get("sort_by") or ())
-        out = df
-        if sort_by and all(c in df.columns for c in sort_by):
-            parts = (n_files,) if n_files else ()
-            out = df.repartitionByRange(*parts, *sort_by).sortWithinPartitions(
-                *sort_by
-            )
-        elif n_files:
-            out = df.repartition(n_files)
-        try:
-            spark.conf.set(ts_conf, "TIMESTAMP_MICROS")
-            out.write.mode("overwrite").parquet(data_dir)
-            df.select(*key_cols).distinct().repartition(1).write.mode(
-                "overwrite"
-            ).parquet(kdir)
-        finally:
-            spark.conf.set(ts_conf, prev_ts)
-        dname = os.path.basename(data_dir)
-        new_files = [
-            {**f, "dir": dname} for f in _file_stats(data_dir, sort_by)
-        ]
-        n_new = sum(f["rows"] for f in new_files)
-        new_dels = [
-            {
-                "dir": os.path.basename(kdir),
-                "name": f["name"],
-                "rows": f["rows"],
-                "bytes": os.path.getsize(os.path.join(kdir, f["name"])),
-                "key_cols": key_cols,
-                # PARENT's sequence number: the delete applies to every
-                # file committed at or before the parent, never to this
-                # commit's own data files (dir sid > parent sid)
-                "sid": parent["snapshot_id"],
-                # names in ``key_cols`` are CURRENT at *this* commit,
-                # not the parent's — a rename committed between the
-                # parent snapshot and this upsert changes which schema
-                # version the names belong to, so schema translation
-                # must anchor on this commit's own sid (sequence
-                # semantics above stay on the parent's)
-                "schema_sid": sid,
-            }
-            for f in _file_stats(kdir, tuple(key_cols))
-        ]
-        segments = self._seal_files(table, sid, parent_files + new_files)
-        snap = {
-            "snapshot_id": sid,
-            "parent_id": parent["snapshot_id"],
-            "committed_at": time.time(),
-            "path": data_dir,
-            "row_count": parent["row_count"] + n_new,
-            "sort_by": list(sort_by),
-            "mode": "upsert",
-            "segments": segments,
-            "delete_files": (
-                list(parent.get("delete_files") or []) + new_dels
-            ),
-            "delete_ranges": list(parent.get("delete_ranges") or []),
-            "pos_delete_files": list(parent.get("pos_delete_files") or []),
-            "blooms": dict(parent.get("blooms") or {}),
-            "partition_specs": dict(parent.get("partition_specs") or {}),
-            "meta": meta or {},
-        }
+        new_files = self._write_data(
+            df,
+            data_dir,
+            sort_by if all(c in df.columns for c in sort_by) else (),
+            n_files,
+            sort_by,
+        )
+        self._write_data(df.select(*key_cols).distinct(), kdir, (), 1, ())
+        snap = self._snap_record(
+            parent,
+            sid,
+            data_dir,
+            "upsert",
+            parent["row_count"] + sum(f["rows"] for f in new_files),
+            meta=meta or {},
+        )
+        snap["delete_files"] += self._delete_entries(
+            kdir,
+            key_cols=key_cols,
+            # PARENT's sequence number: the delete applies to every
+            # file committed at or before the parent, never to this
+            # commit's own data files (dir sid > parent sid)
+            sid=parent["snapshot_id"],
+            # names in ``key_cols`` are CURRENT at *this* commit, not
+            # the parent's — a rename committed between the parent
+            # snapshot and this upsert changes which schema version the
+            # names belong to, so schema translation must anchor on
+            # this commit's own sid (sequence semantics above stay on
+            # the parent's)
+            schema_sid=sid,
+        )
         self._register_new_columns(man, df)
-        man["snapshots"].append(snap)
-        try:
-            self._commit_manifest(table, man)
-        except ConcurrentCommitError:
-            shutil.rmtree(data_dir, ignore_errors=True)
-            shutil.rmtree(kdir, ignore_errors=True)
-            self._drop_new_segments(table, segments, sid)
-            raise
-        return snap
+        return self._commit_snap(
+            table, man, snap, parent_files + new_files, [data_dir, kdir]
+        )
 
     def delete_range(
         self,
@@ -1541,38 +1533,10 @@ class SnapshotCatalog:
                     "purge; pass (lo, hi) with lo <= hi"
                 )
         man = self._load_manifest(table)
-        if not man["snapshots"]:
-            raise FileNotFoundError(f"no snapshots for table {table}")
-        parent = man["snapshots"][-1]
+        parent = self._get_snap(table, None, man["snapshots"])
         parent_files = self._snap_files(parent)
-        if not parent_files:
-            raise ValueError(
-                f"cannot delete from pre-stats snapshot "
-                f"{parent['snapshot_id']} — compact() first"
-            )
-        sid = max(s["snapshot_id"] for s in man["snapshots"]) + 1
+        sid = self._next_sid(man)
         schema_state = man.get("schema")
-        _cur_id = (
-            {f["name"]: f["id"] for f in schema_state["fields"]}
-            if schema_state
-            else {}
-        )
-
-        def _stat_name(f: dict) -> str | None:
-            # pre-rename files keep stats under their write-time name.
-            # None = the file's write-time schema has NO column with the
-            # CURRENT field id (e.g. ``col`` was dropped and re-added:
-            # old files hold only the RETIRED column's bytes/stats under
-            # the same name) → treat as no-stats, never fall back to the
-            # raw name — matching by the retired column's stats would
-            # judge files "fully deleted" by values the current column
-            # does not contain (irreversible data loss)
-            if not schema_state or not schema_state["log"]:
-                return col
-            then = self._fields_for_sid(
-                schema_state, self._dir_sid(f["dir"])
-            )
-            return {x["id"]: x["name"] for x in then}.get(_cur_id.get(col))
 
         def fully_deleted(f: dict) -> bool:
             # dropping a file here is IRREVERSIBLE after expire/compact,
@@ -1582,7 +1546,8 @@ class SnapshotCatalog:
             # Mirrors scan()'s guards: a 'YYYY-MM-DD HH:MM:SS' string
             # bound sorts BEFORE every same-day 'T'-isoformat stat
             # (' ' < 'T') and would otherwise misclassify coverage.
-            st = (f.get("stats") or {}).get(_stat_name(f))
+            stats = f.get("stats") or {}
+            st = stats.get(self._stat_name(schema_state, f, col))
             if not st or st["min"] is None or st["max"] is None:
                 return False
             stat_is_str = isinstance(st["min"], str)
@@ -1610,44 +1575,30 @@ class SnapshotCatalog:
                 kept.append(f)
         if not kept and parent_files:
             # full-table purge: keep the smallest covered file as a
-            # SCHEMA ANCHOR.  A files==[] snapshot is indistinguishable
-            # from a legacy pre-stats one, so read()/scan()/compact()
-            # would fall back to snap['path'] — the never-created
-            # v{sid}-meta dir — and append would listdir it.  The
-            # anchor's rows are still removed by the read-time residual
-            # filter (its dir sid < this delete's sid), so reads return
-            # a schema-correct EMPTY relation; row_count stays 0.
+            # SCHEMA ANCHOR.  A files==[] snapshot has no file to take
+            # the schema from, so read()/scan() could not build even an
+            # empty relation and append would have nothing to merge
+            # with.  The anchor's rows are still removed by the
+            # read-time residual filter (its dir sid < this delete's
+            # sid), so reads return a schema-correct EMPTY relation;
+            # row_count stays 0.
             anchor = min(parent_files, key=lambda f: int(f.get("rows") or 0))
             kept = [anchor]
-        snap = {
-            "snapshot_id": sid,
-            "parent_id": parent["snapshot_id"],
-            "committed_at": time.time(),
+        snap = self._snap_record(
+            parent,
+            sid,
             # metadata-only commit: the v-dir is named but NEVER created
             # (rollback/expire rmtree it harmlessly; pointing at the
             # table dir instead would let rollback delete the table)
-            "path": os.path.join(self._tdir(table), f"v{sid}-meta"),
-            "row_count": parent["row_count"] - dropped_rows,
-            "sort_by": list(parent.get("sort_by") or ()),
-            "mode": "delete",
-            "segments": self._seal_files(table, sid, kept),
-            "delete_files": list(parent.get("delete_files") or []),
-            "delete_ranges": (
-                list(parent.get("delete_ranges") or [])
-                + [{"col": col, "ranges": ranges, "sid": sid}]
-            ),
-            "pos_delete_files": list(parent.get("pos_delete_files") or []),
-            "blooms": dict(parent.get("blooms") or {}),
-            "partition_specs": dict(parent.get("partition_specs") or {}),
-            "meta": {"dropped_files": len(parent_files) - len(kept)},
-        }
-        man["snapshots"].append(snap)
-        try:
-            self._commit_manifest(table, man)
-        except ConcurrentCommitError:
-            self._drop_new_segments(table, snap["segments"], sid)
-            raise
-        return snap
+            os.path.join(self._tdir(table), f"v{sid}-meta"),
+            "delete",
+            parent["row_count"] - dropped_rows,
+            meta={"dropped_files": len(parent_files) - len(kept)},
+        )
+        snap["delete_ranges"].append(
+            {"col": col, "ranges": ranges, "sid": sid}
+        )
+        return self._commit_snap(table, man, snap, kept)
 
     def delete_where(
         self,
@@ -1676,29 +1627,9 @@ class SnapshotCatalog:
         from pyspark.sql import functions as F
 
         man = self._load_manifest(table)
-        if not man["snapshots"]:
-            raise FileNotFoundError(f"no snapshots for table {table}")
-        parent = man["snapshots"][-1]
+        parent = self._get_snap(table, None, man["snapshots"])
         parent_files = self._snap_files(parent)
-        if not parent_files:
-            pdir = os.path.basename(parent["path"])
-            parent_files = [
-                {**f, "dir": pdir}
-                for f in _file_stats(
-                    parent["path"], tuple(parent.get("sort_by") or ())
-                )
-            ]
-            if not parent_files:
-                raise ValueError(
-                    f"cannot delete from snapshot "
-                    f"{parent['snapshot_id']}: no data files found "
-                    f"under {parent['path']}"
-                )
-        import uuid
-
-        sid = max(s["snapshot_id"] for s in man["snapshots"]) + 1
-        tdir = self._tdir(table)
-        paths = [os.path.join(tdir, f["dir"], f["name"]) for f in parent_files]
+        sid = self._next_sid(man)
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
         # schema-resolved read: the predicate is written in CURRENT
         # column names and must match rows in files that predate a
@@ -1707,7 +1638,7 @@ class SnapshotCatalog:
             self._read_resolved(
                 spark,
                 table,
-                paths,
+                self._file_paths(table, parent),
                 state=man.get("schema"),
                 with_pos_meta=True,
             )
@@ -1717,44 +1648,13 @@ class SnapshotCatalog:
                 F.col("_pos").alias("pos"),
             )
         )
-        ddir = os.path.join(tdir, f"v{sid}-{uuid.uuid4().hex[:8]}")
+        ddir = self._new_dir(table, sid)
         positions.repartition(n_files).write.mode("overwrite").parquet(ddir)
-        new_pdels = [
-            {
-                "dir": os.path.basename(ddir),
-                "name": f["name"],
-                "rows": f["rows"],
-                "bytes": os.path.getsize(os.path.join(ddir, f["name"])),
-                "sid": sid,
-            }
-            for f in _file_stats(ddir, ())
-        ]
-        snap = {
-            "snapshot_id": sid,
-            "parent_id": parent["snapshot_id"],
-            "committed_at": time.time(),
-            "path": ddir,
-            "row_count": parent["row_count"],
-            "sort_by": list(parent.get("sort_by") or ()),
-            "mode": "delete",
-            "segments": self._seal_files(table, sid, parent_files),
-            "delete_files": list(parent.get("delete_files") or []),
-            "delete_ranges": list(parent.get("delete_ranges") or []),
-            "pos_delete_files": (
-                list(parent.get("pos_delete_files") or []) + new_pdels
-            ),
-            "blooms": dict(parent.get("blooms") or {}),
-            "partition_specs": dict(parent.get("partition_specs") or {}),
-            "meta": {},
-        }
-        man["snapshots"].append(snap)
-        try:
-            self._commit_manifest(table, man)
-        except ConcurrentCommitError:
-            shutil.rmtree(ddir, ignore_errors=True)
-            self._drop_new_segments(table, snap["segments"], sid)
-            raise
-        return snap
+        snap = self._snap_record(
+            parent, sid, ddir, "delete", parent["row_count"]
+        )
+        snap["pos_delete_files"] += self._delete_entries(ddir, sid=sid)
+        return self._commit_snap(table, man, snap, parent_files, [ddir])
 
     @staticmethod
     def _dir_sid(d: str) -> int:
@@ -1774,9 +1674,7 @@ class SnapshotCatalog:
         snap: dict,
         files: list[dict],
         merge: bool,
-        state: dict | None = None,
-        *,
-        state_from_caller: bool = False,
+        state: dict | None,
     ) -> DataFrame:
         """Read ``files`` applying the snapshot's equality-delete files
         AND metadata range deletes with Iceberg sequence semantics: a
@@ -1785,7 +1683,12 @@ class SnapshotCatalog:
         commit boundaries; each segment anti-joins the union of the
         key deletes that apply to it (broadcast when the key count is
         small) and filters NOT-in-ranges for the applicable range
-        deletes."""
+        deletes.
+
+        ``state`` is the schema state from the SAME manifest load the
+        caller resolved ``snap`` from — one consistent snapshot+schema
+        view (a rename committed between two loads would translate this
+        snapshot's delete entries against the wrong version)."""
         from pyspark.sql import functions as F
 
         from eodal_spark import grid
@@ -1794,12 +1697,6 @@ class SnapshotCatalog:
         rdels = snap.get("delete_ranges") or []
         pdels = snap.get("pos_delete_files") or []
         tdir = self._tdir(table)
-        if not state_from_caller:
-            # back-compat load; callers that already hold the manifest
-            # pass state= for ONE consistent snapshot+schema view (a
-            # rename committed between two loads would translate this
-            # snapshot's delete entries against the wrong version)
-            state = self._load_manifest(table).get("schema")
         paths = [os.path.join(tdir, f["dir"], f["name"]) for f in files]
         if (not dels and not rdels and not pdels) or not files:
             return self._read_resolved(
@@ -1881,32 +1778,32 @@ class SnapshotCatalog:
         if base_keys is not None and len(by_sid) > 1:
             base_keys = base_keys.cache()
 
-        max_key_sid = max((d["sid"] for d in dels), default=-1)
-
-        def keys_from(min_sid: int) -> DataFrame | None:
-            # no key delete applies to this segment (base empty, or the
-            # boundary comes from a RANGE delete newer than every key
-            # delete) — skip the provably-empty anti-join
-            if base_keys is None or min_sid > max_key_sid:
+        def applicable(base, entries, cols, min_sid) -> DataFrame | None:
+            # the deletes of ``entries`` committed at or after
+            # ``min_sid`` as one distinct relation; None when none
+            # applies (base empty, or the boundary comes from a newer
+            # delete of another tier) — skip the provably-empty
+            # anti-join.  Force-broadcast only when the set is provably
+            # small by BYTES (parquet-compressed footprint × a
+            # decompression fudge), not by row count alone — 1M wide
+            # string keys can be a several-hundred-MB broadcast that
+            # would override Spark's size-based threshold and OOM the
+            # driver.  Entries without a recorded size (pre-upgrade,
+            # foreign/migrated manifests) must NOT default to "tiny":
+            # they get a conservative row cap; above the gates, Spark's
+            # own autoBroadcastJoinThreshold decides.
+            live = [d for d in entries if d["sid"] >= min_sid]
+            if base is None or not live:
                 return None
             k = (
-                base_keys.filter(F.col("_del_sid") >= min_sid)
-                .select(*key_cols)
+                base.filter(F.col("_del_sid") >= min_sid)
+                .select(*cols)
                 .distinct()
             )
-            # force-broadcast only when the key SET is provably small by
-            # BYTES (parquet-compressed footprint × a decompression
-            # fudge), not by row count alone — 1M wide string keys can
-            # be a several-hundred-MB broadcast that would override
-            # Spark's size-based threshold and OOM the driver.  Entries
-            # without a recorded size (pre-upgrade) get a conservative
-            # row cap; above the gates, Spark's own
-            # autoBroadcastJoinThreshold decides.
-            applicable = [d for d in dels if d["sid"] >= min_sid]
-            if all("bytes" in d for d in applicable):
-                small = sum(d["bytes"] for d in applicable) <= 32 << 20
+            if all("bytes" in d for d in live):
+                small = sum(d["bytes"] for d in live) <= 32 << 20
             else:
-                small = sum(d["rows"] for d in applicable) <= 100_000
+                small = sum(d["rows"] for d in live) <= 100_000
             return F.broadcast(k) if small else k
 
         # position deletes (≡ Iceberg v2 position delete files): one
@@ -1923,26 +1820,6 @@ class SnapshotCatalog:
             pos_base = part if pos_base is None else pos_base.unionByName(part)
         if pos_base is not None and len(pdels) > 1:
             pos_base = pos_base.cache()
-        max_pos_sid = max((p["sid"] for p in pdels), default=-1)
-
-        def pos_keys_from(min_sid: int) -> DataFrame | None:
-            if pos_base is None or min_sid > max_pos_sid:
-                return None
-            k = (
-                pos_base.filter(F.col("_del_sid") >= min_sid)
-                .select("dfile", "pos")
-                .distinct()
-            )
-            applicable = [p for p in pdels if p["sid"] >= min_sid]
-            # same conservative gate as keys_from: entries without a
-            # recorded size (foreign/migrated manifests) must NOT
-            # default to "tiny" — that would force-broadcast a position
-            # set of unknown size
-            if all("bytes" in p for p in applicable):
-                small = sum(p["bytes"] for p in applicable) <= 32 << 20
-            else:
-                small = sum(p["rows"] for p in applicable) <= 100_000
-            return F.broadcast(k) if small else k
 
         # segment boundaries: files with sid in (prev_del, del] share
         # the same applicable-delete suffix {del, ...}
@@ -1960,7 +1837,11 @@ class SnapshotCatalog:
                   if self._dir_sid(f["dir"]) == 0] if lo == 0 else [])
             if not seg:
                 continue
-            pk = pos_keys_from(hi) if hi is not None else None
+            pk = (
+                applicable(pos_base, pdels, ["dfile", "pos"], hi)
+                if hi is not None
+                else None
+            )
             df = self._read_resolved(
                 spark,
                 table,
@@ -1984,7 +1865,7 @@ class SnapshotCatalog:
                         .join(pk, ["dfile", "pos"], "left_anti")
                         .select(*data_cols)
                     )
-                keys = keys_from(hi)
+                keys = applicable(base_keys, dels, key_cols, hi)
                 if keys is not None:
                     df = df.join(keys, key_cols, "left_anti")
                 rp = range_pred_from(hi)
@@ -2000,13 +1881,13 @@ class SnapshotCatalog:
         """Newest snapshot committed at or before ``ts`` (epoch seconds
         or datetime) — ≡ Iceberg ``TIMESTAMP AS OF`` resolution.
         Snapshots predating the ``committed_at`` field sort oldest."""
+        return self._as_of(table, ts, self.snapshots(table))
+
+    @staticmethod
+    def _as_of(table: str, ts, snaps: list[dict]) -> dict:
         if hasattr(ts, "timestamp"):
             ts = ts.timestamp()
-        eligible = [
-            s
-            for s in self.snapshots(table)
-            if s.get("committed_at", 0.0) <= ts
-        ]
+        eligible = [s for s in snaps if s.get("committed_at", 0.0) <= ts]
         if not eligible:
             raise KeyError(
                 f"no snapshot of {table!r} committed at or before {ts}"
@@ -2046,15 +1927,7 @@ class SnapshotCatalog:
                 raise KeyError(f"no branch {branch!r} on table {table!r}")
             snapshot_id = b["head"]
         if as_of is not None:
-            ts = as_of.timestamp() if hasattr(as_of, "timestamp") else as_of
-            eligible = [
-                s for s in snaps if s.get("committed_at", 0.0) <= ts
-            ]
-            if not eligible:
-                raise KeyError(
-                    f"no snapshot of {table!r} committed at or before {ts}"
-                )
-            snap = eligible[-1]
+            snap = self._as_of(table, as_of, snaps)
         else:
             # explicit-id lookups also resolve branch snapshots (the
             # audit-by-id path); the default head stays main's
@@ -2065,18 +1938,10 @@ class SnapshotCatalog:
             )
             snap = self._get_snap(table, snapshot_id, lookup)
         files = self._snap_files(snap)
-        if files:
-            merge = len({f["dir"] for f in files}) > 1
-            return self._read_with_deletes(
-                spark,
-                table,
-                snap,
-                files,
-                merge,
-                state=man.get("schema"),
-                state_from_caller=True,
-            )
-        return spark.read.parquet(snap["path"])  # pre-stats snapshot
+        merge = len({f["dir"] for f in files}) > 1
+        return self._read_with_deletes(
+            spark, table, snap, files, merge, man.get("schema")
+        )
 
     def read_changes(
         self,
@@ -2125,11 +1990,11 @@ class SnapshotCatalog:
         if not new:
             from pyspark.sql import functions as F
 
-            paths = self._file_paths(table, hi)
-            if not paths:  # legacy pre-stats snapshot: dir-level read
-                return spark.read.parquet(hi["path"]).where(F.lit(False))
             return self._read_resolved(
-                spark, table, paths, state=man.get("schema")
+                spark,
+                table,
+                self._file_paths(table, hi),
+                state=man.get("schema"),
             ).where(F.lit(False))
         return self._read_resolved(
             spark, table, new, state=man.get("schema")
@@ -2197,7 +2062,6 @@ class SnapshotCatalog:
         table: str,
         n_files: int | None = None,
         target_file_bytes: int | None = None,
-        min_input_files: int = 2,
     ) -> dict | None:
         """Compaction (≡ Iceberg ``rewrite_data_files``), two modes:
 
@@ -2209,7 +2073,7 @@ class SnapshotCatalog:
         without changing a single row.
 
         ``target_file_bytes`` — SELECTIVE binpack (Iceberg's binpack
-        strategy): only groups of ≥ ``min_input_files`` undersized
+        strategy): only groups of ≥ ``_BINPACK_MIN_FILES`` (2) undersized
         files (below the target, grouped per partition value where
         partitioned) are rewritten; every other file is re-referenced
         untouched — byte-identical on disk, O(small files) rewrite
@@ -2229,9 +2093,7 @@ class SnapshotCatalog:
                 "target_file_bytes (selective binpack)"
             )
         if target_file_bytes is not None:
-            return self._compact_binpack(
-                spark, table, int(target_file_bytes), int(min_input_files)
-            )
+            return self._compact_binpack(spark, table, int(target_file_bytes))
         snap = self._get_snap(table, None)
         # carry any ingest marker forward: the compacted snapshot
         # represents the same committed state, and drain_to_catalog's
@@ -2279,11 +2141,10 @@ class SnapshotCatalog:
         spark: SparkSession,
         table: str,
         target: int,
-        min_input: int,
     ) -> dict | None:
         """Selective small-file compaction (Iceberg binpack): rewrite
-        ONLY groups of ≥ ``min_input`` files below ``target`` bytes —
-        grouped per partition value on partitioned tables — into
+        ONLY groups of ≥ ``_BINPACK_MIN_FILES`` files below ``target``
+        bytes — grouped per partition value on partitioned tables — into
         ~ceil(group_bytes/target) files preserving the snapshot's
         sort/z-order clustering.  Untouched files are re-referenced
         byte-identical (their manifest segments reused verbatim), so a
@@ -2300,20 +2161,9 @@ class SnapshotCatalog:
         the CURRENT spec are candidates (rewriting an old-spec dir is
         a relayout, not a binpack — use the full rewrite).  Returns
         None when no group qualifies: nothing to do, no empty commit."""
-        import uuid
-
-        from pyspark.sql import functions as F
-
         man = self._load_manifest(table)
-        if not man["snapshots"]:
-            raise FileNotFoundError(f"no snapshots for table {table}")
-        snap = man["snapshots"][-1]
+        snap = self._get_snap(table, None, man["snapshots"])
         parent_files = self._snap_files(snap)
-        if not parent_files:
-            raise ValueError(
-                f"cannot binpack pre-stats snapshot "
-                f"{snap['snapshot_id']} — run a full compact() first"
-            )
         tdir = self._tdir(table)
         pspecs = snap.get("partition_specs") or {}
         cur_spec = None
@@ -2341,89 +2191,58 @@ class SnapshotCatalog:
         n_out = 0
         n_groups = 0
         for lst in groups.values():
-            if len(lst) < min_input:
+            if len(lst) < _BINPACK_MIN_FILES:
                 continue
             n_groups += 1
             inputs.extend(f for f, _ in lst)
             n_out += max(1, -(-sum(sz for _, sz in lst) // target))
         if not inputs:
             return None
-        schema_state = man.get("schema")
-        in_multi = len({f["dir"] for f in inputs}) > 1
         rows = self._read_with_deletes(
             spark,
             table,
             snap,
             inputs,
-            merge=in_multi,
-            state=schema_state,
-            state_from_caller=True,
+            len({f["dir"] for f in inputs}) > 1,
+            man.get("schema"),
         )
         sort_by = tuple(snap.get("sort_by") or ())
         zorder = tuple(snap.get("zorder") or ())
-        keys: list[str] = []
-        if zorder:
-            from eodal_spark import grid
-
-            za, zb = zorder
-            b = rows.agg(F.min(za), F.max(za), F.min(zb), F.max(zb)).first()
-            zk = grid.zorder_key_2d(
-                F.col(za), F.col(zb),
-                b[0] if b[0] is not None else 0.0,
-                b[1] if b[1] is not None else 1.0,
-                b[2] if b[2] is not None else 0.0,
-                b[3] if b[3] is not None else 1.0,
-                bits=16,
-            )
-            rows = rows.withColumn("_zorder_key", zk)
-            keys = ["_zorder_key"]
-        elif sort_by:
-            keys = list(sort_by)
         pv = (
             _partition_cols([tuple(e) for e in cur_spec])
             if cur_spec is not None
             else []
         )
-        out = rows
-        for name, colx in pv:
-            out = out.withColumn(name, colx)
-        order_cols = [n for n, _ in pv] + keys
-        if order_cols:
+        sid = self._next_sid(man)
+        data_dir = self._new_dir(table, sid)
+        dname = os.path.basename(data_dir)
+        new_files = self._write_data(
+            rows,
+            data_dir,
             # partition cols lead the range key → each partition's rows
             # land in contiguous tasks (per-group packing), sort order
             # preserved within files
-            out = out.repartitionByRange(n_out, *order_cols)
-            out = out.sortWithinPartitions(*order_cols)
-        else:
-            out = out.repartition(n_out)
-        if zorder:
-            out = out.drop("_zorder_key")
-        sid = max(
-            s["snapshot_id"]
-            for s in man["snapshots"] + (man.get("branch_snapshots") or [])
-        ) + 1
-        data_dir = os.path.join(tdir, f"v{sid}-{uuid.uuid4().hex[:8]}")
-        ts_conf = "spark.sql.parquet.outputTimestampType"
-        prev_ts = spark.conf.get(ts_conf)
-        try:
-            spark.conf.set(ts_conf, "TIMESTAMP_MICROS")
-            if pv:
-                out.write.mode("overwrite").partitionBy(
-                    *[n for n, _ in pv]
-                ).parquet(data_dir)
-            else:
-                out.write.mode("overwrite").parquet(data_dir)
-        finally:
-            spark.conf.set(ts_conf, prev_ts)
-        dname = os.path.basename(data_dir)
-        stat_cols = sort_by if sort_by else zorder
-        new_files = [
-            {**f, "dir": dname} for f in _file_stats(data_dir, stat_cols)
-        ]
-        if pv:
-            for f in new_files:
-                f["partition"] = _parse_partition(f["name"])
-        blooms = dict(snap.get("blooms") or {})
+            [n for n, _ in pv] + ([_ZORDER_KEY] if zorder else list(sort_by)),
+            n_out,
+            sort_by or zorder,
+            zorder,
+            pv,
+        )
+        in_rows = sum(int(f.get("rows") or 0) for f in inputs)
+        new_snap = self._snap_record(
+            snap,
+            sid,
+            data_dir,
+            "compact",
+            snap["row_count"] - in_rows + sum(f["rows"] for f in new_files),
+            zorder=list(zorder),
+            meta={
+                "binpack_inputs": len(inputs),
+                "binpack_groups": n_groups,
+                "compacted_from": snap["snapshot_id"],
+            },
+        )
+        blooms = new_snap["blooms"]
         bcfg = None
         for bcfg in blooms.values():
             pass
@@ -2432,46 +2251,15 @@ class SnapshotCatalog:
                 spark, data_dir, tuple(bcfg["cols"]), bcfg["bits"], bcfg["k"]
             )
             blooms[dname] = dict(bcfg)
-        n_new = sum(f["rows"] for f in new_files)
-        in_rows = sum(int(f.get("rows") or 0) for f in inputs)
+        if pv:
+            new_snap["partition_specs"][dname] = [list(e) for e in cur_spec]
         inset = {(f["dir"], f["name"]) for f in inputs}
         untouched = [
             f for f in parent_files if (f["dir"], f["name"]) not in inset
         ]
-        new_pspecs = dict(pspecs)
-        if pv:
-            new_pspecs[dname] = [list(e) for e in cur_spec]
-        segments = self._seal_files(table, sid, untouched + new_files)
-        new_snap = {
-            "snapshot_id": sid,
-            "parent_id": snap["snapshot_id"],
-            "committed_at": time.time(),
-            "path": data_dir,
-            "row_count": snap["row_count"] - in_rows + n_new,
-            "sort_by": list(sort_by),
-            "zorder": list(zorder),
-            "mode": "compact",
-            "segments": segments,
-            "delete_files": list(snap.get("delete_files") or []),
-            "delete_ranges": list(snap.get("delete_ranges") or []),
-            "pos_delete_files": list(snap.get("pos_delete_files") or []),
-            "blooms": blooms,
-            "partition_specs": new_pspecs,
-            "meta": {
-                "binpack_inputs": len(inputs),
-                "binpack_groups": n_groups,
-                "compacted_from": snap["snapshot_id"],
-            },
-        }
-        man["snapshots"].append(new_snap)
-        try:
-            self._commit_manifest(table, man)
-        except ConcurrentCommitError:
-            shutil.rmtree(data_dir, ignore_errors=True)
-            shutil.rmtree(_bloom_sidecar(data_dir), ignore_errors=True)
-            self._drop_new_segments(table, segments, sid)
-            raise
-        return new_snap
+        return self._commit_snap(
+            table, man, new_snap, untouched + new_files, [data_dir]
+        )
 
     # -- named refs (≡ Iceberg tags) ------------------------------------
 
@@ -2640,9 +2428,7 @@ class SnapshotCatalog:
                 "only append snapshots compose onto a moved head "
                 "(overwrite/delete commits don't cherry-pick)"
             )
-        if not man["snapshots"]:
-            raise FileNotFoundError(f"no snapshots for table {table}")
-        head = man["snapshots"][-1]
+        head = self._get_snap(table, None, man["snapshots"])
         own_dir = os.path.basename(src["path"])
         head_files = self._snap_files(head)
         if any(f["dir"] == own_dir for f in head_files):
@@ -2651,39 +2437,21 @@ class SnapshotCatalog:
                 "by main — cherry-pick would double-count its rows"
             )
         own = [f for f in self._snap_files(src) if f["dir"] == own_dir]
-        sid = max(s["snapshot_id"] for s in all_snaps) + 1
-        blooms = dict(head.get("blooms") or {})
-        if own_dir in (src.get("blooms") or {}):
-            blooms[own_dir] = src["blooms"][own_dir]
-        pspecs = dict(head.get("partition_specs") or {})
-        if own_dir in (src.get("partition_specs") or {}):
-            pspecs[own_dir] = src["partition_specs"][own_dir]
-        snap = {
-            "snapshot_id": sid,
-            "parent_id": head["snapshot_id"],
-            "committed_at": time.time(),
+        sid = self._next_sid(man)
+        snap = self._snap_record(
+            head,
+            sid,
             # metadata-only commit: the picked files live in the source
             # snapshot's dir; this v-dir is named but never created
-            "path": os.path.join(self._tdir(table), f"v{sid}-meta"),
-            "row_count": head["row_count"]
-            + sum(int(f.get("rows") or 0) for f in own),
-            "sort_by": list(head.get("sort_by") or ()),
-            "mode": "append",
-            "segments": self._seal_files(table, sid, head_files + own),
-            "delete_files": list(head.get("delete_files") or []),
-            "delete_ranges": list(head.get("delete_ranges") or []),
-            "pos_delete_files": list(head.get("pos_delete_files") or []),
-            "blooms": blooms,
-            "partition_specs": pspecs,
-            "meta": {"cherrypicked_from": snapshot_id},
-        }
-        man["snapshots"].append(snap)
-        try:
-            self._commit_manifest(table, man)
-        except ConcurrentCommitError:
-            self._drop_new_segments(table, snap["segments"], sid)
-            raise
-        return snap
+            os.path.join(self._tdir(table), f"v{sid}-meta"),
+            "append",
+            head["row_count"] + sum(int(f.get("rows") or 0) for f in own),
+            meta={"cherrypicked_from": snapshot_id},
+        )
+        for k in ("blooms", "partition_specs"):
+            if own_dir in (src.get(k) or {}):
+                snap[k][own_dir] = src[k][own_dir]
+        return self._commit_snap(table, man, snap, head_files + own)
 
     def remove_orphan_files(
         self,
@@ -2716,12 +2484,7 @@ class SnapshotCatalog:
             fcntl.flock(fd, fcntl.LOCK_EX)
             man = self._load_manifest(table)
             all_snaps = man["snapshots"] + (man.get("branch_snapshots") or [])
-            live: set[str] = set()
-            for s in all_snaps:
-                live.add(os.path.basename(s["path"]))
-                live |= self._snap_dirs(s)
-                live |= {d["dir"] for d in (s.get("delete_files") or [])}
-                live |= {d["dir"] for d in (s.get("pos_delete_files") or [])}
+            live = self._live_dirs(all_snaps)
             # a live dir's bloom sidecar is live (named <dir>-bloom)
             live |= {d + BLOOM_SUFFIX for d in live}
             tdir = self._tdir(table)
@@ -2749,26 +2512,18 @@ class SnapshotCatalog:
             # age rail as data dirs, for the same in-flight-writer race
             live_segs = self._live_segments(all_snaps)
             segdir = self._seg_dir(tdir)
-            if os.path.isdir(segdir):
-                for name in sorted(os.listdir(segdir)):
-                    p = os.path.join(segdir, name)
-                    try:
-                        stale = os.path.getmtime(p) <= cutoff
-                    except OSError:
-                        continue
-                    if (
-                        name.startswith("seg-")
-                        and name not in live_segs
-                        and stale
-                    ):
-                        orphans.append(os.path.join("manifests", name))
-                        if not dry_run:
-                            _SEG_CACHE.pop(p, None)
-                            try:
-                                os.unlink(p)
-                            except OSError:
-                                pass
-            return orphans
+            dead_segs = [
+                n
+                for n in (
+                    sorted(os.listdir(segdir)) if os.path.isdir(segdir) else []
+                )
+                if n.startswith("seg-")
+                and n not in live_segs
+                and old_enough(os.path.join("manifests", n))
+            ]
+            if not dry_run:
+                self._unlink_segments(table, dead_segs)
+            return orphans + [os.path.join("manifests", n) for n in dead_segs]
         finally:
             os.close(fd)
 
@@ -2808,43 +2563,15 @@ class SnapshotCatalog:
         # branch snapshots share data dirs with their (possibly
         # expired) main ancestors — their references keep dirs alive
         alive = kept + (man.get("branch_snapshots") or [])
-        live_dirs = set().union(*(self._snap_dirs(s) for s in alive))
-        live_dirs |= {
-            d["dir"] for s in alive for d in (s.get("delete_files") or [])
-        }
-        live_dirs |= {
-            d["dir"] for s in alive for d in (s.get("pos_delete_files") or [])
-        }
-        live_dirs |= {os.path.basename(s["path"]) for s in alive}
         man["snapshots"] = kept
         self._commit_manifest(table, man)
-        dead_dirs = {
-            d
-            for s in dropped
-            for d in (
-                self._snap_dirs(s)
-                | {df["dir"] for df in (s.get("delete_files") or [])}
-                | {df["dir"] for df in (s.get("pos_delete_files") or [])}
-                | {os.path.basename(s["path"])}
-            )
-        } - live_dirs
-        for d in dead_dirs:
-            shutil.rmtree(
-                os.path.join(self._tdir(table), d), ignore_errors=True
-            )
-            shutil.rmtree(
-                os.path.join(self._tdir(table), d + BLOOM_SUFFIX),
-                ignore_errors=True,
-            )
+        dead_dirs = self._live_dirs(dropped) - self._live_dirs(alive)
+        tdir = self._tdir(table)
+        self._remove_dirs(os.path.join(tdir, d) for d in dead_dirs)
         # manifest-tier GC: segments only expired snapshots referenced
-        dead_segs = self._live_segments(dropped) - self._live_segments(alive)
-        segdir = self._seg_dir(self._tdir(table))
-        for name in dead_segs:
-            _SEG_CACHE.pop(os.path.join(segdir, name), None)
-            try:
-                os.unlink(os.path.join(segdir, name))
-            except OSError:
-                pass
+        self._unlink_segments(
+            table, self._live_segments(dropped) - self._live_segments(alive)
+        )
         return [s["snapshot_id"] for s in dropped]
 
     def _partition_prune(
@@ -2871,22 +2598,6 @@ class SnapshotCatalog:
         pspecs = snap.get("partition_specs") or {}
         if not pspecs or (not norm and not eq):
             return files
-        from pyspark.sql import functions as F
-
-        bcache: dict = {}
-
-        def bucket_of(v, n: int) -> int:
-            key = (str(v), n)
-            if key not in bcache:
-                bcache[key] = int(
-                    spark.range(1)
-                    .select(
-                        F.pmod(F.xxhash64(F.lit(str(v))), F.lit(n))
-                    )
-                    .first()[0]
-                )
-            return bcache[key]
-
         pred_cols = set(norm) | set(eq)
         out = []
         for frec in files:
@@ -2935,7 +2646,8 @@ class SnapshotCatalog:
                     v = eq.get(col)
                     if v is not None and (
                         pvs == _HIVE_NULL
-                        or int(pvs) != bucket_of(v, int(entry[1]))
+                        or int(pvs)
+                        != _xxhash64_pair(spark, str(v))[0] % int(entry[1])
                     ):
                         keep = False
                 elif t == "identity":
@@ -3104,20 +2816,9 @@ class SnapshotCatalog:
                     f"ranges[{c!r}] is {r!r} — pass concrete (lo, hi) "
                     "range(s), or omit the column to skip filtering on it"
                 )
-        def _bound(v):
-            # the SAME coercion the manifest writer applies to stats
-            # (bytes → str, datetime/date → isoformat) — an int/datetime
-            # user range must compare against JSON-ified stats
-            # consistently, not raise TypeError mid-prune
-            if isinstance(v, bytes):
-                return v.decode("utf-8", "replace")
-            if hasattr(v, "isoformat"):
-                return v.isoformat()
-            return v
-
         norm = {
             c: [
-                (_bound(lo), _bound(hi))
+                (_stat_bound(lo), _stat_bound(hi))
                 for lo, hi in (r if isinstance(r, list) else [r])
             ]
             for c, r in ranges.items()
@@ -3154,117 +2855,90 @@ class SnapshotCatalog:
         # otherwise every pre-rename file loses pruning (kept, never
         # wrongly dropped, but the scan degrades to a full read)
         schema_state = man.get("schema")
-        cur_id_by_name = (
-            {f["name"]: f["id"] for f in schema_state["fields"]}
-            if schema_state
-            else {}
-        )
 
-        def _stat_name(frec: dict, col: str) -> str | None:
-            # None = the file's write-time schema has no column bound to
-            # the CURRENT field id (drop + re-add of the same name):
-            # its same-named stats describe the RETIRED column, so the
-            # file must be kept un-pruned (the current column reads as
-            # NULL there — conservative, like Iceberg's null-stats)
-            if not schema_state or not schema_state["log"]:
-                return col
-            then = self._fields_for_sid(
-                schema_state, self._dir_sid(frec["dir"])
-            )
-            by_id = {f["id"]: f["name"] for f in then}
-            return by_id.get(cur_id_by_name.get(col))
+        def stat_name(frec: dict, col: str) -> str | None:
+            return self._stat_name(schema_state, frec, col)
 
-        if files or segs is not None:
-            # segs with every segment pruned is "provably empty", NOT a
-            # pre-stats snapshot: flow through to the schema-preserving
-            # empty-relation branch below, never to a full read
-            files = self._partition_prune(
-                spark, snap, files, norm, eq, _stat_name
-            )
-            keep = []
-            for frec in files:
-                stats = frec.get("stats", {})
-                ok = True
-                for col, rs in norm.items():
-                    st = stats.get(_stat_name(frec, col))
-                    if st is None or st["min"] is None or st["max"] is None:
-                        continue  # no stats → cannot prune this file
-                    stat_is_str = isinstance(st["min"], str)
-                    if stat_is_str and _ISO_TS.match(st["min"]):
-                        # stats are 'T'-separated isoformat; a Spark-
-                        # style 'YYYY-MM-DD HH:MM:SS' bound would sort
-                        # BEFORE every 'T' form lexicographically and
-                        # silently prune wrong files — normalize it
-                        rs = [
-                            (
-                                _iso_t(lo) if isinstance(lo, str) else lo,
-                                _iso_t(hi) if isinstance(hi, str) else hi,
-                            )
-                            for lo, hi in rs
-                        ]
-                    if any(
-                        isinstance(lo, str) != stat_is_str
-                        or isinstance(hi, str) != stat_is_str
+        files = self._partition_prune(spark, snap, files, norm, eq, stat_name)
+        keep = []
+        for frec in files:
+            stats = frec.get("stats", {})
+            ok = True
+            for col, rs in norm.items():
+                st = stats.get(stat_name(frec, col))
+                if st is None or st["min"] is None or st["max"] is None:
+                    continue  # no stats → cannot prune this file
+                stat_is_str = isinstance(st["min"], str)
+                if stat_is_str and _ISO_TS.match(st["min"]):
+                    # stats are 'T'-separated isoformat; a Spark-
+                    # style 'YYYY-MM-DD HH:MM:SS' bound would sort
+                    # BEFORE every 'T' form lexicographically and
+                    # silently prune wrong files — normalize it
+                    rs = [
+                        (
+                            _iso_t(lo) if isinstance(lo, str) else lo,
+                            _iso_t(hi) if isinstance(hi, str) else hi,
+                        )
                         for lo, hi in rs
-                    ):
-                        raise TypeError(
-                            f"ranges[{col!r}] bounds are "
-                            f"{type(rs[0][0]).__name__} but the manifest "
-                            f"stats for {col!r} are "
-                            f"{type(st['min']).__name__} — pass bounds of "
-                            "the stored column's type (timestamps as "
-                            "datetime/isoformat strings)"
-                        )
-                    if not any(
-                        st["min"] <= hi and st["max"] >= lo for lo, hi in rs
-                    ):
-                        ok = False
-                        break
-                if ok:
-                    keep.append(frec)
-            if eq and (snap.get("blooms") or {}):
-                keep = self._bloom_prune(
-                    spark, table, snap, keep, eq, _stat_name
-                )
-            if not keep:
-                from pyspark.sql import functions as F
+                    ]
+                if any(
+                    isinstance(lo, str) != stat_is_str
+                    or isinstance(hi, str) != stat_is_str
+                    for lo, hi in rs
+                ):
+                    raise TypeError(
+                        f"ranges[{col!r}] bounds are "
+                        f"{type(rs[0][0]).__name__} but the manifest "
+                        f"stats for {col!r} are "
+                        f"{type(st['min']).__name__} — pass bounds of "
+                        "the stored column's type (timestamps as "
+                        "datetime/isoformat strings)"
+                    )
+                if not any(
+                    st["min"] <= hi and st["max"] >= lo for lo, hi in rs
+                ):
+                    ok = False
+                    break
+            if ok:
+                keep.append(frec)
+        if eq and (snap.get("blooms") or {}):
+            keep = self._bloom_prune(spark, table, snap, keep, eq, stat_name)
+        if not keep:
+            from pyspark.sql import functions as F
 
-                # schema-preserving empty: the optimizer folds
-                # filter(false) to an empty LocalRelation — no scan.
-                # ONE file per dir suffices for the merged schema (a
-                # dir = one write = one physical schema), so a no-match
-                # scan on a 100k-file table opens n_dirs footers, not
-                # 100k
-                probe, probed = [], set()
-                for frec in self._snap_files(snap):
-                    if frec["dir"] not in probed:
-                        probed.add(frec["dir"])
-                        probe.append(
-                            os.path.join(
-                                self._tdir(table), frec["dir"], frec["name"]
-                            )
+            # schema-preserving empty: the optimizer folds
+            # filter(false) to an empty LocalRelation — no scan.
+            # ONE file per dir suffices for the merged schema (a
+            # dir = one write = one physical schema), so a no-match
+            # scan on a 100k-file table opens n_dirs footers, not
+            # 100k
+            probe, probed = [], set()
+            for frec in self._snap_files(snap):
+                if frec["dir"] not in probed:
+                    probed.add(frec["dir"])
+                    probe.append(
+                        os.path.join(
+                            self._tdir(table), frec["dir"], frec["name"]
                         )
-                df = self._read_resolved(
-                    spark,
-                    table,
-                    probe or self._file_paths(table, snap),
-                    merge=snap_multi_dir,
-                    state=schema_state,
-                ).where(F.lit(False))
-            else:
-                # delete-aware: equality deletes apply to the surviving
-                # files with the same sequence semantics as read()
-                df = self._read_with_deletes(
-                    spark,
-                    table,
-                    snap,
-                    keep,
-                    merge=snap_multi_dir,
-                    state=schema_state,
-                    state_from_caller=True,
-                )
-        else:  # pre-stats snapshot: fall back to a full read
-            df = spark.read.parquet(snap["path"])
+                    )
+            df = self._read_resolved(
+                spark,
+                table,
+                probe,
+                merge=snap_multi_dir,
+                state=schema_state,
+            ).where(F.lit(False))
+        else:
+            # delete-aware: equality deletes apply to the surviving
+            # files with the same sequence semantics as read()
+            df = self._read_with_deletes(
+                spark,
+                table,
+                snap,
+                keep,
+                snap_multi_dir,
+                schema_state,
+            )
         import functools
         import operator
 
@@ -3306,18 +2980,11 @@ class SnapshotCatalog:
             s for s in man["snapshots"] if s["snapshot_id"] <= snapshot_id
         ]
         self._commit_manifest(table, man)
-        for s in dropped:
-            shutil.rmtree(s["path"], ignore_errors=True)
-            shutil.rmtree(_bloom_sidecar(s["path"]), ignore_errors=True)
+        self._remove_dirs(s["path"] for s in dropped)
         alive = man["snapshots"] + (man.get("branch_snapshots") or [])
-        dead_segs = self._live_segments(dropped) - self._live_segments(alive)
-        segdir = self._seg_dir(self._tdir(table))
-        for name in dead_segs:
-            _SEG_CACHE.pop(os.path.join(segdir, name), None)
-            try:
-                os.unlink(os.path.join(segdir, name))
-            except OSError:
-                pass
+        self._unlink_segments(
+            table, self._live_segments(dropped) - self._live_segments(alive)
+        )
 
 
 def write_bucketed(

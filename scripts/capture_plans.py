@@ -2,9 +2,10 @@
 plans/<tag>/<query>_<suffix>.txt  (guide §1: record the plan shape
 before and after each optimization).
 
-Session counters (expression ids ``#12``, ``plan_id=3``, ``RDD[7]``) are
-stripped before writing, so ``diff -r`` of two captures of the same
-plan is empty.
+Session counters (expression ids ``#12``, ``plan_id=3``, ``RDD[7]``) and
+the random parts of file paths (part-file UUIDs, the 8-hex suffix of a
+catalog commit dir ``v12-ab34cd56``) are stripped before writing, so
+``diff -r`` of two captures of the same plan is empty.
 
 Usage: python scripts/capture_plans.py <tag> <suffix> [query ...]
 """
@@ -24,16 +25,19 @@ from eodal_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-_COUNTERS = [
+_VOLATILE = [
     (re.compile(r"#\d+"), "#"),
     (re.compile(r"plan_id=\d+"), "plan_id="),
     (re.compile(r"RDD\[\d+\]"), "RDD[]"),
+    (re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"), "<uuid>"),
+    (re.compile(r"\b(v\d+)-[0-9a-f]{8}\b"), r"\1-<id>"),
 ]
 
 
 def normalize(plan: str) -> str:
-    """``plan`` with the session's id counters blanked out."""
-    for pat, repl in _COUNTERS:
+    """``plan`` with the session's id counters and random path parts
+    blanked out."""
+    for pat, repl in _VOLATILE:
         plan = pat.sub(repl, plan)
     return plan
 

@@ -2413,6 +2413,115 @@ def test_wap_cherrypick_guards(spark, tmp_path):
         cat.cherrypick_snapshot("t", s2["snapshot_id"])
 
 
+@pytest.mark.parametrize(
+    "op, main_rows",
+    [
+        # 8 base rows; each op's effect on main
+        ("delete_keys", 7),  # u0 purged
+        ("upsert", 9),  # u1 replaced, u200 inserted
+        ("delete_range", 6),  # cell_id 0..1 purged
+        ("delete_where", 7),  # cell_id 3 purged
+    ],
+)
+def test_main_commit_after_branch_append_gets_fresh_snapshot_id(
+    spark, tmp_path, op, main_rows
+):
+    """Snapshot ids are one space over main AND branch snapshots: a
+    main commit after a branch append must not reuse the branch
+    snapshot's id, or a read by that id returns main's rows and a
+    cherry-pick of the staged append finds the main commit instead."""
+    cat = SnapshotCatalog(str(tmp_path / op))
+
+    def pages(ids):
+        return spark.createDataFrame(
+            [(i, f"u{i}") for i in ids], "cell_id long, url string"
+        )
+
+    cat.write(pages(range(8)), "t", sort_by=("cell_id",), n_files=1)
+    cat.create_branch("t", "audit")
+    staged = cat.write(
+        pages(range(100, 109)), "t", mode="append", branch="audit"
+    )
+    if op == "delete_keys":
+        cat.delete_keys(spark, "t", pages([0]).select("url"))
+    elif op == "upsert":
+        cat.upsert(spark, pages([1, 200]), "t", key_cols=("url",))
+    elif op == "delete_range":
+        cat.delete_range("t", "cell_id", (0, 1))
+    else:
+        cat.delete_where(spark, "t", "cell_id = 3")
+    assert cat.read(spark, "t").count() == main_rows
+    man = cat._load_manifest("t")
+    ids = [
+        s["snapshot_id"]
+        for s in man["snapshots"] + man["branch_snapshots"]
+    ]
+    assert len(ids) == len(set(ids)), ids
+    sid = staged["snapshot_id"]
+    assert cat.read(spark, "t", snapshot_id=sid).count() == 17
+    picked = cat.cherrypick_snapshot("t", sid)
+    assert picked["meta"]["cherrypicked_from"] == sid
+    assert cat.read(spark, "t").count() == main_rows + 9
+
+
+def test_driver_hash_probe_matches_spark_for_negative_hashes(spark, tmp_path):
+    """Bloom probe positions and bucket-partition values are derived
+    on the driver from Spark's two xxhash64 values; they must equal
+    Spark's own pmod expressions, including for values whose hashes
+    are negative (where a truncating % would differ from pmod)."""
+    from eodal_spark.sources import catalog as C
+
+    cat = SnapshotCatalog(str(tmp_path))
+    cands = [f"https://x.example/p/{i}" for i in range(40)] + [
+        str(i) for i in range(40)
+    ]
+    v = F.col("v")
+    hashes = {
+        r.v: (r.h1, r.h2)
+        for r in spark.createDataFrame([(c,) for c in cands], "v string")
+        .select(
+            "v",
+            F.xxhash64(v).alias("h1"),
+            F.xxhash64(v, F.lit(1)).alias("h2"),
+        )
+        .collect()
+    }
+    neg = [v for v in cands if hashes[v][0] < 0 and hashes[v][1] < 0]
+    assert len(neg) >= 5
+    for v in neg[:5]:
+        assert C._xxhash64_pair(spark, v) == hashes[v]
+        for bits, k in ((1 << 17, 7), (1_000_003, 5), (1 << 31, 3)):
+            r1 = F.pmod(F.xxhash64(F.lit(v)), F.lit(bits))
+            r2 = F.pmod(F.xxhash64(F.lit(v), F.lit(1)), F.lit(bits))
+            row = spark.range(1).select(
+                *[F.pmod(r1 + F.lit(i) * r2, F.lit(bits)) for i in range(k)]
+            ).first()
+            assert C._bloom_positions(spark, v, bits, k) == [
+                (p >> 6, p & 63) for p in row
+            ]
+        for n in (7, 8, 1000):
+            want = spark.range(1).select(
+                F.pmod(F.xxhash64(F.lit(v)), F.lit(n))
+            ).first()[0]
+            files = [
+                {
+                    "dir": "d",
+                    "name": f"_pv0={b}/f.parquet",
+                    "partition": {"_pv0": str(b)},
+                }
+                for b in range(n)
+            ]
+            kept = cat._partition_prune(
+                spark,
+                {"partition_specs": {"d": [["bucket", n, "url"]]}},
+                files,
+                {"url": [(v, v)]},
+                {"url": v},
+                lambda f, c: c,
+            )
+            assert [f["partition"]["_pv0"] for f in kept] == [str(want)]
+
+
 def test_wap_branch_dirs_survive_expire_and_vacuum(spark, tmp_path):
     """A live branch keeps its data dirs through expire_snapshots and
     remove_orphan_files; dropping the branch releases them."""
