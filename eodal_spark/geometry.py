@@ -44,21 +44,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from eodal_spark import grid
+from eodal_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # Layer construction
 # ---------------------------------------------------------------------------
-
-# driver-side row mirror of POLY_SCHEMA (same field order) — attached
-# by polygons_df as `_eodal_local_rows` so planners can read a small
-# literal layer without a Spark job (see polygon_cover_cells)
-_PolyRow = __import__("collections").namedtuple(
-    "_PolyRow",
-    [
-        "poly_id", "xs", "ys", "rings_x", "rings_y",
-        "xmin", "ymin", "xmax", "ymax", "is_convex",
-    ],
-)
 
 POLY_SCHEMA = T.StructType(
     [
@@ -332,7 +322,11 @@ def polygons_df(
     Rings are CCW-normalized and 3-D inputs flattened (≡
     `eodal/core/utils/geometry.py:106-136`).  This is a *dimension
     table* — small by construction, meant to be broadcast
-    (`F.broadcast`) into the page-side join.
+    (`F.broadcast`) into the page-side join.  It is a `local_frame`
+    (a ``LocalRelation``), so planners read its rows and exact size
+    from the plan without running a job, also after a filter or join.
+    ``attrs`` maps ``poly_id`` to extra attribute columns; a polygon
+    without an entry gets NULLs.
     """
     rows = []
     for poly_id, geom in polys:
@@ -361,24 +355,21 @@ def polygons_df(
                 convex,
             )
         )
-    df = spark.createDataFrame(rows, POLY_SCHEMA)
-    if attrs:
-        attr_keys = sorted({k for a in attrs.values() for k in a})
-        attr_rows = [
-            (int(pid), *[a.get(k) for k in attr_keys]) for pid, a in attrs.items()
-        ]
-        adf = spark.createDataFrame(attr_rows, ["poly_id", *attr_keys])
-        df = df.join(adf, "poly_id", "left")
-        return df
-    # the layer was just materialized ON the driver — pin the rows to
-    # the DataFrame so downstream planning (cover explode, broadcast
-    # decision) reads them directly instead of running a probe/collect
-    # job against the RDD-backed plan, whose Catalyst stats are the
-    # unknown-size sentinel.  Pure plumbing, not result caching: the
-    # data already lives here, and any derived DataFrame (join, filter)
-    # drops the attribute and falls back to the probing paths.
-    df._eodal_local_rows = [_PolyRow(*r) for r in rows]
-    return df
+    if not attrs:
+        return local_frame(spark, rows, POLY_SCHEMA)
+    # attribute columns ride on the same rows (NULL where a polygon has
+    # no entry), typed as Spark infers them from the attribute values
+    attr_keys = sorted({k for a in attrs.values() for k in a})
+    by_id = {int(pid): a for pid, a in attrs.items()}
+    attr_schema = spark._inferSchemaFromList(
+        [(pid, *[a.get(k) for k in attr_keys]) for pid, a in by_id.items()],
+        names=["poly_id", *attr_keys],
+    )
+    return local_frame(
+        spark,
+        [(*r, *[by_id.get(r[0], {}).get(k) for k in attr_keys]) for r in rows],
+        T.StructType(POLY_SCHEMA.fields + attr_schema.fields[1:]),
+    )
 
 
 def boxes_df(
@@ -730,14 +721,10 @@ def buffer_cells(cover: DataFrame, k: int, res: int) -> DataFrame:
 # collect of an already-small dimension) — avoids paying Python-worker
 # startup on the query's critical path; larger layers distribute.
 DRIVER_COVER_MAX_POLYS = 10_000
-# driver-side covers at or below this many cells become literal VALUES
-# relations (JVM LocalRelation); larger ones stay createDataFrame
-_COVER_VALUES_MAX_ROWS = 8_192
 
 
 def polygon_cover_cells(
-    polys: DataFrame, res: int, mode: str = "centroid",
-    distributed: bool | None = None,
+    polys: DataFrame, res: int, mode: str = "centroid"
 ) -> DataFrame:
     """Explode each polygon into its covering cells at resolution ``res``.
 
@@ -753,11 +740,10 @@ def polygon_cover_cells(
     joins skip PIP refinement for full cells.
 
     Small layers (≤ `DRIVER_COVER_MAX_POLYS`) are covered **driver-side**
-    (one collect of the already-small dimension; the cover becomes a
-    literal broadcast relation — no Python stage on the critical path).
-    Large layers run as `mapInPandas` (Arrow-batched, distributed); the
-    per-polygon cost is O(bbox cells) either way, independent of the
-    pages table.
+    and the cover becomes a `local_frame` (a ``LocalRelation`` with
+    exact stats — no Python stage on the critical path).  Large layers
+    run as `mapInPandas` (Arrow-batched, distributed); the per-polygon
+    cost is O(bbox cells) either way, independent of the pages table.
     """
     out_schema = T.StructType(
         [
@@ -771,63 +757,27 @@ def polygon_cover_cells(
         "xmin", "ymin", "xmax", "ymax", "is_convex",
     ]
 
-    rows = None
-    local_rows = getattr(polys, "_eodal_local_rows", None)
-    if (
-        distributed is None
-        and local_rows is not None
-        and len(local_rows) <= DRIVER_COVER_MAX_POLYS
-    ):
-        # the layer was built driver-side (polygons_df literal form):
-        # its rows are already here — zero probe jobs
-        rows = local_rows
-        distributed = False
-    if distributed is None:
-        # ONE bounded probe decides AND fetches: collect up to MAX+1
-        # rows — small layers keep them (the collect was needed anyway
-        # for the driver-side cover), large layers fall through to
-        # mapInPandas.  No separate polys.count() job on the query
-        # path.  Deliberately NO coalesce(1): on a Python-backed plan
-        # (createDataFrame → Scan ExistingRDD) coalescing makes one
-        # task re-evaluate every pickled parent partition through a
-        # single Python worker — measured 5-6 s for a 4-row layer vs
-        # <1 s for executeTake.  With the session's
-        # spark.sql.limit.initialNumPartitions (session.py) the first
-        # take round already spans a small layer's partitions, so this
-        # is ONE job in the common case and stays O(MAX) rows per
-        # partition (LocalLimit) for huge layers.
-        rows = (
-            polys.select(*cols)
-            .limit(DRIVER_COVER_MAX_POLYS + 1)
-            .collect()
-        )
-        distributed = len(rows) > DRIVER_COVER_MAX_POLYS
-
-    if not distributed:
-        spark = polys.sparkSession
-        if rows is None:
-            rows = polys.select(*cols).collect()
+    # ONE bounded probe decides AND fetches: collect up to MAX+1 rows —
+    # small layers keep them (the driver-side cover needs them anyway),
+    # large layers fall through to mapInPandas.  On a layer built by
+    # polygons_df (a LocalRelation) the collect runs no job at all.
+    # Deliberately NO coalesce(1): on an RDD-backed plan coalescing
+    # makes one task re-evaluate every parent partition through a
+    # single Python worker — measured 5-6 s for a 4-row layer vs <1 s
+    # for executeTake.  With the session's
+    # spark.sql.limit.initialNumPartitions (session.py) the first take
+    # round already spans a small layer's partitions, so this is ONE
+    # job in the common case and stays O(MAX) rows per partition
+    # (LocalLimit) for huge layers.
+    rows = polys.select(*cols).limit(DRIVER_COVER_MAX_POLYS + 1).collect()
+    if len(rows) <= DRIVER_COVER_MAX_POLYS:
         out = []
         for row in rows:
             cell, full = _cover_one(row, res, mode)
             out.extend(
                 (int(row.poly_id), int(c), bool(f)) for c, f in zip(cell, full)
             )
-        if 0 < len(out) <= _COVER_VALUES_MAX_ROWS:
-            # literal VALUES relation: pure-JVM LocalRelation with exact
-            # stats — a createDataFrame cover is an RDD-backed plan that
-            # re-pickles through a Python worker on EVERY job touching
-            # it and reports sentinel stats to the planner
-            vals = ",".join(
-                f"({p}," f"{c}," f"{'true' if f else 'false'})"
-                for p, c, f in out
-            )
-            return spark.sql(
-                "SELECT CAST(poly_id AS BIGINT) AS poly_id, "
-                "CAST(cell_id AS BIGINT) AS cell_id, full "
-                f"FROM (VALUES {vals}) AS t(poly_id, cell_id, full)"
-            )
-        return spark.createDataFrame(out, out_schema)
+        return local_frame(polys.sparkSession, out, out_schema)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -32,14 +32,13 @@ from __future__ import annotations
 import math
 from collections import Counter
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from eodal_spark import grid
 from eodal_spark.plans.introspect import cell_id_is_stored
+from eodal_spark.session import local_frame
 
 
 # see knn(): query sets of at most this many rows are answered on the
@@ -94,15 +93,6 @@ def _ring_topk(
     return _ranked(cand.withColumn("sqdist", _sqdist()), k).select(
         "query_id", "url", "sqdist", "rank"
     )
-
-
-def _local_frame(spark: SparkSession, rows: list, schema: StructType) -> DataFrame:
-    """Driver rows as a pandas→Arrow ``LocalRelation``: a job over it
-    reads the rows from the plan itself.  (``createDataFrame(list)``
-    gives an RDD scan instead, which runs a job — and a Python worker —
-    every time any plan above it is executed.)"""
-    pdf = pd.DataFrame.from_records(rows, columns=schema.fieldNames())
-    return spark.createDataFrame(pdf, schema)
 
 
 def _round_pages(
@@ -300,7 +290,7 @@ def knn(
             # size.  Output-identical: the ladder's contract is
             # row-for-row brute equality.
             return _brute_topk(
-                pages_side, _local_frame(spark, head, unres.schema), k
+                pages_side, local_frame(spark, head, unres.schema), k
             )
         return _knn_on_driver(
             spark, head, unres, pages_side, res, k, rounds_budget,
@@ -452,7 +442,7 @@ def _knn_on_driver(
         round_pages = _round_pages(
             pages_side, [(r[3], r[4]) for r in live], res, prune_query_cap
         )
-        ring_src = _local_frame(spark, live, unres.schema)
+        ring_src = local_frame(spark, live, unres.schema)
         topk = _ring_topk(round_pages, ring_src, res, k)
         out_schema = topk.schema
         rows = topk.collect()
@@ -481,13 +471,13 @@ def _knn_on_driver(
         found += [r for r in rows if r["query_id"] in resolved]
         live = next_live
     if live or brute_q:
-        rest = _local_frame(spark, live + brute_q, unres.schema)
+        rest = local_frame(spark, live + brute_q, unres.schema)
         brute = _brute_topk(pages_side, rest, k)
         out_schema = brute.schema
         found += brute.collect()
     if out_schema is None:  # no queries, so no plan built to read it from
         out_schema = _ring_topk(pages_side, unres, res, k).schema
-    return _local_frame(spark, found, out_schema)
+    return local_frame(spark, found, out_schema)
 
 
 def knn_brute(queries: DataFrame, pages_geo: DataFrame, k: int) -> DataFrame:

@@ -23,6 +23,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from eodal_spark.plans.introspect import spread_to_parallelism
+from eodal_spark.session import local_frame
 
 
 Q7 = 10_000_000.0  # quantization scale for the integer-exact metric
@@ -317,23 +318,16 @@ def ivf_topk(
             qv = np.asarray(r["qvec"], dtype=np.float64)
             d = ((cent - qv) ** 2).sum(1)
             for c in np.argsort(d)[:n_probe]:
-                probe_rows.append((r["query_id"], list(r["qvec"]), int(c)))
-        spark = queries.sparkSession
+                probe_rows.append((int(r["query_id"]), list(r["qvec"]), int(c)))
         probe_schema = T.StructType(
             [
                 T.StructField("query_id", T.LongType(), False),
                 T.StructField("qvec", T.ArrayType(T.FloatType()), False),
                 T.StructField("ivf_list", T.IntegerType(), False),
             ]
-        )  # explicit schema: empty queries must not break inference
+        )
         probes = F.broadcast(
-            spark.createDataFrame(
-                [
-                    (int(q), [float(v) for v in vec], c)
-                    for q, vec, c in probe_rows
-                ],
-                probe_schema,
-            )
+            local_frame(queries.sparkSession, probe_rows, probe_schema)
         )
     else:
         plan = ivf_probe_udf(cent, n_probe)
@@ -988,7 +982,6 @@ def ivfpq_topk(
             flat = _pq_lut(books, qv)
             for c in np.argsort(d)[:n_probe]:
                 probe_rows.append((int(r["query_id"]), int(c), flat))
-        spark = queries.sparkSession
         probe_schema = T.StructType(
             [
                 T.StructField("query_id", T.LongType(), False),
@@ -996,7 +989,9 @@ def ivfpq_topk(
                 T.StructField("lut", T.ArrayType(T.DoubleType()), False),
             ]
         )
-        probes = F.broadcast(spark.createDataFrame(probe_rows, probe_schema))
+        probes = F.broadcast(
+            local_frame(queries.sparkSession, probe_rows, probe_schema)
+        )
     else:
         plan = ivf_probe_udf(cent, n_probe)
         lut = pq_lut_udf(books)

@@ -49,6 +49,29 @@ from eodal_spark.plans.introspect import plan_size_bytes
 BROADCAST_LAYER_MAX_POLYS = 1_000_000
 
 
+def _layer_broadcasts(polys: DataFrame) -> bool:
+    """Whether a polygon layer is small enough to broadcast.
+
+    Broadcastability is about COVER SIZE, not where the cover is
+    computed (`geometry.DRIVER_COVER_MAX_POLYS` governs the latter): a
+    layer of 100k small polygons still broadcasts fine.  Decide from
+    Catalyst's driver-side size estimate when it is conclusive — zero
+    Spark jobs for the common small-AOI case, and exact on a layer built
+    by `geometry.polygons_df` (a ``LocalRelation``).  ~1M typical
+    polygons ≈ 200-300 MB raw; an estimate safely under that
+    broadcasts, 100× over it cannot.  Only an inconclusive estimate (no
+    stats, reflection drift) pays the bounded limit+count probe (no row
+    transfer), capped so the exploded cover stays well under executor
+    broadcast budgets."""
+    size = plan_size_bytes(polys)
+    if size is not None and size <= 256 << 20:
+        return True
+    if size is not None and (32 << 30) <= size:
+        return False
+    n = polys.select("poly_id").limit(BROADCAST_LAYER_MAX_POLYS + 1).count()
+    return n <= BROADCAST_LAYER_MAX_POLYS
+
+
 def spatial_join(
     pages_geo: DataFrame,
     polys: DataFrame,
@@ -85,35 +108,8 @@ def spatial_join(
     rename; plan-asserted in tests)."""
     from eodal_spark import grid
 
-    if broadcast_layer is None and hasattr(polys, "_eodal_local_rows"):
-        # driver-literal layer (polygons_df): row count known without
-        # any job or estimate
-        broadcast_layer = (
-            len(polys._eodal_local_rows) <= BROADCAST_LAYER_MAX_POLYS
-        )
     if broadcast_layer is None:
-        # broadcastability is about COVER SIZE, not where the cover is
-        # computed (DRIVER_COVER_MAX_POLYS governs the latter): a layer
-        # of 100k small polygons still broadcasts fine.  Decide from
-        # Catalyst's driver-side size estimate when it is conclusive —
-        # zero Spark jobs for the overwhelmingly common small-AOI case
-        # (a probe job per call was a pure latency regression there);
-        # only an inconclusive estimate pays the bounded limit+count
-        # probe (no row transfer), capped so the exploded cover stays
-        # well under executor broadcast budgets.
-        # ~1M typical polygons ≈ 200-300 MB raw; an estimate safely
-        # under that broadcasts, 100× over it cannot.  No usable
-        # estimate (no stats, reflection drift) → the probe
-        size = plan_size_bytes(polys)
-        if size is not None and size <= 256 << 20:
-            broadcast_layer = True
-        elif size is not None and (32 << 30) <= size:
-            broadcast_layer = False
-        else:
-            n = polys.select("poly_id").limit(
-                BROADCAST_LAYER_MAX_POLYS + 1
-            ).count()
-            broadcast_layer = n <= BROADCAST_LAYER_MAX_POLYS
+        broadcast_layer = _layer_broadcasts(polys)
     # broadcast_layer=False is the caller asserting the layer is HUGE:
     # pin the shuffle strategy with a plan-local MERGE hint so a stale
     # or sampled size estimate can never flip the plan back to a doomed
@@ -305,8 +301,8 @@ def areal_interpolate(
     on ``cell_id``, and per-source totals reuse layer A's cover with a
     map-side-combinable count.  The two dimension joins on ``a_id``
     (totals, values) broadcast only when the SOURCE layer is provably
-    small (bounded probe, same rail as the spatial join's layer
-    decision); a 10⁸-polygon source layer instead shuffles on ``a_id``
+    small (the spatial join's layer decision, `_layer_broadcasts`); a
+    10⁸-polygon source layer instead shuffles on ``a_id``
     and AQE picks the physical strategy from the real runtime sizes.
     Everything downstream is one shuffle on ``b_id``."""
     vtype = dict(values_a.dtypes).get(value_col)
@@ -332,17 +328,11 @@ def areal_interpolate(
     )
     # the two a_id dimensions (totals, values) are one row per SOURCE
     # polygon: broadcast only when layer A is provably under the
-    # broadcast rail (bounded limit+count probe — no full count job);
-    # above it, fall through to shuffle joins and let AQE re-plan from
-    # observed sizes (forcing a broadcast of O(|A|) rows would OOM on
-    # the large layers the mapInPandas cover path exists for)
-    lr = getattr(layer_a, "_eodal_local_rows", None)
-    n_a = (
-        len(lr)
-        if lr is not None
-        else layer_a.select("poly_id").limit(BROADCAST_LAYER_MAX_POLYS + 1).count()
-    )
-    dim = F.broadcast if n_a <= BROADCAST_LAYER_MAX_POLYS else (lambda d: d)
+    # broadcast rail; above it, fall through to shuffle joins and let
+    # AQE re-plan from observed sizes (forcing a broadcast of O(|A|)
+    # rows would OOM on the large layers the mapInPandas cover path
+    # exists for)
+    dim = F.broadcast if _layer_broadcasts(layer_a) else (lambda d: d)
     tot = ca.groupBy("a_id").agg(F.count("*").alias("a_cells"))
     ov = (
         ca.join(cb, "cell_id")

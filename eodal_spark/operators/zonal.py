@@ -17,7 +17,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
+
+from eodal_spark.session import local_frame
 
 STAT_SET = ("count", "min", "max", "sum", "avg", "stddev", "median")
 
@@ -78,8 +81,9 @@ def value_counts(
     share — ≡ ``Sentinel2.get_scl_stats``
     (`eodal/core/sensors/sentinel2.py:701-778`, backfill :760-776).
     ``classes`` is the full class dimension (a small literal table)."""
-    spark = df.sparkSession
-    dim = spark.createDataFrame([(c,) for c in classes], [value])
+    dim = local_frame(
+        df.sparkSession, [(c,) for c in classes], T.StructType([df.schema[value]])
+    )
     keys = [by, value] if by else [value]
     counts = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
     if by:

@@ -11,7 +11,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -60,3 +63,23 @@ def get_spark(
         for k, v in extra_conf.items():
             builder = builder.config(k, str(v))
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list, schema: StructType) -> DataFrame:
+    """Driver rows (tuples in ``schema`` field order) as a relation —
+    the engine's one way to turn a driver-side list into a DataFrame.
+
+    The rows go to the JVM as one ``pyarrow.Table``, so the plan leaf is
+    a ``LocalRelation``: actions over it read the rows from the plan
+    (no job, no Python worker), and Catalyst knows its exact size.
+    ``createDataFrame(list)`` gives an RDD scan instead, which reruns a
+    Python worker on every job above it and reports no size.  The Arrow
+    table route holds whether or not
+    ``spark.sql.execution.arrow.pyspark.enabled`` is set, and integer
+    columns keep their NULLs (a pandas frame would turn them to NaN)."""
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

@@ -40,6 +40,9 @@ import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+from eodal_spark.session import local_frame
 
 
 def _file_stats(data_dir: str, cols: tuple[str, ...]) -> list[dict]:
@@ -547,10 +550,10 @@ class SnapshotCatalog:
     ) -> dict:
         """A new snapshot's manifest record.  It starts from
         ``parent``: the parent's id, merge-on-read delete entries,
-        bloom and partition-spec maps and sort order carry over
-        (copied, so callers extend them in place); ``fields`` override
-        any key.  ``zorder`` is recorded only when passed (clustering
-        writes); ``segments`` is filled in by :meth:`_commit_snap`."""
+        bloom and partition-spec maps, sort order and z-order pair carry
+        over (copied, so callers extend them in place); ``fields``
+        override any key.  ``zorder`` is left out when neither sets it;
+        ``segments`` is filled in by :meth:`_commit_snap`."""
         p = parent or {}
         snap = {
             "snapshot_id": sid,
@@ -559,7 +562,7 @@ class SnapshotCatalog:
             "path": path,
             "row_count": row_count,
             "sort_by": list(p.get("sort_by") or ()),
-            "zorder": None,
+            "zorder": p.get("zorder"),
             "mode": mode,
             "segments": None,
             "delete_files": list(p.get("delete_files") or []),
@@ -1080,9 +1083,9 @@ class SnapshotCatalog:
         st["log"].append(
             {
                 "version": st["version"],
-                "last_sid": max(
-                    (s["snapshot_id"] for s in man["snapshots"]), default=0
-                ),
+                # over main AND branch snapshots: a branch append
+                # committed before this change is read under the old names
+                "last_sid": SnapshotCatalog._next_sid(man) - 1,
                 "fields": [dict(f) for f in st["fields"]],
             }
         )
@@ -1460,12 +1463,17 @@ class SnapshotCatalog:
         data_dir = self._new_dir(table, sid)
         kdir = self._new_dir(table, sid)
         sort_by = tuple(parent.get("sort_by") or ())
+        zorder = tuple(parent.get("zorder") or ())
+        if not all(c in df.columns for c in zorder):
+            zorder = ()
         new_files = self._write_data(
             df,
             data_dir,
-            sort_by if all(c in df.columns for c in sort_by) else (),
+            [_ZORDER_KEY] if zorder
+            else sort_by if all(c in df.columns for c in sort_by) else (),
             n_files,
-            sort_by,
+            sort_by or zorder,
+            zorder,
         )
         self._write_data(df.select(*key_cols).distinct(), kdir, (), 1, ())
         snap = self._snap_record(
@@ -2052,8 +2060,10 @@ class SnapshotCatalog:
             )
             for f in self._snap_files(snap)
         ]
-        return spark.createDataFrame(
-            rows, "dir string, name string, rows long, stats string"
+        return local_frame(
+            spark,
+            rows,
+            T.StructType.fromDDL("dir string, name string, rows long, stats string"),
         )
 
     def compact(

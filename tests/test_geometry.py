@@ -283,10 +283,11 @@ def test_spatial_join_exact_holed_and_multi(spark):
         assert have == expect, f"poly {pid}: {len(have ^ expect)} diffs"
 
 
-def test_distributed_covering_matches_driver_side(spark):
+def test_distributed_covering_matches_driver_side(spark, monkeypatch):
     """polygon_cover_cells must produce identical coverings via the
     driver-side collect path and the distributed mapInPandas path —
-    including holed and multi-part geometries."""
+    including holed and multi-part geometries.  A driver-side layer cap
+    of 0 sends the same 3-polygon layer down the distributed path."""
     polys = geometry.polygons_df(
         spark,
         [(1, geometry.to_wkt("POLYGON", HOLED)),
@@ -294,8 +295,11 @@ def test_distributed_covering_matches_driver_side(spark):
          (3, [(60.0, 0.0), (70.0, 0.0), (65.0, 9.0)])],
     )
     for mode in ("centroid", "bbox"):
-        a = geometry.polygon_cover_cells(polys, 8, mode=mode, distributed=False)
-        b = geometry.polygon_cover_cells(polys, 8, mode=mode, distributed=True)
+        a = geometry.polygon_cover_cells(polys, 8, mode=mode)
+        with monkeypatch.context() as m:
+            m.setattr(geometry, "DRIVER_COVER_MAX_POLYS", 0)
+            b = geometry.polygon_cover_cells(polys, 8, mode=mode)
+        assert "MapInPandas" in b._jdf.queryExecution().executedPlan().toString()
         ra = {tuple(r) for r in a.collect()}
         rb = {tuple(r) for r in b.collect()}
         assert ra == rb and len(ra) > 0, mode

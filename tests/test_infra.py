@@ -2464,6 +2464,59 @@ def test_main_commit_after_branch_append_gets_fresh_snapshot_id(
     assert cat.read(spark, "t").count() == main_rows + 9
 
 
+def test_rename_reads_earlier_branch_append_under_old_name(spark, tmp_path):
+    """A schema change logs the newest snapshot id over main AND branch
+    snapshots: a branch append committed before a rename was written
+    under the old name and must still be read through it."""
+    cat = SnapshotCatalog(str(tmp_path))
+
+    def rows(lo, hi):
+        return spark.range(lo, hi).select("id", F.col("id").alias("v"))
+
+    cat.write(rows(0, 5), "t")
+    cat.create_branch("t", "audit")
+    cat.write(rows(5, 8), "t", mode="append", branch="audit")
+    cat.rename_column(spark, "t", "v", "w")
+    out = cat.read(spark, "t", branch="audit")
+    assert out.columns == ["id", "w"]
+    got = [r.w for r in out.collect()]
+    assert None not in got and sorted(got) == list(range(8))
+
+
+def test_zorder_survives_delete_compact_and_upsert(spark, tmp_path):
+    """The z-order pair carries over every commit: a full compaction
+    after a delete re-clusters on (x, y), and an upsert writes its new
+    files z-ordered; both records keep ``zorder``."""
+    cat = SnapshotCatalog(str(tmp_path))
+    df = spark.range(0, 20_000).selectExpr(
+        "id",
+        "id % 100 AS x",
+        "CAST(pmod(id * 2654435761, 100) AS BIGINT) AS y",
+    )
+    cat.write(df, "t", zorder=("x", "y"), n_files=4)
+    cat.delete_keys(spark, "t", spark.range(0, 10))
+
+    def xy_stats(files):
+        return files and all(
+            f["stats"].get(c, {}).get("min") is not None
+            for f in files
+            for c in ("x", "y")
+        )
+
+    compacted = cat.compact(spark, "t", n_files=4)
+    assert compacted["zorder"] == ["x", "y"]
+    files = cat._snap_files(compacted)
+    assert len(files) == 4 and xy_stats(files)
+    up = cat.upsert(spark, df.filter("id < 100"), "t", key_cols=("id",))
+    assert up["zorder"] == ["x", "y"]
+    new = [
+        f for f in cat._snap_files(up)
+        if f["dir"] == os.path.basename(up["path"])
+    ]
+    assert xy_stats(new)
+    assert cat.read(spark, "t").count() == 20_000 - 10 + 10
+
+
 def test_driver_hash_probe_matches_spark_for_negative_hashes(spark, tmp_path):
     """Bloom probe positions and bucket-partition values are derived
     on the driver from Spark's two xxhash64 values; they must equal

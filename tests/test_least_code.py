@@ -70,3 +70,30 @@ def test_every_engine_definition_is_referenced():
         if name not in EXEMPT and uses[name] <= _uses(node)[name]
     ]
     assert not dead, "defined but never used:\n" + "\n".join(dead)
+
+
+def test_driver_rows_become_relations_only_in_local_frame():
+    """`session.local_frame` is the engine's one way to turn driver rows
+    into a relation: no other engine code calls ``createDataFrame``."""
+    session = ROOT / "eodal_spark" / "session.py"
+    stray = []
+    for p, tree in sorted(_repo_sources().items()):
+        if p.relative_to(ROOT).parts[0] != "eodal_spark":
+            continue
+        allowed = {
+            id(n)
+            for fn in ast.walk(tree)
+            if p == session
+            and isinstance(fn, ast.FunctionDef)
+            and fn.name == "local_frame"
+            for n in ast.walk(fn)
+        }
+        stray += [
+            f"{p.relative_to(ROOT)}:{n.lineno}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "createDataFrame"
+            and id(n) not in allowed
+        ]
+    assert not stray, "createDataFrame outside local_frame:\n" + "\n".join(stray)

@@ -116,10 +116,10 @@ def test_knn_pages_side_not_shuffled(spark, pages_parquet):
 
 
 def test_driver_cover_runs_zero_jobs(spark):
-    """polygon_cover_cells over a polygons_df literal layer must run
-    ZERO Spark jobs: the driver-built rows ride the DataFrame handle
-    (_eodal_local_rows) so the cover is computed without the bounded
-    limit-collect probe (which itself replaced a separate count job)."""
+    """polygon_cover_cells over a polygons_df layer must run ZERO Spark
+    jobs: the layer is a LocalRelation, so the cover's bounded
+    limit-collect reads the rows from the plan, and the cover it
+    returns is a LocalRelation too."""
     from eodal_spark import geometry
 
     polys = E.geometry.polygons_df(spark, E.PAGE_POLYS)
@@ -145,3 +145,26 @@ def test_exact_spatial_join_single_pass_no_python(spark, pages_parquet):
     for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert marker not in plan                    # refine is 100% JVM
     assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
+    assert "ExistingRDD" not in plan                 # rings from the plan
+
+
+def test_attr_layer_spatial_join_runs_zero_jobs(spark, pages_parquet):
+    """A polygons_df layer with attribute columns is still a
+    LocalRelation: the centroid spatial join decides its broadcast and
+    builds its cover without running a job before the action."""
+    geo = P.geocode(spark.read.parquet(pages_parquet), E.RES)
+    polys = E.geometry.polygons_df(
+        spark, E.PAGE_POLYS, {1: {"name": "first"}, 2: {"rank": 2}}
+    )
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    j = SJ.spatial_join(
+        geo, polys, E.JOIN_RES, page_res=E.RES, poly_cols=("poly_id", "name")
+    )
+    after = set(tracker.getJobIdsForGroup())
+    assert len(after - before) == 0, sorted(after - before)
+    assert j.count() > 0
+    # attributes ride on the layer rows: NULL where a polygon has none
+    assert dict(polys.dtypes)["rank"] == "bigint"
+    got = {r.poly_id: (r.name, r.rank) for r in polys.collect()}
+    assert got == {1: ("first", None), 2: (None, 2), 3: (None, None), 4: (None, None)}

@@ -332,10 +332,11 @@ def test_areal_interpolate_proportional_split(spark):
     assert 0 <= 1001 * 1000 - sum(got.values()) < len(got)
 
 
-def test_boxes_df_cover_parity_both_paths(spark):
+def test_boxes_df_cover_parity_both_paths(spark, monkeypatch):
     """The native box-layer constructor covers identically to the
     driver-side polygons_df layer — on the driver-side AND the
-    distributed mapInPandas cover path."""
+    distributed mapInPandas cover path (reached with a driver-side
+    layer cap of 0)."""
     from eodal_spark import geometry
 
     boxes = [
@@ -355,15 +356,16 @@ def test_boxes_df_cover_parity_both_paths(spark):
             for pid, x0, y0, x1, y1 in boxes
         ],
     )
-    for dist in (False, True):
+    for cap in (geometry.DRIVER_COVER_MAX_POLYS, 0):
+        monkeypatch.setattr(geometry, "DRIVER_COVER_MAX_POLYS", cap)
         got = sorted(
             map(tuple, geometry.polygon_cover_cells(
-                native, 8, distributed=dist
+                native, 8
             ).select("poly_id", "cell_id", "full").collect())
         )
         want = sorted(
             map(tuple, geometry.polygon_cover_cells(
-                legacy, 8, distributed=dist
+                legacy, 8
             ).select("poly_id", "cell_id", "full").collect())
         )
         assert got == want and len(got) > 0

@@ -63,6 +63,9 @@ def test_value_counts_backfill(spark, pages_small):
     total = sum(r["n"] for r in counts)
     assert total == 10_000
     assert float(sum(r["share"] for r in counts)) == pytest.approx(1.0, abs=1e-4)
+    # an empty class dimension is a typed empty relation, not an
+    # inference error
+    assert zonal.value_counts(pages_small, "lang", classes=[]).collect() == []
 
 
 def test_value_counts_grouped(spark, pages_small):
