@@ -29,6 +29,13 @@ plus the commit's overrides; `_commit_snap` seals the file list into
 segments and CASes the manifest, and on `ConcurrentCommitError`
 removes the attempt's new dirs, bloom sidecars and segments.  Legacy
 snapshots without file entries are resolved by `_snap_files` alone.
+
+Read path: every read call (`read`, `scan`, `count`, `read_changes`,
+`file_metrics`, `compact`) loads the manifest once and passes it down.
+`_resolve` names the snapshot in that load (explicit main or branch
+id, tag, branch head, ``as_of``); `_read_with_deletes` applies its
+merge-on-read deletes; `_read` is the one file reader, and its result
+schema is the snapshot's, whichever of its files are read.
 """
 
 from __future__ import annotations
@@ -91,6 +98,17 @@ def _file_stats(data_dir: str, cols: tuple[str, ...]) -> list[dict]:
     return out
 
 
+def _dir_probe(data_dir: str) -> str:
+    """One data file of a commit dir — every file of one write shares
+    its physical schema, so its footer stands for the whole dir."""
+    for root, dirs, fnames in os.walk(data_dir):
+        dirs.sort()
+        for n in sorted(fnames):
+            if n.endswith(".parquet"):
+                return os.path.join(root, n)
+    raise FileNotFoundError(f"no data files under {data_dir}")
+
+
 class ConcurrentCommitError(RuntimeError):
     """Another writer committed to the table since this commit's
     manifest was loaded — re-read and rebuild the commit."""
@@ -128,6 +146,25 @@ def _stat_bound(v):
     if hasattr(v, "isoformat"):
         return v.isoformat()
     return v
+
+
+def _range_hit(mn, mx, ranges) -> tuple[bool, bool] | None:
+    """How inclusive ``ranges`` relate to the stats interval [mn, mx]:
+    (some range overlaps it, some range covers it) — or None when a
+    bound is not of the stats' kind (string vs not), which callers
+    answer their own way (skip, raise or keep).  Stats hold timestamps
+    as 'T'-separated isoformat; a Spark-style 'YYYY-MM-DD HH:MM:SS'
+    bound would sort BEFORE every same-day stat (' ' < 'T') and
+    silently misjudge the file, so string bounds are normalized."""
+    is_str = isinstance(mn, str)
+    if any(isinstance(b, str) != is_str for r in ranges for b in r):
+        return None
+    if is_str and _ISO_TS.match(mn):
+        ranges = [(_iso_t(lo), _iso_t(hi)) for lo, hi in ranges]
+    return (
+        any(lo <= mx and mn <= hi for lo, hi in ranges),
+        any(lo <= mn and mx <= hi for lo, hi in ranges),
+    )
 
 
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
@@ -704,29 +741,8 @@ class SnapshotCatalog:
         partition_by = list(partition_by or [])
         pv = _partition_cols(partition_by)  # validates the spec
         man = self._load_manifest(table)
-        branch_snaps = man.get("branch_snapshots") or []
         if branch is not None:
-            b = (man.get("branches") or {}).get(branch)
-            if b is None:
-                raise KeyError(
-                    f"no branch {branch!r} on table {table!r} — "
-                    "create_branch() first"
-                )
-            parent_snap = next(
-                (
-                    s
-                    for s in man["snapshots"] + branch_snaps
-                    if s["snapshot_id"] == b["head"]
-                ),
-                None,
-            )
-            if parent_snap is None:
-                raise RuntimeError(
-                    f"branch {branch!r} on table {table!r} points at "
-                    f"snapshot {b['head']} which no longer exists — the "
-                    "ref is corrupted (expired past a branch head?); "
-                    "drop_branch() and re-stage"
-                )
+            parent_snap = self._resolve(table, man, branch=branch)
         else:
             parent_snap = man["snapshots"][-1] if man["snapshots"] else None
         sid = self._next_sid(man)
@@ -857,24 +873,9 @@ class SnapshotCatalog:
         bounds = ref.get("bounds") or {}
         for col, rs in norm.items():
             b = bounds.get(col)
-            if b is None:
-                continue
-            mn, mx = b
-            is_str = isinstance(mn, str)
-            if is_str and _ISO_TS.match(mn):
-                rs = [
-                    (
-                        _iso_t(lo) if isinstance(lo, str) else lo,
-                        _iso_t(hi) if isinstance(hi, str) else hi,
-                    )
-                    for lo, hi in rs
-                ]
-            if any(
-                isinstance(lo, str) != is_str or isinstance(hi, str) != is_str
-                for lo, hi in rs
-            ):
-                continue  # mismatched types: the file pass raises for the user
-            if not any(mn <= hi and mx >= lo for lo, hi in rs):
+            # a type mismatch keeps the segment: the file pass raises
+            hit = _range_hit(b[0], b[1], rs) if b is not None else None
+            if hit is not None and not hit[0]:
                 return True
         return False
 
@@ -974,53 +975,68 @@ class SnapshotCatalog:
             )
         return files
 
-    def _file_paths(self, table: str, snap: dict) -> list[str]:
-        return [
-            os.path.join(self._tdir(table), f["dir"], f["name"])
-            for f in self._snap_files(snap)
-        ]
-
-    def _get_snap(
+    def _resolve(
         self,
         table: str,
-        snapshot_id: int | None,
-        snaps: list[dict] | None = None,
+        man: dict,
+        snapshot_id: int | None = None,
+        as_of=None,
+        tag: str | None = None,
+        branch: str | None = None,
+        main_only: bool = False,
     ) -> dict:
-        """Resolve a snapshot; pass ``snaps`` to reuse one manifest load
-        across multiple lookups (one consistent view, no TOCTOU between
-        them)."""
-        if snaps is None:
-            snaps = self.snapshots(table)
+        """The snapshot a call names, resolved in the ALREADY-LOADED
+        manifest ``man`` — callers load once and resolve, read schema
+        state and files from that one view (a second load would be a
+        TOCTOU against concurrent expiry/rollback/rename).  Default:
+        main's head.  ``as_of`` (epoch seconds or datetime) is the
+        newest main snapshot committed at or before it (≡ Iceberg
+        ``TIMESTAMP AS OF``; snapshots predating ``committed_at`` sort
+        oldest); ``tag`` and ``branch`` name the ref's snapshot; an
+        explicit id also finds branch snapshots (ids are one space
+        over main and branches) unless ``main_only``."""
+        if sum(x is not None for x in (snapshot_id, as_of, tag, branch)) > 1:
+            raise ValueError(
+                "pass only one of snapshot_id / as_of / tag / branch"
+            )
+        snaps = man["snapshots"]
+        if as_of is not None:
+            ts = as_of.timestamp() if hasattr(as_of, "timestamp") else as_of
+            eligible = [s for s in snaps if s.get("committed_at", 0.0) <= ts]
+            if not eligible:
+                raise KeyError(
+                    f"no snapshot of {table!r} committed at or before {ts}"
+                )
+            return eligible[-1]
+        if tag is not None:
+            snapshot_id = (man.get("refs") or {}).get(tag)
+            if snapshot_id is None:
+                raise KeyError(f"no tag {tag!r} on table {table!r}")
+        if branch is not None:
+            b = (man.get("branches") or {}).get(branch)
+            if b is None:
+                raise KeyError(
+                    f"no branch {branch!r} on table {table!r} — "
+                    "create_branch() first"
+                )
+            snapshot_id = b["head"]
         if not snaps:
             raise FileNotFoundError(f"no snapshots for table {table}")
         if snapshot_id is None:
             return snaps[-1]
+        if not main_only:
+            snaps = snaps + (man.get("branch_snapshots") or [])
         for s in snaps:
             if s["snapshot_id"] == snapshot_id:
                 return s
+        if branch is not None:
+            raise RuntimeError(
+                f"branch {branch!r} on table {table!r} points at "
+                f"snapshot {snapshot_id} which no longer exists — the "
+                "ref is corrupted (expired past a branch head?); "
+                "drop_branch() and re-stage"
+            )
         raise KeyError(f"no snapshot {snapshot_id} for table {table}")
-
-    @staticmethod
-    def _read_files(
-        spark: SparkSession, paths: list[str], merge: bool | None = None
-    ) -> DataFrame:
-        """Read a snapshot's file set.  When the files span multiple
-        v-dirs (append chains), footers are schema-MERGED so additive
-        column evolution works: an appended batch may carry new
-        columns, and older files surface them as NULL — Iceberg's
-        add-column semantics.  Single-dir snapshots skip the merge
-        (it costs a footer read per file).
-
-        ``merge`` overrides the inference: a PRUNED read must pass the
-        SNAPSHOT's multi-dir-ness, not the surviving subset's —
-        otherwise the result schema would depend on which files a
-        predicate happens to keep."""
-        if merge is None:
-            merge = len({os.path.dirname(p) for p in paths}) > 1
-        reader = spark.read
-        if merge:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*paths)
 
     # -- schema evolution (≡ Iceberg field-id schema evolution) ----------
     #
@@ -1064,8 +1080,7 @@ class SnapshotCatalog:
                 f"no snapshots for table {table!r} — write data before "
                 "evolving its schema"
             )
-        paths = self._file_paths(table, man["snapshots"][-1])
-        schema = self._read_files(spark, paths, merge=True).schema
+        schema = self._read(spark, table, man, man["snapshots"][-1], []).schema
         fields = [
             {"id": i + 1, "name": f.name, "type": f.dataType.simpleString()}
             for i, f in enumerate(schema.fields)
@@ -1245,20 +1260,32 @@ class SnapshotCatalog:
                 )
                 st["next_id"] += 1
 
-    def _read_resolved(
+    def _read(
         self,
         spark: SparkSession,
         table: str,
-        paths: list[str],
-        merge: bool | None = None,
-        state: dict | None = None,
+        man: dict,
+        snap: dict,
+        files: list[dict],
         with_pos_meta: bool = False,
     ) -> DataFrame:
-        """Schema-evolution-aware file read: groups ``paths`` by the
-        schema version their dir was written under, binds physical
-        names to field ids per group, projects every group to the
-        CURRENT names/types, and unions.  With no schema state (or no
-        logged changes) it is exactly :meth:`_read_files`.
+        """THE file reader: ``files`` (entries of ``snap``) under the
+        SNAPSHOT's schema, so the result's columns never depend on
+        which of its files a caller reads; with no files, the
+        snapshot's schema-correct empty relation (the optimizer folds
+        it to an empty LocalRelation — no scan).
+
+        Without logged schema changes the schema is the footers'.  A
+        single-dir snapshot is one write, one physical schema.  A
+        multi-dir one (append chains) takes the merge of ONE footer per
+        dir: an appended batch may carry new columns, and older files
+        surface them as NULL — Iceberg's add-column semantics.  The
+        probes come from the dirs, not the manifest entries, so a
+        pruned scan still loads only the segments its predicate
+        touches.  With logged changes (``man``'s schema state), files
+        are grouped by the schema version their dir was written under,
+        physical names bound to field ids per group, every group
+        projected to the CURRENT names/types, and the groups unioned.
 
         ``with_pos_meta=True`` additionally materializes ``_dfile``
         (dir/name) and ``_pos`` (``_metadata.row_index``) — the row
@@ -1266,6 +1293,15 @@ class SnapshotCatalog:
         captured at the scan (``_metadata`` is only resolvable there),
         which is why the reader owns them."""
         from pyspark.sql import functions as F
+
+        tdir = self._tdir(table)
+        dirs = sorted(self._snap_dirs(snap))
+        if len(dirs) > 1 or not files:
+            probes = {d: _dir_probe(os.path.join(tdir, d)) for d in dirs}
+        located = [
+            (f["dir"], os.path.join(tdir, f["dir"], f["name"])) for f in files
+        ] or list(probes.items())
+        state = man.get("schema")
 
         def attach(df: DataFrame) -> DataFrame:
             if not with_pos_meta:
@@ -1279,10 +1315,18 @@ class SnapshotCatalog:
             )
 
         if not state or not state["log"]:
-            return attach(self._read_files(spark, paths, merge=merge))
+            reader = spark.read
+            if len(dirs) > 1:
+                reader = reader.schema(
+                    spark.read.option("mergeSchema", "true")
+                    .parquet(*probes.values())
+                    .schema
+                )
+            out = attach(reader.parquet(*[p for _, p in located]))
+            return out if files else out.where(F.lit(False))
         by_ver: dict[int, list[str]] = {}
-        for p in paths:
-            sid = self._dir_sid(os.path.basename(os.path.dirname(p)))
+        for d, p in located:
+            sid = self._dir_sid(d)
             vi = next(
                 (
                     i
@@ -1321,7 +1365,7 @@ class SnapshotCatalog:
             df = df.select(*cols)
             out = df if out is None else out.unionByName(df)
         assert out is not None
-        return out
+        return out if files else out.where(F.lit(False))
 
     def delete_keys(
         self,
@@ -1348,7 +1392,7 @@ class SnapshotCatalog:
         scan — same contract as Iceberg).
         """
         man = self._load_manifest(table)
-        parent = self._get_snap(table, None, man["snapshots"])
+        parent = self._resolve(table, man)
         parent_files = self._snap_files(parent)
         key_cols = list(keys.columns)
         self._check_delete_key(
@@ -1541,39 +1585,26 @@ class SnapshotCatalog:
                     "purge; pass (lo, hi) with lo <= hi"
                 )
         man = self._load_manifest(table)
-        parent = self._get_snap(table, None, man["snapshots"])
+        parent = self._resolve(table, man)
         parent_files = self._snap_files(parent)
         sid = self._next_sid(man)
         schema_state = man.get("schema")
 
         def fully_deleted(f: dict) -> bool:
             # dropping a file here is IRREVERSIBLE after expire/compact,
-            # so any bound/stat representation mismatch must KEEP the
-            # file (the read-time residual filter, which compares in the
-            # column's real type, still removes the in-range rows).
-            # Mirrors scan()'s guards: a 'YYYY-MM-DD HH:MM:SS' string
-            # bound sorts BEFORE every same-day 'T'-isoformat stat
-            # (' ' < 'T') and would otherwise misclassify coverage.
+            # so any doubt — no stats, a bound of another type,
+            # incomparable values — KEEPS the file (the read-time
+            # residual filter, which compares in the column's real
+            # type, still removes the in-range rows)
             stats = f.get("stats") or {}
             st = stats.get(self._stat_name(schema_state, f, col))
             if not st or st["min"] is None or st["max"] is None:
                 return False
-            stat_is_str = isinstance(st["min"], str)
-            stat_is_iso = stat_is_str and _ISO_TS.match(st["min"])
-            for lo, hi in ranges:
-                if (
-                    isinstance(lo, str) != stat_is_str
-                    or isinstance(hi, str) != stat_is_str
-                ):
-                    continue  # type mismatch → not provably covered
-                if stat_is_iso:
-                    lo, hi = _iso_t(lo), _iso_t(hi)
-                try:
-                    if lo <= st["min"] and st["max"] <= hi:
-                        return True
-                except TypeError:
-                    continue  # incomparable → keep the file
-            return False
+            try:
+                hit = _range_hit(st["min"], st["max"], ranges)
+            except TypeError:
+                return False
+            return hit is not None and hit[1]
 
         kept, dropped_rows = [], 0
         for f in parent_files:
@@ -1635,7 +1666,7 @@ class SnapshotCatalog:
         from pyspark.sql import functions as F
 
         man = self._load_manifest(table)
-        parent = self._get_snap(table, None, man["snapshots"])
+        parent = self._resolve(table, man)
         parent_files = self._snap_files(parent)
         sid = self._next_sid(man)
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
@@ -1643,12 +1674,8 @@ class SnapshotCatalog:
         # column names and must match rows in files that predate a
         # rename; positions are captured at the scan by the reader
         positions = (
-            self._read_resolved(
-                spark,
-                table,
-                self._file_paths(table, parent),
-                state=man.get("schema"),
-                with_pos_meta=True,
+            self._read(
+                spark, table, man, parent, parent_files, with_pos_meta=True
             )
             .filter(pred)
             .select(
@@ -1679,41 +1706,41 @@ class SnapshotCatalog:
         self,
         spark: SparkSession,
         table: str,
+        man: dict,
         snap: dict,
-        files: list[dict],
-        merge: bool,
-        state: dict | None,
+        files: list[dict] | None = None,
     ) -> DataFrame:
-        """Read ``files`` applying the snapshot's equality-delete files
-        AND metadata range deletes with Iceberg sequence semantics: a
+        """Read ``files`` (default: all of ``snap``'s) applying the
+        snapshot's equality-delete files, position-delete files AND
+        metadata range deletes with Iceberg sequence semantics: a
         delete at commit D removes matching rows only from data files
         committed at sid ≤ D.  Data files are segmented at the delete
         commit boundaries; each segment anti-joins the union of the
-        key deletes that apply to it (broadcast when the key count is
+        key and position deletes that apply to it (broadcast when
         small) and filters NOT-in-ranges for the applicable range
         deletes.
 
-        ``state`` is the schema state from the SAME manifest load the
-        caller resolved ``snap`` from — one consistent snapshot+schema
-        view (a rename committed between two loads would translate this
-        snapshot's delete entries against the wrong version)."""
+        ``man`` is the manifest load the caller resolved ``snap`` from
+        — one consistent snapshot+schema view (a rename committed
+        between two loads would translate this snapshot's delete
+        entries against the wrong version)."""
         from pyspark.sql import functions as F
 
         from eodal_spark import grid
 
+        if files is None:
+            files = self._snap_files(snap)
         dels = snap.get("delete_files") or []
         rdels = snap.get("delete_ranges") or []
         pdels = snap.get("pos_delete_files") or []
-        tdir = self._tdir(table)
-        paths = [os.path.join(tdir, f["dir"], f["name"]) for f in files]
         if (not dels and not rdels and not pdels) or not files:
-            return self._read_resolved(
-                spark, table, paths, merge=merge, state=state
-            )
+            return self._read(spark, table, man, snap, files)
+        state = man.get("schema")
+        tdir = self._tdir(table)
         # delete/data columns may have been RENAMED since a delete
         # committed: all joins/filters below run in CURRENT names (the
-        # data side is projected by _read_resolved), so each delete
-        # entry's recorded names are translated via its field ids
+        # data side is projected by _read), so each delete entry's
+        # recorded names are translated via its field ids
         key_cols = (
             self._translate_cols(
                 state,
@@ -1746,29 +1773,38 @@ class SnapshotCatalog:
                 out = c if out is None else (out & c)
             return out
 
-        # one tagged base relation over ALL delete files — each segment
-        # filters its applicable suffix from it, so stacked deletes
-        # don't re-scan older delete files once per segment (cached when
-        # more than one segment will consume it)
-        # group by (sequence sid, schema sid): an upsert's entry carries
-        # its PARENT's sequence number but records key names current at
-        # its OWN commit, so a delete_keys at sid N and an upsert whose
-        # parent is N may share a sequence sid yet need different
-        # name translations
-        by_sid: dict[tuple[int, int], list[str]] = {}
+        def tagged(parts) -> DataFrame | None:
+            # one base relation over a delete tier's files, each part
+            # (paths, sid, columns) tagged with its sequence sid — each
+            # segment filters its applicable suffix from it, so stacked
+            # deletes don't re-scan older delete files once per segment
+            # (cached when more than one part will be consumed)
+            base = None
+            for paths, sid, cols in parts:
+                part = (
+                    spark.read.parquet(*paths)
+                    .select(*cols)
+                    .withColumn("_del_sid", F.lit(sid))
+                )
+                base = part if base is None else base.unionByName(part)
+            if base is not None and len(parts) > 1:
+                base = base.cache()
+            return base
+
+        # key deletes grouped by (sequence sid, schema sid): an upsert's
+        # entry carries its PARENT's sequence number but records key
+        # names current at its OWN commit, so a delete_keys at sid N and
+        # an upsert whose parent is N may share a sequence sid yet need
+        # different name translations
+        by_sid: dict[tuple[int, int], tuple[list[str], list[str]]] = {}
         for d in dels:
             by_sid.setdefault(
-                (d["sid"], d.get("schema_sid", d["sid"])), []
-            ).append(os.path.join(tdir, d["dir"], d["name"]))
-        base_keys: DataFrame | None = None
-        for (sid, ssid), ps in by_sid.items():
+                (d["sid"], d.get("schema_sid", d["sid"])), (d["key_cols"], [])
+            )[1].append(os.path.join(tdir, d["dir"], d["name"]))
+        key_parts = []
+        for (sid, ssid), (then_cols, ps) in by_sid.items():
             # each delete parquet stores its WRITE-TIME key names —
             # alias to current so all parts (and the data side) align
-            then_cols = next(
-                d["key_cols"]
-                for d in dels
-                if d["sid"] == sid and d.get("schema_sid", d["sid"]) == ssid
-            )
             cur_cols = self._translate_cols(state, then_cols, ssid)
             if sorted(cur_cols) != sorted(key_cols):
                 raise ValueError(
@@ -1776,15 +1812,24 @@ class SnapshotCatalog:
                     f"{cur_cols}, others use {key_cols} — mixed delete "
                     "keys are not supported; compact() first"
                 )
-            part = spark.read.parquet(*ps).select(
-                *[
-                    F.col(a).alias(b)
-                    for a, b in zip(then_cols, cur_cols)
-                ]
-            ).withColumn("_del_sid", F.lit(sid))
-            base_keys = part if base_keys is None else base_keys.unionByName(part)
-        if base_keys is not None and len(by_sid) > 1:
-            base_keys = base_keys.cache()
+            aliased = [F.col(a).alias(b) for a, b in zip(then_cols, cur_cols)]
+            key_parts.append((ps, sid, aliased))
+        base_keys = tagged(key_parts)
+        # position deletes (≡ Iceberg v2 position delete files): (dfile,
+        # pos) rows, filtered per segment like the key deletes.
+        # Positions can only reference files that existed at the
+        # delete's commit, so the per-segment filter is an efficiency
+        # (skip provably-empty joins), not a correctness requirement.
+        pos_base = tagged(
+            [
+                (
+                    [os.path.join(tdir, p["dir"], p["name"])],
+                    p["sid"],
+                    ["dfile", "pos"],
+                )
+                for p in pdels
+            ]
+        )
 
         def applicable(base, entries, cols, min_sid) -> DataFrame | None:
             # the deletes of ``entries`` committed at or after
@@ -1814,35 +1859,23 @@ class SnapshotCatalog:
                 small = sum(d["rows"] for d in live) <= 100_000
             return F.broadcast(k) if small else k
 
-        # position deletes (≡ Iceberg v2 position delete files): one
-        # tagged base relation of (dfile, pos) rows, filtered per
-        # segment like the key deletes.  Positions can only reference
-        # files that existed at the delete's commit, so the per-segment
-        # filter is an efficiency (skip provably-empty joins), not a
-        # correctness requirement.
-        pos_base: DataFrame | None = None
-        for p in pdels:
-            part = spark.read.parquet(
-                os.path.join(tdir, p["dir"], p["name"])
-            ).withColumn("_del_sid", F.lit(p["sid"]))
-            pos_base = part if pos_base is None else pos_base.unionByName(part)
-        if pos_base is not None and len(pdels) > 1:
-            pos_base = pos_base.cache()
-
         # segment boundaries: files with sid in (prev_del, del] share
-        # the same applicable-delete suffix {del, ...}
+        # the same applicable-delete suffix {del, ...}; legacy dirs
+        # (sid 0) join the first segment
         out: DataFrame | None = None
         bounds = [0] + del_sids
         for i in range(1, len(bounds) + 1):
             lo = bounds[i - 1]
             hi = bounds[i] if i < len(bounds) else None
-            seg = [
-                os.path.join(tdir, f["dir"], f["name"])
-                for f in files
-                if self._dir_sid(f["dir"]) > lo
-                and (hi is None or self._dir_sid(f["dir"]) <= hi)
-            ] + ([p for f, p in zip(files, paths)
-                  if self._dir_sid(f["dir"]) == 0] if lo == 0 else [])
+            seg = sorted(
+                (
+                    f
+                    for f in files
+                    if (lo == 0 or self._dir_sid(f["dir"]) > lo)
+                    and (hi is None or self._dir_sid(f["dir"]) <= hi)
+                ),
+                key=lambda f: os.path.join(f["dir"], f["name"]),
+            )
             if not seg:
                 continue
             pk = (
@@ -1850,13 +1883,8 @@ class SnapshotCatalog:
                 if hi is not None
                 else None
             )
-            df = self._read_resolved(
-                spark,
-                table,
-                sorted(set(seg)),
-                merge=merge,
-                state=state,
-                with_pos_meta=pk is not None,
+            df = self._read(
+                spark, table, man, snap, seg, with_pos_meta=pk is not None
             )
             if hi is not None:
                 if pk is not None:
@@ -1889,18 +1917,7 @@ class SnapshotCatalog:
         """Newest snapshot committed at or before ``ts`` (epoch seconds
         or datetime) — ≡ Iceberg ``TIMESTAMP AS OF`` resolution.
         Snapshots predating the ``committed_at`` field sort oldest."""
-        return self._as_of(table, ts, self.snapshots(table))
-
-    @staticmethod
-    def _as_of(table: str, ts, snaps: list[dict]) -> dict:
-        if hasattr(ts, "timestamp"):
-            ts = ts.timestamp()
-        eligible = [s for s in snaps if s.get("committed_at", 0.0) <= ts]
-        if not eligible:
-            raise KeyError(
-                f"no snapshot of {table!r} committed at or before {ts}"
-            )
-        return eligible[-1]
+        return self._resolve(table, self._load_manifest(table), as_of=ts)
 
     def read(
         self,
@@ -1912,44 +1929,13 @@ class SnapshotCatalog:
         branch: str | None = None,
     ) -> DataFrame:
         """Time-travel read — ≡ Iceberg ``VERSION AS OF`` by snapshot
-        id, ``TIMESTAMP AS OF`` via ``as_of``, a named ref via ``tag``,
-        or a branch head via ``branch`` — the WAP audit read (equality
-        deletes applied merge-on-read, see :meth:`delete_keys`)."""
-        if sum(x is not None for x in (snapshot_id, as_of, tag, branch)) > 1:
-            raise ValueError(
-                "pass only one of snapshot_id / as_of / tag / branch"
-            )
-        # ONE manifest load for ref/snapshot/schema resolution — a
-        # second load anywhere below would be a TOCTOU against
-        # concurrent expiry/rollback/rename
+        id (main or branch snapshot), ``TIMESTAMP AS OF`` via
+        ``as_of``, a named ref via ``tag``, or a branch head via
+        ``branch`` — the WAP audit read (equality deletes applied
+        merge-on-read, see :meth:`delete_keys`)."""
         man = self._load_manifest(table)
-        snaps = man["snapshots"]
-        if tag is not None:
-            refs = dict(man.get("refs") or {})
-            if tag not in refs:
-                raise KeyError(f"no tag {tag!r} on table {table!r}")
-            snapshot_id = refs[tag]
-        if branch is not None:
-            b = (man.get("branches") or {}).get(branch)
-            if b is None:
-                raise KeyError(f"no branch {branch!r} on table {table!r}")
-            snapshot_id = b["head"]
-        if as_of is not None:
-            snap = self._as_of(table, as_of, snaps)
-        else:
-            # explicit-id lookups also resolve branch snapshots (the
-            # audit-by-id path); the default head stays main's
-            lookup = (
-                snaps
-                if snapshot_id is None
-                else snaps + (man.get("branch_snapshots") or [])
-            )
-            snap = self._get_snap(table, snapshot_id, lookup)
-        files = self._snap_files(snap)
-        merge = len({f["dir"] for f in files}) > 1
-        return self._read_with_deletes(
-            spark, table, snap, files, merge, man.get("schema")
-        )
+        snap = self._resolve(table, man, snapshot_id, as_of, tag, branch)
+        return self._read_with_deletes(spark, table, man, snap)
 
     def read_changes(
         self,
@@ -1961,16 +1947,15 @@ class SnapshotCatalog:
         """Incremental consumption — the rows ADDED after
         ``from_snapshot`` up to ``to_snapshot`` (default: current), read
         from exactly the data files the later snapshot references that
-        the earlier one does not (≡ Iceberg incremental scan).  Only
-        append commits have well-defined change semantics; an overwrite
-        in the range raises, as the delta is not expressible as a file
-        difference."""
-        man = self._load_manifest(table)  # ONE load → one consistent view
-        snaps = man["snapshots"]
-        if not snaps:
-            raise FileNotFoundError(f"no snapshots for table {table}")
-        lo = self._get_snap(table, from_snapshot, snaps)
-        hi = self._get_snap(table, to_snapshot, snaps)
+        the earlier one does not (≡ Iceberg incremental scan), under
+        the later snapshot's schema.  Only append commits have
+        well-defined change semantics: an overwrite or delete between
+        the two (on the later one's parent chain) raises, as the delta
+        is not expressible as a file difference, and so does a
+        ``from_snapshot`` that is not an ancestor of ``to_snapshot``."""
+        man = self._load_manifest(table)
+        lo = self._resolve(table, man, from_snapshot)
+        hi = self._resolve(table, man, to_snapshot)
         if lo["snapshot_id"] > hi["snapshot_id"]:
             # an inverted range would also sail past the overwrite check
             # below and return the old snapshot's whole content as a
@@ -1979,34 +1964,32 @@ class SnapshotCatalog:
                 f"from_snapshot {lo['snapshot_id']} is newer than "
                 f"to_snapshot {hi['snapshot_id']}"
             )
-        for s in snaps:
-            if (
-                lo["snapshot_id"] < s["snapshot_id"] <= hi["snapshot_id"]
-                and s.get("mode", "overwrite") != "append"
-            ):
+        by_id = {
+            s["snapshot_id"]: s
+            for s in man["snapshots"] + (man.get("branch_snapshots") or [])
+        }
+        s = hi
+        while s is not None and s["snapshot_id"] > lo["snapshot_id"]:
+            if s.get("mode", "overwrite") != "append":
                 raise ValueError(
                     f"snapshot {s['snapshot_id']} is a "
                     f"{s.get('mode', 'overwrite')} commit — the range "
                     "holds no file-level delta; read it directly"
                 )
+            s = by_id.get(s.get("parent_id"))
+        # (a parent expired out of the manifest ends the walk unchecked)
+        if s is not None and s is not lo:
+            raise ValueError(
+                f"snapshot {lo['snapshot_id']} is not an ancestor of "
+                f"snapshot {hi['snapshot_id']} — no file-level delta"
+            )
         seen = {(f["dir"], f["name"]) for f in self._snap_files(lo)}
         new = [
-            os.path.join(self._tdir(table), f["dir"], f["name"])
+            f
             for f in self._snap_files(hi)
             if (f["dir"], f["name"]) not in seen
         ]
-        if not new:
-            from pyspark.sql import functions as F
-
-            return self._read_resolved(
-                spark,
-                table,
-                self._file_paths(table, hi),
-                state=man.get("schema"),
-            ).where(F.lit(False))
-        return self._read_resolved(
-            spark, table, new, state=man.get("schema")
-        )
+        return self._read(spark, table, man, hi, new)
 
     def count(
         self,
@@ -2023,23 +2006,16 @@ class SnapshotCatalog:
         position deletes, or range deletes whose residuals the
         row_count cannot see) or any predicate falls back to the exact
         pruned-scan count."""
-        snap = self._get_snap(table, snapshot_id)
+        man = self._load_manifest(table)
+        snap = self._resolve(table, man, snapshot_id)
         mor = (
             (snap.get("delete_files") or [])
             or (snap.get("pos_delete_files") or [])
             or (snap.get("delete_ranges") or [])
         )
-        if not ranges and not eq:
-            if not mor:
-                return int(snap["row_count"])
-            return self.read(spark, table, snap["snapshot_id"]).count()
-        return self.scan(
-            spark,
-            table,
-            ranges,
-            snapshot_id=snap["snapshot_id"],
-            eq=eq,
-        ).count()
+        if not ranges and not eq and not mor:
+            return int(snap["row_count"])
+        return self._scan(spark, table, man, snap, ranges, eq).count()
 
     def file_metrics(
         self, spark: SparkSession, table: str, snapshot_id: int | None = None
@@ -2048,7 +2024,7 @@ class SnapshotCatalog:
         (dir, name, rows, per-column min/max as a JSON string) — the
         north rule's partition-level row-count/lineage surface, read
         straight from the manifest (no data I/O)."""
-        snap = self._get_snap(table, snapshot_id)
+        snap = self._resolve(table, self._load_manifest(table), snapshot_id)
         rows = [
             (
                 f["dir"],
@@ -2104,7 +2080,8 @@ class SnapshotCatalog:
             )
         if target_file_bytes is not None:
             return self._compact_binpack(spark, table, int(target_file_bytes))
-        snap = self._get_snap(table, None)
+        man = self._load_manifest(table)
+        snap = self._resolve(table, man)
         # carry any ingest marker forward: the compacted snapshot
         # represents the same committed state, and drain_to_catalog's
         # replay/foreign-checkpoint guard reads these from the NEWEST
@@ -2116,7 +2093,7 @@ class SnapshotCatalog:
         # ingest marker — but STOP at a plain overwrite: it reset the
         # table's lineage, so an older marker no longer describes this
         # data and resurrecting it would corrupt the exactly-once guard
-        for s in reversed(self.snapshots(table)):
+        for s in reversed(man["snapshots"]):
             if "checkpoint" in s.get("meta", {}):
                 for k in ("checkpoint", "batch_id"):
                     if k in s["meta"]:
@@ -2135,7 +2112,7 @@ class SnapshotCatalog:
         for bcfg in (snap.get("blooms") or {}).values():
             pass  # insertion order: the last entry is the newest dir's
         return self.write(
-            self.read(spark, table),
+            self._read_with_deletes(spark, table, man, snap),
             table,
             sort_by=tuple(snap.get("sort_by") or ()),
             zorder=tuple(snap.get("zorder") or ()),
@@ -2172,7 +2149,7 @@ class SnapshotCatalog:
         a relayout, not a binpack — use the full rewrite).  Returns
         None when no group qualifies: nothing to do, no empty commit."""
         man = self._load_manifest(table)
-        snap = self._get_snap(table, None, man["snapshots"])
+        snap = self._resolve(table, man)
         parent_files = self._snap_files(snap)
         tdir = self._tdir(table)
         pspecs = snap.get("partition_specs") or {}
@@ -2208,14 +2185,7 @@ class SnapshotCatalog:
             n_out += max(1, -(-sum(sz for _, sz in lst) // target))
         if not inputs:
             return None
-        rows = self._read_with_deletes(
-            spark,
-            table,
-            snap,
-            inputs,
-            len({f["dir"] for f in inputs}) > 1,
-            man.get("schema"),
-        )
+        rows = self._read_with_deletes(spark, table, man, snap, inputs)
         sort_by = tuple(snap.get("sort_by") or ())
         zorder = tuple(snap.get("zorder") or ())
         pv = (
@@ -2291,7 +2261,7 @@ class SnapshotCatalog:
                 f"tag {name!r} already points at snapshot {refs[name]} — "
                 "remove_tag() first (retags must be explicit)"
             )
-        snap = self._get_snap(table, snapshot_id, man["snapshots"])
+        snap = self._resolve(table, man, snapshot_id, main_only=True)
         refs[name] = snap["snapshot_id"]
         self._commit_manifest(table, man)
         return {"name": name, "snapshot_id": snap["snapshot_id"]}
@@ -2330,7 +2300,7 @@ class SnapshotCatalog:
                 f"branch {name!r} already exists (head "
                 f"{branches[name]['head']}) — drop_branch() first"
             )
-        snap = self._get_snap(table, snapshot_id, man["snapshots"])
+        snap = self._resolve(table, man, snapshot_id, main_only=True)
         branches[name] = {
             "head": snap["snapshot_id"],
             "fork": snap["snapshot_id"],
@@ -2424,21 +2394,14 @@ class SnapshotCatalog:
         the original write still remove their rows (Iceberg v2
         sequence semantics)."""
         man = self._load_manifest(table)
-        all_snaps = man["snapshots"] + (man.get("branch_snapshots") or [])
-        src = next(
-            (s for s in all_snaps if s["snapshot_id"] == snapshot_id), None
-        )
-        if src is None:
-            raise KeyError(
-                f"no snapshot {snapshot_id} for table {table!r}"
-            )
+        src = self._resolve(table, man, snapshot_id)
         if src.get("mode") != "append":
             raise ValueError(
                 f"snapshot {snapshot_id} is mode={src.get('mode')!r} — "
                 "only append snapshots compose onto a moved head "
                 "(overwrite/delete commits don't cherry-pick)"
             )
-        head = self._get_snap(table, None, man["snapshots"])
+        head = self._resolve(table, man)
         own_dir = os.path.basename(src["path"])
         head_files = self._snap_files(head)
         if any(f["dir"] == own_dir for f in head_files):
@@ -2628,22 +2591,16 @@ class SnapshotCatalog:
                 if not cols:
                     continue
                 col = cols[0]
-                if t in _TIME_FMT:
-                    w = _TIME_FMT[t][1]
+                if t in _TIME_FMT or t == "truncate":
+                    # the value is a fixed-width prefix of the string
+                    # form ('T'-separated isoformat for time transforms)
+                    w, fix = (
+                        (_TIME_FMT[t][1], _iso_t)
+                        if t in _TIME_FMT
+                        else (entry[1], str)
+                    )
                     rs = [
-                        (_iso_t(lo)[:w], _iso_t(hi)[:w])
-                        for lo, hi in (norm.get(col) or [])
-                        if isinstance(lo, str) and isinstance(hi, str)
-                    ]
-                    if rs and (
-                        pvs == _HIVE_NULL
-                        or not any(lo <= pvs <= hi for lo, hi in rs)
-                    ):
-                        keep = False
-                elif t == "truncate":
-                    w = entry[1]
-                    rs = [
-                        (lo[:w], hi[:w])
+                        (fix(lo)[:w], fix(hi)[:w])
                         for lo, hi in (norm.get(col) or [])
                         if isinstance(lo, str) and isinstance(hi, str)
                     ]
@@ -2800,6 +2757,20 @@ class SnapshotCatalog:
         false negatives cannot happen (probe and build share Spark's
         ``xxhash64``).  NULL is not a value — use a filter on the read.
         """
+        man = self._load_manifest(table)
+        snap = self._resolve(table, man, snapshot_id)
+        return self._scan(spark, table, man, snap, ranges, eq)
+
+    def _scan(
+        self,
+        spark: SparkSession,
+        table: str,
+        man: dict,
+        snap: dict,
+        ranges: dict | None,
+        eq: dict | None,
+    ) -> DataFrame:
+        """:meth:`scan` of the snapshot ``snap`` resolved in ``man``."""
         ranges = dict(ranges or {})
         eq = dict(eq or {})
         for c, v in eq.items():
@@ -2813,12 +2784,8 @@ class SnapshotCatalog:
                     f"column {c!r} appears in both ranges and eq"
                 )
             ranges[c] = (v, v)
-        man = self._load_manifest(table)  # ONE load → one consistent view
-        if not man["snapshots"]:
-            raise FileNotFoundError(f"no snapshots for table {table}")
-        snap = self._get_snap(table, snapshot_id, man["snapshots"])
         if not ranges:  # no predicate → plain snapshot read
-            return self.read(spark, table, snap["snapshot_id"])
+            return self._read_with_deletes(spark, table, man, snap)
         for c, r in ranges.items():
             if r is None or (isinstance(r, list) and not r):
                 # e.g. grid.cell_disk_ranges' over-budget None forwarded
@@ -2833,12 +2800,9 @@ class SnapshotCatalog:
             ]
             for c, r in ranges.items()
         }
-        # merge behavior must reflect the SNAPSHOT's layout, not the
-        # post-pruning survivor set — computed before any segment skip
-        snap_multi_dir = len(self._snap_dirs(snap)) > 1
-        schema_log = (man.get("schema") or {}).get("log")
+        schema_state = man.get("schema")
         segs = snap.get("segments")
-        if segs is not None and not schema_log:
+        if segs is not None and not (schema_state or {}).get("log"):
             # manifest-LIST-level pruning (≡ Iceberg's manifest-list
             # partition summaries): drop whole segments whose coarse
             # bounds provably exclude every range BEFORE loading any
@@ -2859,13 +2823,12 @@ class SnapshotCatalog:
                 )
         else:
             files = self._snap_files(snap)
+
         # schema evolution: per-file stats are keyed by WRITE-TIME
         # names; a predicate on a renamed column must consult the name
         # its file's schema version bound to the same field id —
         # otherwise every pre-rename file loses pruning (kept, never
         # wrongly dropped, but the scan degrades to a full read)
-        schema_state = man.get("schema")
-
         def stat_name(frec: dict, col: str) -> str | None:
             return self._stat_name(schema_state, frec, col)
 
@@ -2873,29 +2836,12 @@ class SnapshotCatalog:
         keep = []
         for frec in files:
             stats = frec.get("stats", {})
-            ok = True
             for col, rs in norm.items():
                 st = stats.get(stat_name(frec, col))
                 if st is None or st["min"] is None or st["max"] is None:
                     continue  # no stats → cannot prune this file
-                stat_is_str = isinstance(st["min"], str)
-                if stat_is_str and _ISO_TS.match(st["min"]):
-                    # stats are 'T'-separated isoformat; a Spark-
-                    # style 'YYYY-MM-DD HH:MM:SS' bound would sort
-                    # BEFORE every 'T' form lexicographically and
-                    # silently prune wrong files — normalize it
-                    rs = [
-                        (
-                            _iso_t(lo) if isinstance(lo, str) else lo,
-                            _iso_t(hi) if isinstance(hi, str) else hi,
-                        )
-                        for lo, hi in rs
-                    ]
-                if any(
-                    isinstance(lo, str) != stat_is_str
-                    or isinstance(hi, str) != stat_is_str
-                    for lo, hi in rs
-                ):
+                hit = _range_hit(st["min"], st["max"], rs)
+                if hit is None:
                     raise TypeError(
                         f"ranges[{col!r}] bounds are "
                         f"{type(rs[0][0]).__name__} but the manifest "
@@ -2904,51 +2850,12 @@ class SnapshotCatalog:
                         "the stored column's type (timestamps as "
                         "datetime/isoformat strings)"
                     )
-                if not any(
-                    st["min"] <= hi and st["max"] >= lo for lo, hi in rs
-                ):
-                    ok = False
+                if not hit[0]:
                     break
-            if ok:
+            else:
                 keep.append(frec)
         if eq and (snap.get("blooms") or {}):
             keep = self._bloom_prune(spark, table, snap, keep, eq, stat_name)
-        if not keep:
-            from pyspark.sql import functions as F
-
-            # schema-preserving empty: the optimizer folds
-            # filter(false) to an empty LocalRelation — no scan.
-            # ONE file per dir suffices for the merged schema (a
-            # dir = one write = one physical schema), so a no-match
-            # scan on a 100k-file table opens n_dirs footers, not
-            # 100k
-            probe, probed = [], set()
-            for frec in self._snap_files(snap):
-                if frec["dir"] not in probed:
-                    probed.add(frec["dir"])
-                    probe.append(
-                        os.path.join(
-                            self._tdir(table), frec["dir"], frec["name"]
-                        )
-                    )
-            df = self._read_resolved(
-                spark,
-                table,
-                probe,
-                merge=snap_multi_dir,
-                state=schema_state,
-            ).where(F.lit(False))
-        else:
-            # delete-aware: equality deletes apply to the surviving
-            # files with the same sequence semantics as read()
-            df = self._read_with_deletes(
-                spark,
-                table,
-                snap,
-                keep,
-                snap_multi_dir,
-                schema_state,
-            )
         import functools
         import operator
 
@@ -2958,7 +2865,12 @@ class SnapshotCatalog:
             operator.and_,
             [grid.ranges_predicate(c, rs) for c, rs in norm.items()],
         )
-        return df.filter(residual)
+        # delete-aware: deletes apply to the surviving files with the
+        # same sequence semantics as read(); no survivors → the
+        # snapshot's empty relation
+        return self._read_with_deletes(spark, table, man, snap, keep).filter(
+            residual
+        )
 
     def rollback(self, table: str, snapshot_id: int) -> None:
         man = self._load_manifest(table)

@@ -7,6 +7,11 @@ the random parts of file paths (part-file UUIDs, the 8-hex suffix of a
 catalog commit dir ``v12-ab34cd56``) are stripped before writing, so
 ``diff -r`` of two captures of the same plan is empty.
 
+The catalog-backed queries build their tables under the temp dir and
+reuse them when present; each run points the temp dir at a fixed root
+it wipes first, so every capture builds its tables fresh from the
+checked-out code while the paths in the plans stay the same.
+
 Usage: python scripts/capture_plans.py <tag> <suffix> [query ...]
 """
 
@@ -15,7 +20,9 @@ from __future__ import annotations
 import io
 import os
 import re
+import shutil
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -24,6 +31,7 @@ import __spark_entry__ as E
 from eodal_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+TMP_ROOT = os.path.join(tempfile.gettempdir(), "eodal_spark_plan_capture")
 
 _VOLATILE = [
     (re.compile(r"#\d+"), "#"),
@@ -47,6 +55,9 @@ def main() -> None:
     names = sys.argv[3:]
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
+    shutil.rmtree(TMP_ROOT, ignore_errors=True)
+    os.makedirs(TMP_ROOT)
+    tempfile.tempdir = TMP_ROOT
     spark = get_spark("plan_capture", master="local[4]")
     spark.sparkContext.setLogLevel("ERROR")
     qs = E.queries()

@@ -2867,3 +2867,168 @@ def test_binpack_groups_per_partition(spark, tmp_path):
     assert len(days) == 2  # one merged group per day
     # the new dir carries the spec so hidden-partition pruning works
     assert s["partition_specs"][os.path.basename(s["path"])] == [["day", "ts"]]
+
+
+# -- the read path: one manifest load, one resolver, one reader -------
+
+
+@pytest.mark.parametrize(
+    "call",
+    ["scan", "scan_ranges", "count", "count_ranges", "file_metrics",
+     "read_changes"],
+)
+def test_branch_snapshot_id_resolves_in_every_read_call(
+    spark, tmp_path, call
+):
+    """Snapshot ids are one space over main and branch snapshots, and
+    every read call resolves a branch snapshot's id the way
+    ``read(snapshot_id=)`` does."""
+    cat = SnapshotCatalog(str(tmp_path / "br_ids"))
+    cat.write(spark.range(5).selectExpr("id AS k"), "t", sort_by=("k",))
+    cat.create_branch("t", "audit")
+    sid = cat.write(
+        spark.range(5, 8).selectExpr("id AS k"), "t", sort_by=("k",),
+        mode="append", branch="audit",
+    )["snapshot_id"]
+    want = sorted(r.k for r in cat.read(spark, "t", snapshot_id=sid).collect())
+    assert want == list(range(8))
+
+    def keys(df):
+        return sorted(r.k for r in df.collect())
+
+    got, expect = {
+        "scan": lambda: (keys(cat.scan(spark, "t", snapshot_id=sid)), want),
+        "scan_ranges": lambda: (
+            keys(cat.scan(spark, "t", {"k": (2, 6)}, snapshot_id=sid)),
+            [k for k in want if 2 <= k <= 6],
+        ),
+        "count": lambda: (cat.count(spark, "t", snapshot_id=sid), len(want)),
+        "count_ranges": lambda: (
+            cat.count(spark, "t", snapshot_id=sid, ranges={"k": (2, 6)}),
+            5,
+        ),
+        "file_metrics": lambda: (
+            sum(r.rows for r in cat.file_metrics(spark, "t", sid).collect()),
+            len(want),
+        ),
+        "read_changes": lambda: (
+            keys(cat.read_changes(spark, "t", 1, sid)), want[5:]
+        ),
+    }[call]()
+    assert got == expect
+
+
+def test_read_changes_walks_the_later_snapshots_parent_chain(spark, tmp_path):
+    """With branch ids resolvable, the delta is defined along the later
+    snapshot's parent chain only: an overwrite on that chain raises,
+    and so does a ``from_snapshot`` off it."""
+    cat = SnapshotCatalog(str(tmp_path / "rc_chain"))
+    cat.write(spark.range(5), "t")
+    cat.create_branch("t", "audit")
+    staged = cat.write(
+        spark.range(5, 8), "t", mode="append", branch="audit"
+    )["snapshot_id"]
+    head = cat.write(spark.range(8, 9), "t", mode="append")["snapshot_id"]
+    assert [r.id for r in cat.read_changes(spark, "t", 1, head).collect()] == [8]
+    with pytest.raises(ValueError, match="not an ancestor"):
+        cat.read_changes(spark, "t", staged, head)
+    redo = cat.write(
+        spark.range(3), "t", mode="overwrite", branch="audit"
+    )["snapshot_id"]
+    with pytest.raises(ValueError, match="overwrite commit"):
+        cat.read_changes(spark, "t", 1, redo)
+
+
+def test_result_schema_is_the_snapshots_whichever_files_are_read(
+    spark, tmp_path
+):
+    """An append may add a column; every read of that snapshot carries
+    it, whichever files pruning keeps (scan ≡ read + filter) and
+    whichever files a change set holds."""
+    cat = SnapshotCatalog(str(tmp_path / "schema_cat"))
+    cat.write(
+        spark.range(5).selectExpr("id AS k", "'a' AS url"), "t",
+        sort_by=("k",),
+    )
+    cat.write(
+        spark.range(100, 105).selectExpr(
+            "id AS k", "'b' AS url", "1 AS extra"
+        ),
+        "t", sort_by=("k",), mode="append",
+    )
+    cat.write(
+        spark.range(200, 203).selectExpr("id AS k", "'c' AS url"), "t",
+        sort_by=("k",), mode="append",
+    )
+    full = cat.read(spark, "t")
+    assert full.columns == ["k", "url", "extra"]
+    for lo, hi in [(0, 4), (100, 104), (200, 202), (1000, 1004)]:
+        got = cat.scan(spark, "t", {"k": (lo, hi)})
+        assert got.columns == full.columns, (lo, hi)
+        assert sorted(got.collect()) == sorted(
+            full.filter(f"k BETWEEN {lo} AND {hi}").collect()
+        )
+    for lo, hi in [(2, 3), (3, 3)]:  # the delta is the old-schema dir / empty
+        delta = cat.read_changes(spark, "t", lo, hi)
+        assert delta.columns == full.columns, (lo, hi)
+    delta = cat.read_changes(spark, "t", 2, 3)
+    assert sorted(r.k for r in delta.collect()) == [200, 201, 202]
+
+
+def test_read_calls_load_the_manifest_once(spark, tmp_path, monkeypatch):
+    """Each read call resolves its snapshot, schema state and files from
+    ONE manifest load; a full compaction resolves its source, marker
+    walk and rows from one more (write's parent load and the commit's
+    version check are the other two)."""
+    cat = SnapshotCatalog(str(tmp_path / "loads_cat"))
+    df = spark.range(40).selectExpr("id AS k", "CAST(id AS STRING) AS url")
+    cat.write(df, "t", sort_by=("k",), n_files=2, bloom_cols=("url",))
+    cat.write(
+        spark.range(40, 50).selectExpr("id AS k", "CAST(id AS STRING) AS url"),
+        "t", sort_by=("k",), mode="append",
+    )
+    cat.delete_keys(spark, "t", spark.createDataFrame([("3",)], "url string"))
+    loads: list[str] = []
+    orig = cat._load_manifest
+    monkeypatch.setattr(
+        cat, "_load_manifest", lambda t: loads.append(t) or orig(t)
+    )
+    calls = {
+        "read": lambda: cat.read(spark, "t"),
+        "scan_ranges": lambda: cat.scan(spark, "t", {"k": (0, 9)}),
+        "scan_eq": lambda: cat.scan(spark, "t", eq={"url": "7"}),
+        "scan": lambda: cat.scan(spark, "t"),
+        "count_fast": lambda: cat.count(spark, "t", snapshot_id=2),
+        "count_deletes": lambda: cat.count(spark, "t"),
+        "count_ranges": lambda: cat.count(spark, "t", ranges={"k": (0, 9)}),
+        "read_changes": lambda: cat.read_changes(spark, "t", 1, 2),
+        "file_metrics": lambda: cat.file_metrics(spark, "t"),
+        "compact": lambda: cat.compact(spark, "t", n_files=1),
+    }
+    got = {}
+    for name, fn in calls.items():
+        loads.clear()
+        fn()
+        got[name] = len(loads)
+    want = {name: 1 for name in calls}
+    want["compact"] = 3
+    assert got == want
+
+
+def test_partitioned_append_after_rename_keeps_its_values(spark, tmp_path):
+    """Files bind to the schema version of their COMMIT dir; a
+    hive-partitioned file sits one level below it (``_pv0=…/``) and
+    must not be read as a legacy file of the oldest version."""
+    cat = SnapshotCatalog(str(tmp_path / "pv_rename"))
+    spec = [["identity", "g"]]
+    cat.write(
+        spark.range(4).selectExpr("id", "id % 2 AS g", "id * 10 AS v"),
+        "t", partition_by=spec,
+    )
+    cat.rename_column(spark, "t", "v", "w")
+    cat.write(
+        spark.range(4, 8).selectExpr("id", "id % 2 AS g", "id * 10 AS w"),
+        "t", partition_by=spec, mode="append",
+    )
+    got = sorted((r.id, r.w) for r in cat.read(spark, "t").collect())
+    assert got == [(i, i * 10) for i in range(8)]
