@@ -10,11 +10,17 @@ Scale notes (10^12 docs):
 * MinHash LSH: shingles → signatures is map-side only; candidate
   generation shuffles (band_hash) pairs within small buckets;
 * SimHash: map-side signature, self-join on rotated prefix buckets;
+* every near-dup operator (MinHash, SimHash, embedding near-dup,
+  SemDeDup) searches pairs among one representative per
+  exact-duplicate group and fans them back out through one helper,
+  :func:`_collapse_expand`, so identical rows never fill a bucket;
 * all tie-breaks are total orders (min doc_id) ⇒ deterministic
   survivors under any parallelism (same guarantee as mosaic_dedup).
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -46,6 +52,120 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
         .agg(F.min_by(F.struct(*cols), F.col(id_col)).alias("_w"))
     )
     return win.select(*[F.col(f"_w.{c}").alias(c) for c in cols])
+
+
+def _collapse_expand(
+    rows: DataFrame,
+    key: Column,
+    rep_pairs: Callable[[DataFrame], DataFrame],
+    within: Column | None,
+    expand: str,
+    max_group: int | None = None,
+) -> DataFrame:
+    """Near-duplicate pairs of ``rows(id, …)`` found among one
+    representative per exact-duplicate group, then fanned back out to
+    the members — the hot-bucket defense of every near-dup operator
+    (MinHash, SimHash, embedding near-dup, SemDeDup).
+
+    n identical rows collide in every LSH band, SimHash block, SRP
+    bucket or k-means cluster, so a pair search over the raw rows emits
+    ~n²/2 pairs from one key, and no number of bands or planes splits
+    identical inputs.  Here rows with equal ``key`` (the sha2 text
+    digest, the SimHash signature, the q7-quantised vector) map to
+    their min-id representative: the map-side combinable min gives the
+    ``(id, rep_id)`` mapping, whose join fans a hot key 1×n, never n×n.
+    ``rep_pairs`` runs on the representatives' own rows only and
+    returns ``(id_a < id_b, value…)``.  The key must determine the pair
+    test, so a member pair passes iff its representatives' pair does,
+    with the same values.
+
+    ``within`` is the value each value column takes on a within-group
+    pair, evaluated on the representative's row (|shingle set| for
+    MinHash's inter and uni, 0 for a distance); None when the pairs
+    carry no value.  ``expand``:
+      * ``"all"`` — every implied member pair: the cross pairs of both
+        representatives' members (``least``/``greatest``), plus the
+        within-group pairs.  Equal to the pair search over the raw
+        rows; the output is quadratic in group size, so ``max_group``
+        (when given) fails fast on a larger group before any pair work;
+      * ``"star"`` — the representative pairs plus one (rep, member)
+        pair per member: O(n) output, same connected components.
+
+    The ``(id, key)`` projection and the mapping are persisted (the
+    representatives, group sizes and fan-out all read them) and stay
+    cached for the result's lifetime."""
+    if expand not in ("all", "star"):
+        raise ValueError(f"unknown expand mode {expand!r}")
+    # hash the rows ONCE: keyed is the tiny (id, key) projection, so
+    # reps and mapping both read it instead of re-deriving the key
+    keyed = rows.select("id", key.alias("_h")).persist()
+    reps = keyed.groupBy("_h").agg(F.min("id").alias("rep_id"))
+    mapping = keyed.join(reps, "_h").select("id", "rep_id").persist()
+    counts = mapping.groupBy("rep_id").agg(F.count(F.lit(1)).alias("_gn"))
+    rep_rows = rows.join(reps.select(F.col("rep_id").alias("id")), "id", "semi")
+    try:
+        if max_group is not None and expand == "all":
+            big = (
+                counts.filter(F.col("_gn") > max_group)
+                .orderBy(F.desc("_gn"))
+                .first()
+            )
+            if big is not None:
+                raise ValueError(
+                    f"duplicate group of representative {big['rep_id']} has "
+                    f"{big['_gn']:,} members (> {max_group:,}); its pair "
+                    "clique is quadratic AND lands on one join key — use "
+                    "expand='star' (linear representative→member pairs) or "
+                    "raise max_group_size deliberately"
+                )
+        pairs = rep_pairs(rep_rows)
+    except Exception:
+        keyed.unpersist()
+        mapping.unpersist()
+        raise
+    vals = [c for c in pairs.columns if c not in ("id_a", "id_b")]
+    fill = [F.col("_ss").alias(c) for c in vals]
+    # one within value per multi-member group, from its representative
+    multi = counts.filter(F.col("_gn") > 1)
+    sizes = rep_rows.join(
+        multi.select(F.col("rep_id").alias("id")), "id", "semi"
+    ).select(
+        F.col("id").alias("rep_id"),
+        *([] if within is None else [within.alias("_ss")]),
+    )
+    if expand == "star":
+        members = mapping.filter(F.col("id") != F.col("rep_id"))
+        if within is not None:
+            members = members.join(sizes, "rep_id")
+        return pairs.unionByName(
+            members.select(
+                F.col("rep_id").alias("id_a"), F.col("id").alias("id_b"), *fill
+            )
+        )
+    ma = mapping.select(F.col("id").alias("_xa"), F.col("rep_id").alias("id_a"))
+    mb = mapping.select(F.col("id").alias("_xb"), F.col("rep_id").alias("id_b"))
+    cross = (
+        pairs.join(ma, "id_a")
+        .join(mb, "id_b")
+        .select(
+            F.least("_xa", "_xb").alias("id_a"),
+            F.greatest("_xa", "_xb").alias("id_b"),
+            *vals,
+        )
+    )
+    # restrict the mapping to multi-member groups FIRST (the sizes
+    # dimension is exactly those groups): the within self-join then
+    # pairs only duplicate families instead of self-pairing every
+    # singleton of the corpus and filtering afterwards
+    m_multi = mapping.join(sizes, "rep_id")
+    w1 = m_multi.select(*sizes.columns, F.col("id").alias("_xa"))
+    w2 = m_multi.select("rep_id", F.col("id").alias("_xb"))
+    within_pairs = (
+        w1.join(w2, "rep_id")
+        .filter(F.col("_xa") < F.col("_xb"))
+        .select(F.col("_xa").alias("id_a"), F.col("_xb").alias("id_b"), *fill)
+    )
+    return cross.unionByName(within_pairs)
 
 
 # ---------------------------------------------------------------------------
@@ -862,7 +982,6 @@ def minhash_dedup(
     bands: int = 16,
     threshold_milli: int = 800,
     w: int = 5,
-    collapse_exact: bool = True,
     expand: str = "all",
 ) -> DataFrame:
     """Full pipeline: **exact-text pre-collapse** → signatures → LSH
@@ -881,31 +1000,25 @@ def minhash_dedup(
     milli of their signature positions (the estimate prefilter) before
     the exact verify.
 
-    The pre-collapse (``collapse_exact``, on by default) is the
-    hot-bucket defense the 10^12-doc case REQUIRES: n byte-identical
-    boilerplate docs have identical signatures, so they land in the
-    same (band, hash) bucket in *every* band and the candidate
-    self-join emits ~bands·n²/2 pairs.  Grouping by exact content hash
-    first (sha2-256, the same key as :func:`exact_dedup`) runs the
-    whole LSH machinery on one representative per distinct text —
-    identical docs can never inflate a bucket, signatures are computed
-    once per distinct text, and the result is provably identical: the
-    signature/estimate/verify stack is a pure function of the text, so
-    a member pair passes iff its representative pair passes.
+    The pre-collapse is :func:`_collapse_expand` keyed on the sha2-256
+    text digest (the key of :func:`exact_dedup`): n byte-identical
+    boilerplate docs would land in the same (band, hash) bucket in
+    *every* band, so the LSH stack (:func:`_minhash_pairs_core`) runs
+    on one representative per distinct text.  The signature/estimate/
+    verify stack is a pure function of the text, so a member pair
+    passes iff its representative pair passes.
 
     ``expand`` controls the fan-out:
       * ``"all"`` — every implied member pair, with (inter, uni) taken
         from the representative pair (within-group pairs get
-        inter = uni = |shingle set|).  Output-faithful to the
-        un-collapsed pipeline; note the OUTPUT itself is inherently
-        quadratic in exact-group size.
+        inter = uni = |shingle set|).  Equal to the core run over the
+        raw corpus; note the OUTPUT itself is inherently quadratic in
+        exact-group size.
       * ``"star"`` — within each exact group emit only (rep, member)
         spanning pairs, and cross-group pairs only between
         representatives: O(n) output with identical connected
         components / dup_groups downstream — the form to use at scale.
     """
-    if expand not in ("all", "star"):
-        raise ValueError(f"unknown expand mode {expand!r}")
     docs = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
     # the shingle universe of the RAW corpus equals the universe of its
     # distinct-text representatives (duplicate texts add no shingles) —
@@ -913,80 +1026,15 @@ def minhash_dedup(
     # job scans the plain corpus instead of materializing the
     # sha2/groupBy/semi-join chain a first time
     universe = _shingle_universe(docs, w)
-    if not collapse_exact:
-        return _minhash_pairs_core(
-            docs, num_perm, bands, threshold_milli, w, universe
-        )
-    # hash the corpus ONCE: keyed is the tiny (id, 32-byte digest)
-    # projection, persisted so reps and mapping both read it instead of
-    # re-running sha2 over the full text column
-    keyed = docs.select(
-        "id", F.sha2(F.coalesce(F.col("t"), F.lit("")), 256).alias("_h")
-    ).persist()
-    # map-side combinable min per content hash; the mapping join fans a
-    # hot content hash 1×n, never n×n
-    reps = keyed.groupBy("_h").agg(F.min("id").alias("rep_id"))
-    mapping = keyed.join(reps, "_h").select("id", "rep_id").persist()
-    rep_docs = docs.join(
-        reps.select(F.col("rep_id").alias("id")), "id", "semi"
+    return _collapse_expand(
+        docs,
+        F.sha2(F.coalesce(F.col("t"), F.lit("")), 256),
+        lambda reps: _minhash_pairs_core(
+            reps, num_perm, bands, threshold_milli, w, universe
+        ),
+        _shingle_size_udf(w)(F.col("t")),
+        expand,
     )
-    rep_pairs = _minhash_pairs_core(
-        rep_docs, num_perm, bands, threshold_milli, w, universe
-    )
-    # exact groups with >1 member need |shingle set| for their
-    # within-group pairs — computed once per such representative
-    multi = mapping.groupBy("rep_id").agg(
-        F.count(F.lit(1)).alias("_gn")
-    ).filter(F.col("_gn") > 1)
-    ssize = _shingle_size_udf(w)
-    sizes = (
-        rep_docs.join(
-            multi.select(F.col("rep_id").alias("id")), "id", "semi"
-        )
-        .select(F.col("id").alias("rep_id"), ssize(F.col("t")).alias("_ss"))
-    )
-    if expand == "star":
-        within = (
-            mapping.filter(F.col("id") != F.col("rep_id"))
-            .join(sizes, "rep_id")
-            .select(
-                F.col("rep_id").alias("id_a"),
-                F.col("id").alias("id_b"),
-                F.col("_ss").alias("inter"),
-                F.col("_ss").alias("uni"),
-            )
-        )
-        return rep_pairs.unionByName(within)
-    ma = mapping.select(F.col("id").alias("_xa"), F.col("rep_id").alias("id_a"))
-    mb = mapping.select(F.col("id").alias("_xb"), F.col("rep_id").alias("id_b"))
-    cross = (
-        rep_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.least("_xa", "_xb").alias("id_a"),
-            F.greatest("_xa", "_xb").alias("id_b"),
-            "inter",
-            "uni",
-        )
-    )
-    # restrict the mapping to multi-member groups FIRST (the sizes
-    # dimension is exactly those groups): the within self-join then
-    # pairs only duplicate families instead of self-pairing every
-    # singleton of the corpus and filtering afterwards
-    m_multi = mapping.join(sizes, "rep_id")
-    w1 = m_multi.select("rep_id", "_ss", F.col("id").alias("_xa"))
-    w2 = m_multi.select("rep_id", F.col("id").alias("_xb"))
-    within = (
-        w1.join(w2, "rep_id")
-        .filter(F.col("_xa") < F.col("_xb"))
-        .select(
-            F.col("_xa").alias("id_a"),
-            F.col("_xb").alias("id_b"),
-            F.col("_ss").alias("inter"),
-            F.col("_ss").alias("uni"),
-        )
-    )
-    return cross.unionByName(within)
 
 
 # ---------------------------------------------------------------------------
@@ -1027,9 +1075,37 @@ def simhash_signatures(
 def simhash_near_pairs(
     sigs: DataFrame,
     max_hamming: int = 3,
-    collapse_identical: bool = True,
     expand: str = "all",
     bucket_cap: int | None = None,
+) -> DataFrame:
+    """Pairs of ``sigs(id, simhash)`` within Hamming distance
+    ``max_hamming`` → (id_a, id_b, hamming).
+
+    Identical texts hash to identical signatures, which collide in
+    EVERY block — n boilerplate copies would put n ids in the same
+    bucket per block.  So the banding join (:func:`_simhash_pairs_core`)
+    runs over one representative per distinct signature (min id —
+    stricter than, and subsuming, exact-text identity) through
+    :func:`_collapse_expand`, which fans the pairs back out:
+    ``expand="all"`` gives every implied member pair (hamming 0 within
+    a signature group — equal to the core run over the raw signatures,
+    though the output itself is quadratic in group size);
+    ``expand="star"`` gives (rep, member) spanning pairs within groups
+    and rep-level pairs across — O(n) output with identical connected
+    components downstream.  ``bucket_cap`` drops residual oversized
+    buckets (distinct-but-near-identical template families); see
+    :func:`_cap_buckets`."""
+    return _collapse_expand(
+        sigs,
+        F.col("simhash"),
+        lambda reps: _simhash_pairs_core(reps, max_hamming, bucket_cap),
+        F.lit(0).cast("int"),
+        expand,
+    )
+
+
+def _simhash_pairs_core(
+    sigs: DataFrame, max_hamming: int, bucket_cap: int | None
 ) -> DataFrame:
     """Candidate pairs within Hamming distance via block banding,
     verified with native bit_count (Spark 3.5+).
@@ -1037,66 +1113,7 @@ def simhash_near_pairs(
     The signature is split into ``max_hamming + 1`` near-equal bit
     blocks — by pigeonhole, any pair ≤ max_hamming bits apart shares at
     least one full block, so recall is GUARANTEED at the requested
-    radius (a fixed 4-block split only guarantees hamming ≤ 3).
-
-    ``collapse_identical`` (default on) is the hot-bucket defense:
-    identical texts hash to identical signatures, which collide in
-    EVERY block — n boilerplate copies would put n ids in the same
-    bucket per block and the self-join would emit ~blocks·n²/2 pairs.
-    Collapsing to one representative per distinct signature first
-    (min id — stricter than, and subsuming, exact-text identity) runs
-    the banding join over distinct signatures only, then fans results
-    back out: ``expand="all"`` reproduces every implied member pair
-    (hamming 0 within a signature group — output-faithful to the
-    un-collapsed join, though the output itself is quadratic in group
-    size); ``expand="star"`` emits (rep, member) spanning pairs within
-    groups and rep-level pairs across — O(n) output with identical
-    connected components downstream.  ``bucket_cap`` drops residual
-    oversized buckets (distinct-but-near-identical template families);
-    see :func:`_cap_buckets`."""
-    if expand not in ("all", "star"):
-        raise ValueError(f"unknown expand mode {expand!r}")
-    if collapse_identical:
-        reps = sigs.groupBy("simhash").agg(F.min("id").alias("id"))
-        mapping = sigs.join(
-            reps.select("simhash", F.col("id").alias("rep_id")), "simhash"
-        ).select("id", "rep_id").persist()
-        rep_pairs = simhash_near_pairs(
-            reps.select("id", "simhash"),
-            max_hamming,
-            collapse_identical=False,
-            bucket_cap=bucket_cap,
-        )
-        if expand == "star":
-            within = mapping.filter(F.col("id") != F.col("rep_id")).select(
-                F.col("rep_id").alias("id_a"),
-                F.col("id").alias("id_b"),
-                F.lit(0).cast("int").alias("hamming"),
-            )
-            return rep_pairs.unionByName(within)
-        ma = mapping.select(F.col("id").alias("_xa"), F.col("rep_id").alias("id_a"))
-        mb = mapping.select(F.col("id").alias("_xb"), F.col("rep_id").alias("id_b"))
-        cross = (
-            rep_pairs.join(ma, "id_a")
-            .join(mb, "id_b")
-            .select(
-                F.least("_xa", "_xb").alias("id_a"),
-                F.greatest("_xa", "_xb").alias("id_b"),
-                "hamming",
-            )
-        )
-        w1 = mapping.select("rep_id", F.col("id").alias("_xa"))
-        w2 = mapping.select("rep_id", F.col("id").alias("_xb"))
-        within = (
-            w1.join(w2, "rep_id")
-            .filter(F.col("_xa") < F.col("_xb"))
-            .select(
-                F.col("_xa").alias("id_a"),
-                F.col("_xb").alias("id_b"),
-                F.lit(0).cast("int").alias("hamming"),
-            )
-        )
-        return cross.unionByName(within)
+    radius (a fixed 4-block split only guarantees hamming ≤ 3)."""
     n_blocks = min(max_hamming + 1, 64)
     widths = [64 // n_blocks + (1 if i < 64 % n_blocks else 0) for i in range(n_blocks)]
     offsets = np.concatenate(([0], np.cumsum(widths[:-1]))).tolist()

@@ -15,6 +15,8 @@ gated on planted-SET membership — scale-invariance makes the top-k
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -22,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from eodal_spark.operators.dedup import _collapse_expand, connected_components
 from eodal_spark.plans.introspect import spread_to_parallelism
 from eodal_spark.session import local_frame
 
@@ -349,104 +352,29 @@ def _quantize_vec(c: Column) -> Column:
     return F.transform(c, lambda x: _q7(x))
 
 
-_PAIR_SCHEMA_SQ = T.StructType(
-    [
-        T.StructField("id_a", T.LongType()),
-        T.StructField("id_b", T.LongType()),
-        T.StructField("sqdist", T.LongType()),
-    ]
-)
-
-
-def _bucket_sqdist_pairs(
-    stacked: DataFrame, threshold: float, key_cols: tuple[str, str]
+def _gram_block_pairs(
+    rows: DataFrame,
+    vec: str,
+    keys: list[str],
+    test: Callable,
+    val: T.StructField | None = None,
 ) -> DataFrame:
-    """(vec_id, embedding, key…) rows → (id_a < id_b, sqdist) pairs with
-    q7 sqdist ≤ threshold, fused inside the bucket workers.
+    """(id, ``vec``, key…) rows → (id_a < id_b[, val]) pairs of rows
+    sharing every key that pass ``test``, found by gram-matrix blocks
+    inside the workers.
 
-    Replaces the bucket self-join + per-pair codegen'd
-    ``l2_sqdist_q7`` filter: a 1k-row bucket emits ~500k join rows each
-    evaluating a 64-term zip_with/aggregate expression, while here the
-    whole bucket is ONE int64 gram-matrix block
-    (‖a‖² + ‖b‖² − 2·a·b over the floor(x·10⁷) grid — exactly the
-    operator's integer metric, so results are bit-identical) and only
-    threshold survivors are materialized (guide §1.2/§2.3).  Same
-    output as the join form; duplicates across tables are deduped
-    downstream as before."""
-    ka, kb = key_cols
-
-    def gen(it):
-        frames = list(it)
-        if not frames:
-            return
-        df = pd.concat(frames, ignore_index=True)
-        if df.empty:
-            return
-        key = (
-            df[ka].to_numpy(np.int64) * np.int64(1 << 33)
-            + df[kb].to_numpy(np.int64)
-        )
-        order = np.argsort(key, kind="stable")
-        key = key[order]
-        ids = df["vec_id"].to_numpy(np.int64)[order]
-        mat = np.stack(
-            [np.asarray(v, dtype=np.float64) for v in df["embedding"].to_numpy()[order]]
-        )
-        q = np.floor(mat * 1e7).astype(np.int64)
-        bounds = np.nonzero(np.diff(key))[0] + 1
-        starts = np.concatenate(([0], bounds, [len(key)]))
-        out_a, out_b, out_d = [], [], []
-        for s, e in zip(starts[:-1], starts[1:]):
-            n = e - s
-            if n < 2:
-                continue
-            bq = q[s:e]
-            bids = ids[s:e]
-            # within-bucket rows sorted by vec_id so i<j ⇒ id_i<id_j
-            o = np.argsort(bids, kind="stable")
-            bq, bids = bq[o], bids[o]
-            norms = (bq * bq).sum(axis=1)
-            for cs in range(0, n, 1024):
-                ce = min(cs + 1024, n)
-                d = (
-                    norms[cs:ce, None]
-                    + norms[None, :]
-                    - 2 * (bq[cs:ce] @ bq.T)
-                )
-                ii, jj = np.nonzero(d <= threshold)
-                keep = jj > ii + cs
-                if keep.any():
-                    out_a.append(bids[ii[keep] + cs])
-                    out_b.append(bids[jj[keep]])
-                    out_d.append(d[ii[keep], jj[keep]])
-        if out_a:
-            yield pd.DataFrame(
-                {
-                    "id_a": np.concatenate(out_a),
-                    "id_b": np.concatenate(out_b),
-                    "sqdist": np.concatenate(out_d),
-                }
-            )
-
-    return stacked.repartition(F.col(ka), F.col(kb)).mapInPandas(
-        gen, _PAIR_SCHEMA_SQ
-    )
-
-
-def _cluster_dot_pairs(assigned: DataFrame, tau: float) -> DataFrame:
-    """(rep_id, nvec, cl) → (id_a < id_b) pairs with dot ≥ tau, one
-    float64 gram-matrix block per cluster (unit vectors ⇒ dot ≡
-    cosine).  Replaces the cluster self-join whose per-pair 64-term
-    codegen dot made SemDeDup quadratic in wall-clock (measured 55 s →
-    ~3 s at 22k reps / 8 clusters).  Matmul accumulates in float64 like
-    the sequential codegen sum; orderings can differ only by ~1 ulp,
-    which is immaterial at any tau margin wider than ~1e-12 (the
-    operator's fixtures sit 0.43 away)."""
+    Replaces a key self-join with a per-pair codegen'd metric: a
+    1k-row bucket emits ~500k join rows each evaluating a 64-term
+    zip_with/aggregate expression, while here rows are sorted by key,
+    then id (so i < j ⇒ id_i < id_j within a group), and each group is
+    walked in 1024-row blocks against the whole group, keeping j > i:
+    only the pairs that pass are materialized (guide §1.2/§2.3).
+    ``test(a, b)`` takes a block ``a`` and the group ``b`` as float64
+    matrices and returns (hit mask, values or None); the values fill
+    ``val`` (see :func:`_q7_sqdist_test`, :func:`_dot_test`)."""
     schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-        ]
+        [T.StructField("id_a", T.LongType()), T.StructField("id_b", T.LongType())]
+        + ([val] if val is not None else [])
     )
 
     def gen(it):
@@ -456,38 +384,130 @@ def _cluster_dot_pairs(assigned: DataFrame, tau: float) -> DataFrame:
         df = pd.concat(frames, ignore_index=True)
         if df.empty:
             return
-        cl = df["cl"].to_numpy(np.int64)
-        order = np.argsort(cl, kind="stable")
-        cl = cl[order]
-        ids = df["rep_id"].to_numpy(np.int64)[order]
+        ids = df["id"].to_numpy(np.int64)
+        kv = np.stack([df[k].to_numpy(np.int64) for k in keys], axis=1)
+        order = np.lexsort((ids, *kv.T[::-1]))
+        ids = ids[order]
         mat = np.stack(
-            [np.asarray(v, dtype=np.float64) for v in df["nvec"].to_numpy()[order]]
+            [np.asarray(v, dtype=np.float64) for v in df[vec].to_numpy()[order]]
         )
-        bounds = np.nonzero(np.diff(cl))[0] + 1
-        starts = np.concatenate(([0], bounds, [len(cl)]))
-        out_a, out_b = [], []
+        change = (np.diff(kv[order], axis=0) != 0).any(axis=1)
+        starts = np.concatenate(([0], np.nonzero(change)[0] + 1, [len(ids)]))
+        out = []
         for s, e in zip(starts[:-1], starts[1:]):
-            n = e - s
-            if n < 2:
+            if e - s < 2:
                 continue
-            bids = ids[s:e]
-            o = np.argsort(bids, kind="stable")
-            bm = mat[s:e][o]
-            bids = bids[o]
-            for cs in range(0, n, 1024):
-                ce = min(cs + 1024, n)
-                g = bm[cs:ce] @ bm.T
-                ii, jj = np.nonzero(g >= tau)
+            bm, bids = mat[s:e], ids[s:e]
+            for cs in range(0, e - s, 1024):
+                hit, v = test(bm[cs : cs + 1024], bm)
+                ii, jj = np.nonzero(hit)
                 keep = jj > ii + cs
                 if keep.any():
-                    out_a.append(bids[ii[keep] + cs])
-                    out_b.append(bids[jj[keep]])
-        if out_a:
+                    ii, jj = ii[keep], jj[keep]
+                    out.append((bids[ii + cs], bids[jj], None if v is None else v[ii, jj]))
+        if out:
+            # zip stops at the schema: a test without values adds none
             yield pd.DataFrame(
-                {"id_a": np.concatenate(out_a), "id_b": np.concatenate(out_b)}
+                {n: np.concatenate(c) for n, c in zip(schema.names, zip(*out))}
             )
 
-    return assigned.repartition(F.col("cl")).mapInPandas(gen, schema)
+    return rows.repartition(*[F.col(k) for k in keys]).mapInPandas(gen, schema)
+
+
+def _q7_sqdist_test(threshold: float):
+    """Block test: q7 sqdist ≤ ``threshold``, as the int64 gram form
+    ‖a‖² + ‖b‖² − 2·a·b over the floor(x·10⁷) grid — exactly the
+    integer metric of :func:`l2_sqdist_q7`, so bit-identical to it."""
+
+    def test(a, b):
+        qa = np.floor(a * 1e7).astype(np.int64)
+        qb = np.floor(b * 1e7).astype(np.int64)
+        d = (qa * qa).sum(axis=1)[:, None] + (qb * qb).sum(axis=1)[None, :] - 2 * (
+            qa @ qb.T
+        )
+        return d <= threshold, d
+
+    return test
+
+
+def _dot_test(tau: float):
+    """Block test: float64 dot ≥ ``tau`` (cosine on unit vectors).
+    The matmul accumulates in float64 like the sequential codegen sum;
+    orderings can differ only by ~1 ulp, immaterial at any tau margin
+    wider than ~1e-12 (SemDeDup's fixtures sit 0.43 away)."""
+
+    def test(a, b):
+        return a @ b.T >= tau, None
+
+    return test
+
+
+def _srp_near_pairs(
+    rows: DataFrame,
+    sqdist_threshold: float,
+    dim: int,
+    n_planes: int | None,
+    n_tables: int,
+    target_bucket_rows: int,
+    max_bucket_rows: int,
+    guard: str,
+) -> DataFrame:
+    """Near-dup pairs (id_a < id_b, q7 ``sqdist``) of ``rows(id,
+    embedding)`` by SRP bucketing — the representative-level core of
+    :func:`embedding_near_dup_pairs`, which documents the arguments."""
+    if n_planes is None:
+        n_rows = rows.count()  # one cheap agg; sizes the bucket space
+        n_planes = max(4, int(np.ceil(np.log2(max(n_rows / target_bucket_rows, 2.0)))))
+
+    # one scan: every table's bucket id as a column, then explode
+    tables = [
+        srp_bucket_udf(dim, n_planes, seed=2000 + t)(F.col("embedding")).alias(f"_b{t}")
+        for t in range(n_tables)
+    ]
+    stacked = rows.select("id", "embedding", *tables).select(
+        "id",
+        "embedding",
+        F.explode(
+            F.array(*[
+                F.struct(F.lit(t).alias("tbl"), F.col(f"_b{t}").alias("bucket"))
+                for t in range(n_tables)
+            ])
+        ).alias("_tb"),
+    ).select("id", "embedding", F.col("_tb.tbl").alias("tbl"), F.col("_tb.bucket").alias("bucket"))
+
+    # persist in BOTH guard paths: sizes, the self-join's build side and
+    # its probe side would otherwise each rerun the n_tables SRP UDFs
+    # over the corpus (callers may unpersist the result's lineage)
+    stacked = stacked.persist()
+    sizes = stacked.groupBy("tbl", "bucket").count()
+    if guard == "raise":
+        top = sizes.orderBy(F.desc("count")).first()
+        if top is not None and top["count"] > max_bucket_rows:
+            stacked.unpersist()
+            raise ValueError(
+                f"SRP bucket (table {top['tbl']}, bucket {top['bucket']}) has "
+                f"{top['count']:,} rows (> {max_bucket_rows:,}); raise n_planes "
+                f"(got {n_planes}) or lower target_bucket_rows"
+            )
+        ok = stacked
+    else:
+        # broadcast the OVERSIZED buckets (bounded, tiny) and anti-join —
+        # the keep-list of all small buckets scales with the corpus and
+        # would defeat the broadcast at 10^12 rows
+        over = sizes.filter(F.col("count") > max_bucket_rows).select("tbl", "bucket")
+        ok = stacked.join(F.broadcast(over), ["tbl", "bucket"], "left_anti")
+
+    # pairs generated by per-bucket int64 gram-matrix blocks inside the
+    # workers (bit-identical q7 metric) — see _gram_block_pairs for why
+    # the self-join + codegen distance form was the bottleneck;
+    # duplicates across tables are dropped after the exact filter
+    return _gram_block_pairs(
+        ok.select("id", "embedding", "tbl", "bucket"),
+        "embedding",
+        ["tbl", "bucket"],
+        _q7_sqdist_test(float(sqdist_threshold)),
+        T.StructField("sqdist", T.LongType()),
+    ).dropDuplicates(["id_a", "id_b"])
 
 
 def embedding_near_dup_pairs(
@@ -499,30 +519,29 @@ def embedding_near_dup_pairs(
     target_bucket_rows: int = 1024,
     max_bucket_rows: int = 200_000,
     guard: str = "raise",
-    collapse_exact: bool = True,
-    expand: str = "closure",
+    expand: str = "all",
     max_group_size: int = 2_000,
 ) -> DataFrame:
     """Embedding near-duplicate pairs (id_a < id_b, quantized-exact
     ``sqdist``), engineered for 10^12-row corpora:
 
-    1. **exact-duplicate collapse** — vectors identical under q7
-       quantization group to one representative (min id); only
-       representatives enter SRP bucketing.  This removes the classic
+    1. **exact-duplicate collapse** — :func:`dedup._collapse_expand`
+       keyed on the q7-quantised vector: identical vectors group to one
+       representative (min id) and only representatives enter SRP
+       bucketing (:func:`_srp_near_pairs`).  This removes the classic
        skew killer (millions of identical empty-doc embeddings landing
        in one SRP bucket — no number of extra planes can split
-       identical vectors).  The output is then **expanded back to the
-       full pair closure** (members inherit their representative's
-       matches, and duplicate groups emit their within-group pairs at
-       sqdist 0), so the result equals the all-pairs definition — the
-       expansion is linear in the *output* size, which is the
-       irreducible cost of the pairs contract itself.  Because a
-       duplicate group's clique is quadratic in its size AND lands on
-       one join key (unsplittable), groups larger than
-       ``max_group_size`` fail fast with guidance; ``expand="star"``
-       emits the linear representative→member star instead of the
-       clique (the right contract for survivor-selection dedup, where
-       the closure is redundant).
+       identical vectors).  Quantized-identical vectors have the SAME
+       q7 distance to any third vector, so the fan-out is exact:
+       ``expand="all"`` (default) gives every member pair, with
+       within-group pairs at sqdist 0, equal to the all-pairs
+       definition — linear in the *output* size, the irreducible cost
+       of the pairs contract itself.  Because a duplicate group's
+       clique is quadratic in its size AND lands on one join key
+       (unsplittable), groups larger than ``max_group_size`` fail fast
+       with guidance; ``expand="star"`` emits the linear
+       representative→member pairs instead of the clique (the right
+       contract for survivor-selection dedup).
     2. **adaptive plane count** — ``n_planes`` defaults to
        log2(|reps| / target_bucket_rows), so expected bucket size stays
        ~``target_bucket_rows`` at any corpus size instead of the
@@ -538,140 +557,24 @@ def embedding_near_dup_pairs(
     (table, bucket) key; the exact q7 distance filter runs before
     dropDuplicates so only true near-pairs are deduped.
 
-    Caching note: intermediates (reps/members/bucketing) are persisted
-    because the guard makes this operator eager and the pair join reuses
-    them; they stay cached for the returned DataFrame's lifetime —
-    long-lived sessions issuing many calls should ``spark.catalog.
-    clearCache()`` between them."""
+    Caching note: intermediates (the collapse mapping, the bucketing)
+    are persisted because the guards make this operator eager and the
+    pair stage reuses them; they stay cached for the returned
+    DataFrame's lifetime — long-lived sessions issuing many calls
+    should ``spark.catalog.clearCache()`` between them."""
     if guard not in ("raise", "skip"):
         raise ValueError(guard)
-    if expand not in ("closure", "star"):
-        raise ValueError(expand)
-    members = None
-    if collapse_exact:
-        qv = corpus.select(
-            "vec_id", "embedding", _quantize_vec(F.col("embedding")).alias("_q")
-        )
-        reps = qv.groupBy("_q").agg(
-            F.min("vec_id").alias("rep_id"),
-            F.min_by("embedding", "vec_id").alias("embedding"),
-        ).persist()  # reused by base, the plane-count sizing, and expansion
-        members = qv.join(reps.select("_q", "rep_id"), "_q").select(
-            "rep_id", "vec_id"
-        ).persist()  # reused by ma/mb and both sides of the within join
-        if expand == "closure":
-            big = (
-                members.groupBy("rep_id")
-                .count()
-                .filter(F.col("count") > max_group_size)
-                .orderBy(F.desc("count"))
-                .first()
-            )
-            if big is not None:
-                members.unpersist()
-                reps.unpersist()
-                raise ValueError(
-                    f"duplicate group of representative {big['rep_id']} has "
-                    f"{big['count']:,} members (> {max_group_size:,}); its "
-                    f"pair clique is quadratic AND lands on one join key — "
-                    f"use expand='star' (linear representative→member pairs) "
-                    f"or raise max_group_size deliberately"
-                )
-        base = reps.select(F.col("rep_id").alias("vec_id"), "embedding")
-    else:
-        base = corpus.select("vec_id", "embedding")
-
-    if n_planes is None:
-        n_rows = base.count()  # one cheap agg; sizes the bucket space
-        n_planes = max(4, int(np.ceil(np.log2(max(n_rows / target_bucket_rows, 2.0)))))
-
-    # one scan: every table's bucket id as a column, then explode
-    tables = [
-        srp_bucket_udf(dim, n_planes, seed=2000 + t)(F.col("embedding")).alias(f"_b{t}")
-        for t in range(n_tables)
-    ]
-    stacked = base.select("vec_id", "embedding", *tables).select(
-        "vec_id",
-        "embedding",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(t).alias("tbl"), F.col(f"_b{t}").alias("bucket"))
-                for t in range(n_tables)
-            ])
-        ).alias("_tb"),
-    ).select("vec_id", "embedding", F.col("_tb.tbl").alias("tbl"), F.col("_tb.bucket").alias("bucket"))
-
-    # persist in BOTH guard paths: sizes, the self-join's build side and
-    # its probe side would otherwise each rerun the n_tables SRP UDFs
-    # over the corpus (callers may unpersist the result's lineage)
-    stacked = stacked.persist()
-    sizes = stacked.groupBy("tbl", "bucket").count()
-    if guard == "raise":
-        top = sizes.orderBy(F.desc("count")).first()
-        if top is not None and top["count"] > max_bucket_rows:
-            stacked.unpersist()
-            if members is not None:
-                reps.unpersist()
-                members.unpersist()
-            raise ValueError(
-                f"SRP bucket (table {top['tbl']}, bucket {top['bucket']}) has "
-                f"{top['count']:,} rows (> {max_bucket_rows:,}); raise n_planes "
-                f"(got {n_planes}), lower target_bucket_rows, or enable "
-                f"collapse_exact if the corpus has identical vectors"
-            )
-        ok = stacked
-    elif guard == "skip":
-        # broadcast the OVERSIZED buckets (bounded, tiny) and anti-join —
-        # the keep-list of all small buckets scales with the corpus and
-        # would defeat the broadcast at 10^12 rows
-        over = sizes.filter(F.col("count") > max_bucket_rows).select("tbl", "bucket")
-        ok = stacked.join(F.broadcast(over), ["tbl", "bucket"], "left_anti")
-    else:
-        raise ValueError(guard)
-
-    # pairs generated by per-bucket int64 gram-matrix blocks inside the
-    # workers (bit-identical q7 metric) — see _bucket_sqdist_pairs for
-    # why the self-join + codegen distance form was the bottleneck
-    pairs = _bucket_sqdist_pairs(
-        ok.select("vec_id", "embedding", "tbl", "bucket"),
-        float(sqdist_threshold),
-        ("tbl", "bucket"),
-    ).dropDuplicates(["id_a", "id_b"])
-    if members is None:
-        return pairs
-    if expand == "star":
-        star = members.filter(F.col("vec_id") != F.col("rep_id")).select(
-            F.col("rep_id").alias("id_a"),
-            F.col("vec_id").alias("id_b"),
-            F.lit(0).cast("long").alias("sqdist"),
-        )
-        return pairs.unionByName(star)
-    # expand back to the full pair closure (see docstring): members
-    # inherit their representative's matches — quantized-identical
-    # vectors have the SAME q7 distance to any third vector, so the
-    # inherited sqdist is exact, not approximate
-    ma = members.select(F.col("rep_id").alias("id_a"), F.col("vec_id").alias("_va"))
-    mb = members.select(F.col("rep_id").alias("id_b"), F.col("vec_id").alias("_vb"))
-    cross = (
-        pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.least("_va", "_vb").alias("id_a"),
-            F.greatest("_va", "_vb").alias("id_b"),
-            "sqdist",
-        )
+    return _collapse_expand(
+        corpus.select(F.col("vec_id").alias("id"), "embedding"),
+        _quantize_vec(F.col("embedding")),
+        lambda reps: _srp_near_pairs(
+            reps, sqdist_threshold, dim, n_planes, n_tables,
+            target_bucket_rows, max_bucket_rows, guard,
+        ),
+        F.lit(0).cast("long"),
+        expand,
+        max_group=max_group_size,
     )
-    within = (
-        members.alias("x")
-        .join(members.alias("y"), "rep_id")
-        .filter(F.col("x.vec_id") < F.col("y.vec_id"))
-        .select(
-            F.col("x.vec_id").alias("id_a"),
-            F.col("y.vec_id").alias("id_b"),
-            F.lit(0).cast("long").alias("sqdist"),
-        )
-    )
-    return cross.unionByName(within)
 
 
 def normalize_vec(c: Column) -> Column:
@@ -713,12 +616,12 @@ def semantic_dedup(
     * **normalize natively** (`normalize_vec` — whole-stage codegen);
       on unit vectors cosine is a plain dot product, so the pair
       predicate needs no per-pair norms;
-    * **exact-collapse first** (same hot-bucket defense as
-      `embedding_near_dup_pairs` and the MinHash pre-collapse): vectors
+    * **exact-collapse first** (`dedup._collapse_expand`, the
+      hot-bucket defense every near-dup operator shares): vectors
       identical under q7 quantization group to one representative, so a
       million identical embeddings cost ONE cluster row, not a 10^12
-      single-key pair clique — the within-group links are re-attached
-      linearly afterwards;
+      single-key pair clique — its ``"star"`` fan-out re-attaches the
+      members linearly as (representative, member) links;
     * **cluster-bucketed pairing**: representatives self-join on their
       nearest-centroid assignment only (SemDeDup's core trick — the
       corpus never sees an all-pairs join); the join key is the cluster
@@ -737,64 +640,53 @@ def semantic_dedup(
     timestamps); this generalizes it to similarity-defined duplicate
     groups.
 
-    Caching note: reps/members stay persisted for the returned plan's
-    lifetime (the guard makes the operator eager) — long-lived sessions
+    Caching note: the collapse mapping and the cluster assignment stay
+    persisted for the returned plan's lifetime (the guard makes the operator eager) — long-lived sessions
     should ``spark.catalog.clearCache()`` between unrelated calls."""
-    from eodal_spark.operators.dedup import connected_components
-
     if guard not in ("raise", "skip"):
         raise ValueError(guard)
-    nv = corpus.select(
-        "vec_id", normalize_vec(F.col("embedding")).alias("nvec")
-    )
-    qv = nv.select("vec_id", "nvec", _quantize_vec(F.col("nvec")).alias("_q"))
-    reps = (
-        qv.groupBy("_q")
-        .agg(
-            F.min("vec_id").alias("rep_id"),
-            F.min_by("nvec", "vec_id").alias("nvec"),
+
+    def cluster_pairs(reps: DataFrame) -> DataFrame:
+        cent = ivf_train_centroids(
+            reps.select(F.col("id").alias("vec_id"), F.col("nvec").alias("embedding")),
+            n_centroids=n_clusters,
+            sample=sample,
+            iters=iters,
+            seed=seed,
         )
-        .persist()
+        assigned = reps.select(
+            "id", "nvec", ivf_assign_udf(cent)(F.col("nvec")).alias("cl")
+        ).persist()
+        sizes = assigned.groupBy("cl").count()
+        big = sizes.filter(F.col("count") > max_cluster_rows)
+        top = big.orderBy(F.desc("count")).first()
+        if top is not None:
+            if guard == "raise":
+                raise ValueError(
+                    f"cluster {top['cl']} holds {top['count']:,} "
+                    f"representatives (> {max_cluster_rows:,}); its pair join "
+                    "is quadratic on one key — raise n_clusters (target "
+                    "|corpus|/n_clusters ≈ 10^3-10^4) or pass guard='skip' "
+                    "to drop oversized clusters (documented recall loss)"
+                )
+            ok = sizes.filter(F.col("count") <= max_cluster_rows).select("cl")
+            assigned = assigned.join(F.broadcast(ok), "cl")
+        # unit vectors: cosine ≡ dot product (no per-pair norms); one
+        # float64 gram block walk per cluster replaces the cluster
+        # self-join whose per-pair 64-term codegen dot made SemDeDup
+        # quadratic in wall-clock (measured 55 s → ~3 s at 22k reps / 8
+        # clusters)
+        return _gram_block_pairs(assigned, "nvec", ["cl"], _dot_test(float(tau)))
+
+    rows = corpus.select(
+        F.col("vec_id").alias("id"), normalize_vec(F.col("embedding")).alias("nvec")
     )
-    members = (
-        qv.join(reps.select("_q", "rep_id"), "_q")
-        .select("rep_id", "vec_id")
-        .persist()
+    # the star fan-out links exact-duplicate members to their
+    # representative (cosine 1)
+    edges = _collapse_expand(
+        rows, _quantize_vec(F.col("nvec")), cluster_pairs, None, "star"
     )
-    cent = ivf_train_centroids(
-        reps.select(F.col("rep_id").alias("vec_id"), F.col("nvec").alias("embedding")),
-        n_centroids=n_clusters,
-        sample=sample,
-        iters=iters,
-        seed=seed,
-    )
-    assigned = reps.select(
-        "rep_id", "nvec", ivf_assign_udf(cent)(F.col("nvec")).alias("cl")
-    ).persist()
-    sizes = assigned.groupBy("cl").count()
-    big = sizes.filter(F.col("count") > max_cluster_rows)
-    top = big.orderBy(F.desc("count")).first()
-    if top is not None:
-        if guard == "raise":
-            raise ValueError(
-                f"cluster {top['cl']} holds {top['count']:,} "
-                f"representatives (> {max_cluster_rows:,}); its pair join "
-                "is quadratic on one key — raise n_clusters (target "
-                "|corpus|/n_clusters ≈ 10^3-10^4) or pass guard='skip' "
-                "to drop oversized clusters (documented recall loss)"
-            )
-        ok = sizes.filter(F.col("count") <= max_cluster_rows).select("cl")
-        assigned = assigned.join(F.broadcast(ok), "cl")
-    # unit vectors: cosine ≡ dot product (no per-pair norms); pairs are
-    # generated by per-cluster gram-matrix blocks inside the workers —
-    # see _cluster_dot_pairs for why the self-join form was quadratic
-    # in wall-clock
-    rep_pairs = _cluster_dot_pairs(assigned, float(tau))
-    # exact-duplicate members link to their representative at cosine 1
-    member_edges = members.filter(F.col("rep_id") != F.col("vec_id")).select(
-        F.col("rep_id").alias("id_a"), F.col("vec_id").alias("id_b")
-    )
-    comp = connected_components(rep_pairs.unionByName(member_edges))
+    comp = connected_components(edges)
     out = (
         corpus.select("vec_id")
         .join(

@@ -4,8 +4,8 @@ The reference groups scenes by (tile, rounded timestamp) and merges
 overlapping tiles with first-wins pixel precedence
 (`eodal/mapper/mapper.py:554-667`; `eodal/core/algorithms.py:64-225`,
 merge :133-142).  Here a "tile" is (coarse cell, time bucket); the
-first-wins precedence becomes a window ``row_number() = 1`` with a
-**total** ordering key (ts, then url) — unlike pandas' incidental
+first-wins precedence becomes a per-key minimum over a **total**
+ordering key (ts, then url) — unlike pandas' incidental
 ``keep="first"`` (mapper.py:647-649), this is deterministic under any
 shuffle/parallelism (SURVEY.md §7.3).
 
@@ -15,8 +15,9 @@ tile ids are bit-identical to the DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, WindowSpec
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from eodal_spark import grid
@@ -61,40 +62,44 @@ def assign_tiles(
     )
 
 
-def first_wins_window(
-    keys: tuple[str, ...] = ("cell_id", "ts_bucket"),
-    order: tuple[str, ...] = ("warc_ts", "url"),
-) -> WindowSpec:
-    return Window.partitionBy(*keys).orderBy(*[F.col(c).asc() for c in order])
+def _orderable(dt: T.DataType) -> bool:
+    """False when ``dt`` holds a map anywhere: Spark cannot order it,
+    so ``min(struct(…))`` over it fails analysis
+    (DATATYPE_MISMATCH.INVALID_ORDERING_TYPE)."""
+    if isinstance(dt, T.MapType):
+        return False
+    if isinstance(dt, T.ArrayType):
+        return _orderable(dt.elementType)
+    if isinstance(dt, T.StructType):
+        return all(_orderable(f.dataType) for f in dt.fields)
+    return True
 
 
 def mosaic_dedup(
     tiled: DataFrame,
     keys: tuple[str, ...] = ("cell_id", "ts_bucket"),
     order: tuple[str, ...] = ("warc_ts", "url"),
-    strategy: str = "agg",
 ) -> DataFrame:
     """Keep exactly one page per (cell, time-bucket) — first-wins by
     (ts, url) total order.  ≡ `rasterio.merge` first-wins precedence
     (`eodal/core/algorithms.py:133-142`) and the duplicate-timestamp
     dedup (`mapper.py:565-570`, :647-649).
 
-    strategy="agg" (default): ``min(struct(order…, payload…))`` —
-    Spark's partial aggregation combines map-side, so the shuffle
-    carries at most one candidate row per (key, map partition) instead
-    of every row.  At 10^12 rows with duplicate-heavy hotspots this is
-    the difference between shuffling the corpus and shuffling the
-    distinct keys.  strategy="window": classic ``row_number()=1``
-    (kept for payloads with non-orderable columns, e.g. maps).
+    ``min(struct(order…, payload…))`` per key: Spark's partial
+    aggregation combines map-side, so the shuffle carries at most one
+    candidate row per (key, map partition) instead of every row.  At
+    10^12 rows with duplicate-heavy hotspots this is the difference
+    between shuffling the corpus and shuffling the distinct keys.  A
+    payload that cannot be ordered (a map anywhere in a column's type)
+    takes the classic ``row_number() = 1`` window instead.
 
     Both are deterministic under any parallelism: the ``order`` prefix
     is a total order (ties broken by url)."""
-    if strategy == "window":
-        rn = F.row_number().over(first_wins_window(keys, order))
-        return tiled.withColumn("_rn", rn).filter(F.col("_rn") == 1).drop("_rn")
-    if strategy != "agg":
-        raise ValueError(strategy)
     payload = [c for c in tiled.columns if c not in keys]
+    if not all(_orderable(tiled.schema[c].dataType) for c in payload):
+        w = Window.partitionBy(*keys).orderBy(*[F.col(c).asc() for c in order])
+        rn = F.row_number().over(w)
+        return tiled.withColumn("_rn", rn).filter(F.col("_rn") == 1).drop("_rn")
     ordered = [*order, *[c for c in payload if c not in order]]
     win = tiled.groupBy(*keys).agg(
         F.min(F.struct(*[F.col(c) for c in ordered])).alias("_w")

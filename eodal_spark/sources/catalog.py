@@ -726,6 +726,19 @@ class SnapshotCatalog:
         bounded by the same maintenance Iceberg uses — :meth:`compact`
         collapses the list, :meth:`expire_snapshots` drops old entries.
         """
+        return self._write(
+            self._load_manifest(table), df, table, sort_by, meta, n_files,
+            mode, bloom_cols, bloom_bits, bloom_k, zorder, partition_by,
+            branch,
+        )
+
+    def _write(
+        self, man, df, table, sort_by, meta, n_files, mode, bloom_cols,
+        bloom_bits, bloom_k, zorder, partition_by, branch,
+    ) -> dict:
+        """:meth:`write` built against the loaded manifest ``man``: the
+        commit's parent is ``man``'s head, so a commit that landed since
+        ``man`` was loaded fails the CAS with `ConcurrentCommitError`."""
         if mode not in ("overwrite", "append"):
             raise ValueError(f"unknown write mode {mode!r}")
         if zorder and sort_by:
@@ -740,7 +753,6 @@ class SnapshotCatalog:
             )
         partition_by = list(partition_by or [])
         pv = _partition_cols(partition_by)  # validates the spec
-        man = self._load_manifest(table)
         if branch is not None:
             parent_snap = self._resolve(table, man, branch=branch)
         else:
@@ -2111,16 +2123,22 @@ class SnapshotCatalog:
         bcfg = None
         for bcfg in (snap.get("blooms") or {}).values():
             pass  # insertion order: the last entry is the newest dir's
-        return self.write(
+        # commit against THIS load: a commit that lands while the rows
+        # are rewritten fails the CAS instead of being overwritten
+        return self._write(
+            man,
             self._read_with_deletes(spark, table, man, snap),
             table,
             sort_by=tuple(snap.get("sort_by") or ()),
-            zorder=tuple(snap.get("zorder") or ()),
-            n_files=n_files,
             meta=meta,
+            n_files=n_files,
+            mode="overwrite",
             bloom_cols=tuple(bcfg["cols"]) if bcfg else (),
             bloom_bits=bcfg["bits"] if bcfg else 1 << 17,
             bloom_k=bcfg["k"] if bcfg else 7,
+            zorder=tuple(snap.get("zorder") or ()),
+            partition_by=None,
+            branch=None,
         )
 
     def _compact_binpack(

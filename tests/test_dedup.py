@@ -288,12 +288,11 @@ def test_minhash_collapse_matches_uncollapsed(planted):
     """The exact-text pre-collapse must be output-invisible in "all"
     mode: the signature/estimate/verify stack is a pure function of the
     text, so the fanned-out pair set (ids AND inter/uni) is identical
-    to the un-collapsed pipeline's."""
-    a = D.minhash_dedup(
-        planted, threshold_milli=700, collapse_exact=True
-    ).collect()
-    b = D.minhash_dedup(
-        planted, threshold_milli=700, collapse_exact=False
+    to the representative-level core run over the raw corpus."""
+    a = D.minhash_dedup(planted, threshold_milli=700).collect()
+    docs = planted.selectExpr("doc_id AS id", "text AS t")
+    b = D._minhash_pairs_core(
+        docs, 64, 16, 700, 5, D._shingle_universe(docs, 5)
     ).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     assert len(a) > 0
@@ -301,12 +300,8 @@ def test_minhash_collapse_matches_uncollapsed(planted):
 
 def test_simhash_collapse_matches_uncollapsed(planted):
     sigs = D.simhash_signatures(planted).cache()
-    a = D.simhash_near_pairs(
-        sigs, max_hamming=6, collapse_identical=True
-    ).collect()
-    b = D.simhash_near_pairs(
-        sigs, max_hamming=6, collapse_identical=False
-    ).collect()
+    a = D.simhash_near_pairs(sigs, max_hamming=6).collect()
+    b = D._simhash_pairs_core(sigs, 6, None).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     assert len(a) > 0
 
@@ -350,20 +345,68 @@ def test_hot_bucket_simhash_collapse_is_linear(spark):
     assert out.filter("hamming != 0").count() == 0
 
 
-def test_star_expansion_same_components_as_all(planted):
+@pytest.fixture(scope="module")
+def planted_vecs(spark):
+    """(vec_id, embedding): smoke-corpus vectors 0..29; 1000+i and
+    2000+i (i < 5) are exact copies of i (3-member exact groups), and
+    3000+i (i < 10) are ×1.001 scaled near-copies (SRP-sign-invariant,
+    q7 sqdist ≈ 1e8)."""
+    from tests.conftest import SF_SMOKE
+
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").filter(
+        F.col("vec_id") < 30
+    ).select("vec_id", "embedding")
+    src = emb.filter(F.col("vec_id") < 5)
+    scaled = emb.filter(F.col("vec_id") < 10).select(
+        (F.col("vec_id") + 3000).alias("vec_id"),
+        F.transform(
+            "embedding", lambda x: (x.cast("double") * F.lit(1.001)).cast("float")
+        ).alias("embedding"),
+    )
+    return (
+        emb.unionByName(src.withColumn("vec_id", F.col("vec_id") + 1000))
+        .unionByName(src.withColumn("vec_id", F.col("vec_id") + 2000))
+        .unionByName(scaled)
+        .cache()
+    )
+
+
+@pytest.mark.parametrize("op", ["minhash", "simhash", "embedding"])
+def test_star_expansion_same_components_as_all(request, op):
     """expand="star" must yield identical dup_groups to expand="all"
-    (spanning pairs preserve connectivity)."""
-    all_pairs = D.minhash_dedup(planted, threshold_milli=700, expand="all")
-    star_pairs = D.minhash_dedup(planted, threshold_milli=700, expand="star")
-    g_all = {
-        (r.doc_id, r.group_id)
-        for r in D.dup_groups(planted, all_pairs).collect()
-    }
-    g_star = {
-        (r.doc_id, r.group_id)
-        for r in D.dup_groups(planted, star_pairs).collect()
-    }
+    (spanning pairs preserve connectivity) for every operator on the
+    shared collapse-and-expand fan-out."""
+    if op == "embedding":
+        from eodal_spark.operators import similarity as S
+
+        df, id_col = request.getfixturevalue("planted_vecs"), "vec_id"
+        dim = len(df.first()["embedding"])
+
+        def run(expand):
+            return S.embedding_near_dup_pairs(
+                df, sqdist_threshold=10_000_000_000, dim=dim, expand=expand
+            )
+    elif op == "simhash":
+        df, id_col = request.getfixturevalue("planted"), "doc_id"
+        sigs = D.simhash_signatures(df).cache()
+
+        def run(expand):
+            return D.simhash_near_pairs(sigs, max_hamming=6, expand=expand)
+    else:
+        df, id_col = request.getfixturevalue("planted"), "doc_id"
+
+        def run(expand):
+            return D.minhash_dedup(df, threshold_milli=700, expand=expand)
+
+    g_all, g_star = (
+        {
+            (r.doc_id, r.group_id)
+            for r in D.dup_groups(df, run(expand), id_col).collect()
+        }
+        for expand in ("all", "star")
+    )
     assert g_all == g_star
+    assert any(d != g for d, g in g_all)  # some group has members
 
 
 def test_bucket_cap_drops_oversized_buckets(spark):

@@ -985,6 +985,31 @@ def test_manifest_optimistic_concurrency(spark, tmp_path):
     assert cat._load_manifest("t")["version"] == 3
 
 
+def test_compact_rejects_append_landing_during_rewrite(spark, tmp_path):
+    """compact(n_files=) commits against its OWN manifest load: an
+    append from a second catalog on the same root that lands while the
+    rows are rewritten makes compact raise ConcurrentCommitError, never
+    overwrite the append, and a retry compacts all 15 rows."""
+    root = str(tmp_path / "compact_race")
+    cat = SnapshotCatalog(root)
+    other = SnapshotCatalog(root)
+    cat.write(spark.range(10), "t", n_files=2)
+    read_rows = cat._read_with_deletes
+    calls = []
+
+    def read_then_append(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 1:  # between compact's load and its commit
+            other.write(spark.range(10, 15), "t", mode="append")
+        return read_rows(*args, **kwargs)
+
+    cat._read_with_deletes = read_then_append
+    cat.commit_with_retry(lambda: cat.compact(spark, "t", n_files=1))
+    assert len(calls) == 2  # the first attempt lost the CAS
+    assert sorted(r.id for r in cat.read(spark, "t").collect()) == list(range(15))
+    assert cat.current_snapshot("t")["meta"]["compacted_from"] == 2
+
+
 def test_metadata_range_delete(spark, tmp_path):
     """delete_range: O(manifest) commit — fully-covered data files are
     DROPPED from the snapshot (no data read/written), partially-covered
@@ -2978,8 +3003,8 @@ def test_result_schema_is_the_snapshots_whichever_files_are_read(
 def test_read_calls_load_the_manifest_once(spark, tmp_path, monkeypatch):
     """Each read call resolves its snapshot, schema state and files from
     ONE manifest load; a full compaction resolves its source, marker
-    walk and rows from one more (write's parent load and the commit's
-    version check are the other two)."""
+    walk, rows and commit parent from one more (the commit's version
+    check is the other)."""
     cat = SnapshotCatalog(str(tmp_path / "loads_cat"))
     df = spark.range(40).selectExpr("id AS k", "CAST(id AS STRING) AS url")
     cat.write(df, "t", sort_by=("k",), n_files=2, bloom_cols=("url",))
@@ -3011,7 +3036,7 @@ def test_read_calls_load_the_manifest_once(spark, tmp_path, monkeypatch):
         fn()
         got[name] = len(loads)
     want = {name: 1 for name in calls}
-    want["compact"] = 3
+    want["compact"] = 2
     assert got == want
 
 

@@ -113,7 +113,7 @@ def test_near_dup_bucket_guard_raises(spark, corpus):
     with pytest.raises(ValueError, match="n_planes"):
         S.embedding_near_dup_pairs(
             corpus.select("vec_id", "embedding"), sqdist_threshold=1,
-            dim=dim, n_planes=2, max_bucket_rows=50, collapse_exact=False,
+            dim=dim, n_planes=2, max_bucket_rows=50,
         )
 
 
@@ -149,7 +149,7 @@ def test_near_dup_exact_collapse_absorbs_skew(spark, corpus):
     dim = len(one["embedding"])
     pairs = S.embedding_near_dup_pairs(
         aug, sqdist_threshold=1, dim=dim,
-        n_planes=4, max_bucket_rows=120, guard="raise", collapse_exact=True,
+        n_planes=4, max_bucket_rows=120, guard="raise",
     ).collect()
     rep = min(one["vec_id"], 1000)
     member_pairs = {(r["id_a"], r["id_b"]) for r in pairs if r["sqdist"] == 0}
@@ -178,9 +178,12 @@ def test_near_dup_adaptive_planes_and_recall(spark, corpus):
 
 
 def test_near_dup_closure_with_duplicate_groups(spark, corpus):
-    """Full all-pairs closure with collapse_exact: a duplicate group
+    """expand="all" is the full all-pairs closure: a duplicate group
     {a1,a2,a3} plus a near-neighbor b must emit every within-group pair
-    AND b's pair with EVERY member — not just the representative."""
+    AND b's pair with EVERY member — not just the representative —
+    equal to the representative-level core run over the raw rows;
+    expand="star" keeps the core's pairs between representatives and
+    links each member to its representative."""
     one = corpus.orderBy("vec_id").first()
     a1 = one["vec_id"]
     clones = spark.createDataFrame(
@@ -199,9 +202,9 @@ def test_near_dup_closure_with_duplicate_groups(spark, corpus):
     )
     dim = len(one["embedding"])
     pairs = S.embedding_near_dup_pairs(
-        aug, sqdist_threshold=10_000_000_000, dim=dim, collapse_exact=True
-    )
-    got = {(r["id_a"], r["id_b"]): r["sqdist"] for r in pairs.collect()}
+        aug, sqdist_threshold=10_000_000_000, dim=dim
+    ).collect()
+    got = {(r["id_a"], r["id_b"]): r["sqdist"] for r in pairs}
     group = sorted([a1, 900001, 900002])
     # within-group closure at sqdist 0
     for i in range(3):
@@ -210,10 +213,23 @@ def test_near_dup_closure_with_duplicate_groups(spark, corpus):
     # the near vector pairs with EVERY member, same inherited distance
     dists = {got.get((min(m, 900003), max(m, 900003))) for m in group}
     assert None not in dists and len(dists) == 1
+    raw = aug.select(F.col("vec_id").alias("id"), "embedding")
+    core = S._srp_near_pairs(
+        raw, 10_000_000_000, dim, None, 4, 1024, 200_000, "raise"
+    ).collect()
+    assert sorted(map(tuple, pairs)) == sorted(map(tuple, core))
+    star = S.embedding_near_dup_pairs(
+        aug, sqdist_threshold=10_000_000_000, dim=dim, expand="star"
+    ).collect()
+    dup = {900001, 900002}
+    assert sorted(map(tuple, star)) == sorted(
+        [tuple(r) for r in core if not dup & {r["id_a"], r["id_b"]}]
+        + [(a1, m, 0) for m in dup]
+    )
 
 
 def test_near_dup_group_size_guard_and_star(spark, corpus):
-    """A duplicate group beyond max_group_size fails fast in closure
+    """A duplicate group beyond max_group_size fails fast in "all"
     mode (its clique is quadratic on ONE join key); expand='star' emits
     the linear representative->member pairs instead."""
     one = corpus.orderBy("vec_id").first()

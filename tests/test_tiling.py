@@ -72,15 +72,14 @@ def test_mosaic_dedup_first_wins(tiled):
     # deterministic under different parallelism
     re = tiling.mosaic_dedup(tiled.repartition(13)).select("url")
     assert re.exceptAll(deduped.select("url")).count() == 0
-    # agg strategy ≡ window strategy, row for row
-    win = tiling.mosaic_dedup(tiled, strategy="window")
-    assert (
-        win.select(*sorted(win.columns))
-        .exceptAll(deduped.select(*sorted(deduped.columns)))
-        .count()
-        == 0
-    )
+    # a map payload cannot be ordered, so it takes the row_number
+    # window: same survivors row for row, map riding along
+    mapped = tiled.withColumn("tags", F.create_map(F.lit("url"), F.col("url")))
+    win = tiling.mosaic_dedup(mapped)
+    cols = sorted(deduped.columns)
+    assert win.select(*cols).exceptAll(deduped.select(*cols)).count() == 0
     assert win.count() == deduped.count()
+    assert win.filter(F.col("tags")["url"] != F.col("url")).count() == 0
 
 
 def test_duplicate_split_counts(tiled):
