@@ -2904,7 +2904,8 @@ def oracle_sql() -> dict[str, str]:
         """,
         # SQ8 quantization: identical (127*x)*1e6/scale_micro chain
         # (left-associated both engines), ties round away from zero in
-        # both; the full quantized vector is hashed comma-joined
+        # both, codes clamped to [-127, 127] in both; the full quantized
+        # vector is hashed comma-joined
         "emb_quantize_int8": """
             WITH s AS (
               SELECT vec_id, embedding,
@@ -2918,10 +2919,14 @@ def oracle_sql() -> dict[str, str]:
                    CASE WHEN scale_micro <= 0 THEN
                      array_to_string(list_transform(embedding, x -> '0'), ',')
                    ELSE
-                     array_to_string(list_transform(embedding,
-                       x -> CAST(CAST(ROUND(127.0 * CAST(x AS DOUBLE)
+                     array_to_string(list_transform(
+                       list_transform(embedding,
+                         x -> CAST(ROUND(127.0 * CAST(x AS DOUBLE)
                                   * 1000000.0 / scale_micro)
-                                  AS INTEGER) AS VARCHAR)), ',')
+                                  AS INTEGER)),
+                       q -> CAST(CASE WHEN q > 127 THEN 127
+                                      WHEN q < -127 THEN -127
+                                      ELSE q END AS VARCHAR)), ',')
                    END AS qvec_str
             FROM s
         """,

@@ -938,24 +938,28 @@ def quantize_int8(
 
     ``(id, scale_micro, qvec)``: ``scale_micro`` = floor(1e6·max|x|)
     (bigint — the gate-safe integer form of the scale) and ``qvec[i]``
-    = round(127·x_i·1e6 / scale_micro) ∈ [-127, 127].  Zero vectors
-    quantize to zeros with scale 0.  Entirely native higher-order
-    functions on the scan projection — no shuffle, no UDF; the
-    dequantization error bound (≤ scale/254 + quantizer ulp) is
-    test-asserted.  Cross-engine exactness: float32→double is exact,
-    the multiply/divide chain is identically associated in the DuckDB
-    twin, and both engines round ties away from zero, so the gate
-    hashes the full quantized vector byte-for-byte."""
+    = round(127·x_i·1e6 / scale_micro) clamped to [-127, 127]: the
+    floor can sit below 1e6·max|x| (max|x| = 0.0001005 gives scale
+    100 and an unclamped 128).  A vector with max|x| < 1e-6 — the zero
+    vector, and any 0 < max|x| < 1e-6 — gets scale 0 and all-zero
+    codes, so it dequantizes to zeros (error = max|x| < 1e-6).
+    Entirely native higher-order functions on the scan projection — no
+    shuffle, no UDF; the dequantization error bound (≤ scale/254 +
+    quantizer ulp) is test-asserted.  Cross-engine exactness:
+    float32→double is exact, the multiply/divide chain is identically
+    associated in the DuckDB twin, both engines round ties away from
+    zero and clamp alike, so the gate hashes the full quantized vector
+    byte-for-byte."""
     x = F.col(vec_col)
     scale = F.array_max(F.transform(x, lambda v: F.abs(v.cast("double"))))
     sm = F.floor(scale * F.lit(1e6)).cast("long")
+
+    def code(v):
+        r = F.round(F.lit(127.0) * v.cast("double") * F.lit(1e6) / sm).cast("int")
+        return F.when(r > 127, 127).when(r < -127, -127).otherwise(r)
+
     q = F.when(sm <= 0, F.transform(x, lambda v: F.lit(0))).otherwise(
-        F.transform(
-            x,
-            lambda v: F.round(
-                F.lit(127.0) * v.cast("double") * F.lit(1e6) / sm
-            ).cast("int"),
-        )
+        F.transform(x, code)
     )
     return emb.select(
         F.col(id_col),

@@ -2067,8 +2067,10 @@ class SnapshotCatalog:
         ``n_files`` files as a new overwrite snapshot: long append
         chains accumulate many small files whose per-file open cost
         eventually dominates scans; compaction restores the target
-        layout (including the sort order recorded at write time)
-        without changing a single row.
+        layout (including the sort order recorded at write time and the
+        newest dir's partition spec) without changing a single row.  On
+        a partitioned table ``n_files`` counts write tasks, each writing
+        one file per partition value it holds.
 
         ``target_file_bytes`` — SELECTIVE binpack (Iceberg's binpack
         strategy): only groups of ≥ ``_BINPACK_MIN_FILES`` (2) undersized
@@ -2123,6 +2125,11 @@ class SnapshotCatalog:
         bcfg = None
         for bcfg in (snap.get("blooms") or {}).values():
             pass  # insertion order: the last entry is the newest dir's
+        # and the newest dir's partition spec, as the binpack keeps it:
+        # the rewrite stays hive-partitioned and partition-pruned
+        spec = None
+        for spec in (snap.get("partition_specs") or {}).values():
+            pass
         # commit against THIS load: a commit that lands while the rows
         # are rewritten fails the CAS instead of being overwritten
         return self._write(
@@ -2137,7 +2144,7 @@ class SnapshotCatalog:
             bloom_bits=bcfg["bits"] if bcfg else 1 << 17,
             bloom_k=bcfg["k"] if bcfg else 7,
             zorder=tuple(snap.get("zorder") or ()),
-            partition_by=None,
+            partition_by=spec,
             branch=None,
         )
 

@@ -1010,6 +1010,27 @@ def test_compact_rejects_append_landing_during_rewrite(spark, tmp_path):
     assert cat.current_snapshot("t")["meta"]["compacted_from"] == 2
 
 
+def test_full_compact_keeps_the_partition_spec(spark, tmp_path):
+    """compact(n_files=) rewrites under the newest dir's partition spec:
+    the compacted snapshot stays hive-partitioned, its files carry their
+    partition values, and an equality scan reads one partition's files."""
+    cat = SnapshotCatalog(str(tmp_path / "pv_compact"))
+    spec = [["identity", "g"]]
+    cat.write(
+        spark.range(20).selectExpr("id", "id % 4 AS g"), "t", partition_by=spec
+    )
+    cat.compact(spark, "t", n_files=1)
+    snap = cat.current_snapshot("t")
+    assert snap["meta"]["compacted_from"] == 1
+    assert list(snap["partition_specs"].values()) == [spec]
+    files = cat._snap_files(snap)
+    assert sorted(f["partition"]["_pv0"] for f in files) == ["0", "1", "2", "3"]
+    got = cat.scan(spark, "t", eq={"g": 2})
+    assert sorted(r.id for r in got.collect()) == [2, 6, 10, 14, 18]
+    kept = got.inputFiles()
+    assert kept and all("/_pv0=2/" in p for p in kept)
+
+
 def test_metadata_range_delete(spark, tmp_path):
     """delete_range: O(manifest) commit — fully-covered data files are
     DROPPED from the snapshot (no data read/written), partially-covered

@@ -97,3 +97,22 @@ def test_driver_rows_become_relations_only_in_local_frame():
             and id(n) not in allowed
         ]
     assert not stray, "createDataFrame outside local_frame:\n" + "\n".join(stray)
+
+
+def test_sessions_are_built_only_in_get_spark():
+    """`session.get_spark` is the one place a session is built, so every
+    entry point (engine, scripts, examples, benches, tests) gets the
+    engine's conf, its Python worker daemon included: no other file
+    touches ``SparkSession.builder``."""
+    session = ROOT / "eodal_spark" / "session.py"
+    stray = [
+        f"{p.relative_to(ROOT)}:{n.lineno}"
+        for p, tree in sorted(_repo_sources().items())
+        if p != session
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Attribute)
+        and n.attr == "builder"
+        and isinstance(n.value, (ast.Name, ast.Attribute))
+        and getattr(n.value, "id", getattr(n.value, "attr", None)) == "SparkSession"
+    ]
+    assert not stray, "SparkSession.builder outside get_spark:\n" + "\n".join(stray)

@@ -492,6 +492,69 @@ def test_quantize_int8_bounds_and_roundtrip(spark):
             assert abs(a - b) <= scale / 254 + 1e-6 * scale + 1e-12
 
 
+def test_quantize_int8_clamps_codes_in_both_engines(spark, tmp_path):
+    """floor(1e6·max|x|) can sit below 1e6·max|x|: max|x| = 0.0001005
+    gives scale 100 and an unrounded code of 127.6.  The engine and its
+    DuckDB twin both clamp to ±127, as an independent Python reference
+    does; 0 < max|x| < 1e-6 gets scale 0 and zero codes."""
+    import math
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as E
+
+    vecs = {
+        1: [0.0001005, -0.0001005, 0.00005, 0.0],
+        2: [-0.0001005, 0.0001, 0.0, 0.00002],
+        3: [5e-7, -3e-7, 0.0, 1e-7],
+        4: [0.5, -1.0, 0.25, 0.0],
+    }
+    emb_dir = tmp_path / "sf"
+    emb_dir.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(list(vecs), pa.int64()),
+                "embedding": pa.array(list(vecs.values()), pa.list_(pa.float32())),
+                "label": pa.array([0] * len(vecs), pa.int32()),
+            }
+        ),
+        emb_dir / "embeddings.parquet",
+    )
+
+    def reference(xs):
+        xs = [float(np.float32(v)) for v in xs]
+        sm = math.floor(max(abs(v) for v in xs) * 1e6)
+        if sm <= 0:
+            return sm, ",".join("0" for _ in xs)
+        codes = []
+        for v in xs:
+            r = 127.0 * v * 1e6 / sm
+            r = int(math.copysign(math.floor(abs(r) + 0.5), r))
+            codes.append(str(max(-127, min(127, r))))
+        return sm, ",".join(codes)
+
+    want = {vid: reference(xs) for vid, xs in vecs.items()}
+    assert want[1] == (100, "127,-127,63,0")
+    assert want[3] == (0, "0,0,0,0")
+    got = {
+        r.vec_id: (r.scale_micro, r.qvec_str)
+        for r in E.queries()["emb_quantize_int8"](spark, str(emb_dir)).collect()
+    }
+    assert got == want
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM '{emb_dir}/embeddings.parquet'"
+    )
+    twin = {
+        vid: (sm, q)
+        for vid, sm, q in con.execute(E.oracle_sql()["emb_quantize_int8"]).fetchall()
+    }
+    assert twin == want
+
+
 def test_quantize_int8_plan_is_mapside(spark):
     from eodal_spark.operators.similarity import quantize_int8
 
