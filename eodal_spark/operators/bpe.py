@@ -21,7 +21,7 @@ Spark shape — train on the WORD-FREQUENCY relation, not the corpus:
   pair-asc total order — deterministic across partitionings), the
   same fused-action budget as ``knn``'s escalation loop; lineage is
   localCheckpoint-truncated every few rounds like every iterative
-  operator here (graph.py, knn.py);
+  operator here (graph.py);
 * ``bpe_pieces`` (application) is map-side only: split → per-word
   replace chain → re-split, inside higher-order transforms — zero
   shuffles, pipelines into token counting or chunking.

@@ -301,9 +301,9 @@ def ivf_topk(
     integer-quantized re-rank within candidates.  The inverted-list
     analogue of `grid`'s cell bucketing, for embedding space.
 
-    Probe planning is bounded (the `knn` ``prune_query_cap``
-    discipline): at most ``probe_query_cap``+1 query rows are collected
-    for the driver-side path; a larger query side switches to the
+    Probe planning is bounded: at most ``probe_query_cap``+1 query
+    rows are collected for the driver-side path; a larger query side
+    switches to the
     relational plan — :func:`ivf_probe_udf` assigns probe lists on the
     executors (the centroid matrix is a tiny closure broadcast), the
     lists explode to (query_id, qvec, ivf_list) rows, and Spark's own

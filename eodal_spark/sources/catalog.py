@@ -27,8 +27,9 @@ reads their footer stats; `_snap_record` builds the manifest record
 from the parent (delete state, blooms, partition specs, sort order)
 plus the commit's overrides; `_commit_snap` seals the file list into
 segments and CASes the manifest, and on `ConcurrentCommitError`
-removes the attempt's new dirs, bloom sidecars and segments.  Legacy
-snapshots without file entries are resolved by `_snap_files` alone.
+removes the attempt's new dirs, bloom sidecars and segments.  Every
+commit, an empty write included, records its ``segments``; a snapshot
+without them is not one this catalog wrote, and reading it raises.
 
 Read path: every read call (`read`, `scan`, `count`, `read_changes`,
 `file_metrics`, `compact`) loads the manifest once and passes it down.
@@ -822,9 +823,7 @@ class SnapshotCatalog:
     #     loading any entry — manifest-level skipping above the
     #     file-level skipping (Iceberg's manifest-list partition
     #     summaries).
-    # Legacy snapshots with inline "files" lists keep working; the
-    # first new commit on top of one migrates its entries into a
-    # segment.  Segments are immutable → cached per path.
+    # Segments are immutable → cached per path.
 
     @staticmethod
     def _seg_dir(tdir: str) -> str:
@@ -934,58 +933,39 @@ class SnapshotCatalog:
             refs.append(self._seg_ref(newname, clean))
         return refs
 
-    def _snap_dirs(self, snap: dict) -> set[str]:
-        """Data dirs a snapshot's files live in — from the segment refs
-        when segmented (no segment load), else from the inline list (a
-        legacy snapshot without one holds its own v-dir only)."""
+    @staticmethod
+    def _segments(snap: dict) -> list[dict]:
         segs = snap.get("segments")
-        if segs is not None:
-            out: set[str] = set()
-            for r in segs:
-                out |= set(r.get("dirs") or [])
-            return out
-        own = os.path.basename(snap["path"])
-        return {f.get("dir", own) for f in snap.get("files") or ()} or {own}
+        if segs is None:
+            raise ValueError(
+                f"snapshot {snap['snapshot_id']} records no manifest "
+                f"segments: not a snapshot this catalog wrote"
+            )
+        return segs
+
+    def _snap_dirs(self, snap: dict) -> set[str]:
+        """Data dirs a snapshot's files live in, from its segment refs
+        (no segment load)."""
+        return {d for r in self._segments(snap) for d in r.get("dirs") or ()}
 
     def _live_segments(self, snaps: list[dict]) -> set[str]:
         return {
             r["name"] for s in snaps for r in (s.get("segments") or [])
         }
 
-    def _snap_files(self, snap: dict) -> list[dict]:
-        """File entries of a snapshot.  Segmented snapshots resolve
-        their segment refs (each entry tagged ``_seg`` with its source
-        segment so :meth:`_seal_files` can re-reference intact segments
-        on the next commit); legacy snapshots read the inline list
-        (entries written before the append feature lack 'dir' — they
-        belong to the snapshot's own v-dir).  A legacy PRE-STATS
-        snapshot (no segments, empty inline list) has its list
-        reconstructed from its data dir's footers — every reader and
-        every commit on top of it then sees the real files instead of
-        silently dropping the parent's rows."""
-        segs = snap.get("segments")
-        if segs is not None:
-            tdir = os.path.dirname(snap["path"])
-            out: list[dict] = []
-            for ref in segs:
-                out.extend(
-                    {**f, "_seg": ref["name"]}
-                    for f in self._load_segment(tdir, ref["name"])
-                )
-            return out
-        d = os.path.basename(snap["path"])
-        if snap.get("files"):
-            return [
-                (f if "dir" in f else {**f, "dir": d}) for f in snap["files"]
-            ]
-        sort_by = tuple(snap.get("sort_by") or ())
-        files = [{**f, "dir": d} for f in _file_stats(snap["path"], sort_by)]
-        if not files:
-            raise ValueError(
-                f"pre-stats snapshot {snap['snapshot_id']}: no data files "
-                f"found under {snap['path']}"
-            )
-        return files
+    def _snap_files(self, snap: dict, norm: dict | None = None) -> list[dict]:
+        """File entries of a snapshot, each tagged ``_seg`` with its
+        source segment so :meth:`_seal_files` can re-reference intact
+        segments on the next commit.  With normalized ranges ``norm``,
+        segments whose coarse bounds provably exclude them are skipped
+        without being loaded."""
+        tdir = os.path.dirname(snap["path"])
+        return [
+            {**f, "_seg": ref["name"]}
+            for ref in self._segments(snap)
+            if norm is None or not self._seg_ref_excluded(ref, norm)
+            for f in self._load_segment(tdir, ref["name"])
+        ]
 
     def _resolve(
         self,
@@ -1705,14 +1685,9 @@ class SnapshotCatalog:
 
     @staticmethod
     def _dir_sid(d: str) -> int:
-        """Commit sequence of a data dir ('v12' / 'v12-ab34cd' → 12);
-        legacy dirs without the v-prefix sort oldest (every delete
-        applies — conservative and correct for pre-delete-era files)."""
-        if d.startswith("v"):
-            head = d[1:].split("-", 1)[0]
-            if head.isdigit():
-                return int(head)
-        return 0
+        """Commit sequence of a data dir ('v12-ab34cd56' / 'v12-meta' →
+        12)."""
+        return int(d[1:].split("-", 1)[0])
 
     def _read_with_deletes(
         self,
@@ -1872,8 +1847,7 @@ class SnapshotCatalog:
             return F.broadcast(k) if small else k
 
         # segment boundaries: files with sid in (prev_del, del] share
-        # the same applicable-delete suffix {del, ...}; legacy dirs
-        # (sid 0) join the first segment
+        # the same applicable-delete suffix {del, ...}
         out: DataFrame | None = None
         bounds = [0] + del_sids
         for i in range(1, len(bounds) + 1):
@@ -1883,7 +1857,7 @@ class SnapshotCatalog:
                 (
                     f
                     for f in files
-                    if (lo == 0 or self._dir_sid(f["dir"]) > lo)
+                    if self._dir_sid(f["dir"]) > lo
                     and (hi is None or self._dir_sid(f["dir"]) <= hi)
                 ),
                 key=lambda f: os.path.join(f["dir"], f["name"]),
@@ -2826,28 +2800,17 @@ class SnapshotCatalog:
             for c, r in ranges.items()
         }
         schema_state = man.get("schema")
-        segs = snap.get("segments")
-        if segs is not None and not (schema_state or {}).get("log"):
-            # manifest-LIST-level pruning (≡ Iceberg's manifest-list
-            # partition summaries): drop whole segments whose coarse
-            # bounds provably exclude every range BEFORE loading any
-            # file entry — on a 100k-file table a point lookup loads a
-            # handful of segment files, not the whole manifest tier.
-            # Skipped entirely when the schema log is non-empty:
-            # segment bounds are keyed by write-time column names, and
-            # only the per-file pass knows each file's field-id mapping
-            # (kept = conservative, never wrongly pruned).
-            tdir = os.path.dirname(snap["path"])
-            files = []
-            for ref in segs:
-                if self._seg_ref_excluded(ref, norm):
-                    continue
-                files.extend(
-                    {**f, "_seg": ref["name"]}
-                    for f in self._load_segment(tdir, ref["name"])
-                )
-        else:
-            files = self._snap_files(snap)
+        # manifest-LIST-level pruning (≡ Iceberg's manifest-list
+        # partition summaries): drop whole segments whose coarse bounds
+        # provably exclude every range BEFORE loading any file entry —
+        # on a 100k-file table a point lookup loads a handful of segment
+        # files, not the whole manifest tier.  Skipped when the schema
+        # log is non-empty: segment bounds are keyed by write-time
+        # column names, and only the per-file pass knows each file's
+        # field-id mapping (kept = conservative, never wrongly pruned).
+        files = self._snap_files(
+            snap, None if (schema_state or {}).get("log") else norm
+        )
 
         # schema evolution: per-file stats are keyed by WRITE-TIME
         # names; a predicate on a renamed column must consult the name

@@ -61,7 +61,7 @@ cat = SnapshotCatalog(os.path.join(work, "catalog"))
 snap = cat.write(geo, "pages_geo", sort_by=("cell_id",), n_files=12)
 print(
     "snapshot", snap["snapshot_id"], "rows", snap["row_count"],
-    "files", len(snap["files"]),
+    "files", sum(r["n_files"] for r in snap["segments"]),
 )
 
 # -- 4. pruned bbox query ---------------------------------------------------

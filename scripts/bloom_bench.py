@@ -69,7 +69,7 @@ def main() -> None:
     bloom_write = time.time() - t0
     side = os.path.join(root, "bloomed")
     snap = cat.current_snapshot("bloomed")
-    dname = snap["files"][0]["dir"]
+    dname = snap["segments"][0]["dirs"][0]
     side_bytes = sum(
         os.path.getsize(os.path.join(side, dname + "-bloom", f))
         for f in os.listdir(os.path.join(side, dname + "-bloom"))

@@ -657,23 +657,23 @@ def test_read_changes_inverted_range_raises(spark, tmp_path):
         cat.read_changes(spark, "t", from_snapshot=2, to_snapshot=1)
 
 
-def test_append_onto_legacy_snapshot_reconstructs_files(spark, tmp_path):
-    """A pre-feature manifest (files: []) must not lose the parent's
-    rows when appended onto — the file list is reconstructed from the
-    data dir."""
+def test_snapshot_without_segments_raises(spark, tmp_path):
+    """Every commit records its manifest segments, an empty write
+    included; a snapshot record without them was not written by the
+    catalog, and reading it raises instead of guessing its files."""
     import json as J
 
-    cat = SnapshotCatalog(str(tmp_path / "leg_cat"))
-    cat.write(spark.range(100), "t", n_files=2)
-    # simulate a legacy manifest: strip the files list
-    mp = os.path.join(str(tmp_path / "leg_cat"), "t", "manifest.json")
+    cat = SnapshotCatalog(str(tmp_path / "seg_cat"))
+    s0 = cat.write(spark.range(0), "t", n_files=1)
+    assert s0["segments"] is not None
+    s1 = cat.write(spark.range(100), "t", n_files=2, mode="append")
+    assert s1["segments"]
+    mp = os.path.join(str(tmp_path / "seg_cat"), "t", "manifest.json")
     man = J.load(open(mp))
-    man["snapshots"][0].pop("segments", None)
-    man["snapshots"][0]["files"] = []
+    man["snapshots"][-1].pop("segments")
     J.dump(man, open(mp, "w"))
-    s2 = cat.write(spark.range(100, 150), "t", n_files=1, mode="append")
-    assert s2["row_count"] == 150
-    assert cat.read(spark, "t").count() == 150
+    with pytest.raises(ValueError, match="no manifest segments"):
+        cat.read(spark, "t")
 
 
 def test_append_schema_evolution_merges(spark, tmp_path):
@@ -1150,10 +1150,10 @@ def test_range_delete_space_separated_bounds_no_data_loss(spark, tmp_path):
 
 def test_full_table_range_delete_keeps_table_usable(spark, tmp_path):
     """A delete_range covering EVERY file must not brick the table: a
-    files==[] snapshot would be read as legacy pre-stats and chase the
-    never-created v{sid}-meta dir.  A schema-anchor file is kept (its
-    rows removed by the residual filter), so read/scan return a
-    schema-correct empty relation and append/compact keep working."""
+    snapshot with no files would have no footer to take its schema
+    from.  A schema-anchor file is kept (its rows removed by the
+    residual filter), so read/scan return a schema-correct empty
+    relation and append/compact keep working."""
     cat = SnapshotCatalog(str(tmp_path / "rdel_full"))
     df = spark.range(1_000).select(
         F.col("id").alias("cell_id"), (F.col("id") * 3).alias("v")

@@ -55,6 +55,25 @@ def _stored_pages(spark, tmp_path, rows, res, url_type="long"):
     return spark.read.parquet(path)
 
 
+def _recorded_rounds(monkeypatch) -> list:
+    """Record the plan of every ring round ``knn`` builds: its answer
+    is a local relation, so the plans worth asserting on are the
+    rounds'."""
+    rounds = []
+    ring_topk = K._ring_topk
+
+    def recording(*args):
+        rounds.append(ring_topk(*args))
+        return rounds[-1]
+
+    monkeypatch.setattr(K, "_ring_topk", recording)
+    return rounds
+
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_ring_knn_matches_brute_force(pages_geo, queries):
     k = 7
     ring = (
@@ -136,18 +155,26 @@ def test_knn_escalation_resolves_sparse_without_brute(spark, tmp_path, monkeypat
     ]
 
 
-def test_knn_dense_first_round_plan_has_no_cartesian(pages_geo, spark):
-    """All-dense queries resolve in round one: the returned plan must be
-    the broadcast ring join only — no CartesianProduct fallback branch.
-    The query set sits above the tiny-set brute threshold (replicated
-    hotspot points), so the ladder path is the one under test."""
+def test_knn_dense_first_round_plan_has_no_cartesian(pages_geo, spark, monkeypatch):
+    """All-dense queries resolve in round one: the one ring round is
+    the broadcast ring join only — no CartesianProduct — and the brute
+    fallback is never built.  The query set sits above the tiny-set
+    threshold (replicated hotspot points)."""
     rows = [
         (i, 13737, 18854) if i % 2 == 0 else (i, 13070, 10600)
         for i in range(2000)
     ]
     q = spark.createDataFrame(rows, ["query_id", "lat_centi", "lon_centi"])
-    out = K.knn(q, pages_geo, RES, k=3)
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    rounds = _recorded_rounds(monkeypatch)
+
+    def no_brute(*args, **kwargs):
+        raise AssertionError("brute-force fallback reached")
+
+    monkeypatch.setattr(K, "_brute_topk", no_brute)
+    assert K.knn(q, pages_geo, RES, k=3).count() == 2000 * 3
+    assert len(rounds) == 1
+    plan = _executed(rounds[0])
+    assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
 
 
@@ -266,17 +293,10 @@ def test_knn_ring_pass_prunes_cell_sorted_scan(spark, tmp_path, monkeypatch):
         [(1, 9000, 18000), (2, 7000, 27000)],
         ["query_id", "lat_centi", "lon_centi"],
     )
-    rounds = []
-    ring_topk = K._ring_topk
-
-    def recording(*args):
-        rounds.append(ring_topk(*args))
-        return rounds[-1]
-
-    monkeypatch.setattr(K, "_ring_topk", recording)
+    rounds = _recorded_rounds(monkeypatch)
     rows = K.knn(q, table, RES, k=3).collect()
     # the disk ranges reach the parquet scan inside the ring pass
-    plan = rounds[0]._jdf.queryExecution().executedPlan().toString()
+    plan = _executed(rounds[0])
     assert "PushedFilters: [Or(" in plan and "cell_id" in plan
 
     # the same predicate knn builds (cell_disk_ranges at round-1 radius)
@@ -333,11 +353,11 @@ def test_knn_full_coverage_shortcut_respects_y_clamp(spark):
     assert got[0].url == 2  # the closer out-of-disk page wins
 
 
-def test_knn_large_query_set_has_bounded_plan(spark):
-    """50 k query points: bookkeeping must stay RELATIONAL (broadcast
-    semi/anti joins), never `isin(<50k literals>)` — the plan string
-    stays bounded and analysis doesn't blow up (the r2 mapper OR-
-    footprint disease).  Dense grid → everything resolves in round 1."""
+def test_knn_large_query_set_has_bounded_plan(spark, monkeypatch):
+    """50 k query points: the ring round's query side is a local
+    relation, never `isin(<50k literals>)` — its plan string stays
+    bounded and analysis doesn't blow up (the r2 mapper OR-footprint
+    disease).  Dense grid → everything resolves in round 1."""
     from pyspark.sql import functions as F
 
     from eodal_spark import grid as GR
@@ -360,8 +380,10 @@ def test_knn_large_query_set_has_bounded_plan(spark):
         ((F.col("id") * 37) % 18000).alias("lat_centi"),
         ((F.col("id") * 73) % 36000).alias("lon_centi"),
     )
+    rounds = _recorded_rounds(monkeypatch)
     out = K.knn(q, pages, res, k=1)
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert len(rounds) == 1
+    plan = _executed(rounds[0])
     assert len(plan) < 200_000, f"plan string {len(plan)} chars — literal blowup?"
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
     assert out.count() == 50_000
@@ -425,38 +447,73 @@ def test_knn_join_plan_has_no_broadcast_of_big_sides(pages_geo, spark):
     assert "CartesianProduct" not in plan
 
 
-# (name, res, pages, queries, knn kwargs): each fixture drives a
-# different ladder branch on a prunable scan
+# a 10 × 10 block of pages 20 centi-deg apart around (9000, 18000)
+DENSE_PAGES = [
+    (1000 + 10 * i + j, 18000 + 20 * i, 9000 + 20 * j)
+    for i in range(10) for j in range(10)
+]
+# more than _TINY_QUERY_ROWS queries inside that block
+DENSE_QUERIES = [
+    (i, 9000 + (i * 7) % 180, 18000 + (i * 13) % 180) for i in range(299)
+]
+
+# (name, res, pages, stored cell_id, queries, knn kwargs, query ids
+# that must take the brute pass): each fixture drives a different
+# ladder branch
 LADDER_CASES = [
     # round 1 empty → ×4 escalation resolves
-    ("sparse_escalation", RES, SPARSE_PAGES, [(1, 9000, 18000)],
-     dict(k=3, start_radius=2, max_rounds=3)),
+    ("sparse_escalation", RES, SPARSE_PAGES, True, [(1, 9000, 18000)],
+     dict(k=3, start_radius=2, max_rounds=3), set()),
     # polar query (y=0, res 3): the radius-4 disk spans every x but
     # only y ≤ 4; the closer page 2 (y=5) lies outside it, so full
     # coverage must wait for radius 7 (the y clamp), not 2r+1 ≥ 8
-    ("polar_y_clamp", 3, [(1, 17100, 10000), (2, 100, 11300)], [(1, 1000, 100)],
-     dict(k=1, start_radius=4, max_rounds=3)),
+    ("polar_y_clamp", 3, [(1, 17100, 10000), (2, 100, 11300)], True,
+     [(1, 1000, 100)], dict(k=1, start_radius=4, max_rounds=3), set()),
     # wrapped metric: the nearest pages sit across ±180°
     ("date_line", RES, [(100, 1, 9000), (101, 3, 9000), (102, 30000, 9000)],
-     [(1, 9000, 35999)], dict(k=2)),
+     True, [(1, 9000, 35999)], dict(k=2), set()),
     # query 2 sits in an empty polar region: its ×4 radius passes
     # max_ring_radius and it overflows to brute while query 1 resolves
-    ("empty_beyond_max_ring_radius", RES, SPARSE_PAGES,
-     [(1, 9000, 18000), (2, 500, 100)], dict(k=2, max_ring_radius=8)),
+    ("empty_beyond_max_ring_radius", RES, SPARSE_PAGES, True,
+     [(1, 9000, 18000), (2, 500, 100)], dict(k=2, max_ring_radius=8), {2}),
+    # a set above the tiny-set threshold over a stored scan
+    ("large_set_stored", RES, DENSE_PAGES, True, DENSE_QUERIES, dict(k=3),
+     set()),
+    # the same set plus an empty-region query over a COMPUTED cell_id:
+    # with no candidates in its disk it goes straight to brute, where a
+    # prunable scan would try the ×4 ring first
+    ("large_set_computed_zero_evidence", RES, DENSE_PAGES, False,
+     DENSE_QUERIES + [(299, 500, 100)], dict(k=3), {299}),
 ]
 
 
 @pytest.mark.parametrize("url_type", ["long", "string"])
 @pytest.mark.parametrize(
-    "name,res,page_rows,q_rows,kw", LADDER_CASES, ids=[c[0] for c in LADDER_CASES]
+    "name,res,page_rows,stored,q_rows,kw,brute_ids",
+    LADDER_CASES,
+    ids=[c[0] for c in LADDER_CASES],
 )
-def test_driver_and_relational_ladders_match_brute(
-    spark, tmp_path, monkeypatch, url_type, name, res, page_rows, q_rows, kw
+def test_ladder_matches_brute(
+    spark, tmp_path, monkeypatch, url_type, name, res, page_rows, stored,
+    q_rows, kw, brute_ids,
 ):
-    """The tiny-set driver ladder, the relational ladder (forced by a
-    zero tiny-set threshold) and knn_brute return the same rows and the
-    same schema."""
-    pages = _stored_pages(spark, tmp_path, page_rows, res, url_type)
+    """The ring ladder and knn_brute return the same rows and the same
+    schema, and exactly the expected queries take the brute pass."""
+    from pyspark.sql import functions as F
+
+    from eodal_spark import grid as GR
+
+    if stored:
+        pages = _stored_pages(spark, tmp_path, page_rows, res, url_type)
+    else:
+        pages = spark.createDataFrame(
+            [(u if url_type == "long" else f"u{u:04d}", lon, lat)
+             for u, lon, lat in page_rows],
+            f"url {url_type}, lon_centi long, lat_centi long",
+        ).withColumn(
+            "cell_id",
+            F.expr(GR.sql_cell_encode_centi("lon_centi", "lat_centi", res, "spark")),
+        )
     q = spark.createDataFrame(q_rows, "query_id long, lat_centi long, lon_centi long")
 
     def answer(df):
@@ -464,13 +521,20 @@ def test_driver_and_relational_ladders_match_brute(
             (r.query_id, r.url, r.sqdist, r.rank) for r in df.collect()
         )
 
-    driver = answer(K.knn(q, pages, res, **kw))
+    brute_sides = []
+    brute_topk = K._brute_topk
+
+    def recording(pages_side, q_side, k):
+        brute_sides.append(q_side)
+        return brute_topk(pages_side, q_side, k)
+
     with monkeypatch.context() as m:
-        m.setattr(K, "_TINY_QUERY_ROWS", 0)
-        relational = answer(K.knn(q, pages, res, **kw))
+        m.setattr(K, "_brute_topk", recording)
+        ladder = answer(K.knn(q, pages, res, **kw))
     brute = answer(K.knn_brute(q, pages, kw["k"]))
-    assert driver == relational == brute
+    assert ladder == brute
     assert len(brute[1]) == len(q_rows) * min(kw["k"], len(page_rows))
+    assert {r.query_id for s in brute_sides for r in s.collect()} == brute_ids
 
 
 def test_knn_tiny_set_jobs_and_local_answer(spark, tmp_path):
@@ -509,3 +573,27 @@ def test_knn_tiny_set_jobs_and_local_answer(spark, tmp_path):
     brute = K.knn_brute(q, table, 5).collect()
     assert len(rows) == 5
     assert sorted(map(tuple, rows)) == sorted(map(tuple, brute))
+
+
+def _cache_entries(spark) -> set:
+    """Identities of the entries in Spark's CacheManager (its entry
+    list is private: read through JVM reflection)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    entries = field.get(cm)
+    ident = spark._jvm.java.lang.System.identityHashCode
+    return {ident(entries.apply(i)) for i in range(entries.size())}
+
+
+def test_knn_leaves_no_cache_entry(spark, tmp_path):
+    """A 300-query knn over a stored table, collected: the call adds
+    no entry to Spark's CacheManager, so nothing stays pinned once the
+    answer is on the driver."""
+    pages = _stored_pages(spark, tmp_path, DENSE_PAGES, RES)
+    rows = DENSE_QUERIES + [(299, 9090, 18090)]
+    q = spark.createDataFrame(rows, "query_id long, lat_centi long, lon_centi long")
+    before = _cache_entries(spark)
+    got = K.knn(q, pages, RES, k=3).collect()
+    assert len(got) == len(rows) * 3
+    assert _cache_entries(spark) - before == set()

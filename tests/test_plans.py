@@ -97,22 +97,32 @@ def test_no_nullable_join_key_filter(spark, pages_parquet):
     assert "Filter isnotnull" not in _plan(j)
 
 
-def test_knn_pages_side_not_shuffled(spark, pages_parquet):
+def test_knn_pages_side_not_shuffled(spark, pages_parquet, monkeypatch):
     from eodal_spark.operators import knn as K
 
     geo = P.geocode(spark.read.parquet(pages_parquet), E.RES)
     # enough queries to stay above the tiny-set brute threshold — this
-    # test pins the LADDER's plan shape (tiny sets short-circuit to the
-    # brute pass, covered by test_knn_tiny_query_set_unprunable_goes_brute)
+    # test pins the LADDER's ring-round plan shape (tiny sets over this
+    # computed cell_id short-circuit to the brute pass, covered by
+    # test_knn_tiny_query_set_unprunable_goes_brute)
     rows = [
         (i, E.KNN_QUERIES[i % len(E.KNN_QUERIES)][1],
          E.KNN_QUERIES[i % len(E.KNN_QUERIES)][2])
         for i in range(600)
     ]
     q = spark.createDataFrame(rows, ["query_id", "lat_centi", "lon_centi"])
-    out = K.knn(q, geo, E.RES, k=3)
-    plan = _plan(out)
-    assert "BroadcastHashJoin" in plan  # ring side broadcast, pages probe
+    rounds = []
+    ring_topk = K._ring_topk
+
+    def recording(*args):
+        rounds.append(ring_topk(*args))
+        return rounds[-1]
+
+    monkeypatch.setattr(K, "_ring_topk", recording)
+    K.knn(q, geo, E.RES, k=3)
+    assert rounds
+    for r in rounds:  # ring side broadcast, pages probe
+        assert "BroadcastHashJoin" in _plan(r)
 
 
 def test_driver_cover_runs_zero_jobs(spark):
