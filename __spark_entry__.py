@@ -903,8 +903,8 @@ def _q_docs_dup_groups(spark, sf_dir):
     verify, the SAME pair set the all-pairs inverted index yields:
     banding recall is total on these corpora, machine-checked by the
     docs_minhash_pairs gate against the identical all-pairs oracle) →
-    `dedup.connected_components` min-label propagation → every doc
-    labeled with its component's min id (singletons label themselves).
+    `dedup.connected_components` star contraction → every doc labeled
+    with its component's min id (singletons label themselves).
     The historical `jaccard_pairs` input computed the identical set
     through a full inverted-index self-join — Σf² pair explosion on a
     small-shingle-universe corpus (~10¹¹ aggregate rows at 50k bench

@@ -349,37 +349,19 @@ def _mix64(h: np.ndarray) -> np.ndarray:
         return h
 
 
-def _cap_buckets(banded: DataFrame, keys: list[str], cap: int) -> DataFrame:
-    """Drop LSH buckets holding more than ``cap`` members before the
-    candidate self-join: a bucket of n ids emits n(n-1)/2 pairs, so one
-    adversarial bucket (template/boilerplate families that survive the
-    exact-text pre-collapse) can go quadratic.  Standard LSH practice
-    (datasketch / Spark ML both bound bucket fan-out); recall loss is
-    confined to pairs whose EVERY shared band is oversized — near-dups
-    collide in many independent bands.  One extra shuffle on the same
-    bucket key the join was about to shuffle on anyway."""
-    counts = banded.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n"))
-    return banded.join(
-        counts.filter(F.col("_n") > cap).select(*keys), keys, "left_anti"
-    )
-
-
 def minhash_lsh_candidates(
     sigs: DataFrame,
     bands: int = 16,
     rows_per_band: int = 4,
-    bucket_cap: int | None = None,
 ) -> DataFrame:
     """Banding: hash each band of the signature, self-join on
     (band_idx, band_hash) buckets → candidate pairs (id_a < id_b).
-    Shuffle key is the band hash — small and well-distributed.
-    ``bucket_cap`` drops oversized buckets (see :func:`_cap_buckets`);
-    pair it with the exact-text pre-collapse in :func:`minhash_dedup`,
-    which removes the *guaranteed* hot buckets (identical docs collide
-    in every band) without any recall loss."""
+    Shuffle key is the band hash — small and well-distributed.  Every
+    bucket pairs in full (no member is ever dropped): the exact-text
+    pre-collapse in :func:`minhash_dedup` removes the *guaranteed* hot
+    buckets (identical docs collide in every band) without recall
+    loss."""
     banded = sigs.select("id", _band_hashes(bands, rows_per_band))
-    if bucket_cap is not None:
-        banded = _cap_buckets(banded, ["band", "bh"], bucket_cap)
     return (
         banded.alias("a")
         .join(banded.alias("b"), ["band", "bh"])
@@ -1076,7 +1058,6 @@ def simhash_near_pairs(
     sigs: DataFrame,
     max_hamming: int = 3,
     expand: str = "all",
-    bucket_cap: int | None = None,
 ) -> DataFrame:
     """Pairs of ``sigs(id, simhash)`` within Hamming distance
     ``max_hamming`` → (id_a, id_b, hamming).
@@ -1092,21 +1073,18 @@ def simhash_near_pairs(
     though the output itself is quadratic in group size);
     ``expand="star"`` gives (rep, member) spanning pairs within groups
     and rep-level pairs across — O(n) output with identical connected
-    components downstream.  ``bucket_cap`` drops residual oversized
-    buckets (distinct-but-near-identical template families); see
-    :func:`_cap_buckets`."""
+    components downstream.  Every block bucket pairs in full, so recall
+    at ``max_hamming`` is total."""
     return _collapse_expand(
         sigs,
         F.col("simhash"),
-        lambda reps: _simhash_pairs_core(reps, max_hamming, bucket_cap),
+        lambda reps: _simhash_pairs_core(reps, max_hamming),
         F.lit(0).cast("int"),
         expand,
     )
 
 
-def _simhash_pairs_core(
-    sigs: DataFrame, max_hamming: int, bucket_cap: int | None
-) -> DataFrame:
+def _simhash_pairs_core(sigs: DataFrame, max_hamming: int) -> DataFrame:
     """Candidate pairs within Hamming distance via block banding,
     verified with native bit_count (Spark 3.5+).
 
@@ -1133,8 +1111,6 @@ def _simhash_pairs_core(
             )
         ).alias("blk", "bval"),
     )
-    if bucket_cap is not None:
-        blocks = _cap_buckets(blocks, ["blk", "bval"], bucket_cap)
     cand = (
         blocks.alias("a")
         .join(blocks.alias("b"), ["blk", "bval"])
@@ -1157,16 +1133,11 @@ def _simhash_pairs_core(
 # Connected components (pairs → canonical duplicate groups)
 # ---------------------------------------------------------------------------
 
-def connected_components(
-    pairs: DataFrame,
-    max_iters: int = 20,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    method: str = "propagation",
-) -> DataFrame:
-    """Label every node of the near-dup pair graph with the MINIMUM id
-    reachable from it — the canonical duplicate-group id.  Returns
-    (id, comp); survivors downstream are the rows with ``id == comp``.
+def connected_components(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
+    """Label every node of the near-dup pair graph ``pairs(id_a, id_b)``
+    with the MINIMUM id reachable from it — the canonical duplicate-group
+    id.  Returns (id, comp); survivors downstream are the rows with
+    ``id == comp``.
 
     The last step of a web-scale dedup pipeline: LSH/verify emits
     PAIRS, but retention decisions need GROUPS (a doc duplicated 3 ways
@@ -1175,74 +1146,67 @@ def connected_components(
     `eodal/mapper/mapper.py:565-667`); this generalizes it to
     transitive duplicate chains.
 
-    Algorithm: minimum-label propagation over the undirected edge set —
-    each round joins current labels across edges and takes the
-    neighborhood minimum (agg form → map-side combine; the shuffle key
-    is the node id, so a 10^9-member boilerplate component costs
-    rounds × |edges of the component| with NO single-task hotspot).
-    Rounds needed = graph diameter (near-dup components are shallow —
-    duplicate clusters, not social graphs); each round is checked via
-    one count of changed labels and the loop stops early on
-    convergence.  Raises after ``max_iters`` rather than returning a
-    silently-partial labeling.  ≡ the label-propagation formulation of
-    Kiveris et al.'s "Connected Components in MapReduce" (two-phase
-    star contractions are the O(log n)-round upgrade; the propagation
-    form is exact and simpler, and shallow graphs never see the
-    difference).
+    Algorithm: the two-phase star contraction of Kiveris et al.,
+    "Connected Components in MapReduce and Beyond" (SoCC 2014) —
+    alternate large-star / small-star until the edge set is a fixed
+    point, at which point the edges ARE disjoint stars centered on each
+    component's minimum id.  Both steps are agg-shaped (groupBy min +
+    equi-join, map-side combine; no Window, so a 10^9-member
+    boilerplate component has no single-task hotspot), and the
+    alternations needed grow logarithmically in the node count on ANY
+    graph (O(log² n) proven, ~log n seen) — a 10⁴-node path converges
+    in 16, where propagating min labels would need 10⁴ rounds.  Each
+    alternation is checkpointed (lineage stays flat) and checked for
+    the fixed point by edge counts and one ``exceptAll`` probe.  Raises
+    after ``max_iters`` alternations rather than returning a
+    silently-partial labeling.
 
-    ``method="star"`` switches to the two-phase large-star/small-star
-    contraction (`_connected_components_star`) — O(log n) rounds on
-    high-diameter graphs where propagation needs O(diameter).
-    """
-    if method == "star":
-        return _connected_components_star(pairs, max_iters, id_a, id_b)
-    if method != "propagation":
-        raise ValueError(f"unknown method {method!r}")
-    edges = (
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-        .union(pairs.select(F.col(id_b).alias("u"), F.col(id_a).alias("v")))
+    ``pairs`` is read ONCE: its canonical (greatest, least) edges are
+    checkpointed, and both the contraction edges (u != v) and the nodes
+    that appear only in self-pairs (u == v, labeled with themselves)
+    come from that checkpoint — actions on the result never re-run the
+    upstream pair pipeline."""
+    canon = (
+        pairs.select(
+            F.greatest("id_a", "id_b").alias("u"),
+            F.least("id_a", "id_b").alias("v"),
+        )
         .distinct()
-        # truncate the PAIR-PRODUCING lineage once: every round joins
-        # against `edges` and runs one convergence count, so without
-        # this the upstream pair pipeline (LSH + verify for minhash
-        # input) re-executes 2× PER ROUND — measured 50 s → 12 s for
-        # dup_groups over 50k bench docs (guide §5 localCheckpoint)
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
-    # every endpoint starts labeled with itself
-    labels = (
-        edges.select(F.col("u").alias("id"))
-        .distinct()
-        .withColumn("comp", F.col("id"))
-    )
-    labels = labels.localCheckpoint(eager=True)
+    edges = canon.filter(F.col("u") != F.col("v"))
     for _ in range(max_iters):
-        # truncate lineage each round — an iterative plan otherwise
-        # doubles in depth per iteration and analysis cost explodes
-        new_labels = _min_label_round(edges, labels).localCheckpoint(
-            eager=True
+        ss = _small_star(_large_star(edges)).localCheckpoint(eager=True)
+        converged = (
+            ss.count() == edges.count() and ss.exceptAll(edges).isEmpty()
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            return labels
+        edges = ss
+        if converged:
+            leaves = edges.select(F.col("u").alias("id"), F.col("v").alias("comp"))
+            roots = (
+                edges.select(F.col("v").alias("id"))
+                .distinct()
+                .withColumn("comp", F.col("id"))
+            )
+            self_only = canon.filter(F.col("u") == F.col("v")).select(
+                F.col("u").alias("id"), F.col("u").alias("comp")
+            )
+            # a star fixed point has one root per leaf; the min-agg
+            # merges a self-paired node with its star label
+            return leaves.union(roots).union(self_only).groupBy("id").agg(
+                F.min("comp").alias("comp")
+            )
     raise RuntimeError(
         f"connected_components did not converge in {max_iters} rounds — "
-        "the pair graph has a longer chain than expected; raise max_iters"
+        "the pair graph needs more star-contraction rounds; raise max_iters"
     )
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
-    """One large-star operation (Kiveris et al., "Connected Components
-    in MapReduce and Beyond", alg. 1): every node u links each STRICTLY
-    LARGER neighbor to the minimum of its closed neighborhood.  Input/
-    output edges are canonically oriented (u > v); agg-shaped (groupBy
-    min + equi-join), no windows, no driver state."""
+    """One large-star operation (Kiveris et al., alg. 1): every node u
+    links each STRICTLY LARGER neighbor to the minimum of its closed
+    neighborhood.  Input/output edges are canonically oriented (u > v);
+    agg-shaped (groupBy min + equi-join), no windows, no driver state."""
     sym = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
     mins = (
         sym.groupBy("u")
@@ -1273,76 +1237,17 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def _connected_components_star(
-    pairs: DataFrame, max_iters: int, id_a: str, id_b: str
-) -> DataFrame:
-    """Two-phase star contraction: alternate large-star / small-star
-    until the edge set is a fixed point — at which point the edges ARE
-    disjoint stars centered on each component's minimum id.  Converges
-    in O(log n) alternations on ANY graph (vs O(diameter) for label
-    propagation), so a 10⁴-node path needs ~log rounds, not 10⁴.
-    Same output contract as `connected_components`: (id, comp)."""
-    edges = (
-        pairs.select(
-            F.greatest(F.col(id_a), F.col(id_b)).alias("u"),
-            F.least(F.col(id_a), F.col(id_b)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iters):
-        ss = _small_star(_large_star(edges)).localCheckpoint(eager=True)
-        converged = (
-            ss.count() == edges.count() and ss.exceptAll(edges).isEmpty()
-        )
-        edges = ss
-        if converged:
-            leaves = edges.select(
-                F.col("u").alias("id"), F.col("v").alias("comp")
-            )
-            roots = (
-                edges.select(F.col("v").alias("id"))
-                .distinct()
-                .withColumn("comp", F.col("id"))
-            )
-            # nodes appearing ONLY in self-pairs were dropped by the
-            # u != v filter; propagation labels them with themselves —
-            # keep the two methods' (id, comp) contracts identical
-            self_only = (
-                pairs.filter(F.col(id_a) == F.col(id_b))
-                .select(F.col(id_a).alias("id"))
-                .withColumn("comp", F.col("id"))
-            )
-            # a star fixed point has one root per leaf; the min-agg is a
-            # cheap invariant guard, not a correctness crutch
-            return leaves.union(roots).union(self_only).groupBy("id").agg(
-                F.min("comp").alias("comp")
-            )
-    raise RuntimeError(
-        f"star contraction did not converge in {max_iters} rounds — "
-        "raise max_iters"
-    )
-
-
-def _min_label_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
-    """ONE min-label propagation round, un-checkpointed — separate so
-    tests can assert it is agg-shaped (no Window) on the real plan;
-    neighbor labels: for node u, the labels of all v adjacent to u."""
-    nbr = edges.join(labels.withColumnRenamed("id", "v"), "v").select(
-        F.col("u").alias("id"), "comp"
-    )
-    return labels.union(nbr).groupBy("id").agg(F.min("comp").alias("comp"))
-
-
 def dup_groups(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
 ) -> DataFrame:
     """(doc_id, group_id) for EVERY document: members of a near-dup
-    component share its minimum doc id; singletons are their own group.
-    ``df.filter(doc_id == group_id)`` is then the retention set."""
+    component of ``pairs(id_a, id_b)`` share its minimum doc id (the
+    star contraction of :func:`connected_components`, which raises
+    rather than return a partial labeling); singletons are their own
+    group.  ``df.filter(doc_id == group_id)`` is then the retention
+    set."""
     comp = connected_components(pairs)
     return (
         df.select(F.col(id_col).alias("doc_id"))

@@ -450,7 +450,6 @@ def _srp_near_pairs(
     n_tables: int,
     target_bucket_rows: int,
     max_bucket_rows: int,
-    guard: str,
 ) -> DataFrame:
     """Near-dup pairs (id_a < id_b, q7 ``sqdist``) of ``rows(id,
     embedding)`` by SRP bucketing — the representative-level core of
@@ -475,34 +474,25 @@ def _srp_near_pairs(
         ).alias("_tb"),
     ).select("id", "embedding", F.col("_tb.tbl").alias("tbl"), F.col("_tb.bucket").alias("bucket"))
 
-    # persist in BOTH guard paths: sizes, the self-join's build side and
-    # its probe side would otherwise each rerun the n_tables SRP UDFs
-    # over the corpus (callers may unpersist the result's lineage)
+    # persist: the guard's sizes, the self-join's build side and its
+    # probe side would otherwise each rerun the n_tables SRP UDFs over
+    # the corpus (callers may unpersist the result's lineage)
     stacked = stacked.persist()
-    sizes = stacked.groupBy("tbl", "bucket").count()
-    if guard == "raise":
-        top = sizes.orderBy(F.desc("count")).first()
-        if top is not None and top["count"] > max_bucket_rows:
-            stacked.unpersist()
-            raise ValueError(
-                f"SRP bucket (table {top['tbl']}, bucket {top['bucket']}) has "
-                f"{top['count']:,} rows (> {max_bucket_rows:,}); raise n_planes "
-                f"(got {n_planes}) or lower target_bucket_rows"
-            )
-        ok = stacked
-    else:
-        # broadcast the OVERSIZED buckets (bounded, tiny) and anti-join —
-        # the keep-list of all small buckets scales with the corpus and
-        # would defeat the broadcast at 10^12 rows
-        over = sizes.filter(F.col("count") > max_bucket_rows).select("tbl", "bucket")
-        ok = stacked.join(F.broadcast(over), ["tbl", "bucket"], "left_anti")
+    top = stacked.groupBy("tbl", "bucket").count().orderBy(F.desc("count")).first()
+    if top is not None and top["count"] > max_bucket_rows:
+        stacked.unpersist()
+        raise ValueError(
+            f"SRP bucket (table {top['tbl']}, bucket {top['bucket']}) has "
+            f"{top['count']:,} rows (> {max_bucket_rows:,}); raise n_planes "
+            f"(got {n_planes}) or lower target_bucket_rows"
+        )
 
     # pairs generated by per-bucket int64 gram-matrix blocks inside the
     # workers (bit-identical q7 metric) — see _gram_block_pairs for why
     # the self-join + codegen distance form was the bottleneck;
     # duplicates across tables are dropped after the exact filter
     return _gram_block_pairs(
-        ok.select("id", "embedding", "tbl", "bucket"),
+        stacked.select("id", "embedding", "tbl", "bucket"),
         "embedding",
         ["tbl", "bucket"],
         _q7_sqdist_test(float(sqdist_threshold)),
@@ -518,7 +508,6 @@ def embedding_near_dup_pairs(
     n_tables: int = 4,
     target_bucket_rows: int = 1024,
     max_bucket_rows: int = 200_000,
-    guard: str = "raise",
     expand: str = "all",
     max_group_size: int = 2_000,
 ) -> DataFrame:
@@ -547,10 +536,9 @@ def embedding_near_dup_pairs(
        ~``target_bucket_rows`` at any corpus size instead of the
        quadratic blowup of a fixed 2^8 buckets.
     3. **bucket-size guard** — like `geometry.polygon_cover_cells`'s
-       covering guard: guard="raise" fails fast with stats if any
-       (table, bucket) still exceeds ``max_bucket_rows``;
-       guard="skip" excludes oversized buckets from pairing (documented
-       recall loss) and keeps going.
+       covering guard: fails fast with stats if any (table, bucket)
+       still exceeds ``max_bucket_rows``; no bucket is ever dropped
+       from pairing, so no pair is lost silently.
 
     All ``n_tables`` hash tables are computed in ONE corpus scan and
     exploded to (table, bucket) rows; candidates shuffle once on the
@@ -562,14 +550,12 @@ def embedding_near_dup_pairs(
     pair stage reuses them; they stay cached for the returned
     DataFrame's lifetime — long-lived sessions issuing many calls
     should ``spark.catalog.clearCache()`` between them."""
-    if guard not in ("raise", "skip"):
-        raise ValueError(guard)
     return _collapse_expand(
         corpus.select(F.col("vec_id").alias("id"), "embedding"),
         _quantize_vec(F.col("embedding")),
         lambda reps: _srp_near_pairs(
             reps, sqdist_threshold, dim, n_planes, n_tables,
-            target_bucket_rows, max_bucket_rows, guard,
+            target_bucket_rows, max_bucket_rows,
         ),
         F.lit(0).cast("long"),
         expand,
@@ -597,7 +583,6 @@ def semantic_dedup(
     iters: int = 10,
     seed: int = 42,
     max_cluster_rows: int = 50_000,
-    guard: str = "raise",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     near-duplicate removal over an embedding column — k-means clusters
@@ -625,11 +610,10 @@ def semantic_dedup(
     * **cluster-bucketed pairing**: representatives self-join on their
       nearest-centroid assignment only (SemDeDup's core trick — the
       corpus never sees an all-pairs join); the join key is the cluster
-      id, expected cluster size is |reps| / ``n_clusters``, and
-      ``max_cluster_rows`` fails fast (``guard="raise"``) or skips with
-      documented recall loss (``guard="skip"``) when a natural cluster
-      would still go quadratic — size ``n_clusters`` ~ |corpus| / 10^4
-      at scale;
+      id, expected cluster size is |reps| / ``n_clusters``, and a
+      natural cluster over ``max_cluster_rows`` (whose pair walk would
+      still go quadratic) fails fast rather than being dropped — size
+      ``n_clusters`` ~ |corpus| / 10^4 at scale;
     * centroid training is a driver-side numpy k-means on a
       hash-spread sample (`ivf_train_centroids`), assignment is one
       Arrow-batched matmul pass (`ivf_assign_udf`) — the quantizer is a
@@ -643,9 +627,6 @@ def semantic_dedup(
     Caching note: the collapse mapping and the cluster assignment stay
     persisted for the returned plan's lifetime (the guard makes the operator eager) — long-lived sessions
     should ``spark.catalog.clearCache()`` between unrelated calls."""
-    if guard not in ("raise", "skip"):
-        raise ValueError(guard)
-
     def cluster_pairs(reps: DataFrame) -> DataFrame:
         cent = ivf_train_centroids(
             reps.select(F.col("id").alias("vec_id"), F.col("nvec").alias("embedding")),
@@ -657,20 +638,19 @@ def semantic_dedup(
         assigned = reps.select(
             "id", "nvec", ivf_assign_udf(cent)(F.col("nvec")).alias("cl")
         ).persist()
-        sizes = assigned.groupBy("cl").count()
-        big = sizes.filter(F.col("count") > max_cluster_rows)
-        top = big.orderBy(F.desc("count")).first()
+        top = (
+            assigned.groupBy("cl").count()
+            .filter(F.col("count") > max_cluster_rows)
+            .orderBy(F.desc("count"))
+            .first()
+        )
         if top is not None:
-            if guard == "raise":
-                raise ValueError(
-                    f"cluster {top['cl']} holds {top['count']:,} "
-                    f"representatives (> {max_cluster_rows:,}); its pair join "
-                    "is quadratic on one key — raise n_clusters (target "
-                    "|corpus|/n_clusters ≈ 10^3-10^4) or pass guard='skip' "
-                    "to drop oversized clusters (documented recall loss)"
-                )
-            ok = sizes.filter(F.col("count") <= max_cluster_rows).select("cl")
-            assigned = assigned.join(F.broadcast(ok), "cl")
+            raise ValueError(
+                f"cluster {top['cl']} holds {top['count']:,} "
+                f"representatives (> {max_cluster_rows:,}); its pair join "
+                "is quadratic on one key — raise n_clusters (target "
+                "|corpus|/n_clusters ≈ 10^3-10^4)"
+            )
         # unit vectors: cosine ≡ dot product (no per-pair norms); one
         # float64 gram block walk per cluster replaces the cluster
         # self-join whose per-pair 64-term codegen dot made SemDeDup

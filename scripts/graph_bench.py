@@ -70,13 +70,13 @@ results bit-identical at any parallelism.
 
 
 def cc_bench(spark) -> str:
-    """Connected components: propagation vs two-phase star contraction
-    on a dedup-realistic graph — ~10⁷ clustered edges (2M duplicate
-    groups of 5, diameter 2: the shape LSH pair output actually has)
-    plus a 10⁴-node path slice (diameter 10⁴: the adversarial case
-    where propagation needs O(diameter) rounds but star needs O(log n)
-    alternations).  Measured so the star variant's O(log n) claim
-    carries a number like every other design claim here."""
+    """Connected components (two-phase star contraction) on a
+    dedup-realistic graph — ~10⁷ clustered edges (2M duplicate groups
+    of 5, diameter 2: the shape LSH pair output actually has) — and on
+    the same graph plus a 10⁴-node path slice (diameter 10⁴: the
+    adversarial case, which star contraction finishes in O(log n)
+    alternations).  Measured so the O(log n) claim carries a number
+    like every other design claim here."""
     from pyspark.sql import functions as F
 
     from eodal_spark.operators import dedup as D
@@ -96,17 +96,14 @@ def cc_bench(spark) -> str:
     n_edges = n_groups * (gsz - 1)
 
     rows = {}
-    for name, method, pairs, iters, expect in [
-        ("propagation / clustered", "propagation", clusters, 8, n_groups * gsz),
-        ("star / clustered", "star", clusters, 25, n_groups * gsz),
-        ("star / clustered+chain", "star", full, 25, n_groups * gsz + chain_n),
+    for name, pairs, expect in [
+        ("clustered", clusters, n_groups * gsz),
+        ("clustered+chain", full, n_groups * gsz + chain_n),
     ]:
         best = float("inf")
         for _ in range(REPS):
             t0 = time.time()
-            got = D.connected_components(
-                pairs, max_iters=iters, method=method
-            ).count()
+            got = D.connected_components(pairs).count()
             best = min(best, time.time() - t0)
             if got != expect:
                 raise RuntimeError(f"{name}: {got} labels, expected {expect}")
@@ -122,15 +119,13 @@ def cc_bench(spark) -> str:
 {n_edges:,} clustered edges (2M groups × 5 — LSH-pair shape, diameter
 2) and a {chain_n:,}-node path slice (diameter {chain_n:,}).
 
-| variant / graph | best-of-{REPS} (s) | edges/s |
+| graph | best-of-{REPS} (s) | edges/s |
 |---|---|---|
 {lines}
 
-Propagation converges in diameter+1 rounds — unbeatable on the shallow
-duplicate clusters LSH emits, but it CANNOT run the chain slice
-({chain_n:,} rounds).  Star contraction finishes the chain in
-O(log n) alternations at a constant-factor cost on shallow graphs —
-the opt-in (`method="star"`) for unknown-diameter pair graphs.
+Star contraction is the one labeling algorithm: it finishes the chain
+slice in O(log n) alternations, where propagating min labels would
+need {chain_n:,} rounds, so no pair graph needs a diameter guess.
 <!-- CC:END -->
 """
 

@@ -152,20 +152,34 @@ def test_dup_groups_labels_singletons(spark):
 
 
 def test_connected_components_agg_form_no_window(spark):
-    """Skew guard: one propagation round must be agg-shaped (map-side
-    combinable min), never a Window over the component.  Inspect the
-    ROUND pre-checkpoint — the final result's plan is an RDD scan that
-    would vacuously pass."""
-    pairs = spark.createDataFrame([(1, 2), (2, 3)], ["id_a", "id_b"])
-    edges = pairs.selectExpr("id_a AS u", "id_b AS v").union(
-        pairs.selectExpr("id_b AS u", "id_a AS v")
-    )
-    labels = edges.selectExpr("u AS id").distinct().selectExpr(
-        "id", "id AS comp"
-    )
-    out = D._min_label_round(edges, labels)
+    """Skew guard: one large-star/small-star alternation must be
+    agg-shaped (map-side combinable min), never a Window over the
+    component.  Inspect the ROUND pre-checkpoint — the final result's
+    plan only scans checkpoints, so it says nothing about the rounds."""
+    edges = spark.createDataFrame([(2, 1), (3, 2)], ["u", "v"])
+    out = D._small_star(D._large_star(edges))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "HashAggregate" in plan and "Window" not in plan
+
+
+def test_connected_components_reads_pairs_once(spark):
+    """Every read of ``pairs`` goes through one checkpoint: the result's
+    optimized plan holds no trace of the upstream pair pipeline, so
+    actions on it never re-run (here) a Python ``mapInPandas`` stage."""
+
+    def emit(it):
+        for pdf in it:
+            yield pdf.assign(id_b=pdf["id_a"] + 1)
+
+    src = spark.createDataFrame([(1,), (2,), (5,), (9,)], "id_a long")
+    pairs = src.mapInPandas(emit, "id_a long, id_b long").union(
+        spark.createDataFrame([(7, 7)], "id_a long, id_b long")
+    )
+    out = D.connected_components(pairs)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "MapInPandas" not in plan
+    got = {(r.id, r.comp) for r in out.collect()}
+    assert got == {(1, 1), (2, 1), (3, 1), (5, 5), (6, 5), (7, 7), (9, 9), (10, 9)}
 
 
 import numpy as np
@@ -180,7 +194,7 @@ from hypothesis import strategies as st
     seed=st.integers(min_value=0, max_value=10_000),
 )
 def test_connected_components_matches_union_find(spark, n_nodes, n_edges, seed):
-    """Property: distributed min-label propagation equals a classic
+    """Property: distributed star contraction equals a classic
     union-find over the same random graph."""
     rng = np.random.RandomState(seed)
     edges = [
@@ -219,69 +233,33 @@ def test_connected_components_matches_union_find(spark, n_nodes, n_edges, seed):
 
 
 def test_star_contraction_path_graph_logarithmic_rounds(spark):
-    """A 10⁴-node path has diameter 10⁴: min-label propagation would
+    """A 10⁴-node path has diameter 10⁴: propagating min labels would
     need 10⁴ rounds, the two-phase large-star/small-star contraction
-    must finish in O(log n) — max_iters=25 ≫ log₂(10⁴)≈13.3 but ≪ the
-    diameter, so success here IS the round bound."""
+    must finish in O(log n) — the default max_iters=20 is near
+    log₂(10⁴)≈13.3 and ≪ the diameter, so success here IS the round
+    bound."""
     from pyspark.sql import functions as F
 
     n = 10_000
     pairs = spark.range(n - 1).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
-    out = D.connected_components(pairs, max_iters=25, method="star")
+    out = D.connected_components(pairs)
     rows = out.collect()
     assert len(rows) == n
     assert all(r.comp == 0 for r in rows)
 
 
-@settings(max_examples=15, deadline=None)
-@given(
-    n_nodes=st.integers(min_value=2, max_value=30),
-    n_edges=st.integers(min_value=1, max_value=40),
-    seed=st.integers(min_value=0, max_value=10_000),
-)
-def test_star_contraction_matches_propagation(spark, n_nodes, n_edges, seed):
-    """Property: the star-contraction labeling equals min-label
-    propagation on the same random graph."""
-    rng = np.random.RandomState(seed)
-    edges = [
-        (int(a), int(b))
-        for a, b in rng.randint(0, n_nodes, size=(n_edges, 2))
-        if a != b
-    ]
-    if not edges:
-        return
-    pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
-    prop = {
-        r.id: r.comp
-        for r in D.connected_components(pairs, max_iters=n_nodes + 2).collect()
-    }
-    star = {
-        r.id: r.comp
-        for r in D.connected_components(
-            pairs, max_iters=n_nodes + 2, method="star"
-        ).collect()
-    }
-    assert star == prop
-
-
 def test_star_contraction_keeps_self_pair_nodes(spark):
     """A node appearing only in self-pairs must be labeled with itself
-    by BOTH methods (the star path filters u != v edges, so these nodes
-    need explicit reinstatement)."""
+    (the contraction keeps only u != v edges, so these nodes need
+    explicit reinstatement)."""
     pairs = spark.createDataFrame([(5, 5), (1, 2)], ["id_a", "id_b"])
-    prop = {
+    got = {
         (r.id, r.comp)
         for r in D.connected_components(pairs, max_iters=5).collect()
     }
-    star = {
-        (r.id, r.comp)
-        for r in D.connected_components(
-            pairs, max_iters=5, method="star"
-        ).collect()
-    }
-    assert star == prop == {(5, 5), (1, 1), (2, 1)}
+    assert got == {(5, 5), (1, 1), (2, 1)}
 
 
 def test_minhash_collapse_matches_uncollapsed(planted):
@@ -301,7 +279,7 @@ def test_minhash_collapse_matches_uncollapsed(planted):
 def test_simhash_collapse_matches_uncollapsed(planted):
     sigs = D.simhash_signatures(planted).cache()
     a = D.simhash_near_pairs(sigs, max_hamming=6).collect()
-    b = D._simhash_pairs_core(sigs, 6, None).collect()
+    b = D._simhash_pairs_core(sigs, 6).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     assert len(a) > 0
 
@@ -407,20 +385,6 @@ def test_star_expansion_same_components_as_all(request, op):
     )
     assert g_all == g_star
     assert any(d != g for d, g in g_all)  # some group has members
-
-
-def test_bucket_cap_drops_oversized_buckets(spark):
-    """bucket_cap: a 10-member signature group exceeds cap=5 → its
-    buckets are dropped; a 2-member group survives."""
-    sig_a = [1] * 64
-    sig_b = [2] * 64
-    rows = [(i, sig_a) for i in range(10)] + [(10, sig_b), (11, sig_b)]
-    sigs = spark.createDataFrame(rows, "id long, sig array<long>")
-    capped = D.minhash_lsh_candidates(sigs, bucket_cap=5)
-    got = {(r.id_a, r.id_b) for r in capped.collect()}
-    assert got == {(10, 11)}
-    uncapped = D.minhash_lsh_candidates(sigs)
-    assert uncapped.count() == 45 + 1
 
 
 @pytest.fixture(scope="module")

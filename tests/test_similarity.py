@@ -117,23 +117,6 @@ def test_near_dup_bucket_guard_raises(spark, corpus):
         )
 
 
-def test_near_dup_guard_skip_keeps_running(spark, corpus):
-    """guard="skip" drops oversized buckets (documented recall loss) but
-    exact-duplicate pairs survive — they bypass bucketing entirely."""
-    dups = corpus.limit(3).select(
-        (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
-    )
-    aug = corpus.select("vec_id", "embedding").unionByName(dups)
-    dim = len(corpus.first()["embedding"])
-    pairs = S.embedding_near_dup_pairs(
-        aug, sqdist_threshold=1, dim=dim,
-        n_planes=2, max_bucket_rows=50, guard="skip",
-    )
-    got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-    for r in corpus.limit(3).collect():
-        assert (r["vec_id"], r["vec_id"] + 100000) in got
-
-
 def test_near_dup_exact_collapse_absorbs_skew(spark, corpus):
     """200 identical vectors would be an unsplittable hot bucket (no
     number of SRP planes separates identical vectors); the exact-dup
@@ -149,7 +132,7 @@ def test_near_dup_exact_collapse_absorbs_skew(spark, corpus):
     dim = len(one["embedding"])
     pairs = S.embedding_near_dup_pairs(
         aug, sqdist_threshold=1, dim=dim,
-        n_planes=4, max_bucket_rows=120, guard="raise",
+        n_planes=4, max_bucket_rows=120,
     ).collect()
     rep = min(one["vec_id"], 1000)
     member_pairs = {(r["id_a"], r["id_b"]) for r in pairs if r["sqdist"] == 0}
@@ -215,7 +198,7 @@ def test_near_dup_closure_with_duplicate_groups(spark, corpus):
     assert None not in dists and len(dists) == 1
     raw = aug.select(F.col("vec_id").alias("id"), "embedding")
     core = S._srp_near_pairs(
-        raw, 10_000_000_000, dim, None, 4, 1024, 200_000, "raise"
+        raw, 10_000_000_000, dim, None, 4, 1024, 200_000
     ).collect()
     assert sorted(map(tuple, pairs)) == sorted(map(tuple, core))
     star = S.embedding_near_dup_pairs(
@@ -336,8 +319,7 @@ def test_semantic_dedup_groups_transitive_chain(spark):
 
 
 def test_semantic_dedup_cluster_guard(spark):
-    """Oversized natural clusters fail fast (guard='raise') or are
-    skipped with recall loss (guard='skip')."""
+    """Oversized natural clusters fail fast, never dropped silently."""
     import math
 
     # 40 distinct near-collinear vectors → one cluster, > cap
@@ -349,10 +331,6 @@ def test_semantic_dedup_cluster_guard(spark):
     with pytest.raises(ValueError, match="raise n_clusters"):
         S.semantic_dedup(df, tau=0.99, n_clusters=1, sample=50,
                          max_cluster_rows=10)
-    out = S.semantic_dedup(df, tau=0.99, n_clusters=1, sample=50,
-                           max_cluster_rows=10, guard="skip")
-    # skipped cluster → no links → everything survives (documented loss)
-    assert out.filter("keep").count() == 40
 
 
 def test_semantic_dedup_no_duplicates_is_identity(spark):
