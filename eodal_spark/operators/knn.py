@@ -125,7 +125,6 @@ def knn(
     k: int,
     start_radius: int = 2,
     max_rounds: int = 3,
-    scan_prune: bool | None = None,
     max_ring_radius: int = 256,
     prune_query_cap: int = 4096,
 ) -> DataFrame:
@@ -199,8 +198,7 @@ def knn(
     pages_side = pages_geo.select("cell_id", "url", "lat_centi", "lon_centi")
     n_cells = 1 << res
 
-    if scan_prune is None:
-        scan_prune = cell_id_is_stored(pages_geo)
+    scan_prune = cell_id_is_stored(pages_geo)
     # unprunable scans pay a full corpus materialization per pass —
     # shorten the ladder so stragglers reach the (equally full-pass,
     # but final) brute fallback sooner

@@ -237,6 +237,11 @@ def _parse_partition(relname: str) -> dict[str, str]:
 
 
 BLOOM_SUFFIX = "-bloom"
+# bits and hash count of every new file's bloom (~1% false positives
+# at 13.6k keys per file); a snapshot records its own, and compaction
+# re-blooms with the table's recorded config
+_BLOOM_BITS = 1 << 17
+_BLOOM_K = 7
 
 
 def _bloom_sidecar(data_dir: str) -> str:
@@ -694,8 +699,6 @@ class SnapshotCatalog:
         n_files: int | None = None,
         mode: str = "overwrite",
         bloom_cols: tuple[str, ...] = (),
-        bloom_bits: int = 1 << 17,
-        bloom_k: int = 7,
         zorder: tuple[str, str] | tuple = (),
         partition_by: list | None = None,
         branch: str | None = None,
@@ -729,7 +732,7 @@ class SnapshotCatalog:
         """
         return self._write(
             self._load_manifest(table), df, table, sort_by, meta, n_files,
-            mode, bloom_cols, bloom_bits, bloom_k, zorder, partition_by,
+            mode, bloom_cols, _BLOOM_BITS, _BLOOM_K, zorder, partition_by,
             branch,
         )
 
@@ -2115,8 +2118,8 @@ class SnapshotCatalog:
             n_files=n_files,
             mode="overwrite",
             bloom_cols=tuple(bcfg["cols"]) if bcfg else (),
-            bloom_bits=bcfg["bits"] if bcfg else 1 << 17,
-            bloom_k=bcfg["k"] if bcfg else 7,
+            bloom_bits=bcfg["bits"] if bcfg else _BLOOM_BITS,
+            bloom_k=bcfg["k"] if bcfg else _BLOOM_K,
             zorder=tuple(snap.get("zorder") or ()),
             partition_by=spec,
             branch=None,

@@ -85,9 +85,10 @@ def main() -> None:
         f"{round(r['rows_per_sec'] / c):,} | {scan_best[c]:,.0f} |"
         for c, r in results.items()
     )
-    # preserve EVERY marker-owned section (skew_bench, catalog_bench,
-    # graph_bench, ingest_bench each own one) — this script owns only
-    # the headline/scaling prose above them
+    # preserve EVERY marker-owned section (skew_bench and
+    # dedup_hot_bench own one each; the rest are archived figures of
+    # retired scripts) — this script owns only the headline/scaling
+    # prose above them
     import re as _re
 
     md_path = os.path.join(REPO, "BENCH", "BASELINE.md")

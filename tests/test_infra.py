@@ -254,6 +254,20 @@ def test_pipeline_e2e_resume_and_metrics(spark, tmp_path):
     assert r3["mosaic_rows"] == r1["mosaic_rows"]
 
 
+def test_doc_counts_are_in_sync():
+    """The test and query counts README.md and COVERAGE.md quote are
+    the ones the code has (`scripts/counts_sync.py --check`)."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    p = subprocess.run(
+        [sys.executable, os.path.join(root, "scripts", "counts_sync.py"), "--check"],
+        cwd=root, capture_output=True, text=True, timeout=600,
+    )
+    assert p.returncode == 0, p.stdout + p.stderr[-2000:]
+
+
 def test_bucketed_join_has_no_exchange(spark, tmp_path):
     """Bucketed co-located join: same-bucketed tables join without a
     shuffle (the repeated-join strategy for cell-keyed tables)."""
