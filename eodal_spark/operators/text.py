@@ -315,21 +315,6 @@ def scrub_boilerplate_lines(
     )
 
 
-def enrich(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Apply the full text-analysis battery as one fused projection."""
-    t = F.col(text_col)
-    return df.select(
-        "*",
-        lang_id(t).alias("lang_guess"),
-        token_count(t).alias("n_tokens"),
-        bpe_ish_token_count(t).alias("n_subtokens"),
-        punct_ratio_milli(t).alias("punct_milli"),
-        stopword_ratio_milli(t).alias("stop_milli"),
-        quality_score_milli(t).alias("quality_milli"),
-        fingerprint(t).alias("fp"),
-    )
-
-
 def hash_bucket_milli(key: Column) -> Column:
     """Deterministic per-row bucket in [0, 1000): the first 8 hex chars
     of md5(key) as an integer, mod 1000.  Cross-engine exact (md5 is

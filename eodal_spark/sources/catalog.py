@@ -379,10 +379,18 @@ class SnapshotCatalog:
 
     def _load_manifest(self, table: str) -> dict:
         p = self._manifest_path(table)
-        if os.path.exists(p):
-            with open(p) as f:
-                return json.load(f)
-        return {"snapshots": []}
+        if not os.path.exists(p):
+            return {"snapshots": []}
+        with open(p) as f:
+            man = json.load(f)
+        if "schema" in man:
+            # a field-id schema log: its files may hold columns under
+            # names the log renamed, which a by-name read returns as NULL
+            raise ValueError(
+                f"table {table!r}'s manifest records a field-id schema "
+                "log: not a table this catalog reads"
+            )
+        return man
 
     def _commit_manifest(self, table: str, man: dict) -> None:
         """THE manifest commit protocol — one implementation so crash
@@ -808,12 +816,11 @@ class SnapshotCatalog:
             # write with a different spec — old dirs keep theirs, scan
             # consults each file's own dir spec (≡ Iceberg spec-id)
             snap["partition_specs"][dname] = [list(e) for e in partition_by]
-        self._register_new_columns(man, df)
         return self._commit_snap(table, man, snap, files, [data_dir], branch)
 
     # -- segmented manifests (≡ Iceberg manifest-list + manifests) -------
     #
-    # The root manifest.json holds snapshots/schema/refs/branches; each
+    # The root manifest.json holds snapshots/refs/branches; each
     # snapshot's FILE ENTRIES live in immutable per-commit SEGMENT files
     # under <table>/manifests/.  A snapshot references segments by name
     # plus coarse per-segment stats (rows, dirs, column bounds), so:
@@ -981,9 +988,9 @@ class SnapshotCatalog:
         main_only: bool = False,
     ) -> dict:
         """The snapshot a call names, resolved in the ALREADY-LOADED
-        manifest ``man`` — callers load once and resolve, read schema
-        state and files from that one view (a second load would be a
-        TOCTOU against concurrent expiry/rollback/rename).  Default:
+        manifest ``man`` — callers load once and resolve, and read
+        files from that one view (a second load would be a TOCTOU
+        against concurrent expiry/rollback).  Default:
         main's head.  ``as_of`` (epoch seconds or datetime) is the
         newest main snapshot committed at or before it (≡ Iceberg
         ``TIMESTAMP AS OF``; snapshots predating ``committed_at`` sort
@@ -1033,233 +1040,10 @@ class SnapshotCatalog:
             )
         raise KeyError(f"no snapshot {snapshot_id} for table {table}")
 
-    # -- schema evolution (≡ Iceberg field-id schema evolution) ----------
-    #
-    # The manifest carries a field-id schema: every live column has a
-    # stable integer id; renames change only the NAME bound to an id,
-    # drops retire the id, adds mint a fresh one.  Data files keep their
-    # write-time physical names forever; the read path binds each file's
-    # physical columns to ids via the schema version that was current
-    # when the file's snapshot committed, then projects ids to CURRENT
-    # names.  This is exactly Iceberg's contract (spec §4 "Schema
-    # Evolution"): renames never rewrite data, re-adding a dropped name
-    # gets a NEW id so the old column's bytes can never resurface, and
-    # all changes are O(manifest) metadata commits.  The reference
-    # (eodal) has no table format at all; this extends the catalog tier
-    # the same way its Band API fixes band names at load
-    # (`eodal/core/raster.py` band_names) but here names may evolve.
-    #
-    # Version resolution: schema changes do not create snapshots; each
-    # superseded version is logged with ``last_sid`` = the max snapshot
-    # id at the moment it was replaced.  A data dir ``v{S}-…`` was
-    # written under the OLDEST logged version with ``last_sid >= S``
-    # (falling through to the current fields) — no per-file bookkeeping.
-
-    def table_schema(self, table: str) -> list[dict] | None:
-        """Current field-id schema: ``[{"id", "name", "type"}, ...]`` in
-        column order, or ``None`` when the table has never had a schema
-        change (plain name-based reads)."""
-        st = self._load_manifest(table).get("schema")
-        return [dict(f) for f in st["fields"]] if st else None
-
-    def _ensure_schema(self, spark: SparkSession, table: str, man: dict) -> dict:
-        """Lazily initialize field-id tracking from the current
-        snapshot's merged read schema (footer reads only).  Until the
-        first rename/drop/add, tables carry no schema state and reads
-        stay purely name-based — zero cost for the common case."""
-        st = man.get("schema")
-        if st:
-            return st
-        if not man["snapshots"]:
-            raise FileNotFoundError(
-                f"no snapshots for table {table!r} — write data before "
-                "evolving its schema"
-            )
-        schema = self._read(spark, table, man, man["snapshots"][-1], []).schema
-        fields = [
-            {"id": i + 1, "name": f.name, "type": f.dataType.simpleString()}
-            for i, f in enumerate(schema.fields)
-        ]
-        man["schema"] = {
-            "next_id": len(fields) + 1,
-            "version": 0,
-            "fields": fields,
-            "log": [],
-        }
-        return man["schema"]
-
-    @staticmethod
-    def _push_schema_version(man: dict, st: dict) -> None:
-        st["log"].append(
-            {
-                "version": st["version"],
-                # over main AND branch snapshots: a branch append
-                # committed before this change is read under the old names
-                "last_sid": SnapshotCatalog._next_sid(man) - 1,
-                "fields": [dict(f) for f in st["fields"]],
-            }
-        )
-        st["version"] += 1
-
-    @staticmethod
-    def _fields_for_sid(st: dict, sid: int) -> list[dict]:
-        """Schema version a data dir with snapshot id ``sid`` was
-        written under — oldest logged version still covering it."""
-        for entry in st["log"]:
-            if sid <= entry["last_sid"]:
-                return entry["fields"]
-        return st["fields"]
-
-    def _translate_cols(
-        self, st: dict | None, names: list[str], sid: int
-    ) -> list[str]:
-        """Map column ``names`` recorded at snapshot ``sid`` (e.g. a
-        delete file's key columns) to their CURRENT names via field
-        ids.  Identity when no schema state exists."""
-        if not st or not st["log"]:
-            return list(names)
-        then = {f["name"]: f["id"] for f in self._fields_for_sid(st, sid)}
-        now = {f["id"]: f["name"] for f in st["fields"]}
-        out = []
-        for n in names:
-            fid = then.get(n)
-            if fid is None or fid not in now:
-                raise KeyError(
-                    f"column {n!r} (recorded at snapshot {sid}) no "
-                    "longer exists in the current schema"
-                )
-            out.append(now[fid])
-        return out
-
-    @classmethod
-    def _stat_name(cls, st: dict | None, f: dict, col: str) -> str | None:
-        """Name under which file ``f`` records the CURRENT column
-        ``col`` (stats, bloom, partition spec): its write-time name,
-        mapped through field ids — pre-rename files keep stats under
-        the old name.  None = the file's write-time schema has NO
-        column with the current field id (``col`` was dropped and
-        re-added: the file's same-named stats describe the RETIRED
-        column) — callers must treat the file as having no stats,
-        never fall back to the raw name: pruning or fully deleting it
-        by values the current column does not contain would lose
-        rows."""
-        if not st or not st["log"]:
-            return col
-        cur_id = {x["name"]: x["id"] for x in st["fields"]}.get(col)
-        then = cls._fields_for_sid(st, cls._dir_sid(f["dir"]))
-        return {x["id"]: x["name"] for x in then}.get(cur_id)
-
-    def rename_column(
-        self, spark: SparkSession, table: str, old: str, new: str
-    ) -> None:
-        """Rename a column — O(manifest) metadata commit, no data
-        rewritten; old files keep their physical name and are re-bound
-        at read via the field id (≡ ``ALTER TABLE RENAME COLUMN``)."""
-        man = self._load_manifest(table)
-        st = self._ensure_schema(spark, table, man)
-        names = [f["name"] for f in st["fields"]]
-        if old not in names:
-            raise KeyError(f"no column {old!r} in table {table!r}")
-        if new in names:
-            raise ValueError(
-                f"column {new!r} already exists in table {table!r}"
-            )
-        self._push_schema_version(man, st)
-        next(f for f in st["fields"] if f["name"] == old)["name"] = new
-        self._commit_manifest(table, man)
-
-    def drop_column(self, spark: SparkSession, table: str, name: str) -> None:
-        """Drop a column — metadata-only: the field id is retired, old
-        files' bytes stay but can never resurface (re-adding the same
-        name mints a NEW id).  Refuses when an active delete file or
-        range delete references the column (same constraint Iceberg
-        places on identifier/partition fields)."""
-        man = self._load_manifest(table)
-        st = self._ensure_schema(spark, table, man)
-        names = [f["name"] for f in st["fields"]]
-        if name not in names:
-            raise KeyError(f"no column {name!r} in table {table!r}")
-        fid = next(f["id"] for f in st["fields"] if f["name"] == name)
-        # guard EVERY retained snapshot, not just the current one: an
-        # older snapshot (still addressable by id/tag/as_of — the tag
-        # docs promise it stays readable) may carry delete entries on
-        # this field even after a compact() cleared them from HEAD, and
-        # its time-travel read would raise KeyError post-drop
-        for snap_ in man["snapshots"]:
-            for d in snap_.get("delete_files") or []:
-                then = {
-                    f["name"]: f["id"]
-                    for f in self._fields_for_sid(
-                        st, d.get("schema_sid", d["sid"])
-                    )
-                }
-                if fid in {then.get(c) for c in d["key_cols"]}:
-                    raise ValueError(
-                        f"column {name!r} is a key of an equality delete "
-                        f"in retained snapshot {snap_['snapshot_id']} — "
-                        "compact() + expire_snapshots() first"
-                    )
-            for r in snap_.get("delete_ranges") or []:
-                then = {
-                    f["name"]: f["id"]
-                    for f in self._fields_for_sid(st, r["sid"])
-                }
-                if then.get(r["col"]) == fid:
-                    raise ValueError(
-                        f"column {name!r} is referenced by a range delete "
-                        f"in retained snapshot {snap_['snapshot_id']} — "
-                        "compact() + expire_snapshots() first"
-                    )
-        self._push_schema_version(man, st)
-        st["fields"] = [f for f in st["fields"] if f["name"] != name]
-        self._commit_manifest(table, man)
-
-    def add_column(
-        self, spark: SparkSession, table: str, name: str, dtype: str = "string"
-    ) -> None:
-        """Add a column (typed, reads as NULL for every existing row) —
-        metadata-only.  A previously-dropped name may be re-used; it
-        gets a fresh field id, so the dropped column's stored values
-        never reappear."""
-        man = self._load_manifest(table)
-        st = self._ensure_schema(spark, table, man)
-        if name in {f["name"] for f in st["fields"]}:
-            raise ValueError(
-                f"column {name!r} already exists in table {table!r}"
-            )
-        self._push_schema_version(man, st)
-        st["fields"].append(
-            {"id": st["next_id"], "name": name, "type": dtype}
-        )
-        st["next_id"] += 1
-        self._commit_manifest(table, man)
-
-    @staticmethod
-    def _register_new_columns(man: dict, df: DataFrame) -> None:
-        """Auto-register columns a write introduces (Iceberg
-        mergeSchema-on-write): new names get fresh ids appended to the
-        CURRENT version — no log push needed, because files lacking the
-        column physically already project it as NULL."""
-        st = man.get("schema")
-        if not st:
-            return
-        live = {f["name"] for f in st["fields"]}
-        for f in df.schema.fields:
-            if f.name not in live:
-                st["fields"].append(
-                    {
-                        "id": st["next_id"],
-                        "name": f.name,
-                        "type": f.dataType.simpleString(),
-                    }
-                )
-                st["next_id"] += 1
-
     def _read(
         self,
         spark: SparkSession,
         table: str,
-        man: dict,
         snap: dict,
         files: list[dict],
         with_pos_meta: bool = False,
@@ -1270,17 +1054,13 @@ class SnapshotCatalog:
         snapshot's schema-correct empty relation (the optimizer folds
         it to an empty LocalRelation — no scan).
 
-        Without logged schema changes the schema is the footers'.  A
-        single-dir snapshot is one write, one physical schema.  A
-        multi-dir one (append chains) takes the merge of ONE footer per
-        dir: an appended batch may carry new columns, and older files
-        surface them as NULL — Iceberg's add-column semantics.  The
-        probes come from the dirs, not the manifest entries, so a
-        pruned scan still loads only the segments its predicate
-        touches.  With logged changes (``man``'s schema state), files
-        are grouped by the schema version their dir was written under,
-        physical names bound to field ids per group, every group
-        projected to the CURRENT names/types, and the groups unioned.
+        The schema is the footers'.  A single-dir snapshot is one
+        write, one physical schema.  A multi-dir one (append chains)
+        takes the merge of ONE footer per dir: an appended batch may
+        carry new columns, and older files surface them as NULL —
+        Iceberg's add-column semantics.  The probes come from the dirs,
+        not the manifest entries, so a pruned scan still loads only the
+        segments its predicate touches.
 
         ``with_pos_meta=True`` additionally materializes ``_dfile``
         (dir/name) and ``_pos`` (``_metadata.row_index``) — the row
@@ -1292,74 +1072,24 @@ class SnapshotCatalog:
         tdir = self._tdir(table)
         dirs = sorted(self._snap_dirs(snap))
         if len(dirs) > 1 or not files:
-            probes = {d: _dir_probe(os.path.join(tdir, d)) for d in dirs}
-        located = [
-            (f["dir"], os.path.join(tdir, f["dir"], f["name"])) for f in files
-        ] or list(probes.items())
-        state = man.get("schema")
-
-        def attach(df: DataFrame) -> DataFrame:
-            if not with_pos_meta:
-                return df
-            return df.select(
+            probes = [_dir_probe(os.path.join(tdir, d)) for d in dirs]
+        paths = [
+            os.path.join(tdir, f["dir"], f["name"]) for f in files
+        ] or probes
+        reader = spark.read
+        if len(dirs) > 1:
+            reader = reader.schema(
+                spark.read.option("mergeSchema", "true").parquet(*probes).schema
+            )
+        out = reader.parquet(*paths)
+        if with_pos_meta:
+            out = out.select(
                 "*",
                 F.regexp_extract(
                     F.col("_metadata.file_path"), r"([^/]+/[^/]+)$", 1
                 ).alias("_dfile"),
                 F.col("_metadata.row_index").alias("_pos"),
             )
-
-        if not state or not state["log"]:
-            reader = spark.read
-            if len(dirs) > 1:
-                reader = reader.schema(
-                    spark.read.option("mergeSchema", "true")
-                    .parquet(*probes.values())
-                    .schema
-                )
-            out = attach(reader.parquet(*[p for _, p in located]))
-            return out if files else out.where(F.lit(False))
-        by_ver: dict[int, list[str]] = {}
-        for d, p in located:
-            sid = self._dir_sid(d)
-            vi = next(
-                (
-                    i
-                    for i, e in enumerate(state["log"])
-                    if sid <= e["last_sid"]
-                ),
-                -1,
-            )
-            by_ver.setdefault(vi, []).append(p)
-        cur = state["fields"]
-        out: DataFrame | None = None
-        for vi, ps in sorted(by_ver.items()):
-            df = attach(
-                spark.read.option("mergeSchema", "true").parquet(
-                    *sorted(ps)
-                )
-            )
-            have = set(df.columns)
-            gmap = {
-                f["id"]: f["name"]
-                for f in (
-                    state["log"][vi]["fields"] if vi >= 0 else cur
-                )
-            }
-            cols = []
-            for f in cur:
-                gname = gmap.get(f["id"])
-                if gname is not None and gname in have:
-                    cols.append(F.col(gname).alias(f["name"]))
-                else:
-                    cols.append(
-                        F.lit(None).cast(f["type"]).alias(f["name"])
-                    )
-            if with_pos_meta:
-                cols += [F.col("_dfile"), F.col("_pos")]
-            df = df.select(*cols)
-            out = df if out is None else out.unionByName(df)
-        assert out is not None
         return out if files else out.where(F.lit(False))
 
     def delete_keys(
@@ -1367,7 +1097,6 @@ class SnapshotCatalog:
         spark: SparkSession,
         table: str,
         keys: DataFrame,
-        n_files: int = 1,
     ) -> dict:
         """Commit an EQUALITY-DELETE snapshot (≡ Iceberg v2 equality
         deletes, merge-on-read): rows whose ``keys.columns`` tuple
@@ -1390,12 +1119,10 @@ class SnapshotCatalog:
         parent = self._resolve(table, man)
         parent_files = self._snap_files(parent)
         key_cols = list(keys.columns)
-        self._check_delete_key(
-            table, man, parent, parent_files, key_cols, "delete"
-        )
+        self._check_delete_key(table, parent, key_cols, "delete")
         sid = self._next_sid(man)
         ddir = self._new_dir(table, sid)
-        keys.select(*key_cols).distinct().repartition(n_files).write.mode(
+        keys.select(*key_cols).distinct().repartition(1).write.mode(
             "overwrite"
         ).parquet(ddir)
         snap = self._snap_record(
@@ -1407,43 +1134,30 @@ class SnapshotCatalog:
         return self._commit_snap(table, man, snap, parent_files, [ddir])
 
     def _check_delete_key(
-        self,
-        table: str,
-        man: dict,
-        parent: dict,
-        parent_files: list[dict],
-        key_cols: list[str],
-        op: str,
+        self, table: str, parent: dict, key_cols: list[str], op: str
     ) -> None:
         """Validate an equality-delete key before anything is written:
         it must equal the key of every delete already in force (mixed
         keys are not supported), and every column must exist in the
-        table's data — a mistyped key column would commit fine and then
-        break every read until rollback.  Names are compared in CURRENT
-        terms: an old delete's recorded names may predate a rename, and
-        with evolution active the live names are the logical schema's
-        (a probe file may physically predate a rename)."""
-        schema_state = man.get("schema")
+        snapshot's data — a mistyped key column would commit fine and
+        then break every read until rollback.  The live columns are the
+        union of one footer per data dir (an append may add a column;
+        driver-side footer reads, no Spark job)."""
+        import pyarrow.parquet as pq
+
         for d in parent.get("delete_files") or []:
-            if self._translate_cols(
-                schema_state, d["key_cols"], d.get("schema_sid", d["sid"])
-            ) != key_cols:
+            if d["key_cols"] != key_cols:
                 raise ValueError(
                     f"table {table!r} already has equality deletes on "
                     f"{d['key_cols']} — mixed delete keys are not "
                     "supported; compact() first"
                 )
-        if schema_state:
-            live = {f["name"] for f in schema_state["fields"]}
-        else:
-            import pyarrow.parquet as pq
-
-            probe = os.path.join(
-                self._tdir(table),
-                parent_files[0]["dir"],
-                parent_files[0]["name"],
-            )
-            live = set(pq.read_schema(probe).names)
+        tdir = self._tdir(table)
+        live = {
+            c
+            for d in self._snap_dirs(parent)
+            for c in pq.read_schema(_dir_probe(os.path.join(tdir, d))).names
+        }
         missing = [c for c in key_cols if c not in live]
         if missing:
             raise ValueError(
@@ -1495,9 +1209,7 @@ class SnapshotCatalog:
             )
         parent = man["snapshots"][-1]
         parent_files = self._snap_files(parent)
-        self._check_delete_key(
-            table, man, parent, parent_files, key_cols, "upsert"
-        )
+        self._check_delete_key(table, parent, key_cols, "upsert")
         sid = self._next_sid(man)
         data_dir = self._new_dir(table, sid)
         kdir = self._new_dir(table, sid)
@@ -1530,15 +1242,7 @@ class SnapshotCatalog:
             # file committed at or before the parent, never to this
             # commit's own data files (dir sid > parent sid)
             sid=parent["snapshot_id"],
-            # names in ``key_cols`` are CURRENT at *this* commit, not
-            # the parent's — a rename committed between the parent
-            # snapshot and this upsert changes which schema version the
-            # names belong to, so schema translation must anchor on
-            # this commit's own sid (sequence semantics above stay on
-            # the parent's)
-            schema_sid=sid,
         )
-        self._register_new_columns(man, df)
         return self._commit_snap(
             table, man, snap, parent_files + new_files, [data_dir, kdir]
         )
@@ -1583,7 +1287,6 @@ class SnapshotCatalog:
         parent = self._resolve(table, man)
         parent_files = self._snap_files(parent)
         sid = self._next_sid(man)
-        schema_state = man.get("schema")
 
         def fully_deleted(f: dict) -> bool:
             # dropping a file here is IRREVERSIBLE after expire/compact,
@@ -1592,7 +1295,7 @@ class SnapshotCatalog:
             # residual filter, which compares in the column's real
             # type, still removes the in-range rows)
             stats = f.get("stats") or {}
-            st = stats.get(self._stat_name(schema_state, f, col))
+            st = stats.get(col)
             if not st or st["min"] is None or st["max"] is None:
                 return False
             try:
@@ -1639,7 +1342,6 @@ class SnapshotCatalog:
         spark: SparkSession,
         table: str,
         predicate,
-        n_files: int = 1,
     ) -> dict:
         """``DELETE WHERE <predicate>`` compiled to POSITION-DELETE
         files (≡ Iceberg v2 position deletes) — the third delete tier:
@@ -1665,13 +1367,9 @@ class SnapshotCatalog:
         parent_files = self._snap_files(parent)
         sid = self._next_sid(man)
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        # schema-resolved read: the predicate is written in CURRENT
-        # column names and must match rows in files that predate a
-        # rename; positions are captured at the scan by the reader
+        # positions are captured at the scan by the reader
         positions = (
-            self._read(
-                spark, table, man, parent, parent_files, with_pos_meta=True
-            )
+            self._read(spark, table, parent, parent_files, with_pos_meta=True)
             .filter(pred)
             .select(
                 F.col("_dfile").alias("dfile"),
@@ -1679,7 +1377,7 @@ class SnapshotCatalog:
             )
         )
         ddir = self._new_dir(table, sid)
-        positions.repartition(n_files).write.mode("overwrite").parquet(ddir)
+        positions.repartition(1).write.mode("overwrite").parquet(ddir)
         snap = self._snap_record(
             parent, sid, ddir, "delete", parent["row_count"]
         )
@@ -1696,7 +1394,6 @@ class SnapshotCatalog:
         self,
         spark: SparkSession,
         table: str,
-        man: dict,
         snap: dict,
         files: list[dict] | None = None,
     ) -> DataFrame:
@@ -1708,12 +1405,7 @@ class SnapshotCatalog:
         commit boundaries; each segment anti-joins the union of the
         key and position deletes that apply to it (broadcast when
         small) and filters NOT-in-ranges for the applicable range
-        deletes.
-
-        ``man`` is the manifest load the caller resolved ``snap`` from
-        — one consistent snapshot+schema view (a rename committed
-        between two loads would translate this snapshot's delete
-        entries against the wrong version)."""
+        deletes."""
         from pyspark.sql import functions as F
 
         from eodal_spark import grid
@@ -1724,22 +1416,9 @@ class SnapshotCatalog:
         rdels = snap.get("delete_ranges") or []
         pdels = snap.get("pos_delete_files") or []
         if (not dels and not rdels and not pdels) or not files:
-            return self._read(spark, table, man, snap, files)
-        state = man.get("schema")
+            return self._read(spark, table, snap, files)
         tdir = self._tdir(table)
-        # delete/data columns may have been RENAMED since a delete
-        # committed: all joins/filters below run in CURRENT names (the
-        # data side is projected by _read), so each delete entry's
-        # recorded names are translated via its field ids
-        key_cols = (
-            self._translate_cols(
-                state,
-                dels[0]["key_cols"],
-                dels[0].get("schema_sid", dels[0]["sid"]),
-            )
-            if dels
-            else []
-        )
+        key_cols = dels[0]["key_cols"] if dels else []
         del_sids = sorted(
             {d["sid"] for d in dels}
             | {r["sid"] for r in rdels}
@@ -1752,11 +1431,12 @@ class SnapshotCatalog:
             # drop them — inconsistent with the key-delete anti-join,
             # which preserves NULL keys)
             conds = [
-                F.col(c).isNull()
-                | ~grid.ranges_predicate(c, [tuple(x) for x in r["ranges"]])
+                F.col(r["col"]).isNull()
+                | ~grid.ranges_predicate(
+                    r["col"], [tuple(x) for x in r["ranges"]]
+                )
                 for r in rdels
                 if r["sid"] >= min_sid
-                for c in self._translate_cols(state, [r["col"]], r["sid"])
             ]
             out = None
             for c in conds:
@@ -1781,30 +1461,21 @@ class SnapshotCatalog:
                 base = base.cache()
             return base
 
-        # key deletes grouped by (sequence sid, schema sid): an upsert's
-        # entry carries its PARENT's sequence number but records key
-        # names current at its OWN commit, so a delete_keys at sid N and
-        # an upsert whose parent is N may share a sequence sid yet need
-        # different name translations
-        by_sid: dict[tuple[int, int], tuple[list[str], list[str]]] = {}
+        # key deletes grouped by sequence sid: an upsert's entry carries
+        # its PARENT's sequence number, so it shares a part with a
+        # delete_keys committed at that parent
+        by_sid: dict[int, list[str]] = {}
         for d in dels:
-            by_sid.setdefault(
-                (d["sid"], d.get("schema_sid", d["sid"])), (d["key_cols"], [])
-            )[1].append(os.path.join(tdir, d["dir"], d["name"]))
-        key_parts = []
-        for (sid, ssid), (then_cols, ps) in by_sid.items():
-            # each delete parquet stores its WRITE-TIME key names —
-            # alias to current so all parts (and the data side) align
-            cur_cols = self._translate_cols(state, then_cols, ssid)
-            if sorted(cur_cols) != sorted(key_cols):
+            if sorted(d["key_cols"]) != sorted(key_cols):
                 raise ValueError(
-                    f"equality deletes at snapshot {sid} use key "
-                    f"{cur_cols}, others use {key_cols} — mixed delete "
-                    "keys are not supported; compact() first"
+                    f"equality deletes at snapshot {d['sid']} use key "
+                    f"{d['key_cols']}, others use {key_cols} — mixed "
+                    "delete keys are not supported; compact() first"
                 )
-            aliased = [F.col(a).alias(b) for a, b in zip(then_cols, cur_cols)]
-            key_parts.append((ps, sid, aliased))
-        base_keys = tagged(key_parts)
+            by_sid.setdefault(d["sid"], []).append(
+                os.path.join(tdir, d["dir"], d["name"])
+            )
+        base_keys = tagged([(ps, sid, key_cols) for sid, ps in by_sid.items()])
         # position deletes (≡ Iceberg v2 position delete files): (dfile,
         # pos) rows, filtered per segment like the key deletes.
         # Positions can only reference files that existed at the
@@ -1873,7 +1544,7 @@ class SnapshotCatalog:
                 else None
             )
             df = self._read(
-                spark, table, man, snap, seg, with_pos_meta=pk is not None
+                spark, table, snap, seg, with_pos_meta=pk is not None
             )
             if hi is not None:
                 if pk is not None:
@@ -1924,7 +1595,7 @@ class SnapshotCatalog:
         merge-on-read, see :meth:`delete_keys`)."""
         man = self._load_manifest(table)
         snap = self._resolve(table, man, snapshot_id, as_of, tag, branch)
-        return self._read_with_deletes(spark, table, man, snap)
+        return self._read_with_deletes(spark, table, snap)
 
     def read_changes(
         self,
@@ -1978,7 +1649,7 @@ class SnapshotCatalog:
             for f in self._snap_files(hi)
             if (f["dir"], f["name"]) not in seen
         ]
-        return self._read(spark, table, man, hi, new)
+        return self._read(spark, table, hi, new)
 
     def count(
         self,
@@ -2004,7 +1675,7 @@ class SnapshotCatalog:
         )
         if not ranges and not eq and not mor:
             return int(snap["row_count"])
-        return self._scan(spark, table, man, snap, ranges, eq).count()
+        return self._scan(spark, table, snap, ranges, eq).count()
 
     def file_metrics(
         self, spark: SparkSession, table: str, snapshot_id: int | None = None
@@ -2111,7 +1782,7 @@ class SnapshotCatalog:
         # are rewritten fails the CAS instead of being overwritten
         return self._write(
             man,
-            self._read_with_deletes(spark, table, man, snap),
+            self._read_with_deletes(spark, table, snap),
             table,
             sort_by=tuple(snap.get("sort_by") or ()),
             meta=meta,
@@ -2187,7 +1858,7 @@ class SnapshotCatalog:
             n_out += max(1, -(-sum(sz for _, sz in lst) // target))
         if not inputs:
             return None
-        rows = self._read_with_deletes(spark, table, man, snap, inputs)
+        rows = self._read_with_deletes(spark, table, snap, inputs)
         sort_by = tuple(snap.get("sort_by") or ())
         zorder = tuple(snap.get("zorder") or ())
         pv = (
@@ -2556,7 +2227,6 @@ class SnapshotCatalog:
         files: list[dict],
         norm: dict,
         eq: dict,
-        stat_name_fn,
     ) -> list[dict]:
         """Drop files whose hive partition value provably excludes the
         predicate — hidden-partition pruning (≡ Iceberg's transform-
@@ -2583,16 +2253,10 @@ class SnapshotCatalog:
                 continue
             keep = True
             for i, entry in enumerate(spec):
-                t, wcol = entry[0], entry[-1]
+                t, col = entry[0], entry[-1]
                 pvs = pvals.get(f"_pv{i}")
-                if pvs is None:
+                if pvs is None or col not in pred_cols:
                     continue
-                cols = [
-                    c for c in pred_cols if stat_name_fn(frec, c) == wcol
-                ]
-                if not cols:
-                    continue
-                col = cols[0]
                 if t in _TIME_FMT or t == "truncate":
                     # the value is a fixed-width prefix of the string
                     # form ('T'-separated isoformat for time transforms)
@@ -2638,7 +2302,6 @@ class SnapshotCatalog:
         snap: dict,
         files: list[dict],
         eq: dict,
-        stat_name_fn,
     ) -> list[dict]:
         """Drop files whose Bloom sidecar proves an ``eq`` value absent.
         Purely an optimization: a missing/unreadable sidecar, a column
@@ -2659,8 +2322,7 @@ class SnapshotCatalog:
                 for c, v in eq.items():
                     if not isinstance(v, (str, int)) or isinstance(v, bool):
                         continue  # str(v) may differ from CAST AS STRING
-                    wname = stat_name_fn(frec, c)
-                    if wname is None or wname not in cfg["cols"]:
+                    if c not in cfg["cols"]:
                         continue
                     pkey = (cfg["bits"], cfg["k"], str(v))
                     pts = pos_cache.get(pkey)
@@ -2668,7 +2330,7 @@ class SnapshotCatalog:
                         pts = pos_cache[pkey] = _bloom_positions(
                             spark, str(v), cfg["bits"], cfg["k"]
                         )
-                    skey = (frec["dir"], wname, pkey)
+                    skey = (frec["dir"], c, pkey)
                     if skey not in side_cache:
                         sidecar = _bloom_sidecar(
                             os.path.join(self._tdir(table), frec["dir"])
@@ -2677,7 +2339,7 @@ class SnapshotCatalog:
                             tbl = pq.read_table(
                                 sidecar,
                                 filters=[
-                                    ("col", "=", wname),
+                                    ("col", "=", c),
                                     (
                                         "word",
                                         "in",
@@ -2761,18 +2423,17 @@ class SnapshotCatalog:
         """
         man = self._load_manifest(table)
         snap = self._resolve(table, man, snapshot_id)
-        return self._scan(spark, table, man, snap, ranges, eq)
+        return self._scan(spark, table, snap, ranges, eq)
 
     def _scan(
         self,
         spark: SparkSession,
         table: str,
-        man: dict,
         snap: dict,
         ranges: dict | None,
         eq: dict | None,
     ) -> DataFrame:
-        """:meth:`scan` of the snapshot ``snap`` resolved in ``man``."""
+        """:meth:`scan` of the resolved snapshot ``snap``."""
         ranges = dict(ranges or {})
         eq = dict(eq or {})
         for c, v in eq.items():
@@ -2787,7 +2448,7 @@ class SnapshotCatalog:
                 )
             ranges[c] = (v, v)
         if not ranges:  # no predicate → plain snapshot read
-            return self._read_with_deletes(spark, table, man, snap)
+            return self._read_with_deletes(spark, table, snap)
         for c, r in ranges.items():
             if r is None or (isinstance(r, list) and not r):
                 # e.g. grid.cell_disk_ranges' over-budget None forwarded
@@ -2802,33 +2463,18 @@ class SnapshotCatalog:
             ]
             for c, r in ranges.items()
         }
-        schema_state = man.get("schema")
         # manifest-LIST-level pruning (≡ Iceberg's manifest-list
         # partition summaries): drop whole segments whose coarse bounds
         # provably exclude every range BEFORE loading any file entry —
         # on a 100k-file table a point lookup loads a handful of segment
-        # files, not the whole manifest tier.  Skipped when the schema
-        # log is non-empty: segment bounds are keyed by write-time
-        # column names, and only the per-file pass knows each file's
-        # field-id mapping (kept = conservative, never wrongly pruned).
-        files = self._snap_files(
-            snap, None if (schema_state or {}).get("log") else norm
-        )
-
-        # schema evolution: per-file stats are keyed by WRITE-TIME
-        # names; a predicate on a renamed column must consult the name
-        # its file's schema version bound to the same field id —
-        # otherwise every pre-rename file loses pruning (kept, never
-        # wrongly dropped, but the scan degrades to a full read)
-        def stat_name(frec: dict, col: str) -> str | None:
-            return self._stat_name(schema_state, frec, col)
-
-        files = self._partition_prune(spark, snap, files, norm, eq, stat_name)
+        # files, not the whole manifest tier
+        files = self._snap_files(snap, norm)
+        files = self._partition_prune(spark, snap, files, norm, eq)
         keep = []
         for frec in files:
             stats = frec.get("stats", {})
             for col, rs in norm.items():
-                st = stats.get(stat_name(frec, col))
+                st = stats.get(col)
                 if st is None or st["min"] is None or st["max"] is None:
                     continue  # no stats → cannot prune this file
                 hit = _range_hit(st["min"], st["max"], rs)
@@ -2846,7 +2492,7 @@ class SnapshotCatalog:
             else:
                 keep.append(frec)
         if eq and (snap.get("blooms") or {}):
-            keep = self._bloom_prune(spark, table, snap, keep, eq, stat_name)
+            keep = self._bloom_prune(spark, table, snap, keep, eq)
         import functools
         import operator
 
@@ -2859,7 +2505,7 @@ class SnapshotCatalog:
         # delete-aware: deletes apply to the surviving files with the
         # same sequence semantics as read(); no survivors → the
         # snapshot's empty relation
-        return self._read_with_deletes(spark, table, man, snap, keep).filter(
+        return self._read_with_deletes(spark, table, snap, keep).filter(
             residual
         )
 

@@ -710,6 +710,49 @@ def test_append_schema_evolution_merges(spark, tmp_path):
     assert delta.filter("score IS NULL").count() == 0
     # time travel to snapshot 1 keeps the OLD schema
     assert cat.read(spark, "t", snapshot_id=1).columns == ["id"]
+    # the merge-on-read path surfaces the new column the same way
+    cat.delete_keys(spark, "t", spark.createDataFrame([(0,), (10,)], "id bigint"))
+    cur = cat.read(spark, "t")
+    assert cur.filter("score IS NULL").count() == 9
+    assert cur.filter("score IS NOT NULL").count() == 4
+
+
+def test_delete_and_upsert_keys_may_be_columns_an_append_added(spark, tmp_path):
+    """Delete and upsert keys are checked against the snapshot's
+    columns (one footer per data dir), not the first file's: a column
+    that a later append added is a valid key."""
+    cat = SnapshotCatalog(str(tmp_path / "key_cat"))
+    cat.write(spark.range(4).selectExpr("id AS k", "'a' AS url"), "t")
+    cat.write(
+        spark.range(4, 8).selectExpr("id AS k", "'b' AS url", "id * 10 AS extra"),
+        "t", mode="append",
+    )
+    with pytest.raises(ValueError, match=r"\['nope'\] not in table"):
+        cat.delete_keys(spark, "t", spark.createDataFrame([(1,)], "nope bigint"))
+    cat.delete_keys(spark, "t", spark.createDataFrame([(50,)], "extra bigint"))
+    cat.upsert(
+        spark,
+        spark.createDataFrame([(60, "c", 60)], "k bigint, url string, extra bigint"),
+        "t", key_cols=("extra",),
+    )
+    got = sorted((r.k, r.extra) for r in cat.read(spark, "t").collect())
+    assert got == [
+        (0, None), (1, None), (2, None), (3, None), (4, 40), (7, 70), (60, 60)
+    ]
+
+
+def test_manifest_with_a_field_id_schema_log_is_refused(tmp_path):
+    """A manifest recording a field-id schema log (renamed or dropped
+    columns) is refused at load: a by-name read would return a renamed
+    column's old files as NULL."""
+    cat = SnapshotCatalog(str(tmp_path))
+    os.makedirs(tmp_path / "t")
+    (tmp_path / "t" / "manifest.json").write_text(json.dumps({
+        "snapshots": [],
+        "schema": {"next_id": 2, "version": 1, "fields": [], "log": []},
+    }))
+    with pytest.raises(ValueError, match="field-id schema log"):
+        cat._load_manifest("t")
 
 
 def test_compact_carries_ingest_marker(spark, tmp_path):
@@ -1683,229 +1726,6 @@ def test_refresh_rollup_incremental_matches_full(spark, tmp_path):
     assert got() == expect()
 
 
-def test_schema_evolution_rename_drop_add(spark, tmp_path):
-    """Iceberg-style field-id schema evolution: renames re-bind old
-    files at read, drops retire the id, re-adding a dropped name mints
-    a fresh id so old bytes never resurface, and every change is an
-    O(manifest) metadata commit (no data rewritten)."""
-    cat = SnapshotCatalog(str(tmp_path))
-    cat.write(
-        spark.range(0, 10).select(
-            F.col("id").alias("a"), (F.col("id") * 2).alias("b")
-        ),
-        "t",
-        sort_by=("a",),
-    )
-    v1_files = {
-        (f["dir"], f["name"]) for f in cat._snap_files(cat.current_snapshot("t"))
-    }
-    cat.rename_column(spark, "t", "a", "x")
-    # metadata-only: same data files, new logical name, values intact
-    assert {
-        (f["dir"], f["name"]) for f in cat._snap_files(cat.current_snapshot("t"))
-    } == v1_files
-    out = cat.read(spark, "t")
-    assert out.columns == ["x", "b"]
-    assert out.agg(F.sum("x")).first()[0] == sum(range(10))
-    # append AFTER the rename writes the new physical name; both
-    # generations resolve to one logical column
-    cat.write(
-        spark.range(10, 15).select(
-            F.col("id").alias("x"), (F.col("id") * 2).alias("b")
-        ),
-        "t",
-        mode="append",
-    )
-    assert cat.read(spark, "t").agg(F.sum("x")).first()[0] == sum(range(15))
-    # chained rename: x -> y re-binds BOTH physical generations (a, x)
-    cat.rename_column(spark, "t", "x", "y")
-    assert cat.read(spark, "t").agg(F.sum("y")).first()[0] == sum(range(15))
-    # typed add: NULL for every existing row
-    cat.add_column(spark, "t", "c", "bigint")
-    out = cat.read(spark, "t")
-    assert out.schema["c"].dataType.simpleString() == "bigint"
-    assert out.filter("c IS NULL").count() == 15
-    # drop + re-add under the same name: fresh field id, old values gone
-    cat.drop_column(spark, "t", "b")
-    assert cat.read(spark, "t").columns == ["y", "c"]
-    cat.add_column(spark, "t", "b", "bigint")
-    assert cat.read(spark, "t").filter("b IS NOT NULL").count() == 0
-    ids = {f["name"]: f["id"] for f in cat.table_schema("t")}
-    assert ids["b"] != 2  # the retired id is never reused
-    # guards
-    with pytest.raises(ValueError):
-        cat.rename_column(spark, "t", "y", "c")
-    with pytest.raises(KeyError):
-        cat.rename_column(spark, "t", "nope", "z")
-    with pytest.raises(ValueError):
-        cat.add_column(spark, "t", "y")
-
-
-def test_schema_evolution_deletes_and_scan_across_rename(spark, tmp_path):
-    """All three delete tiers and manifest pruning keep working across
-    renames: recorded names are translated through field ids, old
-    files' stats are consulted under their write-time names, and
-    deletes issued before AND after a rename compose on the same
-    logical column."""
-    cat = SnapshotCatalog(str(tmp_path))
-    cat.write(
-        spark.range(0, 100).select(
-            F.col("id").alias("a"), (F.col("id") % 7).alias("grp")
-        ),
-        "t",
-        sort_by=("a",),
-        n_files=4,
-    )
-    # equality delete under the ORIGINAL name ...
-    cat.delete_keys(spark, "t", spark.createDataFrame([(0,), (1,)], "a bigint"))
-    cat.rename_column(spark, "t", "a", "key")
-    # ... still applies after the rename
-    assert cat.read(spark, "t").count() == 98
-    # a second equality delete under the NEW name joins the same field
-    cat.delete_keys(
-        spark, "t", spark.createDataFrame([(2,), (3,)], "key bigint")
-    )
-    assert cat.read(spark, "t").count() == 96
-    # range delete on the renamed column (current name at call time)
-    cat.delete_range("t", "key", (90, 99))
-    assert cat.read(spark, "t").count() == 86
-    # position delete with a predicate in current names over pre-rename
-    # files
-    cat.delete_where(spark, "t", "key >= 80 AND key < 85")
-    assert cat.read(spark, "t").count() == 81
-    assert cat.read(spark, "t").agg(F.sum("key")).first()[0] == sum(
-        range(4, 80)
-    ) + sum(range(85, 90))
-    # manifest pruning consults pre-rename stats via the field id: a
-    # narrow scan must still skip files (4 sorted files over 0..99)
-    sc = cat.scan(spark, "t", {"key": (10, 20)})
-    assert sc.count() == 11
-    assert sorted(r["key"] for r in sc.collect()) == list(range(10, 21))
-    # sequence semantics survive translation: re-ingesting a deleted
-    # key AFTER the deletes makes it visible again
-    cat.write(
-        spark.createDataFrame([(2, 2)], "key bigint, grp bigint"),
-        "t",
-        mode="append",
-    )
-    assert cat.read(spark, "t").filter("key = 2").count() == 1
-    # dropping a delete-referenced column is refused
-    with pytest.raises(ValueError):
-        cat.drop_column(spark, "t", "key")
-    # time travel: an OLD snapshot reads under the CURRENT schema
-    # (Iceberg semantics — schema is table-level, not per-snapshot)
-    first = cat.snapshots("t")[0]["snapshot_id"]
-    old = cat.read(spark, "t", snapshot_id=first)
-    assert old.columns == ["key", "grp"]
-    assert old.count() == 100
-
-
-def test_schema_evolution_incremental_and_upsert(spark, tmp_path):
-    """read_changes and MERGE upsert run in current names across a
-    rename; auto-registration records columns a later write adds."""
-    cat = SnapshotCatalog(str(tmp_path))
-    s1 = cat.write(
-        spark.range(0, 10).select(
-            F.col("id").alias("a"), F.lit("v1").alias("val")
-        ),
-        "t",
-    )
-    cat.rename_column(spark, "t", "a", "k")
-    cat.write(
-        spark.range(10, 12).select(
-            F.col("id").alias("k"), F.lit("v1").alias("val")
-        ),
-        "t",
-        mode="append",
-    )
-    delta = cat.read_changes(spark, "t", s1["snapshot_id"])
-    assert delta.columns == ["k", "val"]
-    assert sorted(r["k"] for r in delta.collect()) == [10, 11]
-    # upsert keyed on the renamed column replaces across generations
-    cat.upsert(
-        spark,
-        spark.createDataFrame([(5, "v2"), (99, "v2")], "k bigint, val string"),
-        "t",
-        key_cols=("k",),
-    )
-    out = {r["k"]: r["val"] for r in cat.read(spark, "t").collect()}
-    assert out[5] == "v2" and out[99] == "v2" and out[4] == "v1"
-    assert len(out) == 13
-    # a write carrying a brand-new column auto-registers it
-    cat.write(
-        spark.createDataFrame(
-            [(100, "v3", 7)], "k bigint, val string, extra bigint"
-        ),
-        "t",
-        mode="append",
-    )
-    fields = {f["name"] for f in cat.table_schema("t")}
-    assert "extra" in fields
-    out = cat.read(spark, "t")
-    assert out.filter("extra IS NOT NULL").count() == 1
-    assert out.filter("k < 100 AND extra IS NULL").count() == 13
-
-
-def test_upsert_immediately_after_rename_reads(spark, tmp_path):
-    """An upsert committed DIRECTLY after a rename (no intervening
-    snapshot) records key names that are current at its own commit but
-    a sequence sid equal to the parent's; schema translation must
-    anchor on the commit's own sid (``schema_sid``) or every
-    subsequent read raises KeyError until rollback."""
-    cat = SnapshotCatalog(str(tmp_path))
-    cat.write(
-        spark.createDataFrame(
-            [(1, "a"), (2, "b")], "k bigint, val string"
-        ),
-        "t",
-    )
-    cat.rename_column(spark, "t", "k", "key")
-    cat.upsert(
-        spark,
-        spark.createDataFrame(
-            [(2, "B"), (3, "c")], "key bigint, val string"
-        ),
-        "t",
-        key_cols=("key",),
-    )
-    out = {r["key"]: r["val"] for r in cat.read(spark, "t").collect()}
-    assert out == {1: "a", 2: "B", 3: "c"}
-    # stacking: a second upsert + a rename of the key AFTER deletes
-    # exist still composes on the same logical column
-    cat.rename_column(spark, "t", "key", "id")
-    cat.upsert(
-        spark,
-        spark.createDataFrame([(1, "A")], "id bigint, val string"),
-        "t",
-        key_cols=("id",),
-    )
-    out = {r["id"]: r["val"] for r in cat.read(spark, "t").collect()}
-    assert out == {1: "A", 2: "B", 3: "c"}
-
-
-def test_delete_range_after_drop_readd_keeps_rows(spark, tmp_path):
-    """After drop+re-add of a column, old files hold only the RETIRED
-    column's stats under the same name; a range delete on the re-added
-    (all-NULL there) column must not judge those files 'fully deleted'
-    by the retired column's values — that would be silent data loss."""
-    cat = SnapshotCatalog(str(tmp_path))
-    cat.write(
-        spark.range(0, 10).select(
-            F.col("id").alias("a"), F.col("id").alias("b")
-        ),
-        "t",
-        sort_by=("b",),
-        n_files=2,
-    )
-    cat.drop_column(spark, "t", "b")
-    cat.add_column(spark, "t", "b", "bigint")
-    # new b is NULL everywhere -> NULL is in no range -> 0 rows removed
-    cat.delete_range("t", "b", (0, 100))
-    assert cat.read(spark, "t").count() == 10
-    # and scan() on the re-added column must not prune by retired stats
-    assert cat.scan(spark, "t", {"b": (0, 100)}).count() == 0  # all NULL
-
-
 def test_refresh_rollup_survives_source_expiry(spark, tmp_path):
     """Routine expire_snapshots on the source removes the consumed
     snapshot; the refresh must fall back to one full rebuild (not
@@ -1945,30 +1765,6 @@ def test_refresh_rollup_survives_source_expiry(spark, tmp_path):
     assert got == want
 
 
-def test_drop_column_guards_retained_snapshots(spark, tmp_path):
-    """drop_column must refuse when ANY retained snapshot (still
-    addressable by id/tag) carries deletes on the column — not just the
-    current one: a tagged pre-compact snapshot would otherwise become
-    unreadable (KeyError at translation) after the drop."""
-    cat = SnapshotCatalog(str(tmp_path))
-    cat.write(
-        spark.createDataFrame(
-            [(1, "a"), (2, "b"), (3, "c")], "k bigint, val string"
-        ),
-        "t",
-    )
-    cat.delete_keys(
-        spark, "t", spark.createDataFrame([(2,)], "k bigint")
-    )
-    cat.tag("t", "train-v1")  # pins the delete-carrying snapshot
-    cat.compact(spark, "t", n_files=1)  # HEAD now has no delete files
-    with pytest.raises(ValueError, match="retained snapshot"):
-        cat.drop_column(spark, "t", "k")
-    # the tagged snapshot stays readable with the column intact
-    out = {r["k"] for r in cat.read(spark, "t", tag="train-v1").collect()}
-    assert out == {1, 3}
-
-
 def test_bloom_point_lookup_pruning(spark, tmp_path):
     """Per-file Bloom sidecars prune equality scans on a
     high-cardinality unsorted key where min/max stats cannot: every
@@ -2002,9 +1798,7 @@ def test_bloom_point_lookup_pruning(spark, tmp_path):
     # min/max pass can never prune an equality probe on k: only the
     # bloom can
     assert all("k" not in f["stats"] for f in files)
-    kept = cat._bloom_prune(
-        spark, "t", snap, files, {"k": "k_50_miss"}, lambda f, c: c
-    )
+    kept = cat._bloom_prune(spark, "t", snap, files, {"k": "k_50_miss"})
     assert kept == []
     assert cat.scan(spark, "t", eq={"k": "k_50_miss"}).count() == 0
 
@@ -2063,34 +1857,6 @@ def test_bloom_sidecar_lifecycle(spark, tmp_path):
         _bloom_sidecar(os.path.join(str(tmp_path), "t", d4))
     )
     assert cat.scan(spark, "t", eq={"k": "55"}).count() == 1
-
-
-def test_bloom_pruning_across_rename(spark, tmp_path):
-    """Equality probes on a RENAMED column translate to each file's
-    write-time name before consulting its bloom (same field-id path as
-    the min/max stats)."""
-    cat = SnapshotCatalog(str(tmp_path))
-    df = spark.range(0, 100).selectExpr(
-        "concat('u', CAST(id AS STRING)) AS url", "id AS v"
-    )
-    cat.write(df, "t", n_files=2, bloom_cols=("url",))
-    cat.rename_column(spark, "t", "url", "link")
-    assert cat.scan(spark, "t", eq={"link": "u42"}).count() == 1
-    assert cat.scan(spark, "t", eq={"link": "u_missing"}).count() == 0
-    snap = cat.current_snapshot("t")
-    # and the bloom still PRUNES under the new name (not just filters)
-    st = cat._load_manifest("t").get("schema")
-    files = cat._snap_files(snap)
-
-    def tr(frec, col):
-        then = cat._fields_for_sid(st, cat._dir_sid(frec["dir"]))
-        cur = {f["name"]: f["id"] for f in st["fields"]}
-        return {x["id"]: x["name"] for x in then}.get(cur.get(col))
-
-    kept = cat._bloom_prune(
-        spark, "t", snap, files, {"link": "u_missing"}, tr
-    )
-    assert kept == []
 
 
 def test_stream_stream_enrich_matches_batch(spark, tmp_path):
@@ -2280,12 +2046,8 @@ def test_hidden_partitioning_transforms(spark, tmp_path):
     # day-range predicate prunes partition dirs
     day2 = (dt.datetime(2021, 3, 2), dt.datetime(2021, 3, 2, 23, 59, 59))
     files = cat._snap_files(snap)
-
-    def tr(frec, col):
-        return col  # no schema evolution in this table
-
     kept = cat._partition_prune(
-        spark, snap, files, {"ts": [(day2[0].isoformat(), day2[1].isoformat())]}, {}, tr
+        spark, snap, files, {"ts": [(day2[0].isoformat(), day2[1].isoformat())]}, {}
     )
     assert 0 < len(kept) < len(files)
     assert all(f["partition"]["_pv0"] == "2021-03-02" for f in kept)
@@ -2295,9 +2057,7 @@ def test_hidden_partitioning_transforms(spark, tmp_path):
     assert cat.scan(spark, "t", {"ts": day2}).count() == exp
 
     # bucket eq predicate prunes to one bucket per day
-    kept_b = cat._partition_prune(
-        spark, snap, files, {}, {"host": "host3"}, tr
-    )
+    kept_b = cat._partition_prune(spark, snap, files, {}, {"host": "host3"})
     assert 0 < len(kept_b) <= len(files) // 2
     assert cat.scan(spark, "t", eq={"host": "host3"}).count() == (
         df.filter("host = 'host3'").count()
@@ -2524,25 +2284,6 @@ def test_main_commit_after_branch_append_gets_fresh_snapshot_id(
     assert cat.read(spark, "t").count() == main_rows + 9
 
 
-def test_rename_reads_earlier_branch_append_under_old_name(spark, tmp_path):
-    """A schema change logs the newest snapshot id over main AND branch
-    snapshots: a branch append committed before a rename was written
-    under the old name and must still be read through it."""
-    cat = SnapshotCatalog(str(tmp_path))
-
-    def rows(lo, hi):
-        return spark.range(lo, hi).select("id", F.col("id").alias("v"))
-
-    cat.write(rows(0, 5), "t")
-    cat.create_branch("t", "audit")
-    cat.write(rows(5, 8), "t", mode="append", branch="audit")
-    cat.rename_column(spark, "t", "v", "w")
-    out = cat.read(spark, "t", branch="audit")
-    assert out.columns == ["id", "w"]
-    got = [r.w for r in out.collect()]
-    assert None not in got and sorted(got) == list(range(8))
-
-
 def test_zorder_survives_delete_compact_and_upsert(spark, tmp_path):
     """The z-order pair carries over every commit: a full compaction
     after a delete re-clusters on (x, y), and an upsert writes its new
@@ -2630,7 +2371,6 @@ def test_driver_hash_probe_matches_spark_for_negative_hashes(spark, tmp_path):
                 files,
                 {"url": [(v, v)]},
                 {"url": v},
-                lambda f, c: c,
             )
             assert [f["partition"]["_pv0"] for f in kept] == [str(want)]
 
@@ -3036,7 +2776,7 @@ def test_result_schema_is_the_snapshots_whichever_files_are_read(
 
 
 def test_read_calls_load_the_manifest_once(spark, tmp_path, monkeypatch):
-    """Each read call resolves its snapshot, schema state and files from
+    """Each read call resolves its snapshot and files from
     ONE manifest load; a full compaction resolves its source, marker
     walk, rows and commit parent from one more (the commit's version
     check is the other)."""
@@ -3074,21 +2814,3 @@ def test_read_calls_load_the_manifest_once(spark, tmp_path, monkeypatch):
     want["compact"] = 2
     assert got == want
 
-
-def test_partitioned_append_after_rename_keeps_its_values(spark, tmp_path):
-    """Files bind to the schema version of their COMMIT dir; a
-    hive-partitioned file sits one level below it (``_pv0=…/``) and
-    must not be read as a legacy file of the oldest version."""
-    cat = SnapshotCatalog(str(tmp_path / "pv_rename"))
-    spec = [["identity", "g"]]
-    cat.write(
-        spark.range(4).selectExpr("id", "id % 2 AS g", "id * 10 AS v"),
-        "t", partition_by=spec,
-    )
-    cat.rename_column(spark, "t", "v", "w")
-    cat.write(
-        spark.range(4, 8).selectExpr("id", "id % 2 AS g", "id * 10 AS w"),
-        "t", partition_by=spec, mode="append",
-    )
-    got = sorted((r.id, r.w) for r in cat.read(spark, "t").collect())
-    assert got == [(i, i * 10) for i in range(8)]

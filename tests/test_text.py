@@ -6,12 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from eodal_spark.operators import text as TX
-from tests.conftest import SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    return spark.read.parquet(f"{SF_SMOKE}/documents.parquet").cache()
 
 
 def test_lang_id_markers(spark):
@@ -61,15 +55,6 @@ def test_fingerprint_stability(spark):
     rows = {r["id"]: r["fp"] for r in df.select("id", TX.fingerprint(F.col("text")).alias("fp")).collect()}
     assert rows[1] == rows[2]  # append-robust: shared min window survives
     assert rows[1] != rows[3]
-
-
-def test_enrich_runs_on_documents(docs):
-    out = TX.enrich(docs).cache()
-    assert out.count() == docs.count()
-    assert out.filter("n_tokens <= 0").count() == 0
-    # lang_guess hits a real language for most docs (markers are crude)
-    hit = out.filter("lang_guess != 'und'").count()
-    assert hit > 0
 
 
 def test_hash_sample_monotone_and_partition_stable(spark):
